@@ -1,7 +1,10 @@
-"""Seeded input generators for the benchmark workloads.
+"""Inputs of the benchmark workloads.
 
-Every generator is a pure function of its seed: the same seed writes the
-same files and the same manifest. Outputs are cached under
+The star schema is the repo's sf0.1 test data, a byte-identical copy in
+``perfbench/sf0.1/`` checked against pinned digests. The DICOM object tree
+and the text corpus are generated: each generator is a pure function of
+its seed, so the same seed writes the same files and the same manifest.
+Generated inputs are cached under
 ``perfbench/.data/<kind>-s<seed>-v<GEN_VERSION>/``; ``manifest.json`` is
 written last and marks a complete directory, so an interrupted generation
 is simply redone. The programs under test receive only these files.
@@ -21,18 +24,16 @@ import zipfile
 
 import numpy as np
 
-GEN_VERSION = 1
-DATA_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".data")
+GEN_VERSION = 2
+HERE = os.path.dirname(os.path.abspath(__file__))
+DATA_ROOT = os.path.join(HERE, ".data")
+SF_DIR = os.path.join(HERE, "sf0.1")
+PINS_PATH = os.path.join(HERE, "pins.json")
 
-WORDS = (
-    "query row stream the spark line small fast group customer batch sort "
-    "value hash filter big data part column order scan a slow agg key window "
-    "table merge vector join"
-).split()
-STAR_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+
+def load_pins() -> dict:
+    with open(PINS_PATH) as fh:
+        return json.load(fh)
 
 
 def _cached(kind: str, seed: int, build) -> tuple[str, dict]:
@@ -57,159 +58,28 @@ def manifest_digest(manifest: dict) -> str:
 
 
 # ---------------------------------------------------------------------------
-# star schema (the sf0.1 shape of the repo's relational test tables)
+# star schema: the repo's sf0.1 test tables
 # ---------------------------------------------------------------------------
 
-def _days(rng, start: datetime.date, end: datetime.date, n: int) -> np.ndarray:
-    span = (end - start).days
-    return np.datetime64(start, "D") + rng.integers(0, span + 1, n).astype("timedelta64[D]")
+def _sha256(path: str) -> str:
+    h = hashlib.sha256()
+    with open(path, "rb") as fh:
+        for block in iter(lambda: fh.read(1 << 20), b""):
+            h.update(block)
+    return h.hexdigest()
 
 
-def make_documents(rng, n: int = 5000):
-    """The ``documents`` table: bag-of-words texts over a 30-word
-    vocabulary; about 5% are near-duplicates of an earlier doc (its text
-    plus the word ``dup``), a few of those exact copies of another."""
-    import pyarrow as pa
-
-    words = np.array(WORDS)
-    texts: list[str] = []
-    dups: list[int] = []
-    for i in range(n):
-        if i > 0 and rng.random() < 0.05:
-            if dups and rng.random() < 0.03:
-                texts.append(texts[dups[int(rng.integers(len(dups)))]])
-            else:
-                texts.append(texts[int(rng.integers(i))] + " dup")
-            dups.append(i)
-        else:
-            texts.append(" ".join(words[rng.integers(0, len(words), int(rng.integers(8, 96)))]))
-    langs = np.array(["en", "zh", "de", "fr", "es"])[
-        rng.choice(5, n, p=[0.4, 0.15, 0.15, 0.15, 0.15])
-    ]
-    return pa.table({
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array(langs),
-        "source": pa.array([f"src{i % 20}" for i in range(n)]),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    })
-
-
-def _build_star(out: str, seed: int) -> dict:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rng = np.random.default_rng([seed, 1])
-    n_cust, n_supp, n_part, n_ord, n_line = 15_000, 1_000, 20_000, 150_000, 600_000
-    pick = lambda vals, n: np.array(vals)[rng.integers(0, len(vals), n)]  # noqa: E731
-    money = lambda lo, hi, n: np.round(rng.uniform(lo, hi, n), 2)  # noqa: E731
-    i32 = lambda a: pa.array(np.asarray(a, dtype=np.int32))  # noqa: E731
-    i64 = lambda a: pa.array(np.asarray(a, dtype=np.int64))  # noqa: E731
-    ts = lambda a: pa.array(a.astype("datetime64[us]"))  # noqa: E731
-
-    tables = {
-        "region": pa.table({
-            "r_regionkey": i32(range(5)),
-            "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-        }),
-        "nation": pa.table({
-            "n_nationkey": i32(range(25)),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": i32([i % 5 for i in range(25)]),
-        }),
-        "customer": pa.table({
-            "c_custkey": i64(range(n_cust)),
-            "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-            "c_nationkey": i32(rng.integers(0, 25, n_cust)),
-            "c_acctbal": money(-999.99, 9999.99, n_cust),
-            "c_mktsegment": pick(
-                ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n_cust
-            ),
-        }),
-        "supplier": pa.table({
-            "s_suppkey": i64(range(n_supp)),
-            "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-            "s_nationkey": i32(rng.integers(0, 25, n_supp)),
-            "s_acctbal": money(-999.99, 9999.99, n_supp),
-        }),
-        "part": pa.table({
-            "p_partkey": i64(range(n_part)),
-            "p_name": np.char.add(
-                np.char.add(pick(["large", "small", "hot", "cold", "shiny"], n_part), " "),
-                pick(["ring", "bolt", "nut", "gear", "pipe"], n_part),
-            ),
-            "p_brand": np.char.add("Brand#", rng.integers(1, 26, n_part).astype(str)),
-            "p_type": pick(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], n_part),
-            "p_size": i32(rng.integers(1, 51, n_part)),
-            "p_retailprice": np.round(900 + (np.arange(n_part) % 1000) / 10, 2),
-        }),
-        "orders": pa.table({
-            "o_orderkey": i64(range(n_ord)),
-            "o_custkey": i64(rng.integers(0, n_cust, n_ord)),
-            "o_orderstatus": pick(["F", "O", "P"], n_ord),
-            "o_totalprice": money(1000, 500000, n_ord),
-            "o_orderdate": ts(_days(rng, datetime.date(1995, 1, 1), datetime.date(2001, 8, 1), n_ord)),
-            "o_orderpriority": pick(
-                ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n_ord
-            ),
-        }),
-        "lineitem": pa.table({
-            "l_orderkey": i64(rng.integers(0, n_ord, n_line)),
-            "l_partkey": i64(rng.integers(0, n_part, n_line)),
-            "l_suppkey": i64(rng.integers(0, n_supp, n_line)),
-            "l_linenumber": i32(rng.integers(1, 8, n_line)),
-            "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
-            "l_extendedprice": money(900, 105000, n_line),
-            "l_discount": rng.integers(0, 11, n_line) / 100,
-            "l_tax": rng.integers(0, 9, n_line) / 100,
-            "l_returnflag": pick(["A", "N", "R"], n_line),
-            "l_linestatus": pick(["F", "O"], n_line),
-            "l_shipdate": ts(_days(rng, datetime.date(1995, 1, 2), datetime.date(2001, 11, 4), n_line)),
-        }),
-    }
-    n_ev = 100_000
-    ev_us = np.sort(rng.integers(0, 30 * 86_400_000_000, n_ev))
-    tables["events"] = pa.table({
-        "event_id": i64(range(n_ev)),
-        "ts": ts(np.datetime64("2024-01-01T00:00:00", "us") + ev_us.astype("timedelta64[us]")),
-        "user_id": i64(rng.integers(0, 1500, n_ev)),
-        "event_type": pick(["click", "error", "purchase", "signup", "view"], n_ev),
-        "value": np.round(np.minimum(rng.gamma(2.0, 25.0, n_ev), 560.0), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
-    })
-    tables["documents"] = make_documents(rng)
-    n_vec, dim = 2000, 64
-    labels = rng.integers(0, 10, n_vec)
-    centers = rng.normal(size=(10, dim))
-    vecs = centers[labels] + rng.normal(scale=0.8, size=(n_vec, dim))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    tables["embeddings"] = pa.table({
-        "vec_id": i64(range(n_vec)),
-        "embedding": pa.ListArray.from_arrays(
-            pa.array(np.arange(0, n_vec * dim + 1, dim, dtype=np.int32)),
-            pa.array(vecs.ravel()),
-        ),
-        "label": i32(labels),
-    })
-    for name in STAR_TABLES:
-        pq.write_table(tables[name], os.path.join(out, f"{name}.parquet"))
-    return {
-        "kind": "star",
-        "seed": seed,
-        "rows": {name: tables[name].num_rows for name in STAR_TABLES},
-        "digests": {
-            name: hashlib.sha256(
-                open(os.path.join(out, f"{name}.parquet"), "rb").read()
-            ).hexdigest()
-            for name in STAR_TABLES
-        },
-    }
-
-
-def star_schema(seed: int) -> tuple[str, dict]:
-    """sf0.1-shaped star schema: 600k lineitem, 150k orders, 100k events,
-    5k documents, 2k 64-d embeddings."""
-    return _cached("star", seed, _build_star)
+def star_schema() -> tuple[str, str]:
+    """The sf0.1 tables (600k lineitem, 150k orders, 100k events, 5k
+    documents, 2k embeddings), a byte-identical copy of the repo's seed-42
+    test data kept beside the benchmark. Returns (dir, digest of the file
+    digests); raises if any file differs from its pinned SHA-256."""
+    pinned = load_pins()["sf0.1"]
+    got = {name: _sha256(os.path.join(SF_DIR, name)) for name in sorted(pinned)}
+    if got != pinned:
+        bad = sorted(n for n in pinned if got[n] != pinned[n])
+        raise RuntimeError(f"{SF_DIR}: files differ from their pinned SHA-256: {bad}")
+    return SF_DIR, manifest_digest(got)
 
 
 # ---------------------------------------------------------------------------
@@ -402,15 +272,18 @@ def expected_answers(objects: list[dict], date: str, family: str) -> dict:
 # ---------------------------------------------------------------------------
 
 def _build_corpus(out: str, seed: int, base_docs: int, factor: int) -> dict:
-    """``make_scale_data.make_doc_scale``'s replica scheme over the seed's
-    ``documents``: copy i shifts doc_id by i * (max id + 1) and appends
-    `` r{i}`` to the text (i >= 1). The eval set is a seeded sample of
-    the base documents."""
+    """``make_scale_data.make_doc_scale``'s replica scheme over the first
+    ``base_docs`` sf0.1 ``documents``: copy i shifts doc_id by
+    i * (max id + 1) and appends `` r{i}`` to the text (i >= 1). The eval
+    set is a seeded sample of the base documents."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     rng = np.random.default_rng([seed, 3])
-    docs = make_documents(rng, base_docs)
+    docs = pq.read_table(os.path.join(SF_DIR, "documents.parquet"),
+                         columns=["doc_id", "text", "lang", "source"])
+    docs = docs.filter(pc.less(docs["doc_id"], base_docs)).sort_by("doc_id")
     ids = docs.column("doc_id").to_numpy()
     texts = docs.column("text").to_pylist()
     stride = int(ids.max()) + 1
@@ -425,11 +298,11 @@ def _build_corpus(out: str, seed: int, base_docs: int, factor: int) -> dict:
         "source": pa.concat_arrays([docs.column("source").combine_chunks()] * factor),
     })
     pq.write_table(corpus, os.path.join(out, "docs.parquet"))
-    eval_idx = np.sort(rng.choice(base_docs, max(1, base_docs // 100), replace=False))
+    eval_idx = np.sort(rng.choice(len(texts), max(1, len(texts) // 100), replace=False))
     pq.write_table(pa.table({"text": [texts[i] for i in eval_idx]}),
                    os.path.join(out, "eval.parquet"))
     return {"kind": "corpus", "seed": seed, "docs": corpus.num_rows,
-            "eval_docs": len(eval_idx), "base_docs": base_docs, "factor": factor}
+            "eval_docs": len(eval_idx), "base_docs": len(texts), "factor": factor}
 
 
 def corpus(seed: int, base_docs: int, factor: int) -> tuple[str, dict]:

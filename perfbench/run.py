@@ -71,14 +71,28 @@ END_TO_END = {
 
 
 class RssSampler:
-    """Peak resident set of this process and all its descendants (the JVM
-    and the Python workers), sampled from /proc. Descendants younger than
-    a second are skipped: a child the JVM spawns shares the JVM's memory
-    until it execs, and would count the JVM twice."""
+    """Peak memory of this process and all its descendants (the JVM and
+    the Python workers), sampled from /proc and from the JVM.
 
-    def __init__(self, interval: float = 0.1):
+    The driver heap is committed and touched when the JVM starts, so the
+    RSS always holds all of it, however little the program uses. Each
+    sample therefore replaces the committed heap with the heap the program
+    still held after the JVM's latest garbage collection, read from the
+    collectors' ``GcInfo``: the figure is the resident memory outside the
+    heap plus the heap's live data. Descendants younger than a second are
+    skipped: a child the JVM spawns shares the JVM's memory until it
+    execs, and would count the JVM twice."""
+
+    def __init__(self, spark, interval: float = 0.1):
         self.interval = interval
         self.peak_kb = 0
+        mf = spark._jvm.java.lang.management.ManagementFactory
+        self._committed_kb = mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted() // 1024
+        self._pools = [p.getName() for p in mf.getMemoryPoolMXBeans()
+                       if str(p.getType()) == "Heap memory"]
+        self._gcs = list(mf.getGarbageCollectorMXBeans())
+        self._gc_counts = [0] * len(self._gcs)
+        self._live_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
@@ -110,9 +124,19 @@ class RssSampler:
             todo.extend(children.get(pid, ()))
         return total
 
+    def _sample(self) -> None:
+        for i, gc in enumerate(self._gcs):
+            count = gc.getCollectionCount()
+            if count != self._gc_counts[i]:
+                self._gc_counts[i] = count
+                after = gc.getLastGcInfo().getMemoryUsageAfterGc()
+                self._live_kb = sum(after[name].getUsed() for name in self._pools) // 1024
+        off_heap_kb = self._tree_rss_kb(os.getpid()) - self._committed_kb
+        self.peak_kb = max(self.peak_kb, off_heap_kb + self._live_kb)
+
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self.peak_kb = max(self.peak_kb, self._tree_rss_kb(os.getpid()))
+            self._sample()
             self._stop.wait(self.interval)
 
     def start(self) -> "RssSampler":
@@ -122,15 +146,16 @@ class RssSampler:
     def stop(self) -> float:
         self._stop.set()
         self._thread.join()
-        self.peak_kb = max(self.peak_kb, self._tree_rss_kb(os.getpid()))
+        self._sample()
         return self.peak_kb / 1024
 
 
 def host_conf() -> tuple[int, dict[str, str]]:
     """local[nproc] with nproc shuffle partitions, a driver heap of a fifth
     of MemTotal (1 to 3 GiB), and every scratch path inside the checkout.
-    The heap is committed and touched at JVM start, so the JVM's share of
-    the peak RSS does not depend on when GC ran."""
+    The heap is committed and touched at JVM start, so the resident memory
+    outside it does not depend on when GC grew the heap (``RssSampler``
+    counts the heap's live data instead)."""
     cpus = len(os.sched_getaffinity(0))
     with open("/proc/meminfo") as fh:
         mem_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
@@ -205,7 +230,6 @@ def main(argv: list[str] | None = None) -> int:
     wl.generate()
     gen_s = time.perf_counter() - t0
 
-    rss = RssSampler().start()
     from dicom_metadata_extractor_serverless_datalake_spark.session import get_spark
     from pyspark.sql import types as T
 
@@ -215,6 +239,7 @@ def main(argv: list[str] | None = None) -> int:
                       shuffle_partitions=cpus, extra_conf=conf)
     session_start_s = time.perf_counter() - t0
     tracer.spark = spark
+    rss = RssSampler(spark).start()
     try:
         t0 = time.perf_counter()
         schema = T.StructType([T.StructField("id", T.LongType())])

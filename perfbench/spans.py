@@ -77,11 +77,14 @@ class Tracer:
             sp.jobs += 1
             info = tracker.getJobInfo(job_id)
             for stage_id in info.stageIds if info else ():
+                # A stage whose shuffle output was reused is recorded as
+                # skipped, with no task run: count only tasks that ran.
                 stage = tracker.getStageInfo(stage_id)
-                if stage is None:  # skipped: its shuffle output was reused
+                ran = stage.numCompletedTasks + stage.numFailedTasks if stage else 0
+                if ran == 0:
                     continue
                 sp.stages += 1
-                sp.tasks += stage.numTasks
+                sp.tasks += ran
                 sp.failed_tasks += stage.numFailedTasks
 
     def children(self, sp: Span) -> list[Span]:

@@ -38,9 +38,24 @@ def test_dicom_tree_same_seed_same_manifest(data_root):
     assert gen.manifest_digest(gen.dicom_tree(8, 2)[1]) != a
 
 
-def test_star_schema_same_seed_same_files(data_root):
-    a, b = _fresh(data_root, lambda: gen.star_schema(3))
-    assert a == b
+def test_star_schema_is_the_pinned_sf01_copy(tmp_path, monkeypatch):
+    import json
+
+    import pyarrow.parquet as pq
+
+    star_dir, digest = gen.star_schema()
+    assert star_dir == gen.SF_DIR
+    rows = {name: pq.ParquetFile(os.path.join(star_dir, f"{name}.parquet")).metadata.num_rows
+            for name in ("lineitem", "orders", "events", "documents", "embeddings")}
+    assert rows == {"lineitem": 600_000, "orders": 150_000, "events": 100_000,
+                    "documents": 5_000, "embeddings": 2_000}
+    pins = gen.load_pins()
+    pins["sf0.1"]["region.parquet"] = "0" * 64
+    bad = tmp_path / "pins.json"
+    bad.write_text(json.dumps(pins))
+    monkeypatch.setattr(gen, "PINS_PATH", str(bad))
+    with pytest.raises(RuntimeError, match="region.parquet"):
+        gen.star_schema()
 
 
 def test_corpus_same_seed_same_files(data_root):
@@ -161,6 +176,26 @@ def test_tracer_spans_nest_and_count_self_time():
     with off.span("x") as sp:
         assert sp is None
     assert off.spans == []
+
+
+def test_job_counts_leave_out_skipped_stages():
+    """A stage whose shuffle output was reused is reported with no task
+    run; it adds neither a stage nor tasks."""
+    from types import SimpleNamespace as NS
+
+    stages = {
+        1: NS(numTasks=4, numCompletedTasks=4, numFailedTasks=0),
+        2: NS(numTasks=8, numCompletedTasks=0, numFailedTasks=0),  # skipped
+        3: NS(numTasks=2, numCompletedTasks=2, numFailedTasks=1),
+    }
+    tracker = NS(getJobIdsForGroup=lambda group: [7, 8],
+                 getJobInfo=lambda job: NS(stageIds=[1, 2] if job == 7 else [3]),
+                 getStageInfo=stages.get)
+    tr = Tracer("t", enabled=True)
+    with tr.span("s") as sp:
+        pass
+    Tracer._count_jobs(NS(statusTracker=lambda: tracker), "t/0", sp)
+    assert (sp.jobs, sp.stages, sp.tasks, sp.failed_tasks) == (2, 2, 7, 1)
 
 
 def test_tail_rule():

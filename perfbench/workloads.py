@@ -80,6 +80,7 @@ def _sql_str(value: str) -> str:
 # ---------------------------------------------------------------------------
 
 LAKE_DROPS = 12  # drops per round; a run makes fewer, so it stays in one lake
+LAKE_WARMUP_DROPS = 3
 
 
 class LakeIngest(Workload):
@@ -90,17 +91,19 @@ class LakeIngest(Workload):
 
     def generate(self) -> None:
         self.tree, self.manifest = gen.dicom_tree(self.seed, LAKE_DROPS)
-        self.warm_tree, _ = gen.dicom_tree(self.seed + 1_000_003, 1)
+        self.warm_tree, _ = gen.dicom_tree(self.seed + 1_000_003, LAKE_WARMUP_DROPS)
         self.rounds = 0
         self.objects_in = 0
         self.ingest_wall = 0.0
 
     def setup(self, spark) -> None:
         self.spark = spark
-        # warm-up: one drop of another seed's tree into a throwaway lake
+        # warm-up: drops of another seed's tree into a throwaway lake; drops
+        # keep getting faster for the first few, as the JVM warms up
         self._new_lake("warmup")
-        self._ingest(os.path.join(self.warm_tree, "drop-00"))
-        self._queries(None, check=False)
+        for drop in range(LAKE_WARMUP_DROPS):
+            self._ingest(os.path.join(self.warm_tree, f"drop-{drop:02d}"))
+            self._queries(None, check=False)
         self._new_lake()
 
     def _new_lake(self, tag: str | None = None) -> None:
@@ -173,13 +176,18 @@ class LakeIngest(Workload):
         rel = f"drop-{self.drop:02d}"
         first = next(r for o in objects for r in o["rows"] if r["date"] != gen.NO_DATE)
         t0 = time.perf_counter()
-        ingest_wall = self._ingest(os.path.join(self.tree, rel))
         self.done_objects.extend(objects)
+        # the ingest call is an op: it fails if it raises; what it wrote is
+        # checked by the queries below and by the round's exactly-once check
+        try:
+            ingest_wall = self._ingest(os.path.join(self.tree, rel))
+        except Exception as err:  # noqa: BLE001 - counted and printed, not fatal
+            self.op_result(False, f"ingest of {rel}", repr(err))
+            self.drop += 1
+            return
+        self.op_result(True, f"ingest of {rel}")
         want = gen.expected_answers(self.done_objects, first["date"], first["family"])
         self._queries(want, date=first["date"], family=first["family"], t_ingest=t0)
-        # the ingest call itself is an op: its effect is checked by the
-        # queries above and by the exactly-once check of the round
-        self.op_result(True, "ingest")
         if not self.tr.enabled:
             self.objects_in += len(objects)
             self.ingest_wall += ingest_wall
@@ -319,41 +327,50 @@ def short_name(name: str) -> str:
     return name.split("_", 1)[0]
 
 
-def oracle_digests(star_dir: str) -> dict[str, str]:
-    """DuckDB runs each headline query's oracle SQL on the same files;
-    cached beside the generated tables."""
-    path = os.path.join(star_dir, "oracle.json")
+def oracle_digests(star_dir: str, data_digest: str) -> dict[str, str]:
+    """DuckDB runs each headline query's oracle SQL on the same files.
+    Digests are cached under ``.data``, each keyed by a hash of its oracle
+    SQL and of the data, so a changed query or oracle is recomputed."""
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import headline_queries
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import STAR_TABLES
+
+    path = os.path.join(gen.DATA_ROOT, "oracle.json")
+    cache = {}
     if os.path.exists(path):
         with open(path) as fh:
-            return json.load(fh)
-    import duckdb
+            cache = json.load(fh)
+    key = {name: hashlib.sha256(f"{data_digest}\n{q.oracle}".encode()).hexdigest()
+           for name, q in headline_queries().items()}
+    stale = [name for name in key if cache.get(name, {}).get("key") != key[name]]
+    if stale:
+        import duckdb
 
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import headline_queries
-
-    con = duckdb.connect()
-    con.execute("SET threads TO 2")
-    for name in gen.STAR_TABLES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{star_dir}/{name}.parquet'")
-    out = {}
-    for name, q in headline_queries().items():
-        res = con.execute(q.oracle)
-        out[name] = result_digest([d[0] for d in res.description], res.fetchall())
-    con.close()
-    with open(path + ".tmp", "w") as fh:
-        json.dump(out, fh, sort_keys=True)
-    os.replace(path + ".tmp", path)
-    return out
+        con = duckdb.connect()
+        con.execute("SET threads TO 2")
+        for table in STAR_TABLES:
+            con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{star_dir}/{table}.parquet'")
+        for name in stale:
+            res = con.execute(headline_queries()[name].oracle)
+            digest = result_digest([d[0] for d in res.description], res.fetchall())
+            cache[name] = {"key": key[name], "digest": digest}
+        con.close()
+        os.makedirs(gen.DATA_ROOT, exist_ok=True)
+        with open(path + ".tmp", "w") as fh:
+            json.dump(cache, fh, sort_keys=True, indent=1)
+        os.replace(path + ".tmp", path)
+    return {name: cache[name]["digest"] for name in key}
 
 
 class Headline(Workload):
-    """The 7 headline queries in a seed-shuffled order each pass. One
-    cycle is one pass; one op is one query (build + collect)."""
+    """The 7 headline queries over the sf0.1 tables, in a seed-shuffled
+    order each pass; the seed changes only the order. One cycle is one
+    pass; one op is one query (build + collect)."""
 
     name = "headline_sf0.1"
 
     def generate(self) -> None:
-        self.star_dir, _ = gen.star_schema(self.seed)
-        self.oracle = oracle_digests(self.star_dir)
+        self.star_dir, data_digest = gen.star_schema()
+        self.oracle = oracle_digests(self.star_dir, data_digest)
         self.passes = 0
 
     def setup(self, spark) -> None:
@@ -421,18 +438,12 @@ class Headline(Workload):
 # corpus_curation: the README TextCorpus chain
 # ---------------------------------------------------------------------------
 
-CORPUS_BASE_DOCS = 2500
+CORPUS_BASE_DOCS = 2000
 CORPUS_FACTOR = 2
 CHAIN = (
     "dedup_exact", "dedup_paragraphs", "dedup_near", "quality_filter",
     "repetition_filter", "decontaminate", "redact_pii",
 )
-PINS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pins.json")
-
-
-def load_pins() -> dict:
-    with open(PINS_PATH) as fh:
-        return json.load(fh)
 
 
 def grams5(text: str) -> set[str]:
@@ -517,7 +528,7 @@ class Curation(Workload):
             problems.append("a survivor shares a 5-gram with the eval set")
         if self.counts and len(ids) != self.counts[0]:
             problems.append(f"{len(ids)} survivors vs timed count {self.counts[0]}")
-        pin = load_pins().get(f"{CORPUS_BASE_DOCS}x{CORPUS_FACTOR}", {}).get(str(self.seed))
+        pin = gen.load_pins().get(f"{CORPUS_BASE_DOCS}x{CORPUS_FACTOR}", {}).get(str(self.seed))
         if pin is None:
             self.notes.append(f"no pinned survivor digest for seed {self.seed}: {digest}")
         elif pin != digest:

@@ -268,7 +268,7 @@ def expected_answers(objects: list[dict], date: str, family: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# text corpus for corpus_curation
+# text corpus for the README chain (traced lake_ingest runs)
 # ---------------------------------------------------------------------------
 
 def _build_corpus(out: str, seed: int, base_docs: int, factor: int) -> dict:

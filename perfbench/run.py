@@ -241,19 +241,23 @@ def main(argv: list[str] | None = None) -> int:
     tracer.spark = spark
     rss = RssSampler(spark).start()
     try:
-        t0 = time.perf_counter()
-        schema = T.StructType([T.StructField("id", T.LongType())])
-        spark.range(cpus).mapInPandas(_identity, schema).count()
-        first_worker_s = time.perf_counter() - t0
+        first_worker_s = 0.0
+        if wl.python_workers:
+            t0 = time.perf_counter()
+            schema = T.StructType([T.StructField("id", T.LongType())])
+            spark.range(cpus).mapInPandas(_identity, schema).count()
+            first_worker_s = time.perf_counter() - t0
         wl.setup(spark)
         setup_s = time.perf_counter() - PROCESS_START - gen_s
 
         deadline = time.perf_counter() + args.seconds
         n = 0
-        # With tracing, cycles alternate untraced / traced, and the run
-        # makes at least three: the first (coldest) one, then one of each
-        # for the tracing overhead.
-        while n < (3 if args.trace else 1) or time.perf_counter() < deadline:
+        # An untraced run makes at least the workload's min_cycles, so its
+        # tail is always the same percentile. With tracing, cycles alternate
+        # untraced / traced, and the run makes at least three: the first
+        # (coldest) one, then one of each for the tracing overhead.
+        min_cycles = 3 if args.trace else wl.min_cycles
+        while n < min_cycles or time.perf_counter() < deadline:
             tracer.enabled = bool(args.trace and n % 2)
             wl.cycle()
             n += 1
@@ -281,7 +285,9 @@ def main(argv: list[str] | None = None) -> int:
 
     for note in wl.notes:
         print(f"[perfbench] {note}")
-    print(f"[perfbench] {args.workload} seed={args.seed} cycles={n} input_gen_s={gen_s:.3f}")
+    print(f"[perfbench] {args.workload} seed={args.seed} cycles={n} input_gen_s={gen_s:.3f} "
+          f"session_start_s={session_start_s:.2f} first_worker_s={first_worker_s:.2f} "
+          f"run_s={time.perf_counter() - PROCESS_START:.1f}")
     print(json.dumps({
         "correct": wl.failed == 0,
         "attempted": wl.attempted,

@@ -158,5 +158,20 @@ def tail(values: list[float], beyond: int = 10) -> tuple[float, float, int]:
     return vals[idx], 100.0 * (idx + 1) / n, n
 
 
+def tail_at(values: list[float], guaranteed: int, beyond: int = 10) -> tuple[float, float, int]:
+    """The percentile ``tail`` picks for ``guaranteed`` samples, taken of
+    all ``values`` (nearest rank). A run always makes at least
+    ``guaranteed`` samples, so every run reports the same percentile, also
+    one that makes more; a run with fewer (its failed ops add no sample)
+    falls back to ``tail``. Returns (value, percentile, sample count)."""
+    vals = sorted(values)
+    n = len(vals)
+    if n < guaranteed:
+        return tail(vals, beyond)
+    rank = guaranteed - beyond if guaranteed > beyond else guaranteed
+    idx = -(-rank * n // guaranteed) - 1  # ceil(rank * n / guaranteed) - 1
+    return vals[idx], 100.0 * rank / guaranteed, n
+
+
 def percentile_label(p: float) -> str:
     return f"p{math.floor(p * 10) / 10:g}"

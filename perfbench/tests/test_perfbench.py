@@ -15,7 +15,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))]
 
 import gen  # noqa: E402
-from spans import Tracer, self_time, tail  # noqa: E402
+from spans import Tracer, self_time, tail, tail_at  # noqa: E402
 
 
 @pytest.fixture
@@ -207,6 +207,16 @@ def test_tail_rule():
     assert tail([3.0]) == (3.0, 100.0, 1)
     with pytest.raises(ValueError):
         tail([])
+
+
+def test_tail_at_keeps_the_guaranteed_percentile():
+    vals = [float(i) for i in range(1, 22)]  # 1..21
+    assert tail_at(vals, 21) == tail(vals)  # exactly the guaranteed count: the tail rule
+    value, pct, n = tail_at(vals + [30.0] * 7, 21)  # more samples, same percentile
+    assert (value, pct, n) == (15.0, pytest.approx(100 * 11 / 21), 28)
+    assert tail_at(vals[:14] + [0.5] * 7, 14) == (0.5, pytest.approx(100 * 4 / 14), 21)
+    assert tail_at(vals[:5], 5) == (5.0, 100.0, 5)  # none qualifies: the maximum
+    assert tail_at(vals[:12], 15) == tail(vals[:12])  # fewer than guaranteed
 
 
 def test_benchmark_json_lists_what_run_reports():

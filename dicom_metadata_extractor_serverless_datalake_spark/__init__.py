@@ -5,13 +5,13 @@ The reference is a serverless ingest-ETL (S3 event -> Lambda/Batch ->
 pydicom metadata flatten -> partitioned Parquet -> Glue/Athena SQL).
 This package re-expresses that dataflow Spark-first:
 
-- ``sources``   : binary / parquet / csv / json readers, ranged binary scan
+- ``sources``   : object walker + ranged read, format("dicom"), parquet / csv / json readers
 - ``dicom``     : pure-Python DICOM codec + VR type system (public PS3.5/3.6/3.10)
-- ``ingest``    : binaryFile -> archive explode -> typed flatten -> Parquet lake
+- ``ingest``    : ranged read -> archive explode -> typed flatten -> Parquet lake
 - ``operators`` : as-of join, top-k, dedup (exact/MinHash/SimHash), similarity
                   search, text analysis, multimodal column plumbing
 - ``queries``   : the t2 correctness corpus (Spark callable + DuckDB oracle SQL)
-- ``streaming`` : Structured Streaming ingest + windowed aggregations
+- ``streaming`` : Structured Streaming ingest (format("dicom")) + windowed aggregations
 """
 
 __version__ = "0.1.0"

@@ -70,7 +70,9 @@ class DicomLake:
 
     def watch(self, input_path: str, checkpoint_path: str, available_now: bool = False):
         """Continuous ingestion of newly arriving objects (the S3-event
-        pattern as a Structured Streaming query). Returns the handle."""
+        pattern as a Structured Streaming query), through the same ranged
+        read and lake/quarantine writer as :meth:`ingest`. Returns the
+        handle."""
         from .streaming import start_ingest_stream
 
         return start_ingest_stream(

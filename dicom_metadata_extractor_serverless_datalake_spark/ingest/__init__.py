@@ -1,5 +1,5 @@
 """Ingest dataflow: binary objects -> archive explode -> DICOM metadata
 flatten -> partitioned Parquet lake + quarantine sink."""
 
-from .extract import extract_records, records_schema  # noqa: F401
-from .pipeline import ingest_batch, run_ingest  # noqa: F401
+from .extract import extract_records, read_extract, records_schema  # noqa: F401
+from .pipeline import ingest_batch, run_ingest, write_split  # noqa: F401

@@ -6,7 +6,7 @@ the same code runs in unit tests and inside the Spark mapInPandas UDF).
 from __future__ import annotations
 
 import datetime
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from urllib.parse import urlparse
 
 from ..dicom import codec, vr
@@ -136,3 +136,16 @@ def extract_records(path: str, content: bytes) -> Iterator[dict]:
             yield flatten(elements, lineage)
         except Exception as err:
             yield _error_row(lineage, err, stage="dicom_parse")
+
+
+def read_extract(paths: Iterable[str]) -> Iterator[dict]:
+    """Objects at ``paths`` -> canonical row dicts (+ error rows): the
+    ranged read (sources.binary.read_object) then :func:`extract_records`,
+    one object at a time. Every DICOM reader runs this loop in its
+    worker: batch ingest, ``format("dicom")`` and its stream reader."""
+    from ..sources.binary import read_object
+
+    for path in paths:
+        content = read_object(path)
+        if content is not None:
+            yield from extract_records(path, content)

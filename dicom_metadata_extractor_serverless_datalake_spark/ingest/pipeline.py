@@ -1,5 +1,5 @@
-"""Spark ingest job: binary source -> mapInPandas extraction ->
-partitioned Parquet lake + quarantine sink.
+"""Spark ingest job: object listing -> mapInPandas ranged read +
+extraction -> partitioned Parquet lake + quarantine sink.
 
 This is the reference's whole serverless pipeline (S3 event -> Lambda ->
 pydicom -> awswrangler Parquet, SURVEY §3.1) as one declarative Spark
@@ -7,14 +7,17 @@ job. The Lambda/Batch 500 MB size router (src/app.py:118-184) dissolves:
 task scheduling handles all object sizes.
 
 Scale notes (100 TB target):
-- one input file = one task by default via binaryFile; for millions of
-  small objects, ``sources.binary.read_binary`` can pack many objects
-  per partition (listing-based reader) to amortize task overhead.
-- extraction is an Arrow-batched mapInPandas (not per-row Python UDF).
-- the lake is Hive-partitioned on study_date so Catalyst prunes
-  partitions on the query side; writes repartition by the partition
-  column first so each task writes few files (avoids the
-  small-files explosion of per-task-per-partition writers).
+- the driver only lists (``sources.binary.list_binary_objects``); the
+  listing is repartitioned so each task reads a pack of objects,
+  amortizing task overhead over millions of small objects.
+- read + extraction is one Arrow-batched mapInPandas pass
+  (``ingest.extract.read_extract``, not a per-row Python UDF).
+- :func:`write_split` is the one lake/quarantine writer, shared with the
+  streaming sink (streaming/ingest_stream.py). The lake is
+  Hive-partitioned on study_date so Catalyst prunes partitions on the
+  query side; writes repartition by the partition column first so each
+  task writes few files (avoids the small-files explosion of
+  per-task-per-partition writers).
 """
 
 from __future__ import annotations
@@ -27,29 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import DICOM_METADATA_SCHEMA, INGEST_SCHEMA, PARTITION_COL
-from .extract import extract_records
+from .extract import read_extract
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in INGEST_SCHEMA.fields]
-    for pdf in batches:
-        rows: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            rows.extend(extract_records(path, bytes(content)))
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-
-def extract_df(binary_df: DataFrame) -> DataFrame:
-    """(path, content) binary DataFrame -> canonical metadata rows with an
-    ``error`` channel column. Use when the bytes are already in the plan
-    (e.g. the binaryFile streaming source)."""
-    return binary_df.select("path", "content").mapInPandas(
-        _extract_batches, schema=INGEST_SCHEMA
-    )
-
-
-def extract_from_listing(listing: DataFrame, ranged_cap: int | None = None) -> DataFrame:
+def extract_from_listing(listing: DataFrame) -> DataFrame:
     """(path, size) listing -> canonical metadata rows, reading AND
     extracting in one Python pass.
 
@@ -59,53 +43,23 @@ def extract_from_listing(listing: DataFrame, ranged_cap: int | None = None) -> D
     only the (small) metadata rows cross back. Per-object I/O (and the
     10 MB ranged .dcm cap) lives worker-side, exactly where it belongs
     on a real cluster doing ranged object-store GETs."""
-    from ..sources.binary import DCM_RANGED_READ_BYTES
-    from .archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
-
-    cap = ranged_cap if ranged_cap is not None else DCM_RANGED_READ_BYTES
     cols = [f.name for f in INGEST_SCHEMA.fields]
 
     def _read_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
-            for path in pdf["path"]:
-                ext = eval_ext(path)
-                if ext in IGNORED_EXTS:
-                    continue
-                this_cap = None if ext in ZIP_EXTS | TAR_EXTS else cap
-                with open(path, "rb") as fh:
-                    content = fh.read(this_cap) if this_cap else fh.read()
-                rows.extend(extract_records(path, content))
+            rows = list(read_extract(pdf["path"]))
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
     return listing.mapInPandas(_read_extract, schema=INGEST_SCHEMA)
 
 
-def ingest_batch(
-    spark: SparkSession,
-    input_path: str,
-    lake_path: str,
-    quarantine_path: str | None = None,
-    use_binary_file_source: bool = False,
+def write_split(
+    extracted: DataFrame, lake_path: str, quarantine_path: str | None
 ) -> tuple[int, int]:
-    """Batch-ingest every binary object under input_path.
-
-    Returns (lake_rows, quarantined_rows). Equivalent of replaying all S3
-    ObjectCreated events (deploy/serverless.yml:195-200) through the
-    reference pipeline in one job.
-
-    The default source is the listing-based ranged reader
-    (sources.binary.read_binary): it honors the reference's 10 MB ranged
-    .dcm read, sees zero-byte objects (binaryFile drops them, losing the
-    DLQ contract for empty DICOMDIR), and packs many small objects per
-    task. Set ``use_binary_file_source`` for Spark's built-in source."""
-    if use_binary_file_source:
-        extracted = extract_df(spark.read.format("binaryFile").load(input_path))
-    else:
-        from ..sources.binary import list_binary_objects
-
-        extracted = extract_from_listing(list_binary_objects(spark, input_path))
+    """Append extracted rows without an error to the study_date-partitioned
+    lake, and rows with one to the quarantine (when given). Returns
+    (lake_rows, quarantined_rows)."""
     extracted.persist()
     try:
         good = extracted.filter(F.col("error").isNull()).drop("error", "error_log")
@@ -131,6 +85,25 @@ def ingest_batch(
     finally:
         extracted.unpersist()
     return n_good, n_bad
+
+
+def ingest_batch(
+    spark: SparkSession,
+    input_path: str,
+    lake_path: str,
+    quarantine_path: str | None = None,
+) -> tuple[int, int]:
+    """Batch-ingest every object under input_path.
+
+    Returns (lake_rows, quarantined_rows). Equivalent of replaying all S3
+    ObjectCreated events (deploy/serverless.yml:195-200) through the
+    reference pipeline in one job: it honors the reference's 10 MB ranged
+    .dcm read, quarantines zero-byte objects (the empty DICOMDIR DLQ
+    contract), and packs many small objects per task."""
+    from ..sources.binary import list_binary_objects
+
+    extracted = extract_from_listing(list_binary_objects(spark, input_path))
+    return write_split(extracted, lake_path, quarantine_path)
 
 
 def run_ingest(

@@ -290,14 +290,18 @@ class TextCorpus:
         keep_lists = keep.groupBy(did).agg(
             F.sort_array(F.collect_list("idx")).alias("_keep_idx")
         )
-        resplit = F.split(F.col(text), lit_sep)
+        # split on the corpus side, before the join: a lambda that reads
+        # split(text) above the join lets the optimizer push a later
+        # filter on the rebuilt text into keep_lists, where text is not
+        # in scope (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
         rebuilt = (
-            self.df.join(keep_lists, did)  # inner: fully-duplicate docs drop
+            self.df.withColumn(text, F.split(F.col(text), lit_sep))
+            .join(keep_lists, did)  # inner: fully-duplicate docs drop
             .withColumn(
                 text,
                 F.concat_ws(
                     sep,
-                    F.transform("_keep_idx", lambda i: F.element_at(resplit, i + 1)),
+                    F.transform("_keep_idx", lambda i: F.element_at(F.col(text), i + 1)),
                 ),
             )
             .drop("_keep_idx")

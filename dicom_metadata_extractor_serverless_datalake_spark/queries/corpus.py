@@ -35,128 +35,6 @@ from . import audits  # noqa: F401,E402
 from . import inference  # noqa: F401,E402
 from . import selection  # noqa: F401,E402
 
-# Registration-order priority. External harnesses sample queries() from
-# the FRONT of the registry (dict insertion order), so the queries whose
-# driver-oracle verification is least established go first. Every
-# registered query has a green driver row (cumulative 300/300 as of
-# CORRECTNESS_r11), so the window orders by verification RISK:
-# (a) never-driver-verified queries (none currently), then (b) queries
-# REWRITTEN since their latest driver-green round (_REWRITTEN below —
-# VERDICT r11 #1: the r11 optimization rewrites that fell outside the
-# r11 rotation window are certified only by the builder's own oracle
-# sweep until a driver round samples them), then (c) the stalest
-# greens to fill the 50-query window. tests/test_corpus.py's freshness
-# guard derives all three sets from the CORRECTNESS_r*.json artifacts
-# plus _REWRITTEN and fails if this list's front window drifts.
-
-# name -> round whose optimization rewrote the query's implementation.
-# An entry is "pending" while its latest driver-green round is older
-# than the rewrite round; the guard then requires it in the front
-# window. Remove entries once a CORRECTNESS artifact >= the rewrite
-# round shows them green (they rejoin the plain staleness rotation).
-_REWRITTEN = {
-    # round-11 rewrites outside CORRECTNESS_r11's sample window:
-    # codegen gram enumeration (shingle_tokens/_minhash_band_pairs
-    # family), Arrow map passes (q53/q57/q145/q150/q265), hash-keyed
-    # spread + derived head model (q225), posexplode spans (q263),
-    # Mann-Kendall grid (q283), fold rewrites (q125/q128)
-    "q52_minhash_lsh": 12,
-    "q53_simhash": 11,
-    "q57_language_id": 11,
-    "q77_dedup_clusters": 11,
-    "q125_collocation_lift": 11,
-    "q128_containment_join": 11,
-    "q145_intradoc_repetition": 11,
-    "q150_gopher_rules": 11,
-    "q220_minhash_calibration": 11,
-    "q225_ppl_buckets": 11,
-    "q228_ngram_novelty": 11,
-    "q240_blocking_recall": 11,
-    "q242_blocking_recall_sampled": 11,
-    "q243_neardup_star": 11,
-    "q244_incremental_neardup": 11,
-    "q251_lsh_s_curve": 11,
-    "q253_lsh_s_curve_sampled": 11,
-    "q187_winnowing": 12,
-    "q263_substring_dedup": 11,
-    "q265_rake_keywords": 11,
-    "q283_mann_kendall": 11,
-}
-
-_PRIORITY = [
-    # (b) rewritten since last driver-green — the r11/r12 optimization
-    # tranche (21 queries; every one oracle-green in the builder's
-    # full-registry sweeps, never driver-sampled post-rewrite)
-    "q52_minhash_lsh",
-    "q53_simhash",
-    "q187_winnowing",
-    "q57_language_id",
-    "q77_dedup_clusters",
-    "q125_collocation_lift",
-    "q128_containment_join",
-    "q145_intradoc_repetition",
-    "q150_gopher_rules",
-    "q220_minhash_calibration",
-    "q225_ppl_buckets",
-    "q228_ngram_novelty",
-    "q240_blocking_recall",
-    "q242_blocking_recall_sampled",
-    "q243_neardup_star",
-    "q244_incremental_neardup",
-    "q251_lsh_s_curve",
-    "q253_lsh_s_curve_sampled",
-    "q263_substring_dedup",
-    "q265_rake_keywords",
-    "q283_mann_kendall",
-    # (c) stalest greens: 29 of the round-6-vintage band (the four
-    # rewritten r6 queries above already lead the window; the 16
-    # remaining r6 rows tie across the boundary, which the guard
-    # allows — bands share rounds)
-    "q01_pricing_summary",
-    "q193_hellinger_drift",
-    "q194_dup_span_coverage",
-    "q195_winnow_match",
-    "q196_cusum_changepoint",
-    "q197_theil_sen",
-    "q198_anova_f",
-    "q199_ks_test",
-    "q200_stream_cusum",
-    "q201_bigram_lm_score",
-    "q202_sequence_packing",
-    "q203_dsir_importance",
-    "q204_temperature_mix",
-    "q205_token_budget_curriculum",
-    "q206_mann_whitney",
-    "q207_markov_transitions",
-    "q208_touch_attribution",
-    "q209_kaplan_meier",
-    "q210_gini_concentration",
-    "q211_stream_attribution",
-    "q212_holt_trend",
-    "q213_dow_seasonality",
-    "q214_k_anonymity",
-    "q215_l_diversity",
-    "q216_matryoshka_audit",
-    "q217_brier_decomposition",
-    "q218_cumulative_gains",
-    "q219_conformal_coverage",
-    "q221_t_closeness",
-    # ^ exactly 50 = the driver window (21 rewritten-pending + 29
-    # stalest). The r7-r11 windows hold fresher driver rows and rotate
-    # behind; everything unlisted follows in registration order via
-    # _apply_priority.
-]
-
-
-def _apply_priority() -> None:
-    ordered = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
-    ordered.update((n, q) for n, q in QUERIES.items() if n not in ordered)
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_apply_priority()
-
 
 def _cache_local(fn: Callable[[SparkSession, str], DataFrame]):
     """Queries that persist() intermediates cannot unpersist them before

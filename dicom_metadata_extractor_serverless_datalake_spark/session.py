@@ -45,6 +45,14 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already registered in this context
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 48 GB: a local[] driver
+    JVM holds every executor, but asking for more heap than the host can
+    back gets the process OOM-killed under load."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, max(1 << 10, total // 2 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "dicom_metadata_extractor_serverless_datalake_spark",
     master: str | None = None,
@@ -99,7 +107,7 @@ def get_spark(
         # the Python worker memory bounded during mapInPandas extraction
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -1,5 +1,5 @@
-"""Source readers: listing-based ranged binary scan, plus thin wrappers
-over Spark's built-in parquet/csv/json/binaryFile sources."""
+"""Source readers: the object walker and ranged read every DICOM reader
+shares, plus thin wrappers over Spark's built-in parquet/csv/json sources."""
 
-from .binary import list_binary_objects, read_binary  # noqa: F401
+from .binary import list_binary_objects, read_object, walk_objects  # noqa: F401
 from .tables import load_table, register_star_schema  # noqa: F401

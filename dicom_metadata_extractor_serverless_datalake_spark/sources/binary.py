@@ -1,4 +1,8 @@
-"""Listing-based binary source with ranged reads.
+"""The one read path for DICOM objects: a listing walker and a ranged read.
+
+Batch ingest (ingest/pipeline.py), ``format("dicom")`` and its stream
+reader (sources/dicom_source.py) all list objects with
+:func:`walk_objects` and read them with :func:`read_object`.
 
 Why not just ``spark.read.format("binaryFile")``:
 1. it silently skips zero-byte objects, but the reference's contract
@@ -8,9 +12,8 @@ Why not just ``spark.read.format("binaryFile")``:
    .dcm objects — metadata precedes pixel data (src/s3wrapper.py:53-63,
    rationale src/app.py:117);
 3. at 100 TB / millions of small objects, one-file-per-task is task-
-   scheduling death; here the listing is repartitioned and each task
-   reads a *pack* of objects, so task count is governed by
-   ``target_partition_bytes`` not object count.
+   scheduling death; here each task reads a *pack* of objects, so task
+   count is governed by ``TARGET_PARTITION_BYTES`` not object count.
 
 The driver only lists (path, size) — bytes are read executor-side inside
 the extraction stage, so the scan parallelizes and the ranged cap is
@@ -26,8 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ingest.archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
+
 # reference caps .dcm GETs at bytes=0-10000000 (src/s3wrapper.py:55-59)
 DCM_RANGED_READ_BYTES = 10_000_001
+# input bytes one read task owns
+TARGET_PARTITION_BYTES = 128 << 20
 
 LISTING_SCHEMA = T.StructType(
     [
@@ -47,73 +54,41 @@ def _local_path(input_path: str) -> str:
     )
 
 
-def list_binary_objects(
-    spark: SparkSession,
-    input_path: str,
-    recursive: bool = True,
-    target_partition_bytes: int = 128 << 20,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """List objects under ``input_path`` into a (path, size) DataFrame,
-    partitioned so each task owns ~target_partition_bytes of input.
-
-    Includes zero-byte objects (unlike the binaryFile source)."""
+def walk_objects(input_path: str) -> list[tuple[str, int, int]]:
+    """Every object under ``input_path`` (or the object itself) as
+    ``(path, size, mtime_ns)``, sorted by path. Zero-byte objects are
+    included (unlike the binaryFile source)."""
     root = _local_path(input_path)
-    entries: list[tuple[str, int]] = []
     if os.path.isfile(root):
-        entries.append((root, os.path.getsize(root)))
+        paths = [root]
     else:
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                full = os.path.join(dirpath, name)
-                entries.append((full, os.path.getsize(full)))
-            if not recursive:
-                break
+        paths = [os.path.join(d, name) for d, _dirs, files in os.walk(root) for name in files]
+    out = []
+    for path in sorted(paths):
+        st = os.stat(path)
+        out.append((path, st.st_size, st.st_mtime_ns))
+    return out
+
+
+def read_object(path: str) -> bytes | None:
+    """The bytes ingest parses from one object: None for ignored
+    extensions, the whole object for archives (members can sit anywhere
+    in the file), else at most ``DCM_RANGED_READ_BYTES`` (the .dcm
+    ranged-GET analogue)."""
+    ext = eval_ext(path)
+    if ext in IGNORED_EXTS:
+        return None
+    with open(path, "rb") as fh:
+        return fh.read() if ext in ZIP_EXTS | TAR_EXTS else fh.read(DCM_RANGED_READ_BYTES)
+
+
+def list_binary_objects(spark: SparkSession, input_path: str) -> DataFrame:
+    """List objects under ``input_path`` into a (path, size) DataFrame,
+    partitioned so each task owns ~TARGET_PARTITION_BYTES of input."""
+    entries = [(path, size) for path, size, _mtime in walk_objects(input_path)]
     total = sum(s for _, s in entries)
     default_par = spark.sparkContext.defaultParallelism
-    n_parts = max(
-        min_partitions or 1,
-        min(len(entries), max(default_par, int(total / max(target_partition_bytes, 1)))),
-    ) or 1
+    n_parts = max(1, min(len(entries), max(default_par, total // TARGET_PARTITION_BYTES)))
     df = spark.createDataFrame(entries, LISTING_SCHEMA)
     # spread by hash of path so adjacent large files don't co-locate
     return df.repartition(n_parts, F.col("path"))
-
-
-def read_binary(
-    spark: SparkSession,
-    input_path: str,
-    ranged_cap: int | None = DCM_RANGED_READ_BYTES,
-    **listing_kwargs,
-) -> DataFrame:
-    """(path, content) DataFrame over every object under input_path.
-
-    ``ranged_cap`` bounds the bytes read for *non-archive* objects (the
-    .dcm ranged-GET analogue); archives are always read fully since
-    members can sit anywhere in the file."""
-    from ..ingest.archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
-
-    listing = list_binary_objects(spark, input_path, **listing_kwargs)
-
-    def _read(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            paths, blobs = [], []
-            for path in pdf["path"]:
-                ext = eval_ext(path)
-                if ext in IGNORED_EXTS:
-                    continue
-                cap = None if ext in ZIP_EXTS | TAR_EXTS else ranged_cap
-                with open(path, "rb") as fh:
-                    blobs.append(fh.read(cap) if cap else fh.read())
-                paths.append(path)
-            yield pd.DataFrame({"path": paths, "content": blobs})
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return listing.mapInPandas(_read, schema=schema)

@@ -9,15 +9,14 @@ planning, instead of a hand-rolled listing + mapInPandas:
     df = spark.read.format("dicom").load("/incoming")
     df.filter("error IS NULL").groupBy("modality").count()
 
-Planning: the driver lists (path, size) and packs files into input
-partitions of ~``targetPartitionBytes`` (default 128 MB) — the
-small-object answer at 100 TB scale: task count tracks bytes, not
-object count. Reading happens executor-side per partition with the
-ranged .dcm cap applied at open time, so pixel bytes beyond the first
-10 MB are never read (the reference's biggest I/O optimization,
-src/s3wrapper.py:55-59).
+Planning: the driver lists (path, size) with ``sources.binary.walk_objects``
+and packs files first-fit into input partitions of ~``TARGET_PARTITION_BYTES``
+(128 MB) — the small-object answer at 100 TB scale: task count tracks
+bytes, not object count. Reading happens executor-side per partition
+through ``ingest.extract.read_extract``, so the ranged .dcm cap applies
+at open time and pixel bytes beyond the first 10 MB are never read (the
+reference's biggest I/O optimization, src/s3wrapper.py:55-59).
 
-Options: ``rangedCap`` (bytes, 0 disables), ``targetPartitionBytes``.
 The schema is the fixed INGEST_SCHEMA (canonical columns + extra_tags
 map + error channel), so quarantine routing works directly on the
 loaded frame.
@@ -25,9 +24,15 @@ loaded frame.
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 from ..schema import INGEST_SCHEMA
+from .binary import TARGET_PARTITION_BYTES, walk_objects
 
 
 class _FilePack(InputPartition):
@@ -35,8 +40,40 @@ class _FilePack(InputPartition):
         self.paths = paths
 
 
+def _pack(entries: list[tuple[str, int, int]]) -> list[_FilePack]:
+    """First-fit pack (path, size, mtime) entries, largest first, so each
+    partition owns ~TARGET_PARTITION_BYTES of input."""
+    packs: list[list[str]] = []
+    sizes: list[int] = []
+    for path, size, _mtime in sorted(entries, key=lambda e: -e[1]):
+        for i, s in enumerate(sizes):
+            if s + size <= TARGET_PARTITION_BYTES:
+                packs[i].append(path)
+                sizes[i] += size
+                break
+        else:
+            packs.append([path])
+            sizes.append(size)
+    return [_FilePack(p) for p in packs]
+
+
+def _read_pack(partition: _FilePack):
+    from ..ingest.extract import read_extract
+
+    cols = [f.name for f in INGEST_SCHEMA.fields]
+    for row in read_extract(partition.paths):
+        yield tuple(row[c] for c in cols)
+
+
+def _path(options) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("format('dicom') requires .load(path)")
+    return path
+
+
 class DicomDataSource(DataSource):
-    """Batch reader for DICOM objects (bare or inside archives)."""
+    """Batch and stream reader for DICOM objects (bare or inside archives)."""
 
     @classmethod
     def name(cls) -> str:
@@ -46,63 +83,21 @@ class DicomDataSource(DataSource):
         return INGEST_SCHEMA
 
     def reader(self, schema) -> "DicomReader":
-        return DicomReader(self.options)
+        return DicomReader(_path(self.options))
 
     def streamReader(self, schema) -> "DicomStreamReader":
-        return DicomStreamReader(self.options)
+        return DicomStreamReader(_path(self.options))
 
 
 class DicomReader(DataSourceReader):
-    def __init__(self, options):
-        from .binary import DCM_RANGED_READ_BYTES
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("format('dicom') requires .load(path)")
-        cap = int(options.get("rangedCap", DCM_RANGED_READ_BYTES))
-        self.ranged_cap = cap if cap > 0 else None
-        self.target_bytes = int(options.get("targetPartitionBytes", 128 << 20))
+    def __init__(self, path: str):
+        self.path = path
 
     def partitions(self) -> list[_FilePack]:
-        import os
-
-        entries: list[tuple[str, int]] = []
-        root = self.path
-        if os.path.isfile(root):
-            entries.append((root, os.path.getsize(root)))
-        else:
-            for dirpath, _dirs, files in os.walk(root):
-                for name in sorted(files):
-                    full = os.path.join(dirpath, name)
-                    entries.append((full, os.path.getsize(full)))
-        # first-fit pack by size so tasks own ~target_bytes of input
-        packs: list[list[str]] = []
-        sizes: list[int] = []
-        for path, size in sorted(entries, key=lambda e: -e[1]):
-            for i, s in enumerate(sizes):
-                if s + size <= self.target_bytes:
-                    packs[i].append(path)
-                    sizes[i] += size
-                    break
-            else:
-                packs.append([path])
-                sizes.append(size)
-        return [_FilePack(p) for p in packs] or [_FilePack([])]
+        return _pack(walk_objects(self.path)) or [_FilePack([])]
 
     def read(self, partition: _FilePack):
-        from ..ingest.archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
-        from ..ingest.extract import extract_records
-
-        cols = [f.name for f in INGEST_SCHEMA.fields]
-        for path in partition.paths:
-            ext = eval_ext(path)
-            if ext in IGNORED_EXTS:
-                continue
-            cap = None if ext in ZIP_EXTS | TAR_EXTS else self.ranged_cap
-            with open(path, "rb") as fh:
-                content = fh.read(cap) if cap else fh.read()
-            for row in extract_records(path, content):
-                yield tuple(row[c] for c in cols)
+        return _read_pack(partition)
 
 
 def register_dicom_source(spark) -> None:
@@ -127,79 +122,39 @@ def register_dicom_source(spark) -> None:
 # reader.
 # --------------------------------------------------------------------------
 
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
-
-
-def _list_with_mtime(root: str) -> list[tuple[str, int, int]]:
-    import os
-
-    out = []
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return [(root, st.st_size, st.st_mtime_ns)]
-    for dirpath, _dirs, files in os.walk(root):
-        for name in sorted(files):
-            full = os.path.join(dirpath, name)
-            st = os.stat(full)
-            out.append((full, st.st_size, st.st_mtime_ns))
-    return out
-
 
 class DicomStreamReader(DataSourceStreamReader):
-    def __init__(self, options):
-        from .binary import DCM_RANGED_READ_BYTES
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("readStream.format('dicom') requires .load(path)")
-        cap = int(options.get("rangedCap", DCM_RANGED_READ_BYTES))
-        self.ranged_cap = cap if cap > 0 else None
-        self.target_bytes = int(options.get("targetPartitionBytes", 128 << 20))
+    def __init__(self, path: str):
+        self.path = path
 
     def initialOffset(self) -> dict:
         return {"mtime": -1, "tail": ""}
 
     def latestOffset(self) -> dict:
-        entries = _list_with_mtime(self.path)
+        entries = walk_objects(self.path)
         if not entries:
             return {"mtime": -1, "tail": ""}
         mx = max(e[2] for e in entries)
         tail = sorted(p for p, _s, m in entries if m == mx)
         return {"mtime": mx, "tail": "\x00".join(tail)}
 
-    def _new_files(self, start: dict, end: dict) -> list[tuple[str, int]]:
+    def _new_files(self, start: dict, end: dict) -> list[tuple[str, int, int]]:
         s_m, s_tail = start["mtime"], set(filter(None, start["tail"].split("\x00")))
         e_m, e_tail = end["mtime"], set(filter(None, end["tail"].split("\x00")))
         out = []
-        for path, size, m in _list_with_mtime(self.path):
+        for path, size, m in walk_objects(self.path):
             if m > e_m or (m == e_m and path not in e_tail):
                 continue  # after the end offset
             if m < s_m or (m == s_m and path in s_tail):
                 continue  # already delivered
-            out.append((path, size))
+            out.append((path, size, m))
         return out
 
     def partitions(self, start: dict, end: dict) -> list[_FilePack]:
-        new = self._new_files(start, end)
-        packs: list[list[str]] = []
-        sizes: list[int] = []
-        for path, size in sorted(new, key=lambda e: -e[1]):
-            for i, s in enumerate(sizes):
-                if s + size <= self.target_bytes:
-                    packs[i].append(path)
-                    sizes[i] += size
-                    break
-            else:
-                packs.append([path])
-                sizes.append(size)
-        return [_FilePack(p) for p in packs]
+        return _pack(self._new_files(start, end))
 
     def read(self, partition: _FilePack):
-        reader = DicomReader.__new__(DicomReader)
-        reader.ranged_cap = self.ranged_cap
-        reader.target_bytes = self.target_bytes
-        reader.path = self.path
-        return reader.read(partition)
+        return _read_pack(partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are recomputable from the listing; nothing to clean

@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental binary ingest (the S3-event pattern)
+"""Structured Streaming: incremental DICOM ingest (the S3-event pattern)
 and watermarked window aggregations."""
 
 from .ingest_stream import start_ingest_stream  # noqa: F401

@@ -1,10 +1,12 @@
 """Streaming ingest: the S3 ObjectCreated -> Lambda event pattern
-(deploy/serverless.yml:195-200) as a Structured Streaming file source.
+(deploy/serverless.yml:195-200) as a Structured Streaming query.
 
-Every new object under the input path becomes a micro-batch row;
-``foreachBatch`` reuses the exact batch extraction (ingest/extract.py)
-and splits lake vs quarantine — so batch and streaming ingest share one
-code path, and a catch-up run is just ``Trigger.AvailableNow``.
+New objects under the input path arrive through
+``readStream.format("dicom")`` (sources/dicom_source.py), which walks,
+range-reads and extracts exactly like batch ingest; ``foreachBatch``
+hands each micro-batch to the batch writer (ingest.pipeline.write_split)
+— so batch and streaming ingest share one read path and one
+lake/quarantine writer, zero-byte objects included.
 
 At-least-once S3 events (the reference punts redelivery to Lambda
 retries + DLQ) become idempotent here via dropDuplicates on the lineage
@@ -14,23 +16,10 @@ key before the sink.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingest.pipeline import extract_df
-from ..schema import PARTITION_COL
-
-# The binaryFile source's fixed schema — streaming file sources require an
-# explicit schema (no inference on a stream), so we declare it.
-BINARY_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("modificationTime", T.TimestampType(), False),
-        T.StructField("length", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-    ]
-)
+from ..ingest.pipeline import write_split
+from ..sources.dicom_source import register_dicom_source
 
 
 def start_ingest_stream(
@@ -40,37 +29,20 @@ def start_ingest_stream(
     quarantine_path: str | None = None,
     checkpoint_path: str | None = None,
     available_now: bool = True,
-    max_files_per_trigger: int = 1000,
 ) -> StreamingQuery:
     """Start (and return) the streaming ingest query.
 
     ``available_now=True`` processes the backlog then stops — the
-    catch-up / replay mode; False runs continuously per micro-batch."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(input_path)
-    )
+    catch-up / replay mode; False runs continuously per micro-batch.
+    Python stream sources (Spark 4.1) do not support
+    ``Trigger.AvailableNow``: Spark logs a WARN and drains the whole
+    backlog in one micro-batch before stopping."""
+    register_dicom_source(spark)
+    reader = spark.readStream.format("dicom").load(input_path)
 
     def sink(batch_df, batch_id: int) -> None:
-        extracted = extract_df(batch_df).dropDuplicates(
-            ["source_s3_key", "source_s3_archive_path"]
-        )
-        extracted.persist()
-        try:
-            good = extracted.filter(F.col("error").isNull()).drop("error", "error_log")
-            bad = extracted.filter(F.col("error").isNotNull())
-            (
-                good.repartition(PARTITION_COL)
-                .write.mode("append")
-                .partitionBy(PARTITION_COL)
-                .parquet(lake_path)
-            )
-            if quarantine_path is not None and bad.limit(1).count() > 0:
-                bad.write.mode("append").parquet(quarantine_path)
-        finally:
-            extracted.unpersist()
+        deduped = batch_df.dropDuplicates(["source_s3_key", "source_s3_archive_path"])
+        write_split(deduped, lake_path, quarantine_path)
 
     writer = reader.writeStream.foreachBatch(sink)
     if checkpoint_path:

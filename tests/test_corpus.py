@@ -231,19 +231,6 @@ def test_canonicalizer_rejects_nested_cells(cell):
         _rows_key(["a", "b"], [(1, cell)])
 
 
-def test_priority_rotation_is_exact():
-    """Every _PRIORITY name must exist in the registry (a typo silently
-    drops the query from the driver's verification window) and appear
-    exactly once; the front-50 window must contain no duplicates."""
-    from dicom_metadata_extractor_serverless_datalake_spark.queries import corpus
-
-    unknown = [n for n in corpus._PRIORITY if n not in corpus.QUERIES]
-    assert not unknown, f"_PRIORITY names not in registry: {unknown}"
-    dupes = [n for n in set(corpus._PRIORITY) if corpus._PRIORITY.count(n) > 1]
-    assert not dupes, f"duplicate _PRIORITY entries: {dupes}"
-    assert len(list(corpus.QUERIES)) == len(set(corpus.QUERIES))
-
-
 def test_duckdb_list_reduce_struct_acc_hazard_documented():
     """DuckDB 1.0.0 reuses the struct accumulator buffer from the
     second list_reduce application onward, so later struct_pack fields
@@ -284,81 +271,6 @@ def test_duckdb_list_reduce_struct_acc_hazard_documented():
             "DuckDB list_reduce struct-accumulator aliasing appears FIXED "
             "in this DuckDB version — q212's recursive-CTE oracle can be "
             "simplified; update queries/behavior.py and this probe."
-        )
-
-
-def test_priority_front_window_holds_the_stalest():
-    """Freshness guard (VERDICT r10 #4, extended per VERDICT r11 #1):
-    the rotation is mechanical, not prose. Parse every
-    CORRECTNESS_r*.json the driver has written, derive each query's
-    latest GREEN round, and require that the 50-query front window of
-    _PRIORITY consists of (a) every query the driver has never
-    verified, then (b) every query REWRITTEN since its latest green
-    round (corpus._REWRITTEN — a rewrite invalidates the old green, so
-    it must re-enter the window until a driver round re-samples it),
-    then (c) only queries at least as stale as everything left outside
-    — i.e. no query outside the window may be strictly staler than a
-    plain-staleness query inside it. Ties across the boundary are fine
-    (bands share rounds). Stale _REWRITTEN entries (driver-green at or
-    after their rewrite round) must be removed — they would silently
-    hold a window slot a staler query needs."""
-    import glob
-    import json
-    import os
-    import re
-
-    from dicom_metadata_extractor_serverless_datalake_spark.queries import corpus
-
-    latest: dict[str, int] = {}
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")))
-    assert arts, "no CORRECTNESS artifacts found next to the repo root"
-    for path in arts:
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        for name, row in json.load(open(path)).items():
-            green = (
-                isinstance(row, dict)
-                and row.get("err") is None
-                and row.get("rows_match") is not False
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            if green:
-                latest[name] = max(latest.get(name, 0), rnd)
-
-    names = list(corpus.QUERIES)
-    window, outside = set(names[:50]), names[50:]
-    never = {n for n in names if n not in latest}
-    unknown_rw = set(corpus._REWRITTEN) - set(names)
-    assert not unknown_rw, f"_REWRITTEN names not in registry: {sorted(unknown_rw)}"
-    settled = {
-        n for n, rnd in corpus._REWRITTEN.items() if latest.get(n, 0) >= rnd
-    }
-    assert not settled, (
-        f"_REWRITTEN entries already driver-green post-rewrite: "
-        f"{sorted(settled)} — remove them so the window rotates"
-    )
-    pending = {
-        n
-        for n, rnd in corpus._REWRITTEN.items()
-        if n in latest and latest[n] < rnd
-    }
-    missing_new = never - window
-    assert not missing_new or len(never) > 50, (
-        f"never-driver-verified queries must lead the window: {sorted(missing_new)}"
-    )
-    missing_rw = pending - window
-    assert not missing_rw or len(never | pending) > 50, (
-        f"rewritten-since-last-green queries must be in the window: "
-        f"{sorted(missing_rw)}"
-    )
-    verified_in = [latest[n] for n in window if n in latest and n not in pending]
-    if verified_in and outside:
-        stalest_out = min(latest.get(n, 10**9) for n in outside)
-        assert max(verified_in) <= stalest_out, (
-            "front window holds a fresher round "
-            f"({max(verified_in)}) than the stalest query left outside "
-            f"({stalest_out}) — rotate _PRIORITY"
         )
 
 

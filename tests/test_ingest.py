@@ -1,5 +1,6 @@
-"""End-to-end ingest: fixtures -> binaryFile -> mapInPandas -> partitioned
-Parquet lake + quarantine (SURVEY §5 strategy item 2)."""
+"""End-to-end ingest: fixtures -> listing -> mapInPandas ranged read +
+extract -> partitioned Parquet lake + quarantine (SURVEY §5 strategy
+item 2)."""
 
 import datetime
 
@@ -197,7 +198,8 @@ def test_lake_reconcile_replay_converges(spark, tmp_path):
     object reports it as removed."""
     from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
 
-    src = "/root/reference/sample_dcm"
+    src = str(tmp_path / "in")
+    write_fixture_tree(tmp_path / "in")
     a = DicomLake(spark, str(tmp_path / "a"), quarantine_path=str(tmp_path / "qa"),
                   table="rec_a")
     a.ingest(src)
@@ -354,7 +356,7 @@ def test_breadcrumb_schema_stable_across_ingest_modes(spark, tmp_path_factory):
     """VERDICT r09 #6: the quarantine breadcrumb struct (stage,
     error_class, source_key, member_path, ts) is the SAME schema no
     matter which ingest mode wrote it — batch ``ingest_batch``,
-    streaming ``start_ingest_stream`` (a different foreachBatch sink),
+    streaming ``start_ingest_stream`` (the batch writer in foreachBatch),
     and the native ``format("dicom")`` source (batch and stream) — so a
     DLQ consumer can union quarantine output from every mode."""
     from dicom_metadata_extractor_serverless_datalake_spark.schema import QUARANTINE_LOG_SCHEMA

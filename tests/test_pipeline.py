@@ -367,6 +367,18 @@ def test_dedup_paragraphs_no_text_in_election_exchange(spark, docs):
         assert "para#" not in m.group(0), m.group(0)[:120]
 
 
+def test_dedup_paragraphs_then_quality_filter(spark, docs):
+    """A filter on the reassembled text composes with dedup_paragraphs:
+    the optimizer must not push it below the reassembly join, where the
+    text is out of scope. Equal to filtering a checkpointed dedup."""
+    deduped = TextCorpus(docs).dedup_paragraphs()
+    got = deduped.quality_filter(min_chars=100).df.collect()
+    frozen = TextCorpus(deduped.df.localCheckpoint()).quality_filter(min_chars=100)
+    want = frozen.df.collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert got
+
+
 def test_dedup_paragraphs_trailing_separator_doc_still_drops(spark):
     """A fully-duplicate doc must drop even when a trailing/doubled
     separator gives it empty segments — empty segments are artifacts

@@ -30,10 +30,11 @@ def test_streaming_ingest_available_now(spark, tmp_path_factory):
     )
     q.awaitTermination(300)
     df = spark.read.parquet(str(out / "lake"))
-    # binaryFile skips the 0-byte DICOMDIR (its limitation, documented in
-    # sources/binary.py) -> 10 good rows, quarantine may be empty
     assert df.count() == 10
     assert df.filter(F.col("study_date").isNull()).count() == 0
+    # the 0-byte DICOMDIR is quarantined, not dropped
+    quar = spark.read.parquet(str(out / "quarantine")).collect()
+    assert [r["source_s3_key"].rsplit("/", 1)[-1] for r in quar] == ["DICOMDIR"]
 
     # restart on same checkpoint: no new files -> no duplicate rows
     q2 = start_ingest_stream(
@@ -42,6 +43,48 @@ def test_streaming_ingest_available_now(spark, tmp_path_factory):
     )
     q2.awaitTermination(300)
     assert spark.read.parquet(str(out / "lake")).count() == 10
+
+
+def test_streaming_ingest_equals_batch(spark, tmp_path):
+    """lake.watch and lake.ingest share one read path and one writer:
+    on the fixture tree plus a .dcm past the 10 MB ranged-read cap they
+    write the same lake and quarantine keys. The 0-byte DICOMDIR lands
+    in the quarantine; the oversized .dcm lands in the lake, parsed from
+    its first 10 MB (metadata precedes pixel data)."""
+    from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
+    from dicom_metadata_extractor_serverless_datalake_spark.dicom.codec import write_dicom
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import (
+        DCM_RANGED_READ_BYTES,
+    )
+
+    root = tmp_path / "in"
+    write_fixture_tree(root)
+    big = write_dicom(
+        {"SOPClassUID": "1.2.840.10008.5.1.4.1.1.7", "Modality": "CT",
+         "StudyDate": "20210101"},
+        pixel_data=bytes(DCM_RANGED_READ_BYTES + 1_000_000),
+    )
+    (root / "big.dcm").write_bytes(big)
+
+    def keys(lake):
+        rows = lake.df().select(
+            "source_s3_key", "source_s3_archive_path", F.lit(None).alias("stage")
+        ).unionByName(
+            lake.quarantine().select(
+                "source_s3_key", "source_s3_archive_path", F.col("error_log.stage").alias("stage")
+            )
+        )
+        return sorted((tuple(r) for r in rows.collect()), key=repr)
+
+    batch = DicomLake(spark, str(tmp_path / "lake_b"), str(tmp_path / "quar_b"), table="eq_b")
+    batch.ingest(str(root))
+    stream = DicomLake(spark, str(tmp_path / "lake_s"), str(tmp_path / "quar_s"), table="eq_s")
+    stream.watch(str(root), str(tmp_path / "ckpt"), available_now=True).awaitTermination(300)
+
+    got = keys(stream)
+    assert got == keys(batch)
+    assert (str(root / "DICOMDIR"), "DICOMDIR", "dicom_parse") in got
+    assert (str(root / "big.dcm"), "big.dcm", None) in got
 
 
 def test_streaming_windows_match_batch(spark, sf_dir, tmp_path_factory):
@@ -343,7 +386,7 @@ def test_dicom_stream_source_keeps_empty_files(spark, tmp_path_factory):
 
     from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
 
-    from fixtures import write_fixture_tree
+    from fixtures import make_dcm, write_fixture_tree
 
     root = tmp_path_factory.mktemp("dsstream_in")
     write_fixture_tree(root)
@@ -370,9 +413,7 @@ def test_dicom_stream_source_keeps_empty_files(spark, tmp_path_factory):
 
     # late arrival: a new file lands -> only it is delivered next batch
     _time.sleep(0.05)
-    import shutil as _sh
-
-    _sh.copy("/root/reference/sample_dcm/example-0", str(root / "late.dcm"))
+    (root / "late.dcm").write_bytes(make_dcm(42))
     run_batch()
     df2 = spark.read.parquet(str(out / "lake"))
     assert df2.count() == 12

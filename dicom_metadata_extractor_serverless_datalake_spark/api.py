@@ -27,10 +27,11 @@ produce.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import PARTITION_COL
+from .schema import INGEST_SCHEMA, PARTITION_COL
 
 
 class DicomLake:
@@ -55,8 +56,10 @@ class DicomLake:
 
     def ingest(self, input_path: str) -> DataFrame:
         """Batch-ingest every object under input_path (the replay of all
-        S3 ObjectCreated events), then (re-)register the table. Returns
-        the queryable lake DataFrame."""
+        S3 ObjectCreated events), then register what it wrote: the view,
+        or the partitions it wrote on the external table (created over
+        the lake when missing or pointing elsewhere). Returns the
+        queryable lake DataFrame."""
         from .ingest import run_ingest
 
         return run_ingest(
@@ -109,8 +112,9 @@ class DicomLake:
         return deidentify(self.df(), salt, **kwargs)
 
     def refresh(self) -> None:
-        """Pick up partitions written outside this session — the MSCK
-        REPAIR / crawler step."""
+        """Pick up partitions written by other writers (another session,
+        :meth:`watch`, a copy) — the MSCK REPAIR / crawler step.
+        :meth:`ingest` registers the partitions it writes itself."""
         if self.external:
             from .sources.catalog import repair_table
 
@@ -125,9 +129,9 @@ class DicomLake:
         if not self.quarantine_path:
             return None
         try:
-            return self.spark.read.parquet(self.quarantine_path)
-        except Exception:
-            return None  # nothing quarantined yet
+            return self.spark.read.schema(INGEST_SCHEMA).parquet(self.quarantine_path)
+        except AnalysisException:
+            return None  # nothing quarantined yet: the path does not exist
 
     def compact(self, target_file_bytes: int = 128 << 20, min_files: int = 8) -> dict[str, int]:
         """Rewrite small-file partitions (operators/compact.py)."""

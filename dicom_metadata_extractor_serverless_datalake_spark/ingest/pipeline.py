@@ -15,18 +15,23 @@ Scale notes (100 TB target):
 - :func:`write_split` is the one lake/quarantine writer, shared with the
   streaming sink (streaming/ingest_stream.py). The lake is
   Hive-partitioned on study_date so Catalyst prunes partitions on the
-  query side; writes repartition by the partition column first so each
-  task writes few files (avoids the small-files explosion of
-  per-task-per-partition writers).
+  query side. The extraction is shuffled once, by the partition column,
+  and persisted: each study_date is written from one task (no
+  small-files explosion of per-task-per-partition writers), and the lake
+  write's Observation yields the row and error counts and the written
+  dates, so no separate count job runs.
+- ``run_ingest(external=True)`` registers only the partitions the
+  writer reports; the table is created (and MSCK-repaired) only when it
+  is missing or points at another location.
 """
 
 from __future__ import annotations
 
-import os
+import datetime
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import DICOM_METADATA_SCHEMA, INGEST_SCHEMA, PARTITION_COL
@@ -56,35 +61,40 @@ def extract_from_listing(listing: DataFrame) -> DataFrame:
 
 def write_split(
     extracted: DataFrame, lake_path: str, quarantine_path: str | None
-) -> tuple[int, int]:
+) -> tuple[int, int, list[datetime.date]]:
     """Append extracted rows without an error to the study_date-partitioned
     lake, and rows with one to the quarantine (when given). Returns
-    (lake_rows, quarantined_rows)."""
-    extracted.persist()
+    (lake_rows, quarantined_rows, written study_dates).
+
+    The extraction is shuffled once by study_date and persisted; the lake
+    write materializes it through an Observation that counts rows and
+    errors and collects the written dates, and the quarantine write reads
+    it back only when there are errors. Quarantine rows all carry the
+    1979-01-01 default date, so they sit in one shuffle partition."""
+    by_date = extracted.repartition(PARTITION_COL).persist()
     try:
-        good = extracted.filter(F.col("error").isNull()).drop("error", "error_log")
-        bad = extracted.filter(F.col("error").isNotNull())
-
-        # one job for both counts, off the persisted extraction
-        counts = dict(
-            extracted.groupBy(F.col("error").isNull().alias("ok")).count().collect()
-        )
-        n_good, n_bad = int(counts.get(True, 0)), int(counts.get(False, 0))
-
-        # repartition by partition key so each study_date writes from few
-        # tasks -> few, large parquet files (small-files control at scale)
-        if n_good:
-            (
-                good.repartition(PARTITION_COL)
-                .write.mode("append")
-                .partitionBy(PARTITION_COL)
-                .parquet(lake_path)
+        ok = F.col("error").isNull()
+        seen = Observation()
+        (
+            by_date.observe(
+                seen,
+                F.count("*").alias("rows"),
+                F.count("error").alias("errors"),
+                F.collect_set(F.when(ok, F.col(PARTITION_COL))).alias("dates"),
             )
+            .filter(ok)
+            .drop("error", "error_log")
+            .write.mode("append")
+            .partitionBy(PARTITION_COL)
+            .parquet(lake_path)
+        )
+        got = seen.get
+        n_bad = int(got["errors"])
         if quarantine_path and n_bad:
-            bad.write.mode("append").parquet(quarantine_path)
+            by_date.filter(~ok).write.mode("append").parquet(quarantine_path)
     finally:
-        extracted.unpersist()
-    return n_good, n_bad
+        by_date.unpersist()
+    return int(got["rows"]) - n_bad, n_bad, sorted(got["dates"])
 
 
 def ingest_batch(
@@ -103,7 +113,7 @@ def ingest_batch(
     from ..sources.binary import list_binary_objects
 
     extracted = extract_from_listing(list_binary_objects(spark, input_path))
-    return write_split(extracted, lake_path, quarantine_path)
+    return write_split(extracted, lake_path, quarantine_path)[:2]
 
 
 def run_ingest(
@@ -119,21 +129,24 @@ def run_ingest(
     deploy/serverless.yml:509-567 / README.md:105).
 
     ``external=True`` registers a persistent partitioned external table
-    (partition pruning + MSCK discovery, the full Glue-table analogue);
-    default is a session-scoped temp view."""
-    ingest_batch(spark, input_path, lake_path, quarantine_path)
-    if table and external:
-        from ..sources.catalog import register_external_table
+    (partition pruning, the full Glue-table analogue) and adds the
+    partitions this ingest wrote to it; the table is created and
+    MSCK-repaired only when it is missing or points at another location.
+    The default is a session-scoped temp view."""
+    from ..sources.binary import list_binary_objects
 
-        fq = register_external_table(spark, table, lake_path, PARTITION_COL)
+    extracted = extract_from_listing(list_binary_objects(spark, input_path))
+    _, _, dates = write_split(extracted, lake_path, quarantine_path)
+    if table and external:
+        from ..sources.catalog import register_partitions
+
+        fq = register_partitions(
+            spark, table, lake_path, DICOM_METADATA_SCHEMA, dates, PARTITION_COL
+        )
         return spark.table(fq)
-    # explicit schema: an all-quarantined ingest leaves the lake empty,
-    # which would otherwise fail schema inference; it also pins column
-    # types independent of what any one partition happens to contain
-    if "://" not in lake_path or lake_path.startswith("file:"):
-        # an all-quarantined first ingest never wrote the lake; a missing
-        # local dir fails even a schema-pinned read, so materialize it
-        os.makedirs(lake_path.removeprefix("file:"), exist_ok=True)
+    # explicit schema: an all-quarantined ingest leaves the lake without
+    # data files, which would otherwise fail schema inference; it also
+    # pins column types independent of what any one partition contains
     df = spark.read.schema(DICOM_METADATA_SCHEMA).parquet(lake_path)
     if table:
         df.createOrReplaceTempView(table)

@@ -2,6 +2,8 @@
 JSON/CSV query sources (§2.B scans row — the reference ignores these on
 ingest but they remain valid query inputs)."""
 
+import datetime
+
 from pyspark.sql import functions as F
 
 from dicom_metadata_extractor_serverless_datalake_spark.plans import physical_plan
@@ -21,7 +23,9 @@ def test_external_table_msck_and_pruning(spark, tmp_path_factory):
     )
     df.write.partitionBy("study_date").parquet(lake, mode="overwrite")
 
-    fq = register_external_table(spark, "t_lake", lake, "study_date", database="dicom_db")
+    fq = register_external_table(
+        spark, "t_lake", lake, df.schema, "study_date", database="dicom_db"
+    )
     got = spark.sql(f"SELECT count(*) c FROM {fq} WHERE study_date = '2021-01-01'").collect()
     assert got[0]["c"] == 50
 
@@ -112,6 +116,84 @@ def test_ingest_with_external_catalog_table(spark, tmp_path_factory):
     stats = analyze_table(spark, "dicom_external", columns=["modality"])
     assert "rows" in stats.get("Statistics", "")
     spark.sql("DROP TABLE dicom_external")
+
+
+def _drops(root):
+    """Two drops of bare .dcm objects with disjoint study dates: drop 1
+    only 1979-01-01 (no StudyDate), drop 2 only dates from the fixture
+    date list."""
+    from fixtures import make_dcm
+
+    d1, d2 = root / "drop1", root / "drop2"
+    d1.mkdir(parents=True)
+    d2.mkdir()
+    for i in range(2):
+        (d1 / f"nodate-{i}.dcm").write_bytes(make_dcm(100 + i, omit_study_date=True))
+    for i in range(3):
+        (d2 / f"dated-{i}.dcm").write_bytes(make_dcm(i))
+    return str(d1), str(d2)
+
+
+def test_external_ingest_adds_only_written_partitions(spark, tmp_path, count_jobs):
+    """A second external ingest adds the dates it wrote to the table
+    (queryable without refresh()) and runs no catalog job: the same job
+    count as the bare ingest, no schema inference and no MSCK. A
+    partition written by another writer stays invisible until refresh()."""
+    from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import ingest_batch
+    from dicom_metadata_extractor_serverless_datalake_spark.schema import DICOM_METADATA_SCHEMA
+
+    drop1, drop2 = _drops(tmp_path / "in")
+    lake = DicomLake(spark, str(tmp_path / "lake"), str(tmp_path / "quar"),
+                     table="two_drops", external=True)
+    try:
+        lake.ingest(drop1)
+        # another writer's partition, not registered by anyone
+        lake.df().limit(1).withColumn("study_date", F.lit("2099-01-01").cast("date")).write.mode(
+            "append"
+        ).partitionBy("study_date").parquet(lake.lake_path)
+
+        _, bare_jobs = count_jobs(lambda: ingest_batch(
+            spark, drop2, str(tmp_path / "bare"), str(tmp_path / "bare_q")))
+        _, jobs = count_jobs(lambda: lake.ingest(drop2))
+        assert jobs == bare_jobs
+
+        by_date = dict(
+            spark.sql("SELECT study_date, count(*) FROM two_drops GROUP BY 1").collect()
+        )
+        written = spark.read.schema(DICOM_METADATA_SCHEMA).parquet(str(tmp_path / "bare"))
+        want = dict(written.groupBy("study_date").count().collect())
+        assert by_date == {datetime.date(1979, 1, 1): 2, **want}
+
+        lake.refresh()
+        assert spark.table("two_drops").count() == 6
+    finally:
+        spark.sql("DROP TABLE IF EXISTS two_drops")
+
+
+def test_external_ingest_repoints_table(spark, tmp_path):
+    """A second lake registered under the same table name at another
+    location re-points the table to that lake only."""
+    from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
+
+    drop1, drop2 = _drops(tmp_path / "in")
+    a = DicomLake(spark, str(tmp_path / "a"), str(tmp_path / "qa"),
+                  table="repointed", external=True)
+    b = DicomLake(spark, str(tmp_path / "b"), str(tmp_path / "qb"),
+                  table="repointed", external=True)
+    try:
+        a.ingest(drop1)
+        assert spark.table("repointed").count() == 2
+        b.ingest(drop2)
+        rows = spark.table("repointed").select("source_s3_key").collect()
+        assert sorted(r[0].rsplit("/", 1)[-1] for r in rows) == [
+            f"dated-{i}.dcm" for i in range(3)
+        ]
+        loc = {r.col_name: r.data_type for r in spark.sql(
+            "DESCRIBE TABLE EXTENDED repointed").collect()}["Location"]
+        assert loc.rstrip("/").endswith(str(tmp_path / "b"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS repointed")
 
 
 def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path_factory):

@@ -171,24 +171,82 @@ def test_dicom_python_datasource(spark, tmp_path_factory):
     assert via_source.filter(F.col("error").isNotNull()).count() >= 1
 
 
-def test_all_quarantined_ingest_yields_empty_lake(spark, tmp_path_factory):
+@pytest.mark.parametrize("external", [False, True])
+def test_all_quarantined_ingest_yields_empty_lake(spark, tmp_path_factory, external):
     """A first ingest where every input is corrupt writes nothing to the
     lake; run_ingest must still return an empty, correctly-typed frame
-    (and register the view) instead of failing on the missing lake dir."""
+    (and register the view or the external table) instead of failing on
+    the missing lake dir or on schema inference over a lake with no
+    files."""
     from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import run_ingest
 
     root = tmp_path_factory.mktemp("allbad_in")
     (root / "garbage.dcm").write_bytes(b"\x00garbage" * 50)
     (root / "bad.zip").write_bytes(b"PK\x03\x04notazip")
     out = tmp_path_factory.mktemp("allbad_out")
-    df = run_ingest(
-        spark, str(root), str(out / "lake"), str(out / "quar"),
-        table="allbad_meta",
+    table = "allbad_ext" if external else "allbad_meta"
+    try:
+        df = run_ingest(
+            spark, str(root), str(out / "lake"), str(out / "quar"),
+            table=table, external=external,
+        )
+        assert df.count() == 0
+        assert df.schema == DICOM_METADATA_SCHEMA
+        assert spark.table(table).count() == 0
+        assert spark.read.parquet(str(out / "quar")).count() == 2
+    finally:
+        if external:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+@pytest.mark.parametrize(
+    "inputs, want",
+    [("good", (3, 0)), ("bad", (0, 2)), ("empty", (0, 0))],
+    ids=["good", "bad", "empty"],
+)
+def test_write_split_counts(spark, tmp_path, inputs, want):
+    """write_split's Observation counts: (lake_rows, quarantined_rows)
+    and the written dates for all-good, all-bad and empty inputs; no
+    quarantine is written when nothing failed."""
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import (
+        extract_from_listing,
+        write_split,
     )
-    assert df.count() == 0
-    assert df.schema == DICOM_METADATA_SCHEMA
-    assert spark.table("allbad_meta").count() == 0
-    assert spark.read.parquet(str(out / "quar")).count() == 2
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import list_binary_objects
+    from fixtures import make_dcm
+
+    root = tmp_path / "in"
+    root.mkdir()
+    if inputs == "good":
+        for i in range(3):
+            (root / f"ok-{i}.dcm").write_bytes(make_dcm(i))
+    elif inputs == "bad":
+        (root / "garbage.dcm").write_bytes(b"\x00garbage" * 50)
+        (root / "bad.zip").write_bytes(b"PK\x03\x04notazip")
+    lake, quar = tmp_path / "lake", tmp_path / "quar"
+
+    extracted = extract_from_listing(list_binary_objects(spark, str(root)))
+    n_good, n_bad, dates = write_split(extracted, str(lake), str(quar))
+    assert (n_good, n_bad) == want
+
+    rows = spark.read.schema(DICOM_METADATA_SCHEMA).parquet(str(lake))
+    assert rows.count() == n_good
+    assert dates == sorted({r[0] for r in rows.select("study_date").collect()})
+    assert quar.exists() == (n_bad > 0)
+    if n_bad:
+        assert spark.read.parquet(str(quar)).count() == n_bad
+
+
+def test_ingest_batch_job_count(spark, fixture_dir, tmp_path, count_jobs):
+    """Job-count guard for the fused writer: ingesting the fixture tree
+    (lake rows and one quarantined object) runs exactly 5 Spark jobs;
+    the count repeats run to run and across core counts. A separate
+    count job or a second shuffle coming back adds jobs and fails this."""
+    root, counts = fixture_dir
+    lake, quar = str(tmp_path / "lake"), str(tmp_path / "quar")
+    got, jobs = count_jobs(lambda: ingest_batch(spark, str(root), lake, quar))
+    assert got == (counts["lake_rows"], counts["quarantine_rows"])
+    assert jobs == 5
 
 
 def test_lake_reconcile_replay_converges(spark, tmp_path):

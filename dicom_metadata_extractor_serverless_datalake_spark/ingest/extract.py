@@ -110,6 +110,11 @@ def split_path(path: str) -> tuple[str | None, str | None, str]:
     return None, None, parsed.path or path
 
 
+def _lineage(path: str) -> dict[str, str | None]:
+    bucket, region, key = split_path(path)
+    return {"bucket": bucket, "region": region, "key": key, "archive_path": None}
+
+
 def extract_records(path: str, content: bytes) -> Iterator[dict]:
     """One (path, bytes) object -> canonical row dicts (+ error rows).
 
@@ -120,8 +125,8 @@ def extract_records(path: str, content: bytes) -> Iterator[dict]:
     (the Lambda-retry -> SQS DLQ analogue)."""
     from . import archives  # local import keeps UDF pickle small
 
-    bucket, region, key = split_path(path)
-    base_lineage = {"bucket": bucket, "region": region, "key": key, "archive_path": None}
+    base_lineage = _lineage(path)
+    key = base_lineage["key"]
     if archives.is_ignored(key):
         return
     try:
@@ -142,10 +147,17 @@ def read_extract(paths: Iterable[str]) -> Iterator[dict]:
     """Objects at ``paths`` -> canonical row dicts (+ error rows): the
     ranged read (sources.binary.read_object) then :func:`extract_records`,
     one object at a time. Every DICOM reader runs this loop in its
-    worker: batch ingest, ``format("dicom")`` and its stream reader."""
+    worker: batch ingest, ``format("dicom")`` and its stream reader. An
+    object that cannot be read (a dangling symlink, or one deleted since
+    the listing) becomes one ``object_read`` quarantine row instead of
+    failing the task."""
     from ..sources.binary import read_object
 
     for path in paths:
-        content = read_object(path)
+        try:
+            content = read_object(path)
+        except OSError as err:
+            yield _error_row(_lineage(path), err, stage="object_read")
+            continue
         if content is not None:
             yield from extract_records(path, content)

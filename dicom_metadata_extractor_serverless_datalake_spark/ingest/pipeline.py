@@ -1,5 +1,5 @@
-"""Spark ingest job: object listing -> mapInPandas ranged read +
-extraction -> partitioned Parquet lake + quarantine sink.
+"""Spark ingest job: driver-packed object lists -> mapInPandas ranged
+read + extraction -> partitioned Parquet lake + quarantine sink.
 
 This is the reference's whole serverless pipeline (S3 event -> Lambda ->
 pydicom -> awswrangler Parquet, SURVEY §3.1) as one declarative Spark
@@ -7,9 +7,12 @@ job. The Lambda/Batch 500 MB size router (src/app.py:118-184) dissolves:
 task scheduling handles all object sizes.
 
 Scale notes (100 TB target):
-- the driver only lists (``sources.binary.list_binary_objects``); the
-  listing is repartitioned so each task reads a pack of objects,
-  amortizing task overhead over millions of small objects.
+- the driver only lists and packs paths (``sources.binary.walk_objects``
+  and ``pack_objects``): task *i* of a ``spark.range`` reads pack *i*, so
+  each task amortizes its overhead over many small objects, and no
+  listing DataFrame, listing shuffle or second Python worker pool runs.
+  The pack lists travel in the UDF closure, which PySpark broadcasts once
+  it passes 1 MB.
 - read + extraction is one Arrow-batched mapInPandas pass
   (``ingest.extract.read_extract``, not a per-row Python UDF).
 - :func:`write_split` is the one lake/quarantine writer, shared with the
@@ -38,25 +41,34 @@ from ..schema import DICOM_METADATA_SCHEMA, INGEST_SCHEMA, PARTITION_COL
 from .extract import read_extract
 
 
-def extract_from_listing(listing: DataFrame) -> DataFrame:
-    """(path, size) listing -> canonical metadata rows, reading AND
-    extracting in one Python pass.
+def extract_objects(spark: SparkSession, input_path: str) -> DataFrame:
+    """Every object under ``input_path`` -> canonical metadata rows,
+    reading AND extracting in one Python pass.
 
-    This is the batch-ingest hot path: with a separate read stage the
-    raw bytes make two Arrow round-trips (Python read -> JVM -> Python
-    extract); fused, bytes are opened and parsed in the same worker and
-    only the (small) metadata rows cross back. Per-object I/O (and the
-    10 MB ranged .dcm cap) lives worker-side, exactly where it belongs
-    on a real cluster doing ranged object-store GETs."""
+    This is the batch-ingest hot path. The driver walks the input and
+    packs the paths into byte-balanced packs, at least one per core and
+    one per ``TARGET_PARTITION_BYTES``; task *i* of a ``spark.range``
+    opens and parses pack *i*, so only the (small) metadata rows cross
+    back to the JVM. Per-object I/O (and the 10 MB ranged .dcm cap) lives
+    worker-side, exactly where it belongs on a real cluster doing ranged
+    object-store GETs."""
+    from ..sources.binary import TARGET_PARTITION_BYTES, pack_objects, walk_objects
+
+    entries = walk_objects(input_path)
+    total = sum(e[1] for e in entries)
+    n = max(spark.sparkContext.defaultParallelism, total // TARGET_PARTITION_BYTES)
+    packs = pack_objects(entries, n)
     cols = [f.name for f in INGEST_SCHEMA.fields]
 
     def _read_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = list(read_extract(pdf["path"]))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            for i in pdf["id"]:
+                rows = list(read_extract(packs[i]))
+                if rows:
+                    yield pd.DataFrame(rows, columns=cols)
 
-    return listing.mapInPandas(_read_extract, schema=INGEST_SCHEMA)
+    tasks = spark.range(0, len(packs), 1, numPartitions=len(packs))
+    return tasks.mapInPandas(_read_extract, schema=INGEST_SCHEMA)
 
 
 def write_split(
@@ -110,10 +122,7 @@ def ingest_batch(
     reference pipeline in one job: it honors the reference's 10 MB ranged
     .dcm read, quarantines zero-byte objects (the empty DICOMDIR DLQ
     contract), and packs many small objects per task."""
-    from ..sources.binary import list_binary_objects
-
-    extracted = extract_from_listing(list_binary_objects(spark, input_path))
-    return write_split(extracted, lake_path, quarantine_path)[:2]
+    return write_split(extract_objects(spark, input_path), lake_path, quarantine_path)[:2]
 
 
 def run_ingest(
@@ -133,10 +142,7 @@ def run_ingest(
     partitions this ingest wrote to it; the table is created and
     MSCK-repaired only when it is missing or points at another location.
     The default is a session-scoped temp view."""
-    from ..sources.binary import list_binary_objects
-
-    extracted = extract_from_listing(list_binary_objects(spark, input_path))
-    _, _, dates = write_split(extracted, lake_path, quarantine_path)
+    _, _, dates = write_split(extract_objects(spark, input_path), lake_path, quarantine_path)
     if table and external:
         from ..sources.catalog import register_partitions
 

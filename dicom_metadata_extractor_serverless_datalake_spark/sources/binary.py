@@ -1,8 +1,10 @@
-"""The one read path for DICOM objects: a listing walker and a ranged read.
+"""The one read path for DICOM objects: a listing walker, a packer and a
+ranged read.
 
 Batch ingest (ingest/pipeline.py), ``format("dicom")`` and its stream
 reader (sources/dicom_source.py) all list objects with
-:func:`walk_objects` and read them with :func:`read_object`.
+:func:`walk_objects`, split them into read tasks with :func:`pack_objects`
+and read them with :func:`read_object`.
 
 Why not just ``spark.read.format("binaryFile")``:
 1. it silently skips zero-byte objects, but the reference's contract
@@ -22,11 +24,11 @@ applied before any bytes cross a process boundary.
 
 from __future__ import annotations
 
+import heapq
 import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..ingest.archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
@@ -54,20 +56,47 @@ def _local_path(input_path: str) -> str:
     )
 
 
+def _stat(path: str) -> tuple[int, int]:
+    """(size, mtime_ns) of one object. An object that cannot be stat'ed
+    (a dangling symlink, or one gone since the walk) is listed with size
+    0, so its read fails in the worker and lands in the quarantine."""
+    try:
+        st = os.stat(path)
+        return st.st_size, st.st_mtime_ns
+    except OSError:
+        try:
+            return 0, os.lstat(path).st_mtime_ns
+        except OSError:
+            return 0, 0
+
+
 def walk_objects(input_path: str) -> list[tuple[str, int, int]]:
     """Every object under ``input_path`` (or the object itself) as
-    ``(path, size, mtime_ns)``, sorted by path. Zero-byte objects are
-    included (unlike the binaryFile source)."""
+    ``(path, size, mtime_ns)``, sorted by path. Zero-byte and unreadable
+    objects are included (unlike the binaryFile source)."""
     root = _local_path(input_path)
     if os.path.isfile(root):
         paths = [root]
     else:
         paths = [os.path.join(d, name) for d, _dirs, files in os.walk(root) for name in files]
-    out = []
-    for path in sorted(paths):
-        st = os.stat(path)
-        out.append((path, st.st_size, st.st_mtime_ns))
-    return out
+    return [(path, *_stat(path)) for path in sorted(paths)]
+
+
+def pack_objects(entries: list[tuple], n: int) -> list[list[str]]:
+    """Split ``(path, size, ...)`` entries into ``max(1, min(n, len(entries)))``
+    byte-balanced packs of paths: largest object first, each into the
+    lightest pack (LPT; a heap keeps it O(N log n)). Objects of equal size
+    go in path order, and of equally light packs the one with fewer
+    objects wins, so zero-byte objects spread too and the result is the
+    same call to call. No pack is empty unless ``entries`` is."""
+    n = max(1, min(n, len(entries)))
+    packs: list[list[str]] = [[] for _ in range(n)]
+    heap = [(0, 0, i) for i in range(n)]
+    for path, size, *_ in sorted(entries, key=lambda e: (-e[1], e[0])):
+        total, count, i = heap[0]
+        packs[i].append(path)
+        heapq.heapreplace(heap, (total + size, count + 1, i))
+    return packs
 
 
 def read_object(path: str) -> bytes | None:
@@ -83,12 +112,9 @@ def read_object(path: str) -> bytes | None:
 
 
 def list_binary_objects(spark: SparkSession, input_path: str) -> DataFrame:
-    """List objects under ``input_path`` into a (path, size) DataFrame,
-    partitioned so each task owns ~TARGET_PARTITION_BYTES of input."""
+    """The objects under ``input_path`` as a (path, size) DataFrame.
+
+    A listing view for inspecting a drop, not the ingest planner: ingest
+    packs the listing on the driver (``ingest.pipeline.extract_objects``)."""
     entries = [(path, size) for path, size, _mtime in walk_objects(input_path)]
-    total = sum(s for _, s in entries)
-    default_par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(len(entries), max(default_par, total // TARGET_PARTITION_BYTES)))
-    df = spark.createDataFrame(entries, LISTING_SCHEMA)
-    # spread by hash of path so adjacent large files don't co-locate
-    return df.repartition(n_parts, F.col("path"))
+    return spark.createDataFrame(entries, LISTING_SCHEMA)

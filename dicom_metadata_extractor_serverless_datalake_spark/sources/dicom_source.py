@@ -10,11 +10,12 @@ planning, instead of a hand-rolled listing + mapInPandas:
     df.filter("error IS NULL").groupBy("modality").count()
 
 Planning: the driver lists (path, size) with ``sources.binary.walk_objects``
-and packs files first-fit into input partitions of ~``TARGET_PARTITION_BYTES``
-(128 MB) — the small-object answer at 100 TB scale: task count tracks
-bytes, not object count. Reading happens executor-side per partition
-through ``ingest.extract.read_extract``, so the ranged .dcm cap applies
-at open time and pixel bytes beyond the first 10 MB are never read (the
+and packs files with ``sources.binary.pack_objects`` into one byte-balanced
+input partition per ``TARGET_PARTITION_BYTES`` (128 MB) — the small-object
+answer at 100 TB scale: task count tracks bytes, not object count.
+Reading happens executor-side per partition through
+``ingest.extract.read_extract``, so the ranged .dcm cap applies at open
+time and pixel bytes beyond the first 10 MB are never read (the
 reference's biggest I/O optimization, src/s3wrapper.py:55-59).
 
 The schema is the fixed INGEST_SCHEMA (canonical columns + extra_tags
@@ -32,29 +33,12 @@ from pyspark.sql.datasource import (
 )
 
 from ..schema import INGEST_SCHEMA
-from .binary import TARGET_PARTITION_BYTES, walk_objects
+from .binary import TARGET_PARTITION_BYTES, pack_objects, walk_objects
 
 
 class _FilePack(InputPartition):
     def __init__(self, paths: list[str]):
         self.paths = paths
-
-
-def _pack(entries: list[tuple[str, int, int]]) -> list[_FilePack]:
-    """First-fit pack (path, size, mtime) entries, largest first, so each
-    partition owns ~TARGET_PARTITION_BYTES of input."""
-    packs: list[list[str]] = []
-    sizes: list[int] = []
-    for path, size, _mtime in sorted(entries, key=lambda e: -e[1]):
-        for i, s in enumerate(sizes):
-            if s + size <= TARGET_PARTITION_BYTES:
-                packs[i].append(path)
-                sizes[i] += size
-                break
-        else:
-            packs.append([path])
-            sizes.append(size)
-    return [_FilePack(p) for p in packs]
 
 
 def _read_pack(partition: _FilePack):
@@ -94,7 +78,9 @@ class DicomReader(DataSourceReader):
         self.path = path
 
     def partitions(self) -> list[_FilePack]:
-        return _pack(walk_objects(self.path)) or [_FilePack([])]
+        entries = walk_objects(self.path)
+        n = sum(e[1] for e in entries) // TARGET_PARTITION_BYTES
+        return [_FilePack(p) for p in pack_objects(entries, n)]
 
     def read(self, partition: _FilePack):
         return _read_pack(partition)
@@ -151,7 +137,9 @@ class DicomStreamReader(DataSourceStreamReader):
         return out
 
     def partitions(self, start: dict, end: dict) -> list[_FilePack]:
-        return _pack(self._new_files(start, end))
+        entries = self._new_files(start, end)
+        n = sum(e[1] for e in entries) // TARGET_PARTITION_BYTES
+        return [_FilePack(p) for p in pack_objects(entries, n)]
 
     def read(self, partition: _FilePack):
         return _read_pack(partition)

@@ -1,6 +1,6 @@
-"""End-to-end ingest: fixtures -> listing -> mapInPandas ranged read +
-extract -> partitioned Parquet lake + quarantine (SURVEY §5 strategy
-item 2)."""
+"""End-to-end ingest: fixtures -> driver-packed listing -> mapInPandas
+ranged read + extract -> partitioned Parquet lake + quarantine (SURVEY §5
+strategy item 2)."""
 
 import datetime
 
@@ -147,8 +147,7 @@ def test_dicom_python_datasource(spark, tmp_path_factory):
     Spark-4 Python data source, equal to the mapInPandas ingest path."""
     from pyspark.sql import functions as F
 
-    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import extract_from_listing
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import list_binary_objects
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import extract_objects
     from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
 
     from fixtures import write_fixture_tree
@@ -158,7 +157,7 @@ def test_dicom_python_datasource(spark, tmp_path_factory):
     register_dicom_source(spark)
 
     via_source = spark.read.format("dicom").load(str(root))
-    via_pipeline = extract_from_listing(list_binary_objects(spark, str(root)))
+    via_pipeline = extract_objects(spark, str(root))
 
     key = lambda r: (r["source_s3_key"], r["source_s3_archive_path"] or "",  # noqa: E731
                      r["sop_instance_uid"] or "", (r["error"] or "")[:40])
@@ -209,10 +208,9 @@ def test_write_split_counts(spark, tmp_path, inputs, want):
     and the written dates for all-good, all-bad and empty inputs; no
     quarantine is written when nothing failed."""
     from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import (
-        extract_from_listing,
+        extract_objects,
         write_split,
     )
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import list_binary_objects
     from fixtures import make_dcm
 
     root = tmp_path / "in"
@@ -225,7 +223,7 @@ def test_write_split_counts(spark, tmp_path, inputs, want):
         (root / "bad.zip").write_bytes(b"PK\x03\x04notazip")
     lake, quar = tmp_path / "lake", tmp_path / "quar"
 
-    extracted = extract_from_listing(list_binary_objects(spark, str(root)))
+    extracted = extract_objects(spark, str(root))
     n_good, n_bad, dates = write_split(extracted, str(lake), str(quar))
     assert (n_good, n_bad) == want
 
@@ -238,15 +236,82 @@ def test_write_split_counts(spark, tmp_path, inputs, want):
 
 
 def test_ingest_batch_job_count(spark, fixture_dir, tmp_path, count_jobs):
-    """Job-count guard for the fused writer: ingesting the fixture tree
-    (lake rows and one quarantined object) runs exactly 5 Spark jobs;
-    the count repeats run to run and across core counts. A separate
-    count job or a second shuffle coming back adds jobs and fails this."""
+    """Job-count guard for the fused read and writer: ingesting the
+    fixture tree (lake rows and one quarantined object) runs exactly 4
+    Spark jobs; the count repeats run to run and across core counts. A
+    listing DataFrame, a listing shuffle, a separate count job or a
+    second date shuffle coming back adds jobs and fails this."""
     root, counts = fixture_dir
     lake, quar = str(tmp_path / "lake"), str(tmp_path / "quar")
     got, jobs = count_jobs(lambda: ingest_batch(spark, str(root), lake, quar))
     assert got == (counts["lake_rows"], counts["quarantine_rows"])
-    assert jobs == 5
+    assert jobs == 4
+
+
+def test_pack_objects(spark, tmp_path):
+    """pack_objects: every entry in exactly one pack, at most n packs,
+    pack bytes within the largest entry of each other, the same packs
+    call to call; an empty input still plans one empty read task."""
+    import random
+
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import extract_objects
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import pack_objects
+
+    rng = random.Random(7)
+    sizes = {f"obj-{i:04d}": rng.choice([0, 1, 10, 1000, rng.randint(0, 1 << 20)])
+             for i in range(500)}
+    entries = list(sizes.items())
+    for n in (1, 3, 8, 499, 500, 2000):
+        packs = pack_objects(entries, n)
+        assert sorted(p for pack in packs for p in pack) == sorted(sizes)
+        assert len(packs) == min(n, len(entries)) and all(packs)
+        load = [sum(sizes[p] for p in pack) for pack in packs]
+        assert max(load) - min(load) <= max(sizes.values())
+        rng.shuffle(entries)
+        assert pack_objects(entries, n) == packs
+
+    assert pack_objects([], 4) == [[]]
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    df = extract_objects(spark, str(empty))
+    assert df.rdd.getNumPartitions() == 1 and df.count() == 0
+
+
+def test_unreadable_object_is_quarantined(spark, fixture_dir, tmp_path):
+    """An object that cannot be read (here a dangling symlink) lands in
+    the quarantine as one object_read row while the rest of the tree
+    ingests, through ingest_batch and through format("dicom")."""
+    import shutil
+
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.extract import read_extract
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import walk_objects
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
+
+    src, counts = fixture_dir
+    root = tmp_path / "in"
+    shutil.copytree(src, root)
+    dangling = root / "gone.dcm"
+    dangling.symlink_to(tmp_path / "missing.dcm")
+    lake, quar = str(tmp_path / "lake"), str(tmp_path / "quar")
+    assert (str(dangling), 0) in [(p, size) for p, size, _m in walk_objects(str(root))]
+    # an object deleted after the listing fails its read in the worker
+    [row] = read_extract([str(tmp_path / "deleted.dcm")])
+    assert row["error_log"]["stage"] == "object_read"
+
+    assert ingest_batch(spark, str(root), lake, quar) == (
+        counts["lake_rows"], counts["quarantine_rows"] + 1
+    )
+    got = spark.read.parquet(quar).filter("error_log.stage = 'object_read'").collect()
+    assert [(r["source_s3_key"], r["error_log"]["error_class"]) for r in got] == [
+        (str(dangling), "FileNotFoundError")
+    ]
+
+    register_dicom_source(spark)
+    via_source = spark.read.format("dicom").load(str(root))
+    bad = via_source.filter("error IS NOT NULL")
+    assert via_source.count() - bad.count() == counts["lake_rows"]
+    stages = sorted((r["source_s3_key"], r["error_log"]["stage"]) for r in bad.collect())
+    assert stages == sorted([(str(dangling), "object_read"), (str(root / "DICOMDIR"), "dicom_parse")])
 
 
 def test_lake_reconcile_replay_converges(spark, tmp_path):

@@ -1,9 +1,12 @@
 """Custom operators Spark lacks natively, built as compositions of
 DataFrame ops (SURVEY §2.B 'custom operators' guidance): as-of join,
-skew-mitigation (salted join/agg), IVF approximate nearest-neighbor
-search. The dedup family (exact / MinHash-LSH / SimHash / n-gram
-Jaccard / embedding-cosine), text analysis, and multimodal plumbing
-live in queries/llm.py and functions/multimodal.py."""
+skew mitigation (salted join/agg, scan re-spread), IVF approximate
+nearest-neighbor search, and the near-dedup family in dedup.py (the
+one 31-bit hash, MinHash-LSH signatures/bands/candidate pairs, exact
+and estimated verification, containment, sorted-neighborhood). These
+are the shared kernels: the facades (pipeline.py, vectors.py), the
+query corpus (queries/) and streaming dedup call them, and nothing
+here imports from queries/."""
 
 from .ann import assign_buckets, fit_ivf, ivf_search  # noqa: F401
 from .asof import asof_join  # noqa: F401

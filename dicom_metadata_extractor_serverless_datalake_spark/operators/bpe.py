@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import spread_input
+
 _PAIR_LIST = (
     "transform(sequence(1, size(l) - 1), "
     "i -> struct(element_at(l, i) AS a, element_at(l, i + 1) AS b))"
@@ -98,9 +100,6 @@ def bpe_merges(
     ).orderBy("merge_round")
 
 
-_H31 = "CAST(conv(substr(md5(s),1,8),16,10) AS BIGINT) % 2147483647"
-
-
 def _cascade_sql(var: str, merges: list[tuple[str, str]]) -> str:
     """The trained merge cascade as ONE nested scalar expression over a
     delimited-symbol word: character split, then each merge in training
@@ -153,8 +152,6 @@ def bpe_encode(
                 "delimited-symbol representation reserves '<'/'>' and the "
                 "cascade inlines symbols as SQL literals"
             )
-    from ..queries.base import spread_input
-
     # the cascade is pure CPU per row: a scan-starved input (one
     # compressed parquet file -> 1-3 splits) would serialize it on a
     # handful of cores (measured 94.5 s -> 7.4 s at 500k docs)

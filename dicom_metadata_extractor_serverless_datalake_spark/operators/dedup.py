@@ -1,6 +1,10 @@
 """Near-duplicate detection pipeline: MinHash-LSH candidate generation
 followed by exact Jaccard verification — the candidate-then-verify shape
-production dedup runs at corpus scale.
+production dedup runs at corpus scale. This module owns the shared
+kernels: the 31-bit hash (:func:`h31`), the MinHash permutation
+constants, the word-gram enumerator and the signature/band/pair
+stages. The query corpus (q52 and its consumers), the facades and the
+streaming dedup all build on them.
 
 Stage costs at 100 TB:
 1. ``shingle_tokens``: map-only explode, no shuffle;
@@ -13,40 +17,95 @@ Stage costs at 100 TB:
    set instead of the full corpus.
 
 Hashing: ``hash_fn="portable"`` (default) uses the md5-derived 31-bit
-family shared with the corpus oracles (queries/llm.py), so every stage
-is value-checkable in DuckDB. ``hash_fn="fast"`` swaps in xxhash64
+family the corpus oracles replay in DuckDB (queries/llm.duck_h31), so
+every stage is value-checkable. ``hash_fn="fast"`` swaps in xxhash64
 masked to the same 31-bit domain — whole-stage-codegen JVM hashing
 with no digest-string materialization. Measured at 10x docs the
 signature stage is explode/shuffle-bound so both modes time alike;
 the fast path pulls ahead when shingles are long (md5 cost scales
 with string bytes) or the permutation count grows.
+
+Stages are built from parsed SQL strings, one ``F.expr`` per
+aggregate, not ``F.*`` operator trees: each operator node is a py4j
+round-trip, and the parsed trees (and executed plans) are identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cachetrack import tracked_persist
+from .skew import spread_input
 
-MERSENNE_P = 2_147_483_647
+MERSENNE_P = 2_147_483_647  # 2^31 - 1
 NUM_PERM = 16
 N_BANDS = 4
 ROWS_PER_BAND = NUM_PERM // N_BANDS
 PERM_A = [1 + 12_347 * i for i in range(NUM_PERM)]
 PERM_B = [7 + 6_791 * i for i in range(NUM_PERM)]
 
-_H31 = {
-    "portable": "CAST(conv(substr(md5(s),1,8),16,10) AS BIGINT) % " + str(MERSENNE_P),
-    "fast": "(xxhash64(s) & " + str(MERSENNE_P) + ")",
-}
 
-_SHINGLES = (
+def h31(expr: str, hash_fn: str = "portable") -> str:
+    """SQL text of the 31-bit hash of the SQL expression ``expr``.
+
+    "portable": the first 32 bits of md5, mod 2^31 - 1, in [0, 2^31 - 1)
+    — bit-identical to queries/llm.duck_h31 in DuckDB (the oracle
+    contract). "fast": xxhash64 masked to 31 bits, JVM-native."""
+    if hash_fn == "portable":
+        return f"CAST(conv(substr(md5({expr}),1,8),16,10) AS BIGINT) % {MERSENNE_P}"
+    if hash_fn == "fast":
+        return f"(xxhash64({expr}) & {MERSENNE_P})"
+    raise ValueError(f"hash_fn must be 'portable' or 'fast', got {hash_fn!r}")
+
+
+def salted_h31(col: str, salt: str) -> Column:
+    """Portable :func:`h31` of ``salt || CAST(col AS STRING)`` — the
+    ordering key of the hash-ranked selections (stable across runs,
+    engines and cluster sizes; distinct salts decorrelate). The salt
+    enters the SQL as a hex literal that constant folding decodes once,
+    so no character in it can break parsing."""
+    name = "`" + col.replace("`", "``") + "`"
+    salt_sql = f"decode(unhex('{salt.encode('utf-8').hex()}'), 'UTF-8')"
+    return F.expr(h31(f"concat({salt_sql}, CAST({name} AS STRING))"))
+
+
+# The 3-gram shingle array as ONE lambda expression over a word array
+# ``w``. The exploded form is CodegenFallback (interpreted per element),
+# so batch stages use :func:`word_grams`; this form exists for the
+# streaming map-side fold (streaming/neardup.py), which must not explode.
+SHINGLE_ARRAY = (
     "CASE WHEN size(w) >= 3 THEN "
     "transform(sequence(0, size(w) - 3), "
     "i -> concat_ws(' ', element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3))) "
     "ELSE array() END"
 )
+
+
+def word_grams(
+    df: DataFrame, id_col: str | None, text_col: str, n: int, out: str = "gram"
+) -> DataFrame:
+    """(id, ``out``) word ``n``-gram rows, with duplicates, via codegen
+    posexplode + indexed concat_ws — the exploded lambda form is
+    CodegenFallback, i.e. interpreted per element (measured 2.5x the
+    codegen form on a 271M-instance enumeration, OPTIMIZATION_r11 §10).
+    Docs with fewer than ``n`` words yield no row. ``id_col=None``
+    emits the gram column alone."""
+    # Internal columns use collision-resistant names (ADVICE r11):
+    # id_col/text_col are caller-chosen, so a caller frame already
+    # holding a column named `w` or `i` would otherwise hit an
+    # ambiguous-reference error (or silently bind the wrong column)
+    # inside the F.expr references below.
+    gram_expr = "concat_ws(' ', " + ", ".join(
+        f"_wg_w[_wg_i + {k}]" if k else "_wg_w[_wg_i]" for k in range(n)
+    ) + ")"
+    ids = [id_col] if id_col else []
+    return (
+        df.select(*[F.col(c) for c in ids], F.split(F.col(text_col), " ").alias("_wg_w"))
+        .select(*ids, "_wg_w", F.posexplode("_wg_w").alias("_wg_i", "_wg_w0"))
+        .filter(F.col("_wg_i") < F.size("_wg_w") - (n - 1))
+        .select(*ids, F.expr(gram_expr).alias(out))
+    )
 
 
 def shingle_tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -55,42 +114,39 @@ def shingle_tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     signatures don't need it). The downstream per-shingle digest + 16
     permutations are pure map CPU executed in the SCAN stage (partial
     aggregation), so a scan-starved compressed input is re-spread
-    first (queries/base.spread_input — no-op on multi-file layouts
-    and streaming frames)."""
-    from ..queries.base import spread_input
-
-    # codegen posexplode + indexed concat_ws; the lambda _SHINGLES form
-    # (kept above for the streaming array-valued consumer) is
-    # CodegenFallback when exploded here. Identical (id, s) multiset:
-    # docs with size(w) < 3 yield no position i < size(w) - 2.
-    # internal columns use collision-resistant names (ADVICE r11):
-    # id_col/text_col are caller-chosen, so a caller frame already
-    # holding `w` or `i` must not collide with the gram plumbing
-    return (
-        spread_input(docs, key=id_col)
-        .select(F.col(id_col), F.split(F.col(text_col), " ").alias("_wg_w"))
-        .select(id_col, "_wg_w", F.posexplode("_wg_w").alias("_wg_i", "_wg_w0"))
-        .filter(F.col("_wg_i") < F.size("_wg_w") - 2)
-        .select(
-            id_col,
-            F.expr(
-                "concat_ws(' ', _wg_w[_wg_i], _wg_w[_wg_i + 1], _wg_w[_wg_i + 2])"
-            ).alias("s"),
-        )
-    )
+    first (operators/skew.spread_input — no-op on multi-file layouts
+    and streaming frames): measured 38-48 s -> 13-17 s for the full
+    q52 at 500k docs, where the starved signature scan was ~70% of the
+    wall."""
+    return word_grams(spread_input(docs, key=id_col), id_col, text_col, 3, out="s")
 
 
 def minhash_signatures(
     tok: DataFrame, id_col: str = "doc_id", hash_fn: str = "portable"
 ) -> DataFrame:
-    """One row per doc with NUM_PERM min-hash columns m0..m15."""
-    h = tok.select(id_col, F.expr(_H31[hash_fn]).alias("hs"))
+    """One row per doc with NUM_PERM min-hash columns m0..m15 over the
+    (id, s) shingle frame ``tok``. MIN() is insensitive to duplicate
+    shingles, so no distinct: the shingle strings stay map-local and
+    the only shuffle is the partial-aggregated signature per doc."""
+    h = tok.select(id_col, F.expr(h31("s", hash_fn)).alias("hs"))
+    # one F.expr per aggregate: the F.*-operator form measured 174 ms of
+    # driver time per construction for these 16 aggregates vs 42 ms as
+    # strings (the bench re-builds each query every pass)
     return h.groupBy(id_col).agg(
         *[
-            F.min((F.lit(PERM_A[i]) * F.col("hs") + F.lit(PERM_B[i])) % MERSENNE_P).alias(f"m{i}")
+            F.expr(f"min(({PERM_A[i]} * hs + {PERM_B[i]}) % {MERSENNE_P}) AS m{i}")
             for i in range(NUM_PERM)
         ]
     )
+
+
+# array of the N_BANDS band signatures, each the '_'-joined band rows
+_BAND_ARRAY = "array(" + ", ".join(
+    "concat_ws('_', "
+    + ", ".join(f"cast(m{b * ROWS_PER_BAND + r} as string)" for r in range(ROWS_PER_BAND))
+    + ")"
+    for b in range(N_BANDS)
+) + ")"
 
 
 def lsh_band_rows(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -99,31 +155,39 @@ def lsh_band_rows(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     incremental): one posexplode over an array of band signatures so
     the (expensive) signature aggregation executes once — a union of
     per-band selects would re-run it per branch."""
-    sig_array = F.array(
-        *[
-            F.concat_ws(
-                "_", *[F.col(f"m{b * ROWS_PER_BAND + r}").cast("string") for r in range(ROWS_PER_BAND)]
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return signatures.select(id_col, F.posexplode(sig_array).alias("band", "sig"))
+    return signatures.select(id_col, F.posexplode(F.expr(_BAND_ARRAY)).alias("band", "sig"))
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Distinct (d1, d2) pairs colliding in at least one LSH band."""
+def lsh_candidate_pairs(
+    signatures: DataFrame, id_col: str = "doc_id", sorted_output: bool = False
+) -> DataFrame:
+    """Distinct (d1, d2) pairs colliding in at least one LSH band.
+
+    ``sorted_output=True`` (q52, whose declared result is the pair set
+    ORDERED by d1, d2) range-partitions the raw pair stream on
+    (d1, d2) BEFORE the dedup: one range exchange satisfies both the
+    distinct's ClusteredDistribution and the final sort's
+    OrderedDistribution (guide §2.4 — two operations keyed the same
+    way share one exchange), so the result set crosses ONE wide shuffle
+    instead of two (hash-distinct + range-sort). Measured 13.9 -> 10.5 s
+    for the full q52 at 500k docs; rows identical. The range bounds
+    sampler executes its child, so this path runs the band join one
+    extra time: a trade-off measured at 500k docs, where the join
+    (~1.2 s) is cheap next to the shuffle saved — re-measure, or
+    checkpoint before the range exchange, where the join dominates.
+    Unsorted callers keep the plain hash distinct — for them range
+    partitioning buys nothing and costs the sampling job."""
     bands = lsh_band_rows(signatures, id_col)
     a, b_ = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
-        .distinct()
-    )
+    raw = a.join(
+        b_,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.sig") == F.col("b.sig"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
+    if sorted_output:
+        raw = raw.repartitionByRange("d1", "d2")
+    return raw.distinct()
 
 
 def lsh_star_edges(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -28,7 +28,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .queries.llm import MERSENNE_P
+from .operators.dedup import (
+    containment_pairs,
+    estimate_verify,
+    h31,
+    jaccard_verify,
+    lsh_candidate_pairs,
+    lsh_star_edges,
+    minhash_signatures,
+    neardup_pairs,
+    salted_h31,
+    shingle_tokens,
+    snm_candidates,
+    word_grams,
+)
+from .operators.skew import spread_input
 
 # Default scrub: emails, SSN-shaped spans, and LONG digit runs (>= 7
 # digits: phone/account/credit-card shaped). Short runs — years, dates,
@@ -39,44 +53,6 @@ PII_PATTERNS: list[tuple[str, str]] = [
     ("[0-9][0-9][0-9]-[0-9][0-9]-[0-9][0-9][0-9][0-9]", "<SSN>"),
     ("[0-9]{7,}", "<NUM>"),
 ]
-
-
-def _salted_h31(col: F.Column, salt: str = "") -> F.Column:
-    """Portable 31-bit hash of ``salt || col`` — the deterministic
-    ordering key every hash-ranked selection in this module shares
-    (stable across runs/engines/cluster sizes; distinct salts give
-    decorrelated orderings)."""
-    salted = F.concat(F.lit(salt), col.cast("string"))
-    return (
-        F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint") % MERSENNE_P
-    )
-
-
-
-def _word_grams(
-    df: DataFrame, id_col: str | None, text_col: str, n: int, out: str = "gram"
-) -> DataFrame:
-    """Word n-gram rows via codegen posexplode + indexed concat_ws —
-    the exploded lambda form (transform(sequence -> concat_ws(slice)))
-    is CodegenFallback, i.e. interpreted per element (measured 2.5x the
-    codegen form on a 271M-instance enumeration, OPTIMIZATION_r11 §10).
-    Docs with fewer than n words yield no row (no position i <=
-    size(w) - n), exactly like the old size(w) >= n pre-filter."""
-    # Internal columns use collision-resistant names (ADVICE r11):
-    # id_col/text_col are caller-chosen, so a caller frame already
-    # holding a column named `w` or `i` would otherwise hit an
-    # ambiguous-reference error (or silently bind the wrong column)
-    # inside the F.expr references below.
-    gram_expr = "concat_ws(' ', " + ", ".join(
-        f"_wg_w[_wg_i + {k}]" for k in range(n)
-    ) + ")"
-    ids = [id_col] if id_col else []
-    return (
-        df.select(*[F.col(c) for c in ids], F.split(F.col(text_col), " ").alias("_wg_w"))
-        .select(*ids, "_wg_w", F.posexplode("_wg_w").alias("_wg_i", "_wg_w0"))
-        .filter(F.col("_wg_i") < F.size("_wg_w") - (n - 1))
-        .select(*ids, F.expr(gram_expr).alias(out))
-    )
 
 
 class TextCorpus:
@@ -150,7 +126,6 @@ class TextCorpus:
         heavy web corpora); see operators/dedup.lsh_star_edges for the
         split-vs-merge semantics."""
         from .operators.cluster import dedup_clusters
-        from .operators.dedup import neardup_pairs
 
         with self._caches:
             pairs = neardup_pairs(
@@ -183,11 +158,6 @@ class TextCorpus:
         diverge within ``key_chars``; prefer ``dedup_near`` when recall
         matters more than simplicity."""
         from .operators.cluster import dedup_clusters
-        from .operators.dedup import (
-            jaccard_verify,
-            shingle_tokens,
-            snm_candidates,
-        )
 
         cand = snm_candidates(
             self.df,
@@ -220,7 +190,6 @@ class TextCorpus:
         shape); a doc is dropped only when contained in a LARGER
         (shingle-count, id)-ordered survivor, so mutual-containment
         pairs keep exactly one and chains keep their maximal element."""
-        from .operators.dedup import containment_pairs
 
         with self._caches:
             pairs = containment_pairs(
@@ -341,7 +310,7 @@ class TextCorpus:
         eval set (thousands of docs) broadcasts outright."""
 
         def grams(df: DataFrame, id_col: str | None, text_col: str) -> DataFrame:
-            return _word_grams(df, id_col, text_col, n)
+            return word_grams(df, id_col, text_col, n)
 
         eval_grams = grams(eval_df, None, eval_text_col).distinct()
         losers = (
@@ -371,7 +340,7 @@ class TextCorpus:
         (gram, id) pairs — never text."""
 
         def grams(df: DataFrame, id_col: str | None, text_col: str) -> DataFrame:
-            return _word_grams(df, id_col, text_col, n)
+            return word_grams(df, id_col, text_col, n)
 
         train_grams = grams(self.df, None, self.text_col).distinct()
         eg = grams(eval_df, eval_id_col, eval_text_col).distinct()
@@ -415,7 +384,7 @@ class TextCorpus:
         ).select(F.col(self.id_col).alias("_d"), F.col(self.text_col))
 
         def gram_rows(n: int) -> DataFrame:
-            return _word_grams(tok, "_d", self.text_col, n)
+            return word_grams(tok, "_d", self.text_col, n)
 
         top2 = (
             gram_rows(2)
@@ -457,10 +426,7 @@ class TextCorpus:
         so it composes freely before dedup/split stages. A production
         deployment swaps the arithmetic table for trained weights as a
         broadcast array literal; the plan shape is identical."""
-        h = (
-            f"CAST(conv(substr(md5(concat('{salt}', tk)),1,8),16,10) AS BIGINT)"
-            f" % {MERSENNE_P}"
-        )
+        h = h31(f"concat('{salt}', tk)")
         margin = F.expr(
             f"aggregate(transform(split({self.text_col}, ' '), "
             f"tk -> (({h}) % {n_buckets}) * 2654435761 % 997 - 498), "
@@ -570,11 +536,10 @@ class TextCorpus:
         total = sum(weights.values())
         if total != 100:
             raise ValueError(f"split weights must sum to 100, got {total}")
-        # _salted_h31: same values as the SQL-string form the corpus
-        # oracles use, but the salt and id column are passed as values,
-        # never interpolated into SQL text (a quote in the salt must
-        # not break parsing).
-        h = _salted_h31(F.col(self.id_col), salt) % 100
+        # salted_h31: same values as the SQL-string form the corpus
+        # oracles use, with the salt hex-encoded (a quote in the salt
+        # must not break parsing)
+        h = salted_h31(self.id_col, salt) % 100
         out: dict[str, DataFrame] = {}
         lo = 0
         for name, pct in weights.items():
@@ -594,7 +559,7 @@ class TextCorpus:
         forwards at most k rows per group before the exchange."""
         from pyspark.sql.window import Window
 
-        h = _salted_h31(F.col(self.id_col), salt)
+        h = salted_h31(self.id_col, salt)
         w = Window.partitionBy(by).orderBy(h, self.id_col)
         return self._with(
             self.df.withColumn("__rk", F.row_number().over(w))
@@ -623,7 +588,6 @@ class TextCorpus:
         from pyspark.sql.window import Window
 
         from .operators.cluster import dedup_clusters
-        from .operators.dedup import neardup_pairs
 
         if candidates not in ("pairs", "star"):
             raise ValueError(
@@ -642,13 +606,6 @@ class TextCorpus:
                     candidates=candidates,
                 )
         else:  # raw candidates: skip the (vacuous at t=0) verify stage
-            from .operators.dedup import (
-                lsh_candidate_pairs,
-                lsh_star_edges,
-                minhash_signatures,
-                shingle_tokens,
-            )
-
             sigs = minhash_signatures(
                 shingle_tokens(self.df, did, self.text_col), did, hash_fn
             )
@@ -660,7 +617,7 @@ class TextCorpus:
         membership = self.df.select(did).join(clustered, did, "left").select(
             did, F.coalesce("cluster_id", F.col(did)).alias("cluster_id")
         )
-        h = _salted_h31(F.col(did), salt)
+        h = salted_h31(did, salt)
         wsize = Window.partitionBy("cluster_id")
         worder = Window.partitionBy("cluster_id").orderBy(h, did)
         keep = (
@@ -844,7 +801,6 @@ class TextCorpus:
         higher thresholds cluster only verified pairs (production
         near-dedup semantics, same knobs as :meth:`dedup_near`)."""
         from .operators.cluster import dedup_clusters
-        from .operators.dedup import neardup_pairs
 
         with self._caches:
             pairs = neardup_pairs(
@@ -872,18 +828,6 @@ class TextCorpus:
 
     # ---- span-level dedup readouts (q187 / q194) ----
 
-    @staticmethod
-    def _gram_hash(expr: str, hash_fn: str) -> str:
-        """Portable (md5-derived, DuckDB-checkable) or fast (xxhash64,
-        JVM-native) 31-bit gram hash — the operators/dedup.py contract."""
-        from .queries.llm import MERSENNE_P, spark_h31
-
-        if hash_fn == "portable":
-            return spark_h31(expr)
-        if hash_fn == "fast":
-            return f"(xxhash64({expr}) & {MERSENNE_P})"
-        raise ValueError(f"hash_fn must be 'portable' or 'fast', got {hash_fn!r}")
-
     def winnow_fingerprints(
         self, k: int = 4, w: int = 4, hash_fn: str = "portable"
     ) -> DataFrame:
@@ -901,7 +845,7 @@ class TextCorpus:
         hash for xxhash64 (measured 2.5x end-to-end at 500k docs);
         "portable" matches q187 bit-for-bit."""
         pos_m = 1 << 20
-        h = self._gram_hash(f"array_join(slice(ws, i, {k}), ' ')", hash_fn)
+        h = h31(f"array_join(slice(ws, i, {k}), ' ')", hash_fn)
         hs = (
             f"CASE WHEN size(ws) >= {k} "
             f"THEN transform(sequence(1, size(ws) - {k - 1}), i -> {h}) "
@@ -919,7 +863,6 @@ class TextCorpus:
             f"j -> array_min(slice(ks, j - {w - 1}, {w})) div {pos_m})) "
             f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
         )
-        from .queries.base import spread_input
 
         return (
             spread_input(self.df, key=self.id_col).select(
@@ -951,7 +894,7 @@ class TextCorpus:
         ``hash_fn`` as in :meth:`winnow_fingerprints`."""
         from pyspark.sql import Window
 
-        h = self._gram_hash(f"array_join(slice(ws, i, {k}), ' ')", hash_fn)
+        h = h31(f"array_join(slice(ws, i, {k}), ' ')", hash_fn)
         ghs = (
             f"CASE WHEN size(ws) >= {k} "
             f"THEN transform(sequence(1, size(ws) - {k - 1}), i -> {h}) "
@@ -1023,10 +966,8 @@ class TextCorpus:
         avg_micros, min_micros). ``hash_fn`` as in
         :meth:`winnow_fingerprints` ('portable' matches q201's oracle
         bit-exactly; 'fast' uses JVM xxhash64)."""
-        bh = self._gram_hash(
-            "concat(element_at(ws, i), ' ', element_at(ws, i + 1))", hash_fn
-        )
-        ph = self._gram_hash("element_at(ws, i)", hash_fn)
+        bh = h31("concat(element_at(ws, i), ' ', element_at(ws, i + 1))", hash_fn)
+        ph = h31("element_at(ws, i)", hash_fn)
         ps = (
             f"CASE WHEN size(ws) >= 2 "
             f"THEN transform(sequence(1, size(ws) - 1), "
@@ -1214,14 +1155,6 @@ class TextCorpus:
         safe exactly when this readout's error is tight around your
         threshold. Returns (d1, d2, est_micros, exact_micros,
         abs_err_micros)."""
-        from .operators.dedup import (
-            estimate_verify,
-            jaccard_verify,
-            lsh_candidate_pairs,
-            minhash_signatures,
-            shingle_tokens,
-        )
-
         from .operators.cachetrack import tracked_persist
 
         tok = shingle_tokens(self.df, self.id_col, self.text_col)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import h31
 from .base import dsum_expr, query, sql_dsum, sql_query, t
 
 # --------------------------------------------------------------------------
@@ -1961,9 +1962,7 @@ def q154(spark: SparkSession, sf: str) -> DataFrame:
     category="analytics",
 )
 def q158(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import spark_h31
-
-    arm = F.expr(spark_h31("'ab-' || CAST(user_id AS STRING)")) % 2
+    arm = F.expr(h31("'ab-' || CAST(user_id AS STRING)")) % 2
     conv = (
         t(spark, sf, "events")
         .groupBy("user_id")

@@ -10,7 +10,7 @@
   the decision threshold, and that distribution is exactly what this
   query measures on live data. Both quantities are rationals floored
   to micros; the estimate reuses q52's EXACT permutation algebra
-  (queries/llm.py PERM_A/PERM_B), so the oracle replays it verbatim.
+  (operators/dedup.py PERM_A/PERM_B), so the oracle replays it verbatim.
 - q221 is the t-closeness audit (Li, Li & Venkatasubramanian 2007),
   completing the privacy trio with q214 (k-anonymity) and q215
   (l-diversity): per quasi-identifier class, the Earth Mover's
@@ -39,17 +39,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import NUM_PERM, h31, minhash_signatures, shingle_tokens
 from .base import query, t
-from .llm import (
-    MERSENNE_P,
-    NUM_PERM,
-    PERM_A,
-    PERM_B,
-    _minhash_pairs_cte,
-    _SPARK_SHINGLES,
-    duck_h31,
-    spark_h31,
-)
+from .llm import _minhash_band_pairs, _minhash_pairs_cte, duck_h31
+
+
+def _shingle_hashes(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, hs): the portable digests of each doc's
+    3-gram shingle set — the exact-Jaccard side of the q52 audits."""
+    return shingle_tokens(docs).select("doc_id", F.expr(h31("s")).alias("hs")).distinct()
+
 
 # --------------------------------------------------------------------------
 # q220 — MinHash estimate vs exact Jaccard on the q52 candidate pairs.
@@ -105,21 +104,8 @@ def _q220_oracle() -> str:
 )
 def q220(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
-    tok = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("s"))
-    )
-    h = tok.select("doc_id", F.expr(spark_h31("s")).alias("hs")).distinct()
-    mh = h.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(PERM_A[i]) * F.col("hs") + F.lit(PERM_B[i])) % MERSENNE_P
-            ).alias(f"m{i}")
-            for i in range(NUM_PERM)
-        ]
-    )
-    from .llm import _minhash_band_pairs
-
+    h = _shingle_hashes(docs)
+    mh = minhash_signatures(shingle_tokens(docs))
     pairs = _minhash_band_pairs(spark, sf)
     sizes = h.groupBy("doc_id").agg(F.countDistinct("hs").alias("n"))
     shared = (
@@ -355,8 +341,6 @@ def q221(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q240_oracle() -> str:
-    from .llm import _minhash_pairs_cte
-
     return f"""{_minhash_pairs_cte()},
     hd AS (SELECT DISTINCT doc_id, hs FROM h),
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM hd GROUP BY 1),
@@ -400,15 +384,7 @@ def _q240_oracle() -> str:
     doc="LSH band recall vs the exact-complete Jaccard>=0.8 pair set + reduction ratio",
 )
 def q240(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import _SPARK_SHINGLES, _minhash_band_pairs, spark_h31
-
-    docs = t(spark, sf, "documents")
-    hd = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("s"))
-        .select("doc_id", F.expr(spark_h31("s")).alias("hs"))
-        .distinct()
-    )
+    hd = _shingle_hashes(t(spark, sf, "documents"))
     sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
     hd2 = hd.join(sizes, "doc_id")
     a, b = hd2.alias("a"), hd2.alias("b")
@@ -487,7 +463,6 @@ _Q242_SAMPLE_PCT = 30
 
 
 def _q242_oracle() -> str:
-    from .llm import _minhash_pairs_cte, duck_h31
 
     sample_pred = (
         f"{duck_h31(chr(39) + 's242-' + chr(39) + ' || CAST(doc_id AS VARCHAR)')}"
@@ -546,18 +521,11 @@ def _q242_oracle() -> str:
     doc="LSH band recall on a 30% hash slice: exact truth within the sample + Wilson 95% lower bound",
 )
 def q242(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import _SPARK_SHINGLES, _minhash_band_pairs, spark_h31
-
     docs = t(spark, sf, "documents").filter(
-        F.expr(spark_h31("concat('s242-', CAST(doc_id AS STRING))")) % 100
+        F.expr(h31("concat('s242-', CAST(doc_id AS STRING))")) % 100
         < _Q242_SAMPLE_PCT
     )
-    hd = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("s"))
-        .select("doc_id", F.expr(spark_h31("s")).alias("hs"))
-        .distinct()
-    )
+    hd = _shingle_hashes(docs)
     sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
     hd2 = hd.join(sizes, "doc_id")
     a, b = hd2.alias("a"), hd2.alias("b")
@@ -701,14 +669,9 @@ def _s_curve_frame(
     invariant) — q253 exploits this for the rate-bounded form."""
     from functools import reduce
 
-    from .llm import _minhash_band_pairs
-
     if docs is None:
         docs = t(spark, sf, "documents")
-    tok = docs.select("doc_id", F.split("text", " ").alias("w")).select(
-        "doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("s")
-    )
-    h = tok.select("doc_id", F.expr(spark_h31("s")).alias("hs")).distinct()
+    h = _shingle_hashes(docs)
     pairs = _minhash_band_pairs(spark, sf, docs=docs)
     sizes = h.groupBy("doc_id").agg(F.countDistinct("hs").alias("n"))
     shared = (
@@ -790,8 +753,6 @@ _Q253_SAMPLE_PCT = 30
 
 
 def _q253_src() -> str:
-    from .llm import duck_h31
-
     pred = (
         f"{duck_h31(chr(39) + 's253-' + chr(39) + ' || CAST(doc_id AS VARCHAR)')}"
         f" % 100 < {_Q253_SAMPLE_PCT}"
@@ -807,7 +768,7 @@ def _q253_src() -> str:
 )
 def q253(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents").filter(
-        F.expr(spark_h31("concat('s253-', CAST(doc_id AS STRING))")) % 100
+        F.expr(h31("concat('s253-', CAST(doc_id AS STRING))")) % 100
         < _Q253_SAMPLE_PCT
     )
     return _s_curve_frame(spark, sf, docs=docs)

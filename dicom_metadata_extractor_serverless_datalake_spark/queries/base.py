@@ -96,66 +96,6 @@ def sql_max_multiplicity(arr: str) -> str:
     )
 
 
-def spread_input(df: DataFrame, key: str | F.Column | None = None) -> DataFrame:
-    """Re-spread a batch frame whose SCAN yields fewer partitions than
-    the cluster has slots, before CPU-heavy map-side work (hash-per-
-    replicate bootstrap weights, the BPE merge cascade, per-token
-    digests). Parquet splits are byte-range based, so a small-but-
-    highly-compressed corpus (text compresses 10-50x) can land on 1-3
-    tasks while every other core idles — AQE cannot fix this because
-    the bottleneck is the scan stage's own parallelism, not a
-    downstream exchange. The shuffle moves the compressed row payload
-    once and only fires when the scan is actually starved (input
-    partitions < defaultParallelism), so on a real multi-file 100 TB
-    layout it is a no-op. Streaming frames pass through untouched
-    (micro-batch sources size their own splits; .rdd is illegal on
-    them). Measured: q291's 500k-doc encode 94.5 s -> 7.4 s on
-    local[32] over a single 12 MB parquet file.
-
-    ``key``: a high-cardinality column to HASH-partition by instead of
-    the keyless round-robin. Every keyless ``repartition(n)`` first
-    LOCALLY SORTS its input so retried tasks reproduce the same
-    row-to-partition assignment (sortBeforeRepartition, guide §2.5) —
-    on a scan-starved input that sort runs in the ONE task that has
-    all the rows, and its buffers dominate the heap: q225's
-    score-frame pass at 5M docs measured 388 s fresh-heap / 1023 s
-    aged-heap round-robin vs 146 s / 180 s hash-keyed. Hashing a
-    deterministic key is also strictly safer under retries (same row
-    -> same partition, no sort needed) and gives every consumer the
-    identical exchange child, restoring ReuseExchange where column
-    pruning would otherwise specialize (and duplicate) the spread per
-    consumer. Callers pass their row id (or the text column when no id
-    exists); 5M distinct values over 32 partitions balance to <1%.
-    ``key`` may also be a Column for frames with no unique COLUMN at
-    all: callers without an id pass
-    ``F.monotonically_increasing_id()`` — row-unique and SPLIT-STABLE
-    (a pure function of partition index and row position, so a retried
-    task reproduces the same key for the same row, unlike rand-derived
-    keys — guide §2.5 / SPARK-38388), where hashing a duplicate-heavy
-    data column would re-concentrate the very rows the spread exists
-    to distribute (ADVICE r11 on chao1_frame)."""
-    if df.isStreaming:
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # NOTE: partition count is the trigger, but the count can LIE about
-    # effective parallelism: a single-file snappy parquet with one giant
-    # row group presents byte-range splits (29 at 5M docs) of which only
-    # the split containing the row-group start yields ANY rows — the
-    # other 28 tasks read zero and one task does all the work. A
-    # "starvation factor" variant (fire only when partitions*2 <= par)
-    # was tried and REVERTED: it left the 5M-doc corpus on 1 effective
-    # task (q187's Arrow pass sat at 800+ s single-worker vs 65 s
-    # spread). The spread exchange costs seconds of text shuffle at 5M
-    # docs, but it is what converts 1 effective slot into 32. Real
-    # multi-file layouts present >= par partitions AND many row groups,
-    # so this stays a no-op there.
-    if df.rdd.getNumPartitions() < par:
-        if key is not None:
-            return df.repartition(par, F.col(key) if isinstance(key, str) else key)
-        return df.repartition(par)
-    return df
-
-
 # ---- determinism helpers (Spark side) ----
 #
 # Exact sums run on primitive longs, not Spark's decimal Sum. A decimal
@@ -207,6 +147,38 @@ def _n_limbs(max_abs: float | None, scale: int) -> int:
     return 3
 
 
+def _limb_sums_sql(e: str, scale: int, max_abs: float | None) -> dict[str, str]:
+    """The per-limb long SUMs of round(``e`` * 10^scale) as SQL, keyed
+    "hi"/"mid"/"lo" (only the limbs ``max_abs`` needs, high first): the
+    one rendering of the rounding and limb splits, shared by the
+    single-level :func:`_scaled_sum_sql` and two-level :func:`dsum_limbs`
+    so their limbs stay bit-identical."""
+    lit10 = repr(float(10**scale))
+    half = f"(CASE WHEN ({e}) >= 0 THEN 0.5D ELSE -0.5D END)"
+    s = f"CAST((CAST(({e}) AS DOUBLE) * {lit10}D + {half}) AS BIGINT)"
+    n = _n_limbs(max_abs, scale)
+    if n == 1:
+        return {"lo": f"SUM({s})"}
+    lo = f"SUM(({s} & {_LIMB_LO - 1}))"
+    if n == 2:
+        return {"hi": f"SUM(SHIFTRIGHT({s}, {_LIMB_BITS}))", "lo": lo}
+    return {
+        "hi": f"SUM(SHIFTRIGHT({s}, {2 * _LIMB_BITS}))",
+        "mid": f"SUM((SHIFTRIGHT({s}, {_LIMB_BITS}) & {_LIMB_LO - 1}))",
+        "lo": lo,
+    }
+
+
+def _limb_total_sql(dec: dict[str, str]) -> str:
+    """Recombine decimal(38,0) limb sums (keys as :func:`_limb_sums_sql`)
+    into the exact scaled total."""
+    if "mid" in dec:
+        return f"({dec['hi']} * {_LIMB_HI} + {dec['mid']} * {_LIMB_LO} + {dec['lo']})"
+    if "hi" in dec:
+        return f"({dec['hi']} * {_LIMB_LO} + {dec['lo']})"
+    return dec["lo"]
+
+
 def _scaled_sum_sql(e: str, scale: int, max_abs: float | None) -> str:
     """:func:`_exact_scaled_sum` rendered as ONE SQL string over the SQL
     expression ``e`` — the identical tree (same literals, same casts,
@@ -217,22 +189,9 @@ def _scaled_sum_sql(e: str, scale: int, max_abs: float | None) -> str:
     the F.*-operator path; the parsed form is ~4x cheaper. Exactness is
     pinned by tests/test_exact_sums.py's string-vs-Column equivalence
     test and the oracle sweep."""
-    lit10 = repr(float(10**scale))
-    half = f"(CASE WHEN ({e}) >= 0 THEN 0.5D ELSE -0.5D END)"
-    s = f"CAST((CAST(({e}) AS DOUBLE) * {lit10}D + {half}) AS BIGINT)"
-    n = _n_limbs(max_abs, scale)
-    if n == 1:
-        return f"CAST(SUM({s}) AS DECIMAL(38,0))"
-    lo = f"CAST(SUM(({s} & {_LIMB_LO - 1})) AS DECIMAL(38,0))"
-    if n == 2:
-        hi = f"CAST(SUM(SHIFTRIGHT({s}, {_LIMB_BITS})) AS DECIMAL(38,0))"
-        return f"({hi} * {_LIMB_LO} + {lo})"
-    hi = f"CAST(SUM(SHIFTRIGHT({s}, {2 * _LIMB_BITS})) AS DECIMAL(38,0))"
-    mid = (
-        f"CAST(SUM((SHIFTRIGHT({s}, {_LIMB_BITS}) & {_LIMB_LO - 1})) "
-        "AS DECIMAL(38,0))"
+    return _limb_total_sql(
+        {k: f"CAST({v} AS DECIMAL(38,0))" for k, v in _limb_sums_sql(e, scale, max_abs).items()}
     )
-    return f"({hi} * {_LIMB_HI} + {mid} * {_LIMB_LO} + {lo})"
 
 
 def _exact_scaled_sum(c: F.Column, scale: int, max_abs: float | None = None) -> F.Column:
@@ -282,27 +241,13 @@ def dsum_limbs(
     pushed below a join (eager aggregation) without losing exactness.
     The overflow envelope is unchanged (the merged sum covers the same
     row set, ~8.8e12 rows/group; see module note)."""
-    n = _n_limbs(max_abs, scale)
     if isinstance(col, str):
         # SQL-string fast path (identical tree — see _scaled_sum_sql)
-        lit10 = repr(float(10**scale))
-        half = f"(CASE WHEN ({col}) >= 0 THEN 0.5D ELSE -0.5D END)"
-        s = f"CAST((CAST(({col}) AS DOUBLE) * {lit10}D + {half}) AS BIGINT)"
-        if n == 1:
-            return [F.expr(f"SUM({s}) AS {prefix}_lo")]
-        out = [F.expr(f"SUM(({s} & {_LIMB_LO - 1})) AS {prefix}_lo")]
-        if n == 2:
-            return [
-                F.expr(f"SUM(SHIFTRIGHT({s}, {_LIMB_BITS})) AS {prefix}_hi"),
-                *out,
-            ]
         return [
-            F.expr(f"SUM(SHIFTRIGHT({s}, {2 * _LIMB_BITS})) AS {prefix}_hi"),
-            F.expr(
-                f"SUM((SHIFTRIGHT({s}, {_LIMB_BITS}) & {_LIMB_LO - 1})) AS {prefix}_mid"
-            ),
-            *out,
+            F.expr(f"{v} AS {prefix}_{k}")
+            for k, v in _limb_sums_sql(col, scale, max_abs).items()
         ]
+    n = _n_limbs(max_abs, scale)
     c = col
     half = F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
     s = (c.cast("double") * F.lit(float(10**scale)) + half).cast("long")
@@ -348,17 +293,10 @@ def dsum_merge(
                 f"dsum_limbs call that built them"
             )
         n = present
-    dec = lambda c: f"CAST(SUM({c}) AS DECIMAL(38,0))"  # noqa: E731
-    if n == 1:
-        total = dec(f"{prefix}_lo")
-    elif n == 2:
-        total = f"({dec(f'{prefix}_hi')} * {_LIMB_LO} + {dec(f'{prefix}_lo')})"
-    else:
-        total = (
-            f"({dec(f'{prefix}_hi')} * {_LIMB_HI}"
-            f" + {dec(f'{prefix}_mid')} * {_LIMB_LO}"
-            f" + {dec(f'{prefix}_lo')})"
-        )
+    limbs = ("lo",) if n == 1 else ("hi", "lo") if n == 2 else ("hi", "mid", "lo")
+    total = _limb_total_sql(
+        {k: f"CAST(SUM({prefix}_{k}) AS DECIMAL(38,0))" for k in limbs}
+    )
     return F.expr(f"CAST(({total} / {10**scale}) AS DOUBLE)").alias(alias)
 
 

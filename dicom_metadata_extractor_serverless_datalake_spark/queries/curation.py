@@ -46,7 +46,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .base import query, spread_input, t
+from ..operators.dedup import (
+    MERSENNE_P,
+    NUM_PERM,
+    PERM_A,
+    PERM_B,
+    h31,
+    minhash_signatures,
+    word_grams,
+)
+from ..operators.skew import spread_input
+from .base import query, t
 
 # --------------------------------------------------------------------------
 # q144 — eval-overlap decontamination by word 5-gram.
@@ -193,7 +203,6 @@ def q145(spark: SparkSession, sf: str) -> DataFrame:
     a scale-killer at 100 TB). This plan's only exchange is the final
     |sources|-row rollup. Same values: the DuckDB oracle still runs the
     explode/groupBy shape, so the driver row proves plan-independence."""
-    from .base import spread_input
 
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
 
@@ -416,8 +425,6 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q179_duck_mins() -> str:
-    from .llm import MERSENNE_P, NUM_PERM, PERM_A, PERM_B
-
     return ",\n             ".join(
         f"MIN(({PERM_A[i]} * hg + {PERM_B[i]}) % {MERSENNE_P}) AS m{i}"
         for i in range(NUM_PERM)
@@ -425,7 +432,7 @@ def _q179_duck_mins() -> str:
 
 
 def _q179_oracle() -> str:
-    from .llm import NUM_PERM, duck_h31
+    from .llm import duck_h31
 
     agree = " + ".join(
         f"(CASE WHEN ga.m{i} = gb.m{i} THEN 1 ELSE 0 END)" for i in range(NUM_PERM)
@@ -465,17 +472,12 @@ def _q179_oracle() -> str:
     category="curation",
 )
 def q179(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import _SPARK_SHINGLES, MERSENNE_P, NUM_PERM, PERM_A, PERM_B, spark_h31
-
-    docs = t(spark, sf, "documents")
-    # gram -> 31-bit digest map-side: every exchange below carries
-    # (source, int64), never shingle strings
-    tok = (
-        docs.select("source", F.split("text", " ").alias("w"))
-        .select("source", F.explode(F.expr(_SPARK_SHINGLES)).alias("s"))
-        .select("source", F.expr(spark_h31("s")).alias("hg"))
-    )
-    dist = tok.distinct()
+    # grams are enumerated per SOURCE (no doc-id spread: hashing a
+    # dozen-valued key would concentrate the rows the spread exists to
+    # distribute); gram -> 31-bit digest map-side, so every exchange
+    # below carries (source, int64), never shingle strings
+    grams = word_grams(t(spark, sf, "documents"), "source", "text", 3, out="s")
+    dist = grams.select("source", F.expr(h31("s")).alias("hg")).distinct()
     sizes = dist.groupBy("source").agg(F.count("*").alias("n"))
     a, b = dist.alias("a"), dist.alias("b")
     pairs = (
@@ -483,14 +485,7 @@ def q179(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy(F.col("a.source").alias("s1"), F.col("b.source").alias("s2"))
         .agg(F.count("*").alias("both_n"))
     )
-    # MIN is duplicate-insensitive, so the signature skips the distinct
-    # (same reasoning as q52's signature build)
-    sigs = tok.groupBy("source").agg(
-        *[
-            F.min((F.lit(PERM_A[i]) * F.col("hg") + F.lit(PERM_B[i])) % MERSENNE_P).alias(f"m{i}")
-            for i in range(NUM_PERM)
-        ]
-    )
+    sigs = minhash_signatures(grams, "source")
     agree = sum(
         F.when(F.col(f"ga.m{i}") == F.col(f"gb.m{i}"), 1).otherwise(0) for i in range(NUM_PERM)
     )
@@ -556,10 +551,10 @@ def _q180_oracle() -> str:
     category="curation",
 )
 def q180(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import _minhash_band_pairs, spark_h31
+    from .llm import _minhash_band_pairs
 
     def split(col: str):
-        h = F.expr(spark_h31(f"CAST({col} AS STRING)")) % 100
+        h = F.expr(h31(f"CAST({col} AS STRING)")) % 100
         return F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
 
     lab = _minhash_band_pairs(spark, sf).select(

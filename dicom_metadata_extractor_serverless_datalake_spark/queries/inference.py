@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import h31
 from .base import _exact_scaled_sum, query, t
 
 # --------------------------------------------------------------------------
@@ -828,14 +829,12 @@ def _q249_oracle() -> str:
 
 @query("q249_group_sequential", oracle=_q249_oracle(), category="inference")
 def q249(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import spark_h31
-
     ev = t(spark, sf, "events")
     # ONE corpus pass: the per-user aggregate also carries each user's
     # max timestamp, so the experiment span folds from the (small) user
     # frame instead of a second events scan
     u = ev.groupBy("user_id").agg(
-        F.first(F.expr(spark_h31("'gs-' || CAST(user_id AS STRING)")) % 2).alias("arm"),
+        F.first(F.expr(h31("'gs-' || CAST(user_id AS STRING)")) % 2).alias("arm"),
         F.min(F.unix_micros("ts")).alias("seen_us"),
         F.max(F.unix_micros("ts")).alias("last_us"),
         F.min(

@@ -5,10 +5,11 @@ MinHash-LSH / SimHash), similarity search over embeddings, text analysis
 These are the north-star additions (BASELINE.json): the operators a
 100 TB training-data pipeline runs over document/embedding tables. Every
 deterministic variant has a DuckDB oracle built from the *same constants*
-via a portable hash primitive that is bit-identical in both engines:
-
-    spark : CAST(conv(substr(md5(x),1,8),16,10) AS BIGINT)
-    duckdb: CAST('0x' || substr(md5(x),1,8) AS BIGINT)
+via a portable hash primitive that is bit-identical in both engines: the
+first 32 bits of md5, mod 2^31 - 1 — ``operators/dedup.h31`` on the Spark
+side, :func:`duck_h31` in the oracles. The hash, the MinHash constants
+and the signature/band/pair stages live in ``operators/dedup.py``; this
+module registers the queries and their oracles.
 
 Approximate/sketch variants (ANN via LSH buckets) have no oracle by
 design and get the driver's rows-only check.
@@ -20,25 +21,29 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import (
+    MERSENNE_P,
+    NUM_PERM,
+    N_BANDS,
+    PERM_A,
+    PERM_B,
+    ROWS_PER_BAND,
+    estimate_verify,
+    h31,
+    lsh_band_rows,
+    lsh_candidate_pairs,
+    lsh_star_edges,
+    minhash_signatures,
+    neardup_pairs,
+    shingle_tokens,
+    word_grams,
+)
+from ..operators.skew import spread_input
 from .base import query, t
-
-# --------------------------------------------------------------------------
-# portable 31-bit hash + MinHash permutation family (shared constants)
-# --------------------------------------------------------------------------
-
-MERSENNE_P = 2_147_483_647  # 2^31 - 1
-NUM_PERM = 16
-N_BANDS = 4
-ROWS_PER_BAND = NUM_PERM // N_BANDS
-PERM_A = [1 + 12_347 * i for i in range(NUM_PERM)]
-PERM_B = [7 + 6_791 * i for i in range(NUM_PERM)]
-
-
-def spark_h31(expr: str) -> str:
-    return f"CAST(conv(substr(md5({expr}),1,8),16,10) AS BIGINT) % {MERSENNE_P}"
 
 
 def duck_h31(expr: str) -> str:
+    """DuckDB twin of operators/dedup.h31 (portable): same value."""
     return f"CAST('0x' || substr(md5({expr}),1,8) AS BIGINT) % {MERSENNE_P}"
 
 
@@ -197,14 +202,6 @@ def _minhash_oracle() -> str:
     return _minhash_pairs_cte() + "\n    SELECT d1, d2 FROM pairs ORDER BY d1, d2\n    "
 
 
-_SPARK_SHINGLES = (
-    "CASE WHEN size(w) >= 3 THEN "
-    "transform(sequence(0, size(w) - 3), "
-    "i -> concat_ws(' ', element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3))) "
-    "ELSE array() END"
-)
-
-
 def _minhash_band_pairs(
     spark: SparkSession, sf: str, docs: DataFrame | None = None,
     sorted_output: bool = False,
@@ -215,93 +212,12 @@ def _minhash_band_pairs(
     the rest of the corpus), so passing a filtered ``docs`` slice
     yields exactly the full-corpus candidate set restricted to pairs
     with both endpoints in the slice — q242 exploits this.
-
-    ``sorted_output=True`` (q52, whose declared result is the pair set
-    ORDERED by d1, d2) range-partitions the raw pair stream on
-    (d1, d2) BEFORE the dedup: one range exchange satisfies both the
-    distinct's ClusteredDistribution and the final sort's
-    OrderedDistribution (guide §2.4 — two operations keyed the same
-    way share one exchange), so the ~28M-row result set crosses ONE
-    wide shuffle instead of two (hash-distinct + range-sort). Measured
-    13.9 -> 10.5 s for the full q52 at 500k docs; rows identical.
-    Unsorted callers keep the plain hash distinct — for them range
-    partitioning buys nothing and costs the range-sampling job."""
-    from .base import spread_input
-
+    ``sorted_output``: see operators/dedup.lsh_candidate_pairs."""
     if docs is None:
         docs = t(spark, sf, "documents")
-    # Re-spread a scan-starved compressed input before the signature
-    # stage: the per-shingle md5 + 16 permutations are pure map CPU
-    # executed in the SCAN stage (partial aggregation), so a 1-3-split
-    # parquet layout left 29 cores idle — operators/dedup.shingle_tokens
-    # got this in r11 but this inline twin did not; measured 38-48 s ->
-    # 13-17 s for the full q52 at 500k docs (round-12 stage profile:
-    # the starved signature scan was ~70% of the wall, not the verify
-    # join). No-op on multi-file layouts (guide §2.5 input skew).
-    docs = spread_input(docs, key="doc_id")
-    # no distinct on (doc_id, shingle): MIN() is insensitive to duplicates,
-    # and skipping it keeps the shingle strings map-local — the only
-    # shuffle is the 16-column partial-aggregated signature per doc.
-    # codegen posexplode + indexed concat_ws (the exploded lambda
-    # _SPARK_SHINGLES form is CodegenFallback; identical multiset).
-    # Collision-resistant internal names: ``docs`` is caller-supplied
-    # (q242 passes a slice), so it must be safe for the caller's frame
-    # to carry columns named w/i (ADVICE r11).
-    tok = (
-        docs.select("doc_id", F.split("text", " ").alias("_wg_w"))
-        .select("doc_id", "_wg_w", F.posexplode("_wg_w").alias("_wg_i", "_wg_w0"))
-        .filter(F.col("_wg_i") < F.size("_wg_w") - 2)
-        .select(
-            "doc_id",
-            F.expr(
-                "concat_ws(' ', _wg_w[_wg_i], _wg_w[_wg_i + 1], _wg_w[_wg_i + 2])"
-            ).alias("s"),
-        )
+    return lsh_candidate_pairs(
+        minhash_signatures(shingle_tokens(docs)), sorted_output=sorted_output
     )
-    h = tok.select("doc_id", F.expr(spark_h31("s")).alias("hs"))
-    # expression trees built as SQL strings, one F.expr per aggregate:
-    # the F.*-operator form costs a py4j round-trip per operator node
-    # and measured 174 ms of DRIVER time per construction for these 16
-    # aggregates alone vs 42 ms as strings (the bench re-constructs the
-    # query every pass, so construction is ~28% of the sf0.1 wall; the
-    # parsed trees — and the executed plans — are identical)
-    mh = h.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({PERM_A[i]} * hs + {PERM_B[i]}) % {MERSENNE_P}) AS m{i}")
-            for i in range(NUM_PERM)
-        ]
-    )
-    # one posexplode over an array of band signatures: the signature
-    # aggregation runs ONCE (a 4-way union of selects over mh would
-    # re-execute the whole scan+agg per branch)
-    sig_array = F.expr(
-        "array("
-        + ", ".join(
-            "concat_ws('_', "
-            + ", ".join(
-                f"cast(m{b * ROWS_PER_BAND + r} as string)"
-                for r in range(ROWS_PER_BAND)
-            )
-            + ")"
-            for b in range(N_BANDS)
-        )
-        + ")"
-    )
-    bands = mh.select("doc_id", F.posexplode(sig_array).alias("band", "sig"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    raw = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-    )
-    if sorted_output:
-        raw = raw.repartitionByRange("d1", "d2")
-    return raw.distinct()
 
 
 @query("q52_minhash_lsh", oracle=_minhash_oracle(), category="dedup", headline=True)
@@ -349,12 +265,6 @@ def _star_oracle() -> str:
 
 @query("q243_neardup_star", oracle=_star_oracle(), category="dedup")
 def q243(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import (
-        estimate_verify,
-        lsh_star_edges,
-        minhash_signatures,
-        shingle_tokens,
-    )
 
     docs = t(spark, sf, "documents")
     sigs = minhash_signatures(shingle_tokens(docs), hash_fn="portable").transform(tracked_persist)
@@ -402,12 +312,6 @@ def _q244_oracle() -> str:
 
 @query("q244_incremental_neardup", oracle=_q244_oracle(), category="dedup")
 def q244(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import (
-        estimate_verify,
-        lsh_band_rows,
-        minhash_signatures,
-        shingle_tokens,
-    )
 
     docs = t(spark, sf, "documents")
     # signatures are per-doc, so computing them over the full table and
@@ -475,7 +379,6 @@ _HAMMING_MAX = 3
     category="dedup",
 )
 def q53(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
 
     # The signature is computed ENTIRELY MAP-SIDE: per-word h31
     # digests, then each of the 31 bit-majority votes is a fold over
@@ -485,7 +388,7 @@ def q53(spark: SparkSession, sf: str) -> DataFrame:
     # shuffle (~18G rows at 5M docs); this plan's first exchange is
     # the band join itself (signature stage: 7.8 s at 500k docs).
     # Re-spread first: the digests are scan-stage CPU
-    # (queries/base.spread_input). NOTE on the band join's own scale:
+    # (operators/skew.spread_input). NOTE on the band join's own scale:
     # 8-bit bands give n/256-doc buckets, so the candidate-pair count
     # (and the RESULT itself, which enumerates near-dup pairs) grows
     # quadratically on near-duplicate-heavy corpora — at 100 TB a
@@ -513,7 +416,7 @@ def q53(spark: SparkSession, sf: str) -> DataFrame:
         memo: dict[str, int] = {}
         shifts = np.arange(31, dtype=np.int64)
 
-        def h31(w: str) -> int:
+        def word_h31(w: str) -> int:
             v = memo.get(w)
             if v is None:
                 v = int.from_bytes(md5(w.encode()).digest()[:4], "big") % p
@@ -527,7 +430,7 @@ def q53(spark: SparkSession, sf: str) -> DataFrame:
             sigs = []
             for text in batch.column("text").to_pylist():
                 toks = (text or "").split(" ")
-                hs = np.fromiter((h31(w) for w in toks), np.int64, len(toks))
+                hs = np.fromiter((word_h31(w) for w in toks), np.int64, len(toks))
                 cnts = ((hs[:, None] >> shifts) & 1).sum(axis=0)
                 sigs.append(int(((2 * cnts > len(toks)).astype(np.int64) << shifts).sum()))
             yield pa.RecordBatch.from_arrays(
@@ -691,7 +594,7 @@ _N_PLANES = 6
 def _bucket_expr(col: str) -> str:
     bits = []
     for p in range(_N_PLANES):
-        plane_hash = spark_h31("concat('pl" + str(p) + "_', i)")
+        plane_hash = h31("concat('pl" + str(p) + "_', i)")
         proj = (
             f"aggregate(transform(sequence(0, size({col}) - 1), "
             f"i -> CAST(element_at({col}, i + 1) AS DOUBLE) * "
@@ -838,7 +741,6 @@ def _neardup_oracle() -> str:
 
 @query("q68_neardup_pipeline", oracle=_neardup_oracle(), category="dedup")
 def q68(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import neardup_pairs
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
     return neardup_pairs(docs, threshold=_VERIFY_THRESHOLD).orderBy("d1", "d2")
@@ -1029,10 +931,9 @@ _GREATEST = "greatest(" + ", ".join(f"s_{lang}" for lang in sorted(_LANG_STOPWOR
     category="text",
 )
 def q57(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
 
     # five stopword-list scans per doc are pure map CPU: re-spread a
-    # scan-starved compressed input first (queries/base.spread_input)
+    # scan-starved compressed input first (operators/skew.spread_input)
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
     scored = docs.select(
         "doc_id",
@@ -1281,7 +1182,7 @@ def _cluster_balanced_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     membership = clustered.unionByName(singles)
     wsize = Window.partitionBy("cluster_id")
     worder = Window.partitionBy("cluster_id").orderBy(
-        F.expr(spark_h31("CAST(doc_id AS STRING)")), "doc_id"
+        F.expr(h31("CAST(doc_id AS STRING)")), "doc_id"
     )
     return (
         membership.withColumn("cluster_size", F.count("*").over(wsize))
@@ -1325,12 +1226,6 @@ def q248(spark: SparkSession, sf: str) -> DataFrame:
     doc="cluster-balanced selection over star edges; oracle = q248's all-pairs closure (equivalence proof)",
 )
 def q254(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import (
-        lsh_star_edges,
-        minhash_signatures,
-        shingle_tokens,
-    )
-
     docs = t(spark, sf, "documents")
     sigs = minhash_signatures(shingle_tokens(docs), hash_fn="portable")
     edges = lsh_star_edges(sigs)
@@ -1631,15 +1526,8 @@ _CONT_MIN_TOK = 10
     category="dedup",
 )
 def q128(spark: SparkSession, sf: str) -> DataFrame:
-    # codegen posexplode + indexed concat_ws; the previous
-    # explode_outer(lambda) + isNotNull dance only existed to drop
-    # short docs' empty arrays — the position filter does the same
     tk = (
-        t(spark, sf, "documents")
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .select("doc_id", "w", F.posexplode("w").alias("i", "_w0"))
-        .filter(F.col("i") < F.size("w") - 2)
-        .select("doc_id", F.expr("concat_ws(' ', w[i], w[i + 1], w[i + 2])").alias("tok"))
+        word_grams(t(spark, sf, "documents"), "doc_id", "text", 3, out="tok")
         .distinct()
         .transform(tracked_persist)
     )
@@ -2023,20 +1911,9 @@ def _q263_oracle() -> str:
     doc="Lee-et-al exact 20-token-span duplication: per-doc duplicated-span fraction, digest-only shuffles",
 )
 def q263(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
-
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
-    # codegen posexplode + indexed concat_ws (the lambda transform ->
-    # concat_ws(slice) form is CodegenFallback; same span multiset —
-    # docs shorter than _SPAN_K yield no position i < size(w) - 19)
-    span_expr = "concat_ws(' ', " + ", ".join(
-        f"w[i + {k}]" for k in range(_SPAN_K)
-    ) + ")"
-    spans = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .select("doc_id", "w", F.posexplode("w").alias("i", "_w0"))
-        .filter(F.col("i") < F.size("w") - (_SPAN_K - 1))
-        .select("doc_id", F.expr(spark_h31(span_expr)).alias("hs"))
+    spans = word_grams(docs, "doc_id", "text", _SPAN_K, out="span").select(
+        "doc_id", F.expr(h31("span")).alias("hs")
     )
     freq = spans.groupBy("hs").agg(F.count("*").alias("n"))
     return (

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import h31
+from ..operators.skew import spread_input
 from .base import dsum, dsum_expr, query, sql_dsum, t
 
 # --------------------------------------------------------------------------
@@ -691,7 +693,6 @@ _BLOOM_K = 4
     category="dedup",
 )
 def q139(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
 
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
     dig = docs.select("doc_id", F.sha2(F.col("text"), 256).alias("dg"))
@@ -1581,7 +1582,6 @@ def _q255_oracle() -> str:
     doc="Fellegi-Sunter scoring over hash-capped sub-blocks: pair volume linear in block size",
 )
 def q255(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import spark_h31
 
     wl, wh, wt = _FS_W["len"], _FS_W["head"], _FS_W["tail"]
     w = F.split("text", " ")
@@ -1593,7 +1593,7 @@ def q255(spark: SparkSession, sf: str) -> DataFrame:
         F.expr("n_chars div 10").alias("len10"),
         F.concat_ws(" ", F.slice(w, 1, 5)).alias("head"),
         F.element_at(w, -1).alias("tail"),
-        F.expr(spark_h31("concat('s255-', CAST(doc_id AS STRING))")).alias("hsh"),
+        F.expr(h31("concat('s255-', CAST(doc_id AS STRING))")).alias("hsh"),
     )
     bc = side.groupBy("lang", "source", "blk").agg(F.count("*").alias("c"))
     # block-cardinality-sized frame; let AQE pick broadcast locally —
@@ -2043,8 +2043,6 @@ def _q262_oracle() -> str:
     doc="Count-Min sketch (4x256) materialized as a 1024-cell aggregate; top-20 words audited est-vs-exact",
 )
 def q262(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import spark_h31
-
     tok = (
         t(spark, sf, "documents")
         .select(F.expr("filter(split(text, ' '), x -> x <> '')").alias("ws"))
@@ -2053,7 +2051,7 @@ def q262(spark: SparkSession, sf: str) -> DataFrame:
     bucket_exprs = []
     for i in range(_CM_D):
         salted = "concat('cm" + str(i) + "-', w)"
-        bucket_exprs.append(F.expr(f"{spark_h31(salted)} % {_CM_W}"))
+        bucket_exprs.append(F.expr(f"{h31(salted)} % {_CM_W}"))
     buckets = F.array(*bucket_exprs)
     # hash per DISTINCT word, weight by its exact count: the counter
     # cells are identical to hashing every token (sum of counts per
@@ -2227,8 +2225,6 @@ def _q265_oracle() -> str:
     doc="RAKE keyphrases: stopword-boundary phrases, deg/freq word scores in micros, top-20 total order",
 )
 def q265(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
-
     # Phrase extraction is one Arrow map pass (rake_phrases above); the
     # spread exchange below it is the shared subtree both consumers of
     # phr reuse (ReuseExchange), so the scan+spread pays once and the
@@ -2556,17 +2552,7 @@ def ams_sign_counters(tok: DataFrame, hash_fn: str = "portable") -> DataFrame:
     md5-derived h31 (DuckDB-replayable, q272's oracle contract);
     ``"fast"`` uses JVM-native xxhash64 — the production hash, measured
     6.3x cheaper at 500k docs (BASELINE.md)."""
-    from .llm import spark_h31
-
-    if hash_fn == "fast":
-        sign_bit = [F.expr(f"xxhash64(concat('ams{j}-', w)) & 1") for j in range(_AMS_D)]
-    elif hash_fn == "portable":
-        sign_bit = [
-            F.expr(f"{spark_h31(chr(39) + f'ams{j}-' + chr(39) + ' || w')} % 2")
-            for j in range(_AMS_D)
-        ]
-    else:
-        raise ValueError(f"hash_fn must be 'portable' or 'fast', got {hash_fn!r}")
+    sign_bit = [F.expr(h31(f"'ams{j}-' || w", hash_fn) + " % 2") for j in range(_AMS_D)]
     return tok.agg(
         *[
             (F.sum(F.lit(1) - F.lit(2) * sign_bit[j])).cast("long").alias(f"x{j}")
@@ -2636,8 +2622,7 @@ def ams_token_frame(spark: SparkSession, sf: str) -> DataFrame:
     """The batch token stream both AMS forms audit against. The
     per-token digest downstream is pure map CPU, so a scan-starved
     input (one compressed parquet file) is re-spread first
-    (queries/base.spread_input)."""
-    from .base import spread_input
+    (operators/skew.spread_input)."""
 
     return spread_input(t(spark, sf, "documents"), key="doc_id").select(
         F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("w")

@@ -54,8 +54,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import h31
 from .base import query, t
-from .llm import duck_h31, spark_h31
+from .llm import duck_h31
 
 # --------------------------------------------------------------------------
 # q201 — corpus-trained bigram LM typicality score. Train: count every
@@ -114,8 +115,8 @@ def _q201_oracle() -> str:
     doc="corpus-trained bigram LM typicality score, hash-keyed train+score",
 )
 def q201(spark: SparkSession, sf: str) -> DataFrame:
-    bh = spark_h31("concat(element_at(ws, i), ' ', element_at(ws, i + 1))")
-    ph = spark_h31("element_at(ws, i)")
+    bh = h31("concat(element_at(ws, i), ' ', element_at(ws, i + 1))")
+    ph = h31("element_at(ws, i)")
     ps = (
         f"CASE WHEN size(ws) >= 2 "
         f"THEN transform(sequence(1, size(ws) - 1), i -> struct({bh} AS bh, {ph} AS ph)) "
@@ -342,7 +343,7 @@ def _q203_oracle() -> str:
     doc="DSIR-shaped hashed-unigram importance lean toward a target slice",
 )
 def q203(spark: SparkSession, sf: str) -> DataFrame:
-    h = spark_h31("w")
+    h = h31("w")
     tok = (
         t(spark, sf, "documents")
         .select(

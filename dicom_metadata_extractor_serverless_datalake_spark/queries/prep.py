@@ -51,8 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.dedup import h31
 from .base import query, t
-from .llm import duck_h31, spark_h31
+from .llm import duck_h31
 
 # --------------------------------------------------------------------------
 # q166 — kNN label-noise audit (Confident-Learning-shaped): for a
@@ -138,7 +139,7 @@ def q166(spark: SparkSession, sf: str) -> DataFrame:
     # side of the broadcast) — the linear-scale form; see header note
     anchors = (
         emb.orderBy(
-            F.expr(spark_h31("concat('a166-', CAST(vec_id AS STRING))")),
+            F.expr(h31("concat('a166-', CAST(vec_id AS STRING))")),
             "vec_id",
         )
         .limit(_AUDIT_N)
@@ -218,7 +219,7 @@ def q167(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("token"))
         .filter(F.col("token") != "")
         .select(
-            (F.expr(spark_h31("concat('f167-', token)")) % _HASH_DIM).alias(
+            (F.expr(h31("concat('f167-', token)")) % _HASH_DIM).alias(
                 "bucket"
             ),
             "token",
@@ -313,7 +314,7 @@ _RESERVOIR_K = 10
     category="prep",
 )
 def q169(spark: SparkSession, sf: str) -> DataFrame:
-    h = F.expr(spark_h31("concat('r169-', CAST(doc_id AS STRING))"))
+    h = F.expr(h31("concat('r169-', CAST(doc_id AS STRING))"))
     w = Window.partitionBy("lang").orderBy(h, "doc_id")
     return (
         t(spark, sf, "documents")
@@ -399,7 +400,7 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn(
             "cand_pk",
             F.expr(
-                spark_h31(
+                h31(
                     "concat('neg170-', CAST(custkey AS STRING), '-', CAST(i AS STRING))"
                 )
             )
@@ -819,7 +820,7 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
     base = t(spark, sf, "orders").select(
         F.col("o_orderpriority").alias("category"),
         (
-            F.expr(spark_h31("concat('te176-', CAST(o_orderkey AS STRING))"))
+            F.expr(h31("concat('te176-', CAST(o_orderkey AS STRING))"))
             % _TE_FOLDS
         ).alias("fold"),
         (F.col("o_totalprice").cast("decimal(28,2)") * 100)
@@ -1246,7 +1247,7 @@ def _q288_oracle() -> str:
     doc="JL ±1-projection distortion audit on a hash-selected vector sample: integer-grid exact distances, per-pair ratio in micros",
 )
 def q288(spark: SparkSession, sf: str) -> DataFrame:
-    h = spark_h31("concat('jls-', CAST(vec_id AS STRING))")
+    h = h31("concat('jls-', CAST(vec_id AS STRING))")
     s = (
         t(spark, sf, "embeddings")
         .select("vec_id", "embedding", F.expr(f"({h})").alias("_h"))

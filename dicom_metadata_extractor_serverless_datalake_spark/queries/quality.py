@@ -41,7 +41,7 @@ corpus exactness conventions of queries/base.py:
 - money goes through the corpus cents cast
   (`CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)`,
   half-away-from-zero in both engines);
-- winnowing runs on the shared portable 31-bit md5 hash (llm.spark_h31
+- winnowing runs on the shared portable 31-bit md5 hash (operators/dedup.h31
   / llm.duck_h31), so both engines select identical fingerprints.
 
 Scale shapes at 100 TB are documented per query below.
@@ -52,8 +52,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import h31
+from ..operators.skew import spread_input
 from .base import query, t
-from .llm import MERSENNE_P, _dlit, duck_h31, spark_h31
+from .llm import MERSENNE_P, _dlit, duck_h31
 
 # --------------------------------------------------------------------------
 # q187 — winnowing fingerprint selection (MOSS): hash every word
@@ -252,7 +254,6 @@ def winnow_summary(docs: DataFrame) -> DataFrame:
     doc="MOSS winnowing fingerprint selection, fully map-side",
 )
 def q187(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
 
     # The final orderBy's RangePartitioning needs bounds, and the bounds
     # sampler EXECUTES the child — so an unmaterialized child runs the
@@ -768,7 +769,7 @@ def _dupspan_oracle() -> str:
 def q194(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
-    h = spark_h31(f"array_join(slice(ws, i, {_SPAN_K}), ' ')")
+    h = h31(f"array_join(slice(ws, i, {_SPAN_K}), ' ')")
     ghs = (
         f"CASE WHEN size(ws) >= {_SPAN_K} "
         f"THEN transform(sequence(1, size(ws) - {_SPAN_K - 1}), i -> {h}) "
@@ -881,7 +882,7 @@ def _winnow_sel_cte_duck() -> str:
     doc="span-level near-dup pairs via shared winnowing fingerprints",
 )
 def q195(spark: SparkSession, sf: str) -> DataFrame:
-    h = spark_h31(f"array_join(slice(ws, i, {_WIN_K}), ' ')")
+    h = h31(f"array_join(slice(ws, i, {_WIN_K}), ' ')")
     hs = (
         f"CASE WHEN size(ws) >= {_WIN_K} "
         f"THEN transform(sequence(1, size(ws) - {_WIN_K - 1}), i -> {h}) "
@@ -1319,8 +1320,6 @@ def q199(spark: SparkSession, sf: str) -> DataFrame:
     doc="frequency-of-frequencies + Turing-smoothed r* and unseen mass, exact integer ratios",
 )
 def q256(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
-
     tok = (
         spread_input(t(spark, sf, "documents"), key="doc_id")
         .select(F.expr("filter(split(text, ' '), w -> w <> '')").alias("ws"))
@@ -1490,7 +1489,6 @@ def q276(spark: SparkSession, sf: str) -> DataFrame:
 def q278(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .base import spread_input
 
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
     n = docs.agg((F.max("doc_id") + 1).cast("long").alias("n_docs"))
@@ -1600,18 +1598,8 @@ def bootstrap_rep_frame(
     "portable" draws weights from the md5-derived h31 (the oracle
     contract); "fast" from xxhash64 — the production hash (the
     portable md5 is the measured wall at 5M docs, BASELINE.md)."""
-    from .llm import spark_h31
-
-    if hash_fn == "fast":
-        h = f"xxhash64(concat('boot', CAST(r AS STRING), '-', CAST({id_col} AS STRING))) & 2147483647"
-    elif hash_fn == "portable":
-        h = spark_h31(
-            f"concat('boot', CAST(r AS STRING), '-', CAST({id_col} AS STRING))"
-        )
-    else:
-        raise ValueError(f"hash_fn must be 'portable' or 'fast', got {hash_fn!r}")
+    h = h31(f"concat('boot', CAST(r AS STRING), '-', CAST({id_col} AS STRING))", hash_fn)
     k = f"CASE WHEN r = -1 THEN 1 ELSE {_boot_k_sql(f'({h})')} END"
-    from .base import spread_input
 
     # 65 digests per doc are pure map-side CPU; a scan-starved batch
     # input would run them on 1-3 cores (no-op for q290's streaming
@@ -2383,7 +2371,6 @@ def chao1_frame(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
     r10 #8) so the facade cannot desynchronize from its oracle. The
     word-keyed shuffle's MAP side (explode + partial counts) is the
     expensive half, so a scan-starved input is re-spread first."""
-    from .base import spread_input
 
     # Spread key: a row-unique SPLIT-STABLE surrogate, not text_col —
     # chao1's contract has no id column, and hashing the text would
@@ -2494,8 +2481,6 @@ def _q298_oracle() -> str:
     doc="Flesch reading-ease + FK grade per language: vowel-group syllable proxy, per-doc micro-floored doubles, integer mean",
 )
 def q298(spark: SparkSession, sf: str) -> DataFrame:
-    from .base import spread_input
-
     # Round-11: the per-word syllable fold (aggregate + regexp_count)
     # ran on the interpreted HOF path — one interpreted regex per word.
     # One Arrow map pass computes the identical INTEGER per-doc stats
@@ -2503,7 +2488,7 @@ def q298(spark: SparkSession, sf: str) -> DataFrame:
     # (guide §4.2/§4.5); the Flesch/FK DOUBLE trees below stay in Spark
     # unchanged, so the floored micros are bit-identical by
     # construction. Re-spread first: the stats are scan-stage CPU
-    # (queries/base.spread_input).
+    # (operators/skew.spread_input).
     def stat_batches(it):
         import re
 

@@ -10,6 +10,7 @@ oracle), and filters written so Catalyst pushes them into the scan.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1159,6 +1160,13 @@ def stats_join(spark: SparkSession, sf: str, table: str = STATS_TABLE) -> DataFr
     )
 
 
+# q115 plans with CBO on a scoped session (shared catalog, own SQLConf),
+# so the caller's session keeps planning without it. One scoped session
+# per caller session: load_table caches frames per session, so a fresh
+# session per build would pin one more session (and its frames) each time.
+_CBO_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 @query(
     "q115_stats_broadcast_join",
     oracle=f"""
@@ -1171,9 +1179,12 @@ def stats_join(spark: SparkSession, sf: str, table: str = STATS_TABLE) -> DataFr
     category="catalog",
 )
 def q115(spark: SparkSession, sf: str) -> DataFrame:
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    table = prepare_stats_table(spark, sf, analyze=True)
-    return stats_join(spark, sf, table)
+    cbo = _CBO_SESSIONS.get(spark)
+    if cbo is None:
+        cbo = _CBO_SESSIONS[spark] = spark.newSession()
+        cbo.conf.set("spark.sql.cbo.enabled", "true")
+    table = prepare_stats_table(cbo, sf, analyze=True)
+    return stats_join(cbo, sf, table)
 
 
 # --------------------------------------------------------------------------

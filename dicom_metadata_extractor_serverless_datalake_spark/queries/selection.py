@@ -58,9 +58,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .base import query, spread_input, t
+from ..operators.dedup import h31
+from ..operators.skew import spread_input
+from .base import query, t
 from .curation import _duck_grams
-from .llm import duck_h31, spark_h31
+from .llm import duck_h31
 
 # --------------------------------------------------------------------------
 # q223 — hard-negative + nearest-positive mining per anchor.
@@ -134,7 +136,7 @@ def q223(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     anchors = (
         emb.orderBy(
-            F.expr(spark_h31("'hn-' || CAST(vec_id AS STRING)")), "vec_id"
+            F.expr(h31("'hn-' || CAST(vec_id AS STRING)")), "vec_id"
         )
         .limit(_HN_N)
         .select(
@@ -211,7 +213,7 @@ _QC_BUCKETS = 64
 
 
 def _qc_weight_spark() -> str:
-    h = spark_h31("concat('qc-', tk)")
+    h = h31("concat('qc-', tk)")
     return (
         f"aggregate(transform(split(text, ' '), "
         f"tk -> (({h}) % {_QC_BUCKETS}) * 2654435761 % 997 - 498), "
@@ -335,8 +337,6 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q225(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.rank import global_positions
-
-    from .base import spread_input
 
     d = spread_input(t(spark, sf, "documents"), key="doc_id").select(
         "doc_id", "source", "n_chars", F.split("text", " ").alias("w")
@@ -468,7 +468,7 @@ _NOV_N = 5  # gram width
     doc="Memorization-risk readout: exact novel-5-gram share of held-out docs",
 )
 def q228(spark: SparkSession, sf: str) -> DataFrame:
-    is_eval = F.expr(spark_h31("'nv-' || CAST(doc_id AS STRING)")) % 10 == 7
+    is_eval = F.expr(h31("'nv-' || CAST(doc_id AS STRING)")) % 10 == 7
     d = spread_input(t(spark, sf, "documents"), key="doc_id").select(
         "doc_id", "source", is_eval.alias("is_eval"), F.split("text", " ").alias("w")
     )

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.skew import spread_input
 from .base import _exact_scaled_sum, query, t
 
 # --------------------------------------------------------------------------
@@ -339,7 +340,6 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
     shuffled every token's text twice plus a doc-keyed join; this
     plan's only exchange is the |sources|-row rollup. Empty-word docs
     produce all-zero stats, matching the old left-join COALESCE."""
-    from .base import spread_input
 
     docs = spread_input(t(spark, sf, "documents"), key="doc_id")
 

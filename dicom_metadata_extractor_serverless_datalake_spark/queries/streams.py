@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..operators.dedup import h31
 from .base import query
 
 # --------------------------------------------------------------------------
@@ -109,13 +110,15 @@ def _events_stream_src(
     return src, span
 
 
+_ROWS_PER_STATE_PARTITION = 250_000
+
+
 def _state_partitions(spark) -> int | None:
     """Scale-adaptive STATE partition count for a streaming drain
     (guide §2: derive partitioning from input size, never a constant;
     AQE cannot coalesce streaming plans). Sized from the staged
     source's row count (the ``load_stream`` breadcrumb): one state
-    partition per ~250k source rows (env
-    ``SPARK_GRAFT_STREAM_ROWS_PER_STATE_PARTITION``), floor 4 so tiny
+    partition per ``_ROWS_PER_STATE_PARTITION`` source rows, floor 4 so tiny
     test sources still exercise multi-partition state, capped at the
     session's parallelism only from BELOW — large sources keep the
     session's own shuffle parallelism (at 100 TB the cap never binds;
@@ -127,9 +130,8 @@ def _state_partitions(spark) -> int | None:
     rows = getattr(spark, "_graft_stream_src_rows", None)
     if not rows:
         return None
-    per = int(os.environ.get("SPARK_GRAFT_STREAM_ROWS_PER_STATE_PARTITION", "250000"))
     par = spark.sparkContext.defaultParallelism
-    return min(par, max(4, rows // per + 1))
+    return min(par, max(4, rows // _ROWS_PER_STATE_PARTITION + 1))
 
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> tuple[str, int]:
@@ -624,9 +626,9 @@ def _mg_stream_update(key, batches, state):
     )
 
 
-from .llm import duck_h31, spark_h31  # portable hash, shared constants
+from .llm import duck_h31
 
-_SPARK_H31_UID = spark_h31("CAST(user_id AS STRING)")
+_SPARK_H31_UID = h31("CAST(user_id AS STRING)")
 _DUCK_H31_UID = duck_h31("CAST(user_id AS VARCHAR)")
 
 
@@ -1406,7 +1408,7 @@ def q185(spark: SparkSession, sf: str) -> DataFrame:
         keyed = docs.select(
             "lang",
             "doc_id",
-            F.expr(spark_h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
+            F.expr(h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
         )
         stateful = keyed.groupBy("lang").applyInPandasWithState(
             _reservoir_update,
@@ -1972,7 +1974,6 @@ def _ab_monitor_update(key, batches, state):
 def q231(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .llm import spark_h31
     from ..sources.tables import load_stream
 
     src, _ = _events_stream_src(sf, time_splits=3)
@@ -2001,7 +2002,7 @@ def q231(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             "user_id",
             "c",
-            (F.expr(spark_h31("'ab-' || CAST(user_id AS STRING)")) % 2).alias("arm"),
+            (F.expr(h31("'ab-' || CAST(user_id AS STRING)")) % 2).alias("arm"),
         )
     )
     arms = conv.agg(
@@ -2228,7 +2229,6 @@ def q266(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.tables import load_stream
     from .mining import _CM_D, _CM_W
 
-    from .llm import spark_h31
 
     src = _docs_stream_src(sf, splits=3)
     try:
@@ -2239,7 +2239,7 @@ def q266(spark: SparkSession, sf: str) -> DataFrame:
         bucket_exprs = []
         for i in range(_CM_D):
             salted = "concat('cm" + str(i) + "-', w)"
-            bucket_exprs.append(F.expr(f"{spark_h31(salted)} % {_CM_W}"))
+            bucket_exprs.append(F.expr(f"{h31(salted)} % {_CM_W}"))
         hashed = tok.select(F.posexplode(F.array(*bucket_exprs)).alias("i", "bucket"))
         counters = hashed.groupBy("i", "bucket").agg(F.count("*").alias("c"))
         name, n_batches = _run_to_memory(counters, "update")
@@ -2261,7 +2261,7 @@ def q266(spark: SparkSession, sf: str) -> DataFrame:
     bucket_exprs_b = []
     for i in range(_CM_D):
         salted = "concat('cm" + str(i) + "-', w)"
-        bucket_exprs_b.append(F.expr(f"{spark_h31(salted)} % {_CM_W}"))
+        bucket_exprs_b.append(F.expr(f"{h31(salted)} % {_CM_W}"))
     exact = tok_b.groupBy("w").agg(F.count("*").alias("exact_n"))
     top = exact.orderBy(F.col("exact_n").desc(), "w").limit(20)
     top_buckets = top.select(
@@ -2321,7 +2321,6 @@ _set_q266_oracle()
 )
 def q280(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.tables import load_stream
-    from .llm import spark_h31
     from .mining import _AMS_D
 
     src = _docs_stream_src(sf, splits=3)
@@ -2331,7 +2330,7 @@ def q280(spark: SparkSession, sf: str) -> DataFrame:
             F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("w")
         )
         sign_exprs = [
-            F.expr(f"{spark_h31(chr(39) + f'ams{j}-' + chr(39) + ' || w')} % 2")
+            F.expr(f"{h31(chr(39) + f'ams{j}-' + chr(39) + ' || w')} % 2")
             for j in range(_AMS_D)
         ]
         cells = tok.select(F.posexplode(F.array(*sign_exprs)).alias("j", "neg"))
@@ -2401,7 +2400,7 @@ def q290(spark: SparkSession, sf: str) -> DataFrame:
     try:
         docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
         # re-spread the one-file micro-batch before the 65-digest map
-        # (the streaming analogue of queries/base.spread_input)
+        # (the streaming analogue of operators/skew.spread_input)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
         # THE shared construction (weights, sentinel, per-cell sums) —
         # every stage is a deferred transformation, so the identical
@@ -2488,7 +2487,7 @@ def q300(spark: SparkSession, sf: str) -> DataFrame:
         docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
         # one compressed file per trigger = one scan split: re-spread
         # the micro-batch before the CPU-heavy cascade (the streaming
-        # analogue of queries/base.spread_input, which by design leaves
+        # analogue of operators/skew.spread_input, which by design leaves
         # streaming frames alone)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
         enc = bpe_encode(docs, merges, id_col="source")

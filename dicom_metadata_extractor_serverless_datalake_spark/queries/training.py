@@ -22,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import h31
 from .base import query, t
-from .llm import duck_h31, spark_h31
+from .llm import duck_h31
 
 # --------------------------------------------------------------------------
 # q71 — deterministic train/val/test split: hash of the stable doc key
@@ -50,7 +51,7 @@ from .llm import duck_h31, spark_h31
     category="training",
 )
 def q71(spark: SparkSession, sf: str) -> DataFrame:
-    h = F.expr(spark_h31("CAST(doc_id AS STRING)")) % 100
+    h = F.expr(h31("CAST(doc_id AS STRING)")) % 100
     return (
         t(spark, sf, "documents")
         .withColumn(
@@ -93,7 +94,7 @@ _RATES = {"en": 30, "de": 100, "es": 75, "fr": 100, "zh": 50}
     category="training",
 )
 def q72(spark: SparkSession, sf: str) -> DataFrame:
-    h = F.expr(spark_h31("concat('s72-', CAST(doc_id AS STRING))")) % 100
+    h = F.expr(h31("concat('s72-', CAST(doc_id AS STRING))")) % 100
     rate = F.coalesce(
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in _RATES.items()],
         F.lit(0),
@@ -266,7 +267,7 @@ def q75(spark: SparkSession, sf: str) -> DataFrame:
 def q76(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.rank import global_positions
 
-    h = F.expr(spark_h31("concat('epoch1-', CAST(doc_id AS STRING))"))
+    h = F.expr(h31("concat('epoch1-', CAST(doc_id AS STRING))"))
     d = t(spark, sf, "documents").select("doc_id", h.alias("_h"))
     return (
         global_positions(d, ["_h", "doc_id"])
@@ -654,7 +655,7 @@ def q117(spark: SparkSession, sf: str) -> DataFrame:
     k = avail.agg(F.min(F.expr("n_avail div wt")).alias("k"))
     rn = F.row_number().over(
         W.partitionBy("source").orderBy(
-            F.expr(spark_h31("CAST(doc_id AS STRING)")), "doc_id"
+            F.expr(h31("CAST(doc_id AS STRING)")), "doc_id"
         )
     )
     ranked = dw.withColumn("rn", rn)
@@ -781,7 +782,7 @@ def q118(spark: SparkSession, sf: str) -> DataFrame:
 def q155(spark: SparkSession, sf: str) -> DataFrame:
     from .base import dsum
 
-    h = F.expr(spark_h31("concat('s155-', CAST(user_id AS STRING))")) % 100
+    h = F.expr(h31("concat('s155-', CAST(user_id AS STRING))")) % 100
     return (
         t(spark, sf, "events")
         .filter(h < 10)
@@ -1033,7 +1034,7 @@ def q183(spark: SparkSession, sf: str) -> DataFrame:
         "lang",
         "n_chars",
         "doc_id",
-        F.expr(spark_h31("concat('s183-', CAST(doc_id AS STRING))")).alias("_h"),
+        F.expr(h31("concat('s183-', CAST(doc_id AS STRING))")).alias("_h"),
     )
     ranked = grouped_positions(docs, ["lang"], ["_h", "doc_id"], position_col="r")
     totals = ranked.groupBy("lang").agg(F.count("*").alias("n"))

@@ -42,15 +42,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..queries.llm import (
-    _SPARK_SHINGLES,
+from ..operators.dedup import (
     MERSENNE_P,
-    N_BANDS,
     NUM_PERM,
     PERM_A,
     PERM_B,
-    ROWS_PER_BAND,
-    spark_h31,
+    SHINGLE_ARRAY,
+    h31,
+    lsh_band_rows,
 )
 
 LSH_STATE_SCHEMA = "owner BIGINT"
@@ -85,9 +84,9 @@ def minhash_bands_streaming(
     map-side (works identically on batch and streaming frames)."""
     sig = (
         docs.select(F.col(id_col).alias("doc_id"), F.split(text_col, " ").alias("w"))
-        .withColumn("sh", F.expr(_SPARK_SHINGLES))
+        .withColumn("sh", F.expr(SHINGLE_ARRAY))
         .filter(F.size("sh") > 0)
-        .withColumn("hs_arr", F.expr(f"transform(sh, s -> {spark_h31('s')})"))
+        .withColumn("hs_arr", F.expr(f"transform(sh, s -> {h31('s')})"))
         .select(
             "doc_id",
             *[
@@ -99,19 +98,7 @@ def minhash_bands_streaming(
             ],
         )
     )
-    sig_array = F.array(
-        *[
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"m{b * ROWS_PER_BAND + r}").cast("string")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.posexplode(sig_array).alias("band", "sig"))
+    return lsh_band_rows(sig)
 
 
 def lsh_shard_update(key, batches, state):

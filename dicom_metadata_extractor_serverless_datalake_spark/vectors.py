@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .queries.llm import MERSENNE_P
+from .operators.dedup import h31, salted_h31
 
 _SCALE = 1_000_000
 
@@ -143,16 +143,7 @@ class EmbeddingSet:
         |anchors| x |rows| with |anchors| constant."""
         lab = self._require_label("label_audit")
         did, vec = self.id_col, self.vec_col
-        h = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt), F.col(did).cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % MERSENNE_P
-        )
+        h = salted_h31(did, salt)
         anchor_df = (
             self.df.orderBy(h, F.col(did))
             .limit(anchors)
@@ -209,16 +200,7 @@ class EmbeddingSet:
         map-side by the partial WindowGroupLimit."""
         lab = self._require_label("hard_negatives")
         did, vec = self.id_col, self.vec_col
-        h = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt), F.col(did).cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % MERSENNE_P
-        )
+        h = salted_h31(did, salt)
         anchor_df = (
             self.df.orderBy(h, F.col(did))
             .limit(anchors)
@@ -433,10 +415,9 @@ def jl_distortion(
     is a FIXED top-``sample``-by-hash TakeOrdered — sample*(sample-1)/2
     pairs regardless of corpus size (the q288 scale contract). Returns
     (id_a, id_b, d2_orig, d2_proj, ratio_micros)."""
-    from .queries.llm import spark_h31
     from .queries.prep import _jl_y_sql
 
-    h = spark_h31(f"concat('jls-', CAST({id_col} AS STRING))")
+    h = h31(f"concat('jls-', CAST({id_col} AS STRING))")
     s = (
         df.select(id_col, vec_col, F.expr(f"({h})").alias("_h"))
         .orderBy("_h", id_col)

@@ -1,6 +1,7 @@
 """Custom operators: as-of join and skew-mitigation (salted join/agg)
 equal their naive formulations on real testdata."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dicom_metadata_extractor_serverless_datalake_spark.operators.asof import asof_join
@@ -180,6 +181,42 @@ def test_compact_partition_preserves_rows(spark, sf_dir, tmp_path_factory):
 
     # below threshold -> untouched
     assert compact_lake(spark, lake, min_files=8) == {}
+
+
+@pytest.mark.parametrize(
+    "value",
+    ["", "naïve café — 東京 ✓", "it's \"quoted\" ''x'' \\ end", "ab" * 5_000],
+    ids=["empty", "non_ascii", "quotes", "10k_chars"],
+)
+def test_h31_portable_matches_duckdb_fast_in_range(spark, value):
+    """The one 31-bit hash: "portable" in Spark equals the DuckDB oracle
+    twin on the same string (passed as a column value, never spliced
+    into SQL), the salted form equals h31 over the concatenated value,
+    "fast" stays in the 31-bit domain, and an unknown family raises."""
+    import duckdb
+
+    from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import (
+        MERSENNE_P,
+        h31,
+        salted_h31,
+    )
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.llm import duck_h31
+
+    row = (
+        spark.createDataFrame([(value, "")], "v string, e string")
+        .select(
+            F.expr(h31("v")).alias("portable"),
+            salted_h31("e", value).alias("salted"),
+            F.expr(h31("v", "fast")).alias("fast"),
+        )
+        .first()
+    )
+    want = duckdb.execute(f"SELECT {duck_h31('v')} FROM (SELECT ? AS v)", [value]).fetchone()[0]
+    assert row["portable"] == want
+    assert row["salted"] == want
+    assert 0 <= row["fast"] <= MERSENNE_P  # 31-bit mask: [0, 2^31 - 1]
+    with pytest.raises(ValueError):
+        h31("v", "sha1")
 
 
 def test_neardup_fast_hash_agrees_with_portable(spark, sf_dir):

@@ -807,14 +807,17 @@ def test_tokenize_facade_matches_q291(spark, docs):
 
 
 def test_gram_helpers_tolerate_caller_columns_named_w_and_i(spark):
-    """ADVICE r11: _word_grams / shingle_tokens / _minhash_band_pairs
+    """ADVICE r11: word_grams / shingle_tokens / _minhash_band_pairs
     bind internal intermediate columns; a caller whose id/text columns
     are literally named ``w`` and ``i`` (both are caller-chosen in the
     public helpers) must not hit an ambiguous-reference error or a
     silent misbinding. The gram multisets must equal the same data
     under unsuspicious column names."""
-    from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import shingle_tokens
-    from dicom_metadata_extractor_serverless_datalake_spark.pipeline import TextCorpus, _word_grams
+    from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import (
+        shingle_tokens,
+        word_grams,
+    )
+    from dicom_metadata_extractor_serverless_datalake_spark.pipeline import TextCorpus
 
     rows = [
         (1, "a b c d e f"),
@@ -834,14 +837,14 @@ def test_gram_helpers_tolerate_caller_columns_named_w_and_i(spark):
     assert got == want
 
     want_g = sorted(
-        (r["doc_id"], r["gram"]) for r in _word_grams(plain, "doc_id", "text", 2).collect()
+        (r["doc_id"], r["gram"]) for r in word_grams(plain, "doc_id", "text", 2).collect()
     )
     got_g = sorted(
-        (r["i"], r["gram"]) for r in _word_grams(hostile, "i", "w", 2).collect()
+        (r["i"], r["gram"]) for r in word_grams(hostile, "i", "w", 2).collect()
     )
     assert got_g == want_g
 
-    # facade path over the hostile names: novelty drives _word_grams on
+    # facade path over the hostile names: novelty drives word_grams on
     # both sides with caller-chosen columns
     nov = TextCorpus(hostile, id_col="i", text_col="w").novelty(
         hostile, n=2, eval_id_col="i", eval_text_col="w"

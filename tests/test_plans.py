@@ -297,6 +297,20 @@ def test_q115_catalog_stats_flip_join_to_broadcast(spark, sf_dir):
     assert not has_cartesian(after)
 
 
+def test_q115_leaves_caller_cbo_setting_alone(spark, sf_dir):
+    """q115 plans with CBO on a scoped session: building and collecting
+    it must not change the caller's spark.sql.cbo.enabled (no query
+    changes session-global state)."""
+    key = "spark.sql.cbo.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        _q("q115_stats_broadcast_join", spark, sf_dir).collect()
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_cc_edge_partitioning_reused_across_rounds(spark):
     """connected_components' per-round join must NOT re-shuffle the edge
     set: the persisted repartition('b') edge cache carries its

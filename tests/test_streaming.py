@@ -661,7 +661,7 @@ def test_streaming_agg_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory)
 
     from pyspark.sql import functions as F
 
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.llm import spark_h31
+    from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import h31
     from dicom_metadata_extractor_serverless_datalake_spark.queries.mining import _CM_D, _CM_W
     from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import _docs_stream_src
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
@@ -674,7 +674,7 @@ def test_streaming_agg_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory)
 
     def bucket_exprs():
         return [
-            F.expr(f"{spark_h31('concat(' + repr('cm' + str(i) + '-') + ', w)')} % {_CM_W}")
+            F.expr(f"{h31('concat(' + repr('cm' + str(i) + '-') + ', w)')} % {_CM_W}")
             for i in range(_CM_D)
         ]
 
@@ -853,7 +853,7 @@ def test_reservoir_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factor
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.llm import spark_h31
+    from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import h31
     from dicom_metadata_extractor_serverless_datalake_spark.queries.prep import _RESERVOIR_K
     from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import (
         _RES_OUT_SCHEMA,
@@ -875,7 +875,7 @@ def test_reservoir_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factor
         keyed = load_stream(spark, str(src), "documents", max_files_per_trigger=1).select(
             "lang",
             "doc_id",
-            F.expr(spark_h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
+            F.expr(h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
         )
         stateful = keyed.groupBy("lang").applyInPandasWithState(
             _reservoir_update,
@@ -918,7 +918,7 @@ def test_reservoir_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factor
         docs.select(
             "lang",
             "doc_id",
-            F.expr(spark_h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
+            F.expr(h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
         )
         .withColumn(
             "rk",

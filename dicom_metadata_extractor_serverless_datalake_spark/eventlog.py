@@ -2,10 +2,12 @@
 ``TextCorpus`` / ``EmbeddingSet``, completing the facade triad over
 the three big fact shapes (documents, vectors, event streams).
 
-``EventLog`` packages the corpus's event operators (gap sessionization
-q88, sequential funnels q87, training-sequence construction q168,
-purged time-series CV q174) into one API over any DataFrame with a
-user/entity column, an event-time column, and an event-type column:
+``EventLog`` is the one implementation of the corpus's event kernels
+(gap sessionization q88, sequential funnels q87, training-sequence
+construction q168, purged time-series CV q174, autocorrelation q189,
+transitions/attribution/survival q207-q209, Holt and seasonality
+q212/q213) as one API over any DataFrame with a user/entity column,
+an event-time column, and an event-type column:
 
     log = EventLog(events)
     log.sessionize()                  # rows + session ids (30-min gap)
@@ -13,6 +15,10 @@ user/entity column, an event-time column, and an event-type column:
     log.funnel(["view", "click", "purchase"])   # strict ordered funnel
     log.sequences(ctx=3)              # (context[k], label) training pairs
     log.cv_folds(folds=3, embargo_hours=6)      # purged walk-forward CV
+
+Those corpus queries call these methods; this module imports nothing
+from ``queries/`` (``_dlit`` comes from operators/ann.py, and the Holt
+update ``_hw_update`` lives here, where q212's oracle imports it).
 
 Every method keeps the corpus queries' exactness and scale shapes:
 windows partition by the user key (never global), duration/boundary
@@ -27,6 +33,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .operators.ann import _dlit
+
+
+def _hw_update(alpha_lit: str, beta_lit: str, x: str, l: str, b: str, e: str):
+    """The Holt update expressions over a previous state
+    (``l``/``b``/``e``) and a new observation ``x`` — returned as
+    (lnew, bnew, enew) SQL strings, the IDENTICAL IEEE tree in Spark
+    and in DuckDB (q212's oracle builds its recursive CTE from them).
+    bnew re-derives lnew inline; with no accumulator aliasing in sight
+    both engines evaluate the same value tree."""
+    pred = f"({l} + {b})"
+    lnew = f"({alpha_lit} * {x} + (CAST(1 AS DOUBLE) - {alpha_lit}) * {pred})"
+    bnew = (
+        f"({beta_lit} * ({lnew} - {l})"
+        f" + (CAST(1 AS DOUBLE) - {beta_lit}) * {b})"
+    )
+    enew = f"({e} + ({x} - {pred}) * ({x} - {pred}))"
+    return lnew, bnew, enew
 
 
 class EventLog:
@@ -429,9 +454,6 @@ class EventLog:
         ordered struct fold (bit-deterministic under any
         partitioning). Returns (type, n_days, level_cents,
         trend_milli, forecast7_cents, sse_cents2)."""
-        from .queries.behavior import _hw_update
-        from .queries.llm import _dlit
-
         a, b = _dlit(alpha, "power"), _dlit(beta, "power")
         lnew, bnew, enew = _hw_update(a, b, "v.x", "acc.l", "acc.b", "acc.e")
         upd = f"named_struct('x', v.x, 'l', {lnew}, 'b', {bnew}, 'e', {enew})"

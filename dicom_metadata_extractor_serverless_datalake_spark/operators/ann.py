@@ -19,14 +19,47 @@ per-vector hot path.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-_NORM = "sqrt(" + _DOT.format(a="{c}", b="{c}") + ")"
+
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two array expressions as SQL text: every product
+    in double, summed by one sequential left fold, so the value does
+    not depend on partitioning and DuckDB's ``list_reduce`` replays it
+    bit for bit. The one dot kernel of the facades, the query corpus
+    and the ANN/PQ operators."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def norm_sql(c: str) -> str:
+    """Euclidean norm of an array expression as SQL text: ``sqrt`` of
+    :func:`dot_sql`'s left fold of ``c`` with itself (the squares come
+    from ``transform``, the same products in the same order)."""
+    return (
+        f"sqrt(aggregate(transform({c}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+        "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
+    )
+
+
+def _dlit(x: float, pow_fn: str) -> str:
+    """An EXACT double literal as integer-mantissa x power-of-two
+    arithmetic (``pow_fn``: "power" in Spark SQL, "pow" in DuckDB).
+    Decimal strings are not safe cross-engine: DuckDB's string->double
+    parse lands one ulp off the correctly-rounded value for some
+    shortest-repr inputs (measured: repr(1/log2(6))), while integer
+    mantissas and powers of two are exact everywhere."""
+    if x == 0.0:
+        return "CAST(0 AS DOUBLE)"
+    m, e = math.frexp(x)
+    m2 = int(m * (1 << 53))
+    assert math.ldexp(m2, e - 53) == x
+    return f"(CAST({m2} AS DOUBLE) * {pow_fn}(CAST(2 AS DOUBLE), {e - 53}))"
 
 
 def fit_ivf(
@@ -94,7 +127,7 @@ def _nearest_centroids(
     for cid, cvec in cents:
         arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in cvec) + ")"
         c2 = sum(x * x for x in cvec)
-        dot = _DOT.format(a=vec_col, b=arr)
+        dot = dot_sql(vec_col, arr)
         dist_exprs.append(
             f"named_struct('d', -2 * ({dot}) + CAST({c2!r} AS DOUBLE), 'cid', {cid})"
         )
@@ -191,9 +224,9 @@ def ivf_search(
 
     Returns (query_id, id, cosine, rank), rank 1..top_k."""
     probes = _nearest_centroids(queries, centroids, query_vec_col, n_probe, "bucket")
-    dot = _DOT.format(a=query_vec_col, b=vec_col)
-    qn = _NORM.format(c=query_vec_col)
-    en = _NORM.format(c=vec_col)
+    dot = dot_sql(query_vec_col, vec_col)
+    qn = norm_sql(query_vec_col)
+    en = norm_sql(vec_col)
     scored = (
         F.broadcast(probes)
         .join(bucketed, "bucket")

@@ -38,14 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_NORM = (
-    "sqrt(aggregate(transform({c}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-)
+from .ann import dot_sql, norm_sql
 
 
 def _unit(vec_col: str) -> str:
-    n = _NORM.format(c=vec_col)
+    n = norm_sql(vec_col)
     return f"transform({vec_col}, x -> CAST(x AS DOUBLE) / {n})"
 
 
@@ -226,15 +223,11 @@ def pq_search(
             .drop(q_vec_col)
             .orderBy(q_id_col, "rank")
         )
-    dot = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
     exact = (
         top.join(vectors.select(id_col, "embedding"), id_col)
-        .withColumn("_d", F.expr(dot.format(a=q_vec_col, b="embedding")))
-        .withColumn("_qn", F.expr(_NORM.format(c=q_vec_col)))
-        .withColumn("_en", F.expr(_NORM.format(c="embedding")))
+        .withColumn("_d", F.expr(dot_sql(q_vec_col, "embedding")))
+        .withColumn("_qn", F.expr(norm_sql(q_vec_col)))
+        .withColumn("_en", F.expr(norm_sql("embedding")))
         .select(
             q_id_col,
             id_col,

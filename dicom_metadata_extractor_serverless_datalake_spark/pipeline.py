@@ -21,6 +21,13 @@ pipeline re-run — or a different cluster/partitioning — produces the
 identical corpus. Scale posture mirrors the corpus queries: digest
 groupBys shuffle keyed rows (never raw text), near-dedup is
 LSH-banded (no all-pairs), filters/redaction/chunking are map-side.
+
+``TextCorpus`` holds the one body of the kernels it shares with the
+corpus: q194 (dup_span_coverage), q201 (lm_score), q202
+(pack_sequences), q204 (mixture_weights) and q220
+(neardup_calibration) call its methods, and q272/q280, q281/q290 and
+q286 import the AMS, bootstrap and Chao1 kernels at the bottom of this
+module. Nothing here imports from ``queries/``.
 """
 
 from __future__ import annotations
@@ -29,8 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .operators.dedup import (
+    NUM_PERM,
     containment_pairs,
-    estimate_verify,
     h31,
     jaccard_verify,
     lsh_candidate_pairs,
@@ -670,14 +677,12 @@ class TextCorpus:
         frequencies) of this corpus's whitespace token stream — the
         self-join-size / skew readout consulted before any token-keyed
         groupBy. Default is the SKETCH-ONLY deployment path
-        (queries/mining.ams_f2_sketch, VERDICT r09 #3): one map-side
+        (:func:`ams_f2_sketch`, VERDICT r09 #3): one map-side
         8-counter aggregate, no word-keyed shuffle, returns one row
         (x0..x7, f2_est). ``audit=True`` adds the exact F2 next to the
         estimate (q272's full shape) — that side pays the per-token
         word-keyed aggregate, the cost that spills at 5M docs
         (BASELINE.md), so run it on samples, not deployments."""
-        from .queries.mining import ams_audit_tail, ams_f2_sketch, ams_sign_counters
-
         tok = self.df.select(
             F.explode(
                 F.expr(f"filter(split({self.text_col}, ' '), x -> x <> '')")
@@ -697,7 +702,7 @@ class TextCorpus:
         per ``by`` group (default: the corpus text length per source-
         less single group is rarely useful — pass the grouping column;
         ``by=None`` uses a constant group, giving one corpus-wide CI).
-        q281's construction (queries/quality.bootstrap_rep_frame): 64
+        q281's construction (:func:`bootstrap_rep_frame`): 64
         deterministic Poisson(1) replicates + a sentinel raw pass in
         ONE partial-aggregated shuffle of |groups| x 65 cells — never a
         corpus resample. ``hash_fn="fast"`` (xxhash64) is the
@@ -708,8 +713,6 @@ class TextCorpus:
         ``value_expr`` defaults to the corpus's own text column's
         length (the facade is column-generic — a corpus built with
         ``text_col="body"`` gets ``length(body)``, ADVICE r10)."""
-        from .queries.quality import bootstrap_ci_tail, bootstrap_rep_frame
-
         if value_expr is None:
             value_expr = f"length({self.text_col})"
         df = self.df
@@ -734,12 +737,10 @@ class TextCorpus:
         triptych's asymptote reading (q256 reads the frequency
         spectrum, q278 the accumulation curve, this the asymptote;
         VERDICT r10 #8). q286's construction verbatim
-        (queries/quality.chao1_frame): one word-keyed vocabulary
+        (:func:`chao1_frame`): one word-keyed vocabulary
         shuffle, then the estimator runs on the spectrum-sized frame;
         exact integer rationals floored to micros. Returns (group,
         n_tokens, vocab, f1, f2, chao1_micros, coverage_micros)."""
-        from .queries.quality import chao1_frame
-
         df, group = self.df, by
         if group is None:
             df = df.withColumn("_grp", F.lit("all"))
@@ -1147,40 +1148,300 @@ class TextCorpus:
         return self._with(self.df.join(sel, self.id_col, "semi"))
 
     def neardup_calibration(self, hash_fn: str = "portable") -> DataFrame:
-        """MinHash estimator calibration (q220's shape): for every LSH
-        candidate pair of this corpus, the signature-agreement Jaccard
-        ESTIMATE next to the EXACT shingle Jaccard, both in floored
-        micros, with the absolute error. Run this before switching
-        :meth:`dedup_near` to ``verify='estimate'`` — the cheap mode is
-        safe exactly when this readout's error is tight around your
-        threshold. Returns (d1, d2, est_micros, exact_micros,
-        abs_err_micros)."""
-        from .operators.cachetrack import tracked_persist
-
-        tok = shingle_tokens(self.df, self.id_col, self.text_col)
-        with self._caches:
-            sigs = tracked_persist(minhash_signatures(tok, self.id_col, hash_fn))
-        cands = lsh_candidate_pairs(sigs, self.id_col)
-        est = estimate_verify(cands, sigs, 0.0, self.id_col).select(
-            "d1",
-            "d2",
-            F.expr("CAST(floor(1000000.0 * jaccard) AS BIGINT)").alias(
-                "est_micros"
-            ),
+        """MinHash estimator calibration (q220): for every LSH candidate
+        pair of this corpus, the signature-agreement Jaccard ESTIMATE
+        next to the exact Jaccard of the two docs' shingle-digest sets,
+        both in floored micros, with the absolute error. Run this
+        before switching :meth:`dedup_near` to ``verify='estimate'`` —
+        the cheap mode is safe exactly when this readout's error is
+        tight around your threshold. Returns (d1, d2, est_micros,
+        exact_micros, abs_err_micros). Past the banding, every join is
+        confined to candidate pairs, and the signature and digest
+        frames are plain subtrees Spark reuses across their consumers
+        (no persist)."""
+        did = self.id_col
+        tok = shingle_tokens(self.df, did, self.text_col)
+        h = tok.select(did, F.expr(h31("s", hash_fn)).alias("hs")).distinct()
+        mh = minhash_signatures(tok, did, hash_fn)
+        pairs = lsh_candidate_pairs(mh, did)
+        sizes = h.groupBy(did).agg(F.countDistinct("hs").alias("n"))
+        shared = (
+            pairs.join(h.alias("ha"), F.col(f"ha.{did}") == F.col("d1"))
+            .join(
+                h.alias("hb"),
+                (F.col(f"hb.{did}") == F.col("d2"))
+                & (F.col("hb.hs") == F.col("ha.hs")),
+            )
+            .groupBy("d1", "d2")
+            .agg(F.countDistinct("ha.hs").alias("both_n"))
         )
-        with self._caches:
-            ex = jaccard_verify(cands, tok, 0.0, self.id_col)
-        ex = ex.select(
-            "d1",
-            "d2",
-            F.expr("CAST(floor(1000000.0 * jaccard) AS BIGINT)").alias(
-                "exact_micros"
-            ),
+        matches = " + ".join(
+            f"(CASE WHEN am{i} = bm{i} THEN 1 ELSE 0 END)" for i in range(NUM_PERM)
         )
-        return est.join(ex, ["d1", "d2"]).select(
+        a = mh.select(
+            F.col(did).alias("d1"),
+            *[F.col(f"m{i}").alias(f"am{i}") for i in range(NUM_PERM)],
+        )
+        b = mh.select(
+            F.col(did).alias("d2"),
+            *[F.col(f"m{i}").alias(f"bm{i}") for i in range(NUM_PERM)],
+        )
+        est = (
+            pairs.join(a, "d1")
+            .join(b, "d2")
+            .select("d1", "d2", F.expr(f"CAST({matches} AS BIGINT)").alias("matches"))
+        )
+        m = (
+            est.join(shared, ["d1", "d2"])
+            .join(sizes.select(F.col(did).alias("d1"), F.col("n").alias("na")), "d1")
+            .join(sizes.select(F.col(did).alias("d2"), F.col("n").alias("nb")), "d2")
+            .select(
+                "d1",
+                "d2",
+                F.expr(
+                    f"CAST(floor(1000000.0 * (CAST(matches AS DOUBLE)"
+                    f" / CAST({NUM_PERM} AS DOUBLE))) AS BIGINT)"
+                ).alias("est_micros"),
+                F.expr(
+                    "CAST(floor(1000000.0 * (CAST(both_n AS DOUBLE)"
+                    " / CAST(na + nb - both_n AS DOUBLE))) AS BIGINT)"
+                ).alias("exact_micros"),
+            )
+        )
+        return m.select(
             "d1",
             "d2",
             "est_micros",
             "exact_micros",
             F.expr("abs(est_micros - exact_micros)").alias("abs_err_micros"),
         )
+
+# ---- statistics kernels shared with the query corpus ----
+#
+# The AMS F2 sketch (q272 batch, q280 streaming, f2_moment), the
+# hash-Poisson bootstrap (q281 batch, q290 streaming, bootstrap_ci) and
+# Chao1 richness (q286, vocab_richness) live here; the queries and
+# their oracles import them from this module.
+
+_AMS_D = 8
+
+
+def ams_sign_counters(tok: DataFrame, hash_fn: str = "portable") -> DataFrame:
+    """The AMS sketch side alone: 8 sign-sum counters x0..x7 built in
+    ONE map-side conditional-sum aggregate over the token frame ``tok``
+    (one column ``w``) — 8 BIGINTs per partition cross the wire, no
+    per-word shuffle. ``hash_fn="portable"`` draws signs from the
+    md5-derived h31 (DuckDB-replayable, q272's oracle contract);
+    ``"fast"`` uses JVM-native xxhash64 — the production hash, measured
+    6.3x cheaper at 500k docs (BASELINE.md)."""
+    sign_bit = [F.expr(h31(f"'ams{j}-' || w", hash_fn) + " % 2") for j in range(_AMS_D)]
+    return tok.agg(
+        *[
+            (F.sum(F.lit(1) - F.lit(2) * sign_bit[j])).cast("long").alias(f"x{j}")
+            for j in range(_AMS_D)
+        ]
+    )
+
+
+def ams_f2_sketch(tok: DataFrame, hash_fn: str = "fast") -> DataFrame:
+    """SKETCH-ONLY AMS F2 (VERDICT r09 #3) — the deployment entry point.
+
+    q272/q280 always pay an exact-F2 audit whose word-keyed shuffle
+    (~450M tokens at 5M docs) dominates their wall and spills at scale;
+    at deployment scale one runs the sketch WITHOUT the audit, and this
+    is that code path: one map-side 8-counter aggregate, one 1-row
+    median-of-squares assembly — the whole job is a single scan with no
+    exchange but the final single-row gather. Returns one row
+    (x0..x7, f2_est DOUBLE). The estimate is the median of the 8
+    squared counters held in 2x integer space (sum of the 4th and 5th
+    order statistics) exactly as q272 computes it, so on identical
+    input + ``hash_fn="portable"`` the columns equal q272's sketch
+    columns value-for-value (pinned in tests/test_operators.py)."""
+    sk = ams_sign_counters(tok, hash_fn)
+    return _ams_with_estimate(sk).select(
+        *[F.col(f"x{j}") for j in range(_AMS_D)], "f2_est"
+    )
+
+
+def _ams_with_estimate(sk: DataFrame) -> DataFrame:
+    """THE median-of-squares estimator (sum of the 4th and 5th order
+    statistics in 2x integer space, one division) — the single assembly
+    ams_f2_sketch AND ams_audit_tail ride, so the sketch-only facade
+    and the audited q272/q280 cannot desynchronize."""
+    sq = ", ".join(
+        f"CAST(x{j} AS DECIMAL(38,0)) * CAST(x{j} AS DECIMAL(38,0))"
+        for j in range(_AMS_D)
+    )
+    return sk.withColumn("sq", F.expr(f"array_sort(array({sq}))")).withColumn(
+        "f2_est",
+        F.expr("CAST(element_at(sq, 4) + element_at(sq, 5) AS DOUBLE)") / F.lit(2.0),
+    )
+
+
+def ams_audit_tail(sk: DataFrame, tok: DataFrame) -> DataFrame:
+    """Shared AMS assembly (q272 batch, q280 streaming, and the bench
+    fast-hash variant all use THIS function so the "q272 oracle
+    verbatim" contract cannot desynchronize): exact F2 from the token
+    frame ``tok`` (one column ``w``) + the median-of-squares estimate
+    from the 8-counter frame ``sk`` (columns x0..x7)."""
+    exact = (
+        tok.groupBy("w")
+        .agg(F.count("*").alias("c"))
+        .agg(
+            F.sum(F.col("c").cast("decimal(38,0)") * F.col("c"))
+            .cast("decimal(38,0)")
+            .alias("f2")
+        )
+    )
+    return _ams_with_estimate(sk.crossJoin(F.broadcast(exact))).select(
+        *[F.col(f"x{j}") for j in range(_AMS_D)],
+        F.col("f2").cast("double").alias("f2_exact"),
+        "f2_est",
+    )
+
+
+_BOOT_R = 64
+# floor(CDF_Poisson(1)(k) * (2^31 - 1)) for k = 0..7; h < _BOOT_T[k]
+# counts thresholds, h >= all eight -> k = 8 (the cap)
+_BOOT_T = [
+    790015083,
+    1580030167,
+    1975037709,
+    2106706890,
+    2139624185,
+    2146207644,
+    2147304887,
+    2147461637,
+]
+
+
+def _boot_k_sql(h_expr: str) -> str:
+    """Poisson(1) weight from a 31-bit hash: engine-shared CASE text."""
+    arms = " ".join(
+        f"WHEN {h_expr} < {t} THEN {k}" for k, t in enumerate(_BOOT_T)
+    )
+    return f"CASE {arms} ELSE 8 END"
+
+
+def bootstrap_rep_frame(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    group_col: str = "source",
+    value_expr: str = "n_chars",
+    hash_fn: str = "portable",
+) -> DataFrame:
+    """(group, r, sk, s1) per group and replicate: sk = sum of Poisson
+    weights, s1 = weighted value sum. r = -1 is the raw pass (k = 1).
+    Shared by q281 (batch), q290 (streaming groupBy state — both sums
+    are monotone under row arrival, so drained maxima ARE the final
+    cells) and the ``TextCorpus.bootstrap_ci`` facade. ``hash_fn``:
+    "portable" draws weights from the md5-derived h31 (the oracle
+    contract); "fast" from xxhash64 — the production hash (the
+    portable md5 is the measured wall at 5M docs, BASELINE.md)."""
+    h = h31(f"concat('boot', CAST(r AS STRING), '-', CAST({id_col} AS STRING))", hash_fn)
+    k = f"CASE WHEN r = -1 THEN 1 ELSE {_boot_k_sql(f'({h})')} END"
+
+    # 65 digests per doc are pure map-side CPU; a scan-starved batch
+    # input would run them on 1-3 cores (no-op for q290's streaming
+    # frame and for any already-spread scan)
+    docs = spread_input(docs, key=id_col)
+    return (
+        docs.select(
+            F.col(id_col),
+            F.col(group_col).alias("source"),
+            F.expr(f"CAST({value_expr} AS BIGINT)").alias("_v"),
+        )
+        .withColumn("r", F.explode(F.expr(f"sequence(-1, {_BOOT_R - 1})")))
+        .select("source", "r", F.expr(f"CAST({k} AS BIGINT)").alias("k"), "_v")
+        .groupBy("source", "r")
+        .agg(
+            F.sum("k").alias("sk"),
+            F.sum(F.col("k") * F.col("_v")).alias("s1"),
+        )
+    )
+
+
+def bootstrap_ci_tail(per_rep: DataFrame) -> DataFrame:
+    """Assemble (source, n_docs, point_micros, n_reps, ci_lo_micros,
+    ci_hi_micros) from the per-replicate sums — q281's tail, reused
+    verbatim by q290 so the streaming twin rides q281's oracle."""
+    means = per_rep.filter("r >= 0 AND sk > 0").select(
+        "source",
+        F.expr("CAST(floor(1000000.0 * CAST(s1 AS DOUBLE) / CAST(sk AS DOUBLE)) AS BIGINT)").alias(
+            "mean_micros"
+        ),
+    )
+    ci = means.groupBy("source").agg(
+        F.expr("array_sort(collect_list(mean_micros))").alias("ms")
+    )
+    raw = per_rep.filter("r = -1").select(
+        "source",
+        F.col("sk").alias("n_docs"),
+        F.expr("CAST(floor(1000000.0 * CAST(s1 AS DOUBLE) / CAST(sk AS DOUBLE)) AS BIGINT)").alias(
+            "point_micros"
+        ),
+    )
+    return (
+        raw.join(ci, "source")
+        .select(
+            "source",
+            "n_docs",
+            "point_micros",
+            F.expr("CAST(size(ms) AS BIGINT)").alias("n_reps"),
+            F.expr(
+                "element_at(ms, greatest(1, CAST(floor(0.025 * size(ms)) AS INT) + 1))"
+            ).alias("ci_lo_micros"),
+            F.expr(
+                "element_at(ms, least(size(ms), CAST(ceil(0.975 * size(ms)) AS INT)))"
+            ).alias("ci_hi_micros"),
+        )
+        .orderBy("source")
+    )
+
+
+def chao1_frame(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
+    """q286's construction over any (group, text) columns — shared by
+    the registered query and ``TextCorpus.vocab_richness`` (VERDICT
+    r10 #8) so the facade cannot desynchronize from its oracle. The
+    word-keyed shuffle's MAP side (explode + partial counts) is the
+    expensive half, so a scan-starved input is re-spread first."""
+
+    # Spread key: a row-unique SPLIT-STABLE surrogate, not text_col —
+    # chao1's contract has no id column, and hashing the text would
+    # send every copy of a duplicated text (common pre-dedup) plus all
+    # nulls to ONE partition, partially re-creating the starvation the
+    # spread exists to fix (ADVICE r11).
+    df = spread_input(df, key=F.monotonically_increasing_id())
+    tok = df.select(
+        group_col,
+        F.explode(F.expr(f"filter(split({text_col}, ' '), x -> x <> '')")).alias(
+            "w"
+        ),
+    )
+    wc = tok.groupBy(group_col, "w").agg(F.count("*").cast("long").alias("c"))
+    return (
+        wc.groupBy(group_col)
+        .agg(
+            F.sum("c").cast("long").alias("n_tokens"),
+            F.count("*").cast("long").alias("vocab"),
+            F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long").alias("f1"),
+            F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long").alias("f2"),
+        )
+        .select(
+            group_col,
+            "n_tokens",
+            "vocab",
+            "f1",
+            "f2",
+            F.expr(
+                "CAST(1000000 * vocab"
+                " + CAST(1000000 AS DECIMAL(38,0)) * f1 * (f1 - 1)"
+                "   div (2 * (f2 + 1)) AS BIGINT)"
+            ).alias("chao1_micros"),
+            F.expr(
+                "CAST(1000000 - CAST(1000000 AS DECIMAL(38,0)) * f1 div n_tokens"
+                " AS BIGINT)"
+            ).alias("coverage_micros"),
+        )
+        .orderBy(group_col)
+    )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..eventlog import EventLog
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
 from .base import dsum_expr, query, sql_dsum, sql_query, t
@@ -152,29 +153,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
     category="analytics",
 )
 def q88(spark: SparkSession, sf: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = t(spark, sf, "events").select(
-        "user_id", "event_id", "ts", F.unix_micros("ts").alias("us")
-    )
-    gap = F.col("us") - F.lag("us").over(w)
-    d = e.withColumn(
-        "new_sess", F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1).otherwise(0)
-    )
-    sw = Window.partitionBy("user_id").orderBy("us", "event_id")
-    s = d.withColumn("sess_id", F.sum("new_sess").over(sw))
-    per_sess = s.groupBy("user_id", "sess_id").agg(
-        F.count("*").alias("n_events"),
-        ((F.max("us") - F.min("us")) / F.lit(1000000.0)).alias("dur_s"),
-    )
-    return (
-        per_sess.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-            F.max("dur_s").alias("max_dur_s"),
-        )
-        .orderBy("user_id")
-    )
+    return EventLog(t(spark, sf, "events")).session_stats(gap_minutes=_SESSION_GAP_US // 60_000_000)
 
 
 # --------------------------------------------------------------------------
@@ -477,14 +456,13 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
         (F.expr("unix_micros(ts) div 1000000") - F.lit(_X_EPOCH)).alias("x"),
         F.col("value").alias("y"),
     )
-    x, y = F.col("x"), F.col("y")
     comp = base.groupBy("event_type").agg(
         F.count("*").cast("double").alias("n"),
-        dsum_expr(x, 0).alias("sx"),
-        dsum_expr(y, 4).alias("sy"),
-        dsum_expr(x * x.cast("double"), 0).alias("sxx"),
-        dsum_expr(x * y, 4).alias("sxy"),
-        dsum_expr(y * y, 4).alias("syy"),
+        dsum_expr("x", 0).alias("sx"),
+        dsum_expr("y", 4).alias("sy"),
+        dsum_expr("x * CAST(x AS DOUBLE)", 0).alias("sxx"),
+        dsum_expr("x * y", 4).alias("sxy"),
+        dsum_expr("y * y", 4).alias("syy"),
     )
     return comp.selectExpr(
         "event_type",

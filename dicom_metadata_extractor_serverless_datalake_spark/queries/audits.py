@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
-from ..operators.dedup import NUM_PERM, h31, minhash_signatures, shingle_tokens
+from ..operators.dedup import NUM_PERM, h31, shingle_tokens
+from ..pipeline import TextCorpus
 from .base import query, t
 from .llm import _minhash_band_pairs, _minhash_pairs_cte, duck_h31
 
@@ -103,61 +104,7 @@ def _q220_oracle() -> str:
     doc="signature-agreement estimate vs exact Jaccard on LSH candidates",
 )
 def q220(spark: SparkSession, sf: str) -> DataFrame:
-    docs = t(spark, sf, "documents")
-    h = _shingle_hashes(docs)
-    mh = minhash_signatures(shingle_tokens(docs))
-    pairs = _minhash_band_pairs(spark, sf)
-    sizes = h.groupBy("doc_id").agg(F.countDistinct("hs").alias("n"))
-    shared = (
-        pairs.join(h.alias("ha"), F.col("ha.doc_id") == F.col("d1"))
-        .join(
-            h.alias("hb"),
-            (F.col("hb.doc_id") == F.col("d2"))
-            & (F.col("hb.hs") == F.col("ha.hs")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.countDistinct("ha.hs").alias("both_n"))
-    )
-    matches = " + ".join(
-        f"(CASE WHEN am{i} = bm{i} THEN 1 ELSE 0 END)" for i in range(NUM_PERM)
-    )
-    a = mh.select(
-        F.col("doc_id").alias("d1"),
-        *[F.col(f"m{i}").alias(f"am{i}") for i in range(NUM_PERM)],
-    )
-    b = mh.select(
-        F.col("doc_id").alias("d2"),
-        *[F.col(f"m{i}").alias(f"bm{i}") for i in range(NUM_PERM)],
-    )
-    est = (
-        pairs.join(a, "d1")
-        .join(b, "d2")
-        .select("d1", "d2", F.expr(f"CAST({matches} AS BIGINT)").alias("matches"))
-    )
-    m = (
-        est.join(shared, ["d1", "d2"])
-        .join(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("na")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("nb")), "d2")
-        .select(
-            "d1",
-            "d2",
-            F.expr(
-                f"CAST(floor(1000000.0 * (CAST(matches AS DOUBLE)"
-                f" / CAST({NUM_PERM} AS DOUBLE))) AS BIGINT)"
-            ).alias("est_micros"),
-            F.expr(
-                "CAST(floor(1000000.0 * (CAST(both_n AS DOUBLE)"
-                " / CAST(na + nb - both_n AS DOUBLE))) AS BIGINT)"
-            ).alias("exact_micros"),
-        )
-    )
-    return m.select(
-        "d1",
-        "d2",
-        "est_micros",
-        "exact_micros",
-        F.expr("abs(est_micros - exact_micros)").alias("abs_err_micros"),
-    ).orderBy("d1", "d2")
+    return TextCorpus(t(spark, sf, "documents")).neardup_calibration().orderBy("d1", "d2")
 
 
 # --------------------------------------------------------------------------

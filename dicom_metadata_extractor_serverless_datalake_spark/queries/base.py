@@ -179,59 +179,45 @@ def _limb_total_sql(dec: dict[str, str]) -> str:
     return dec["lo"]
 
 
+def _sql_text(col: object, fn: str) -> str:
+    """Guard of the exact-sum family's one input contract: ``col`` is a
+    TRUSTED SQL expression string (a bare column name is one). It is
+    pasted into the aggregate's SQL text unquoted, so it must come from
+    code, never from user input. Any other type raises TypeError."""
+    if not isinstance(col, str):
+        raise TypeError(
+            f"{fn} takes a SQL expression string, not {type(col).__name__}"
+        )
+    return col
+
+
 def _scaled_sum_sql(e: str, scale: int, max_abs: float | None) -> str:
-    """:func:`_exact_scaled_sum` rendered as ONE SQL string over the SQL
-    expression ``e`` — the identical tree (same literals, same casts,
-    same limb arithmetic), built with a single parser call instead of a
-    py4j round-trip per operator node. Construction cost is driver-side
-    and paid on EVERY query build (the bench reconstructs each query per
-    pass): q01's seven dsum/davg aggregates measured 152 ms per build on
-    the F.*-operator path; the parsed form is ~4x cheaper. Exactness is
-    pinned by tests/test_exact_sums.py's string-vs-Column equivalence
-    test and the oracle sweep."""
+    """Exact SUM(round(``e`` * 10^scale)) as decimal(38,0) via long
+    limbs, rendered as ONE SQL string over the SQL expression ``e`` and
+    built with a single parser call. Construction cost is driver-side
+    and paid on EVERY query build (the bench reconstructs each query
+    per pass): q01's seven dsum/davg aggregates measured 152 ms per
+    build as a tree of Column operators (one py4j round-trip per node);
+    the parsed form is ~4x cheaper. Exactness is pinned by
+    tests/test_exact_sums.py and the oracle sweep."""
     return _limb_total_sql(
         {k: f"CAST({v} AS DECIMAL(38,0))" for k, v in _limb_sums_sql(e, scale, max_abs).items()}
     )
 
 
-def _exact_scaled_sum(c: F.Column, scale: int, max_abs: float | None = None) -> F.Column:
-    """Exact SUM(round(c * 10^scale)) as decimal(38,0) via long limbs."""
-    half = F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    s = (c.cast("double") * F.lit(float(10**scale)) + half).cast("long")
-    n = _n_limbs(max_abs, scale)
-    if n == 1:
-        return F.sum(s).cast("decimal(38,0)")
-    lo = F.sum(s.bitwiseAND(F.lit(_LIMB_LO - 1)))
-    if n == 2:
-        # s = (s >> 20) * 2^20 + (s & mask) holds for negatives too
-        # (arithmetic shift = floor division, mask = mod 2^20)
-        hi = F.sum(F.shiftright(s, _LIMB_BITS))
-        return hi.cast("decimal(38,0)") * F.lit(_LIMB_LO) + lo.cast("decimal(38,0)")
-    hi = F.sum(F.shiftright(s, 2 * _LIMB_BITS))
-    mid = F.sum(F.shiftright(s, _LIMB_BITS).bitwiseAND(F.lit(_LIMB_LO - 1)))
-    return (
-        hi.cast("decimal(38,0)") * F.lit(_LIMB_HI)
-        + mid.cast("decimal(38,0)") * F.lit(_LIMB_LO)
-        + lo.cast("decimal(38,0)")
+def dsum_expr(col: str, scale: int = 2, max_abs: float | None = None) -> F.Column:
+    """Unaliased exact fixed-point sum as double, for use inside larger
+    expressions (variance formulas, scalar subqueries). ``col`` is a
+    trusted SQL expression string (see :func:`_sql_text`), parsed in a
+    single F.expr call."""
+    col = _sql_text(col, "dsum_expr")
+    return F.expr(
+        f"CAST(({_scaled_sum_sql(col, scale, max_abs)} / {10**scale}) AS DOUBLE)"
     )
 
 
-def dsum_expr(
-    col: str | F.Column, scale: int = 2, max_abs: float | None = None
-) -> F.Column:
-    """Unaliased exact fixed-point sum as double, for use inside larger
-    expressions (variance formulas, scalar subqueries). A ``str`` input
-    is an SQL EXPRESSION (a bare column name is one), parsed in a single
-    F.expr call — see :func:`_scaled_sum_sql`."""
-    if isinstance(col, str):
-        return F.expr(
-            f"CAST(({_scaled_sum_sql(col, scale, max_abs)} / {10**scale}) AS DOUBLE)"
-        )
-    return (_exact_scaled_sum(col, scale, max_abs) / F.lit(10**scale)).cast("double")
-
-
 def dsum_limbs(
-    col: str | F.Column, prefix: str, scale: int = 2, max_abs: float | None = None
+    col: str, prefix: str, scale: int = 2, max_abs: float | None = None
 ) -> list[F.Column]:
     """First level of a two-level exact sum: per-group limb partial sums
     as plain longs (``{prefix}_hi/_mid/_lo``). Because integer limb sums
@@ -240,26 +226,13 @@ def dsum_limbs(
     over the underlying rows — this is what lets an aggregation be
     pushed below a join (eager aggregation) without losing exactness.
     The overflow envelope is unchanged (the merged sum covers the same
-    row set, ~8.8e12 rows/group; see module note)."""
-    if isinstance(col, str):
-        # SQL-string fast path (identical tree — see _scaled_sum_sql)
-        return [
-            F.expr(f"{v} AS {prefix}_{k}")
-            for k, v in _limb_sums_sql(col, scale, max_abs).items()
-        ]
-    n = _n_limbs(max_abs, scale)
-    c = col
-    half = F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    s = (c.cast("double") * F.lit(float(10**scale)) + half).cast("long")
-    out = [F.sum(s.bitwiseAND(F.lit(_LIMB_LO - 1))).alias(f"{prefix}_lo")]
-    if n == 1:
-        return [F.sum(s).alias(f"{prefix}_lo")]
-    if n == 2:
-        return [F.sum(F.shiftright(s, _LIMB_BITS)).alias(f"{prefix}_hi"), *out]
+    row set, ~8.8e12 rows/group; see module note). ``col`` and
+    ``prefix`` are trusted SQL text (see :func:`_sql_text`)."""
+    col = _sql_text(col, "dsum_limbs")
+    prefix = _sql_text(prefix, "dsum_limbs")
     return [
-        F.sum(F.shiftright(s, 2 * _LIMB_BITS)).alias(f"{prefix}_hi"),
-        F.sum(F.shiftright(s, _LIMB_BITS).bitwiseAND(F.lit(_LIMB_LO - 1))).alias(f"{prefix}_mid"),
-        *out,
+        F.expr(f"{v} AS {prefix}_{k}")
+        for k, v in _limb_sums_sql(col, scale, max_abs).items()
     ]
 
 
@@ -279,7 +252,9 @@ def dsum_merge(
     call would otherwise silently drop the high limbs. With ``df`` the
     mismatch raises instead; the per-outer-group overflow envelope is
     the same as the single-level form since the merged sum covers the
-    same row set."""
+    same row set. ``prefix`` is trusted SQL text (see
+    :func:`_sql_text`)."""
+    prefix = _sql_text(prefix, "dsum_merge")
     n = _n_limbs(max_abs, scale)
     if df is not None:
         cols = set(df.columns)
@@ -300,28 +275,26 @@ def dsum_merge(
     return F.expr(f"CAST(({total} / {10**scale}) AS DOUBLE)").alias(alias)
 
 
-def dsum(
-    col: str | F.Column, alias: str, scale: int = 2, max_abs: float | None = None
-) -> F.Column:
+def dsum(col: str, alias: str, scale: int = 2, max_abs: float | None = None) -> F.Column:
     """Exact fixed-point sum surfaced as double: deterministic under any
     partitioning/order, unlike a native double sum (see module note on
     the long-limb decomposition). The oracle side sums at decimal(28)
     and still hash-matches because both sides are exact. ``max_abs``
     (a per-row |value| bound known from the schema/domain) lets the
     decomposition drop to 2 or 1 limbs — same exactness, same
-    ~8.8e12 rows/group envelope, fewer aggregate buffers."""
-    return dsum_expr(col, scale, max_abs).alias(alias)
+    ~8.8e12 rows/group envelope, fewer aggregate buffers. ``col`` is a
+    trusted SQL expression string (see :func:`_sql_text`)."""
+    return dsum_expr(_sql_text(col, "dsum"), scale, max_abs).alias(alias)
 
 
-def davg(
-    col: str | F.Column, alias: str, scale: int = 2, max_abs: float | None = None
-) -> F.Column:
-    if isinstance(col, str):
-        return F.expr(
-            f"(CAST(({_scaled_sum_sql(col, scale, max_abs)} / {10**scale}) AS DOUBLE)"
-            f" / COUNT(({col})))"
-        ).alias(alias)
-    return (dsum_expr(col, scale, max_abs) / F.count(col)).alias(alias)
+def davg(col: str, alias: str, scale: int = 2, max_abs: float | None = None) -> F.Column:
+    """Exact fixed-point mean: :func:`dsum` over COUNT(``col``). ``col``
+    is a trusted SQL expression string (see :func:`_sql_text`)."""
+    col = _sql_text(col, "davg")
+    return F.expr(
+        f"(CAST(({_scaled_sum_sql(col, scale, max_abs)} / {10**scale}) AS DOUBLE)"
+        f" / COUNT(({col})))"
+    ).alias(alias)
 
 
 def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..eventlog import EventLog, _hw_update
+from ..operators.ann import _dlit
 from ..operators.cachetrack import tracked_persist
 from .base import query, t
 
@@ -81,30 +83,7 @@ from .base import query, t
     doc="per-user Markov transition matrix, row-normalized in micros",
 )
 def q207(spark: SparkSession, sf: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = t(spark, sf, "events").select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    )
-    c = (
-        s.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count("*").alias("n"))
-    )
-    r = c.groupBy("from_type").agg(F.sum("n").alias("row_n"))
-    return (
-        c.join(F.broadcast(r), "from_type")
-        .select(
-            "from_type",
-            "to_type",
-            "n",
-            F.expr(
-                "CAST(floor(1000000.0 * (CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE)))"
-                " AS BIGINT)"
-            ).alias("p_micros"),
-        )
-        .orderBy("from_type", "to_type")
-    )
+    return EventLog(t(spark, sf, "events")).transitions().orderBy("from_type", "to_type")
 
 
 # --------------------------------------------------------------------------
@@ -155,36 +134,7 @@ def q207(spark: SparkSession, sf: str) -> DataFrame:
     doc="last/first-touch purchase attribution via IGNORE NULLS windows",
 )
 def q208(spark: SparkSession, sf: str) -> DataFrame:
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touch = F.expr("CASE WHEN event_type <> 'purchase' THEN event_type END")
-    s = t(spark, sf, "events").select(
-        "event_type",
-        F.last(touch, ignorenulls=True).over(w).alias("last_ch"),
-        F.first(touch, ignorenulls=True).over(w).alias("first_ch"),
-    )
-    p = s.filter(F.col("event_type") == "purchase").select(
-        F.coalesce("last_ch", F.lit("(none)")).alias("lc"),
-        F.coalesce("first_ch", F.lit("(none)")).alias("fc"),
-    )
-    l = p.groupBy(F.col("lc").alias("channel")).agg(
-        F.count("*").alias("last_touch")
-    )
-    f = p.groupBy(F.col("fc").alias("channel")).agg(
-        F.count("*").alias("first_touch")
-    )
-    return (
-        l.join(f, "channel", "full_outer")
-        .select(
-            "channel",
-            F.coalesce("last_touch", F.lit(0)).alias("last_touch_purchases"),
-            F.coalesce("first_touch", F.lit(0)).alias("first_touch_purchases"),
-        )
-        .orderBy("channel")
-    )
+    return EventLog(t(spark, sf, "events")).attribution(conversion="purchase").orderBy("channel")
 
 
 # --------------------------------------------------------------------------
@@ -252,49 +202,7 @@ _KM_TERM = "(CAST(1 AS DOUBLE) - CAST(x.d AS DOUBLE) / CAST(x.risk AS DOUBLE))"
     doc="Kaplan-Meier survival over user lifetimes, ordered-fold exact",
 )
 def q209(spark: SparkSession, sf: str) -> DataFrame:
-    ev = t(spark, sf, "events")
-    mx = ev.agg(F.expr("CAST(max(ts) AS DATE)").alias("mxd"))
-    u = ev.groupBy("user_id").agg(
-        F.expr("CAST(min(ts) AS DATE)").alias("fd"),
-        F.expr("CAST(max(ts) AS DATE)").alias("ld"),
-    )
-    lt = u.crossJoin(F.broadcast(mx)).select(
-        F.expr("datediff(ld, fd)").alias("dur"),
-        F.expr("CASE WHEN ld > mxd - 3 THEN 0 ELSE 1 END").alias("ev"),
-    )
-    vd = lt.groupBy("dur").agg(
-        F.sum("ev").alias("d"), F.count("*").alias("c")
-    )
-    n_tot = vd.agg(F.sum("c").alias("n_tot"))
-    w = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    cw = (
-        vd.crossJoin(F.broadcast(n_tot))
-        .select(
-            "dur",
-            "d",
-            "c",
-            (
-                F.col("n_tot") - F.coalesce(F.sum("c").over(w), F.lit(0))
-            ).alias("risk"),
-        )
-    )
-    a = cw.agg(
-        F.sort_array(F.collect_list(F.struct("dur", "d", "c", "risk"))).alias("arr")
-    )
-    return (
-        a.select(F.posexplode("arr").alias("pos", "x"), F.col("arr"))
-        .select(
-            F.col("x.dur").alias("dur"),
-            F.col("x.risk").alias("n_risk"),
-            F.col("x.d").alias("d_events"),
-            (F.col("x.c") - F.col("x.d")).alias("c_censored"),
-            F.expr(
-                f"CAST(floor(1000000.0 * aggregate(slice(arr, 1, pos + 1), "
-                f"CAST(1 AS DOUBLE), (acc, x) -> acc * {_KM_TERM})) AS BIGINT)"
-            ).alias("surv_micros"),
-        )
-        .orderBy("dur")
-    )
+    return EventLog(t(spark, sf, "events")).survival(censor_days=3).orderBy("dur")
 
 
 # --------------------------------------------------------------------------
@@ -404,22 +312,6 @@ def q210(spark: SparkSession, sf: str) -> DataFrame:
 _HW_CENTS = "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT)"
 
 
-def _hw_update(alpha_lit: str, beta_lit: str, x: str, l: str, b: str, e: str):
-    """The shared Holt update expressions over a previous state
-    (``l``/``b``/``e``) and a new observation ``x`` — returned as
-    (lnew, bnew, enew) strings built from the IDENTICAL IEEE tree on
-    both engines. bnew re-derives lnew inline; with no accumulator
-    aliasing in sight both engines evaluate the same value tree."""
-    pred = f"({l} + {b})"
-    lnew = f"({alpha_lit} * {x} + (CAST(1 AS DOUBLE) - {alpha_lit}) * {pred})"
-    bnew = (
-        f"({beta_lit} * ({lnew} - {l})"
-        f" + (CAST(1 AS DOUBLE) - {beta_lit}) * {b})"
-    )
-    enew = f"({e} + ({x} - {pred}) * ({x} - {pred}))"
-    return lnew, bnew, enew
-
-
 def _q212_oracle() -> str:
     # The natural DuckDB form — list_reduce with a struct accumulator —
     # is NOT usable: DuckDB 1.0.0 reuses the accumulator buffer from
@@ -430,8 +322,6 @@ def _q212_oracle() -> str:
     # accumulators — q182/q204/q209 — are immune). The oracle therefore
     # runs the recursion as a recursive CTE over plain scalar columns,
     # one row per (event_type, step).
-    from .llm import _dlit
-
     a, b = _dlit(0.2, "pow"), _dlit(0.1, "pow")
     lnew, bnew, enew = _hw_update(
         a, b, "CAST(i.c AS DOUBLE)", "f.l", "f.b", "f.e"
@@ -475,50 +365,7 @@ def _q212_oracle() -> str:
     doc="Holt level+trend smoothing per event type, ordered-fold exact",
 )
 def q212(spark: SparkSession, sf: str) -> DataFrame:
-    from .llm import _dlit
-
-    a, b = _dlit(0.2, "power"), _dlit(0.1, "power")
-    lnew, bnew, enew = _hw_update(a, b, "v.x", "acc.l", "acc.b", "acc.e")
-    upd = f"named_struct('x', v.x, 'l', {lnew}, 'b', {bnew}, 'e', {enew})"
-    daily = (
-        t(spark, sf, "events")
-        .groupBy("event_type", F.expr("CAST(ts AS DATE)").alias("day"))
-        .agg(F.expr(_HW_CENTS).alias("c"))
-    )
-    arr = daily.groupBy("event_type").agg(
-        F.count("*").alias("n_days"),
-        F.expr(
-            "sort_array(collect_list(struct(day, "
-            "CAST(c AS DOUBLE) AS x, CAST(c AS DOUBLE) AS l, "
-            "CAST(0 AS DOUBLE) AS b, CAST(0 AS DOUBLE) AS e)))"
-        ).alias("xs0"),
-    )
-    # strip the day sort key so the fold elements match the oracle's
-    # (x, l, b, e) shape exactly
-    fit = arr.select(
-        "event_type",
-        "n_days",
-        F.expr(
-            "transform(xs0, s -> named_struct('x', s.x, 'l', s.l, 'b', s.b, 'e', s.e))"
-        ).alias("xs"),
-    ).select(
-        "event_type",
-        "n_days",
-        F.expr(
-            f"aggregate(slice(xs, 2, size(xs) - 1), element_at(xs, 1), "
-            f"(acc, v) -> {upd})"
-        ).alias("f"),
-    )
-    return fit.select(
-        "event_type",
-        F.col("n_days").cast("bigint").alias("n_days"),
-        F.expr("CAST(floor(f.l) AS BIGINT)").alias("level_cents"),
-        F.expr("CAST(floor(1000.0 * f.b) AS BIGINT)").alias("trend_milli"),
-        F.expr(
-            "CAST(floor(f.l + CAST(7 AS DOUBLE) * f.b) AS BIGINT)"
-        ).alias("forecast7_cents"),
-        F.expr("CAST(floor(f.e) AS BIGINT)").alias("sse_cents2"),
-    ).orderBy("event_type")
+    return EventLog(t(spark, sf, "events")).holt_trend(alpha=0.2, beta=0.1, horizon=7).orderBy("event_type")
 
 
 # --------------------------------------------------------------------------
@@ -564,32 +411,7 @@ def q212(spark: SparkSession, sf: str) -> DataFrame:
     doc="ISO-weekday seasonal index per event type, cross-multiplied exact",
 )
 def q213(spark: SparkSession, sf: str) -> DataFrame:
-    daily = (
-        t(spark, sf, "events")
-        .groupBy("event_type", F.expr("CAST(ts AS DATE)").alias("day"))
-        .agg(F.expr(_HW_CENTS).alias("c"))
-    )
-    d = daily.groupBy("event_type", F.expr("weekday(day) + 1").alias("dow")).agg(
-        F.count("*").alias("n_dow"), F.sum("c").alias("s_dow")
-    )
-    o = daily.groupBy("event_type").agg(
-        F.count("*").alias("n_all"), F.sum("c").alias("s_all")
-    )
-    return (
-        d.join(F.broadcast(o), "event_type")
-        .select(
-            "event_type",
-            F.col("dow").cast("bigint").alias("dow"),
-            F.col("n_dow").cast("bigint").alias("n_days"),
-            F.expr(
-                "CASE WHEN s_all <> 0 THEN "
-                "CAST(floor(1000000.0 * (CAST(s_dow * n_all AS DOUBLE)"
-                " / CAST(n_dow * s_all AS DOUBLE))) AS BIGINT) "
-                "ELSE CAST(NULL AS BIGINT) END"
-            ).alias("idx_micros"),
-        )
-        .orderBy("event_type", "dow")
-    )
+    return EventLog(t(spark, sf, "events")).seasonality().orderBy("event_type", "dow")
 
 
 # --------------------------------------------------------------------------

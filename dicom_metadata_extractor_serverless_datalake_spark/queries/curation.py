@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ann import dot_sql, norm_sql
 from ..operators.dedup import (
     MERSENNE_P,
     NUM_PERM,
@@ -371,14 +372,7 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
     b = assign.select(
         F.col("cid"), F.col("vec_id").alias("v2"), F.col("embedding").alias("embedding")
     )
-    cos = (
-        "aggregate(zip_with(qe, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v) / "
-        "(sqrt(aggregate(transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)) * "
-        "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)))"
-    )
+    cos = f"{dot_sql('qe', 'embedding')} / ({norm_sql('qe')} * {norm_sql('embedding')})"
     dup = (
         a.join(b, ["cid"])
         .filter(F.col("v1") < F.col("v2"))

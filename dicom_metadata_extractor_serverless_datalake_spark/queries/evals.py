@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
+from ..vectors import EmbeddingSet
 from .base import query, t
 
 # --------------------------------------------------------------------------
@@ -87,43 +88,8 @@ _MAT_D = 32  # head dims retained (of 64)
     doc="Matryoshka head-energy share per label (cosine fidelity of truncation)",
 )
 def q216(spark: SparkSession, sf: str) -> DataFrame:
-    # Spark aggregate() seeds with 0.0; 0.0 + x == x exactly, so the
-    # fold sequence matches DuckDB's seedless list_reduce
-    sq = "(a, b) -> a + b"
-    v = t(spark, sf, "embeddings").select(
-        "label",
-        F.expr(
-            f"aggregate(transform(slice(embedding, 1, {_MAT_D}), "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            f"CAST(0 AS DOUBLE), {sq})"
-        ).alias("eh"),
-        F.expr(
-            "aggregate(transform(embedding, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            f"CAST(0 AS DOUBLE), {sq})"
-        ).alias("ef"),
-    )
-    m = v.filter(F.col("ef") > 0).select(
-        "label",
-        F.expr("CAST(floor(1000000.0 * (eh / ef)) AS BIGINT)").alias("share"),
-    )
-    return (
-        m.groupBy("label")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.sum("share").alias("_s"),
-            F.min("share").alias("min_share_micros"),
-            F.max("share").alias("max_share_micros"),
-        )
-        .select(
-            "label",
-            "n_vectors",
-            F.expr("_s div n_vectors").alias("avg_share_micros"),
-            "min_share_micros",
-            "max_share_micros",
-        )
-        .orderBy("label")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"), label_col="label")
+    return emb.truncation_audit(head_dims=_MAT_D).orderBy("label")
 
 
 # --------------------------------------------------------------------------

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
-from .base import _exact_scaled_sum, query, t
+from .base import _scaled_sum_sql, query, t
 
 # --------------------------------------------------------------------------
 # q226 — Welch two-sample t-test: high-priority orders (priority 1-2)
@@ -133,7 +133,7 @@ def q226(spark: SparkSession, sf: str) -> DataFrame:
     a = c.groupBy("arm").agg(
         F.count("*").alias("n"),
         F.sum("cents").alias("s"),
-        _exact_scaled_sum(F.col("c2"), 0).alias("q"),
+        F.expr(_scaled_sum_sql("c2", 0, None)).alias("q"),
     )
     pick = lambda arm_, col: F.max(F.when(F.col("arm") == arm_, F.col(col)))  # noqa: E731
     w = a.agg(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ann import _dlit, dot_sql, norm_sql
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import (
     MERSENNE_P,
@@ -39,6 +40,7 @@ from ..operators.dedup import (
     word_grams,
 )
 from ..operators.skew import spread_input
+from ..vectors import _NDCG_P, _NDCG_W, EmbeddingSet
 from .base import query, t
 
 
@@ -481,16 +483,6 @@ def q53(spark: SparkSession, sf: str) -> DataFrame:
 _TOP_K = 10
 _N_QUERIES = 5
 
-_SPARK_DOT = (
-    "aggregate(zip_with(qe, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-_SPARK_NORM = (
-    "sqrt(aggregate(transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-)
-
-
 @query(
     "q54_cosine_topk",
     oracle=f"""
@@ -531,9 +523,9 @@ def q54(spark: SparkSession, sf: str) -> DataFrame:
         F.broadcast(q)
         .crossJoin(emb)
         .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("dot", F.expr(_SPARK_DOT))
-        .withColumn("qn", F.expr(_SPARK_NORM.format(col="qe")))
-        .withColumn("en", F.expr(_SPARK_NORM.format(col="embedding")))
+        .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
+        .withColumn("qn", F.expr(norm_sql("qe")))
+        .withColumn("en", F.expr(norm_sql("embedding")))
         .select(
             "q_id", "vec_id", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine")
         )
@@ -668,9 +660,9 @@ def _lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.broadcast(q)
         .join(cand, "bucket")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("dot", F.expr(_SPARK_DOT))
-        .withColumn("qn", F.expr(_SPARK_NORM.format(col="qe")))
-        .withColumn("en", F.expr(_SPARK_NORM.format(col="embedding")))
+        .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
+        .withColumn("qn", F.expr(norm_sql("qe")))
+        .withColumn("en", F.expr(norm_sql("embedding")))
         .select("q_id", "vec_id", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
@@ -833,9 +825,9 @@ def q60(spark: SparkSession, sf: str) -> DataFrame:
     return (
         cand.join(F.broadcast(ea), "v1")
         .join(F.broadcast(eb), "v2")
-        .withColumn("dot", F.expr(_SPARK_DOT))
-        .withColumn("qn", F.expr(_SPARK_NORM.format(col="qe")))
-        .withColumn("en", F.expr(_SPARK_NORM.format(col="embedding")))
+        .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
+        .withColumn("qn", F.expr(norm_sql("qe")))
+        .withColumn("en", F.expr(norm_sql("embedding")))
         .select("v1", "v2", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"))
         .filter(F.col("cosine") >= _NEARDUP_COS)
         .orderBy("v1", "v2")
@@ -1624,35 +1616,13 @@ def q131(spark: SparkSession, sf: str) -> DataFrame:
 # model-eval readouts (exact AUC q165, confusion q175, ECE q182).
 #
 # Float discipline: the log2 discount table and its prefix sums are
-# computed ONCE in Python and embedded as decimal literals in BOTH
-# engines' queries — no engine ever calls log(), so libm differences
-# cannot leak in. DCG folds the (rank, rel) pairs in sorted rank order
+# computed ONCE in Python (vectors._NDCG_W/_NDCG_P) and embedded as
+# exact _dlit literals in BOTH engines' queries — no engine ever calls
+# log(), so libm differences cannot leak in. DCG folds the (rank, rel) pairs in sorted rank order
 # on both sides (q182's ordered-fold pattern); IDCG is a literal
 # prefix-sum lookup at n_rel — zero additional float reductions. The
 # final ndcg is one IEEE division. Everything hash-matches exactly.
 # --------------------------------------------------------------------------
-
-import math as _math
-
-_NDCG_W = [1.0 / _math.log2(r + 1) for r in range(1, _TOP_K + 1)]
-_NDCG_P = [0.0]
-for _w in _NDCG_W:
-    _NDCG_P.append(_NDCG_P[-1] + _w)
-
-
-def _dlit(x: float, pow_fn: str) -> str:
-    """An EXACT double literal as integer-mantissa x power-of-two
-    arithmetic. Decimal strings are not safe cross-engine: DuckDB's
-    string->double parse lands one ulp off the correctly-rounded value
-    for some shortest-repr inputs (measured: repr(1/log2(6))), while
-    integer mantissas and powers of two are exact everywhere."""
-    if x == 0.0:
-        return "CAST(0 AS DOUBLE)"
-    m, e = _math.frexp(x)
-    m2 = int(m * (1 << 53))
-    assert _math.ldexp(m2, e - 53) == x
-    return f"(CAST({m2} AS DOUBLE) * {pow_fn}(CAST(2 AS DOUBLE), {e - 53}))"
-
 
 def _q184_oracle() -> str:
     w_lit = "[" + ", ".join(_dlit(w, "pow") for w in _NDCG_W) + "]"
@@ -1701,39 +1671,9 @@ def _q184_oracle() -> str:
 
 @query("q184_ndcg_exact", oracle=_q184_oracle(), category="similarity")
 def q184(spark: SparkSession, sf: str) -> DataFrame:
-    w_lit = "array(" + ", ".join(_dlit(w, "power") for w in _NDCG_W) + ")"
-    p_lit = "array(" + ", ".join(_dlit(p, "power") for p in _NDCG_P) + ")"
-    labels = t(spark, sf, "embeddings").select("vec_id", "label")
-    topk = _exact_topk(spark, sf)
-    rel = (
-        topk.join(
-            F.broadcast(labels.select(F.col("vec_id").alias("q_id"), F.col("label").alias("ql"))),
-            "q_id",
-        )
-        .join(F.broadcast(labels), "vec_id")
-        .select(
-            "q_id",
-            "rank",
-            F.when(F.col("ql") == F.col("label"), 1).otherwise(0).alias("rel"),
-        )
-    )
-    folded = rel.groupBy("q_id").agg(
-        F.sum("rel").alias("n_rel"),
-        F.sort_array(F.collect_list(F.struct("rank", "rel"))).alias("arr"),
-    )
-    return folded.select(
-        "q_id",
-        "n_rel",
-        F.when(F.col("n_rel") == 0, F.lit(0.0))
-        .otherwise(
-            F.expr(
-                f"aggregate(arr, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x.rel AS DOUBLE) * element_at({w_lit}, x.rank))"
-            )
-            / F.expr(f"element_at({p_lit}, CAST(n_rel + 1 AS INT))")
-        )
-        .alias("ndcg"),
-    ).orderBy("q_id")
+    emb = t(spark, sf, "embeddings")
+    queries = emb.filter(F.col("vec_id") < _N_QUERIES)
+    return EmbeddingSet(emb, label_col="label").retrieval_quality(queries, k=_TOP_K)
 
 
 # --------------------------------------------------------------------------

@@ -17,9 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ann import dot_sql, norm_sql
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
+from ..pipeline import _AMS_D, ams_audit_tail, ams_sign_counters
 from .base import dsum, dsum_expr, query, sql_dsum, t
 
 # --------------------------------------------------------------------------
@@ -564,13 +566,11 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
     probe = emb.filter(F.col("vec_id") == _RRF_PROBE_ID).select(
         F.col("embedding").alias("qe")
     )
-    from .llm import _SPARK_DOT, _SPARK_NORM
-
     scored = (
         emb.crossJoin(F.broadcast(probe))
-        .withColumn("dot", F.expr(_SPARK_DOT))
-        .withColumn("qn", F.expr(_SPARK_NORM.format(col="qe")))
-        .withColumn("en", F.expr(_SPARK_NORM.format(col="embedding")))
+        .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
+        .withColumn("qn", F.expr(norm_sql("qe")))
+        .withColumn("en", F.expr(norm_sql("embedding")))
         .select(
             "vec_id", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine")
         )
@@ -2506,9 +2506,6 @@ def q271(spark: SparkSession, sf: str) -> DataFrame:
 # delegates analytics to Athena (src/app.py:97-189).
 # --------------------------------------------------------------------------
 
-_AMS_D = 8
-
-
 def _q272_oracle() -> str:
     from .llm import duck_h31
 
@@ -2542,80 +2539,6 @@ def _q272_oracle() -> str:
            CAST(med.est2 AS DOUBLE) / 2.0 AS f2_est
     FROM sk CROSS JOIN exact CROSS JOIN med
     """
-
-
-def ams_sign_counters(tok: DataFrame, hash_fn: str = "portable") -> DataFrame:
-    """The AMS sketch side alone: 8 sign-sum counters x0..x7 built in
-    ONE map-side conditional-sum aggregate over the token frame ``tok``
-    (one column ``w``) — 8 BIGINTs per partition cross the wire, no
-    per-word shuffle. ``hash_fn="portable"`` draws signs from the
-    md5-derived h31 (DuckDB-replayable, q272's oracle contract);
-    ``"fast"`` uses JVM-native xxhash64 — the production hash, measured
-    6.3x cheaper at 500k docs (BASELINE.md)."""
-    sign_bit = [F.expr(h31(f"'ams{j}-' || w", hash_fn) + " % 2") for j in range(_AMS_D)]
-    return tok.agg(
-        *[
-            (F.sum(F.lit(1) - F.lit(2) * sign_bit[j])).cast("long").alias(f"x{j}")
-            for j in range(_AMS_D)
-        ]
-    )
-
-
-def ams_f2_sketch(tok: DataFrame, hash_fn: str = "fast") -> DataFrame:
-    """SKETCH-ONLY AMS F2 (VERDICT r09 #3) — the deployment entry point.
-
-    q272/q280 always pay an exact-F2 audit whose word-keyed shuffle
-    (~450M tokens at 5M docs) dominates their wall and spills at scale;
-    at deployment scale one runs the sketch WITHOUT the audit, and this
-    is that code path: one map-side 8-counter aggregate, one 1-row
-    median-of-squares assembly — the whole job is a single scan with no
-    exchange but the final single-row gather. Returns one row
-    (x0..x7, f2_est DOUBLE). The estimate is the median of the 8
-    squared counters held in 2x integer space (sum of the 4th and 5th
-    order statistics) exactly as q272 computes it, so on identical
-    input + ``hash_fn="portable"`` the columns equal q272's sketch
-    columns value-for-value (pinned in tests/test_operators.py)."""
-    sk = ams_sign_counters(tok, hash_fn)
-    return _ams_with_estimate(sk).select(
-        *[F.col(f"x{j}") for j in range(_AMS_D)], "f2_est"
-    )
-
-
-def _ams_with_estimate(sk: DataFrame) -> DataFrame:
-    """THE median-of-squares estimator (sum of the 4th and 5th order
-    statistics in 2x integer space, one division) — the single assembly
-    ams_f2_sketch AND ams_audit_tail ride, so the sketch-only facade
-    and the audited q272/q280 cannot desynchronize."""
-    sq = ", ".join(
-        f"CAST(x{j} AS DECIMAL(38,0)) * CAST(x{j} AS DECIMAL(38,0))"
-        for j in range(_AMS_D)
-    )
-    return sk.withColumn("sq", F.expr(f"array_sort(array({sq}))")).withColumn(
-        "f2_est",
-        F.expr("CAST(element_at(sq, 4) + element_at(sq, 5) AS DOUBLE)") / F.lit(2.0),
-    )
-
-
-def ams_audit_tail(sk: DataFrame, tok: DataFrame) -> DataFrame:
-    """Shared AMS assembly (q272 batch, q280 streaming, and the bench
-    fast-hash variant all use THIS function so the "q272 oracle
-    verbatim" contract cannot desynchronize): exact F2 from the token
-    frame ``tok`` (one column ``w``) + the median-of-squares estimate
-    from the 8-counter frame ``sk`` (columns x0..x7)."""
-    exact = (
-        tok.groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.sum(F.col("c").cast("decimal(38,0)") * F.col("c"))
-            .cast("decimal(38,0)")
-            .alias("f2")
-        )
-    )
-    return _ams_with_estimate(sk.crossJoin(F.broadcast(exact))).select(
-        *[F.col(f"x{j}") for j in range(_AMS_D)],
-        F.col("f2").cast("double").alias("f2_exact"),
-        "f2_est",
-    )
 
 
 def ams_token_frame(spark: SparkSession, sf: str) -> DataFrame:

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import h31
+from ..pipeline import TextCorpus
 from .base import query, t
 from .llm import duck_h31
 
@@ -115,58 +116,7 @@ def _q201_oracle() -> str:
     doc="corpus-trained bigram LM typicality score, hash-keyed train+score",
 )
 def q201(spark: SparkSession, sf: str) -> DataFrame:
-    bh = h31("concat(element_at(ws, i), ' ', element_at(ws, i + 1))")
-    ph = h31("element_at(ws, i)")
-    ps = (
-        f"CASE WHEN size(ws) >= 2 "
-        f"THEN transform(sequence(1, size(ws) - 1), i -> struct({bh} AS bh, {ph} AS ph)) "
-        f"ELSE CAST(array() AS ARRAY<STRUCT<bh: BIGINT, ph: BIGINT>>) END"
-    )
-    g = (
-        t(spark, sf, "documents")
-        .select("doc_id", F.expr("filter(split(text, ' '), w -> w <> '')").alias("ws"))
-        .select("doc_id", F.expr(ps).alias("ps"))
-        # explode_OUTER + null filter on the OUTPUT attribute: a plain
-        # explode lets InferFiltersFromGenerate push `size(ps) > 0`
-        # below the Generate, inlining the whole md5 gram tree
-        # (pipeline.py::winnow_fingerprints, measured >80x)
-        .select("doc_id", F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select("doc_id", F.col("p.bh").alias("bh"), F.col("p.ph").alias("ph"))
-    )
-    bc = g.groupBy("bh").agg(F.count("*").alias("cb"))
-    pc = g.groupBy("ph").agg(F.count("*").alias("cp"))
-    # explicit broadcast: the count tables are dimension-like (16-byte
-    # rows), while the probe side is the 27M+-row gram stream — without
-    # the hint this compiles to two SortMergeJoins that shuffle the full
-    # stream, the second keyed on the LOW-CARDINALITY context hash
-    # (measured 45-103 s for the join stage alone at 500k docs vs
-    # map-side lookups). At open-vocab scale: the context table stays
-    # broadcastable (vocab-sized); if the bigram table outgrows the
-    # broadcast budget its join reverts to a shuffle equi-join on the
-    # HIGH-cardinality bigram hash, which is skew-free — never shuffle
-    # on the context key.
-    j = (
-        g.join(F.broadcast(bc), "bh")
-        .join(F.broadcast(pc), "ph")
-        .select("doc_id", F.expr(_LM_M).alias("m"))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum("m").alias("sum_micros"),
-            F.min("m").alias("min_micros"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            "sum_micros",
-            F.expr("sum_micros div n_bigrams").alias("avg_micros"),
-            "min_micros",
-        )
-        .orderBy("doc_id")
-    )
+    return TextCorpus(t(spark, sf, "documents")).lm_score(hash_fn="portable").orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -226,50 +176,7 @@ _CTX = 256
     doc="concat-and-chunk packing audit: sequences, pad waste, boundary docs",
 )
 def q202(spark: SparkSession, sf: str) -> DataFrame:
-    d = t(spark, sf, "documents").select(
-        "doc_id",
-        "source",
-        F.expr("size(filter(split(text, ' '), w -> w <> ''))").alias("n_tok"),
-    )
-    w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    c = d.select(
-        "source",
-        "n_tok",
-        F.sum("n_tok").over(w).alias("cume"),
-    ).select(
-        "source",
-        "n_tok",
-        F.expr(
-            f"CASE WHEN n_tok > 0 "
-            f"THEN (cume - 1) div {_CTX} - (cume - n_tok) div {_CTX} "
-            f"ELSE 0 END"
-        ).alias("crosses"),
-    )
-    return (
-        c.groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tok").alias("total_tokens"),
-            F.sum(F.expr("CASE WHEN crosses > 0 THEN 1 ELSE 0 END")).alias(
-                "boundary_docs"
-            ),
-            F.sum("crosses").alias("boundary_crossings"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            F.expr(f"(total_tokens + {_CTX - 1}) div {_CTX}").alias("n_sequences"),
-            F.expr(
-                f"(total_tokens + {_CTX - 1}) div {_CTX} * {_CTX} - total_tokens"
-            ).alias("pad_tokens"),
-            "boundary_docs",
-            "boundary_crossings",
-        )
-        .orderBy("source")
-    )
+    return TextCorpus(t(spark, sf, "documents")).pack_sequences(ctx=_CTX).orderBy("source")
 
 
 # --------------------------------------------------------------------------
@@ -428,43 +335,7 @@ _MIX_BUDGET = 1_000_000_000
     doc="tau=2 temperature source-mixing weights + expected epochs at budget",
 )
 def q204(spark: SparkSession, sf: str) -> DataFrame:
-    s = (
-        t(spark, sf, "documents")
-        .select(
-            "source",
-            F.expr("size(filter(split(text, ' '), w -> w <> ''))").alias("n_tok"),
-        )
-        .groupBy("source")
-        .agg(F.sum("n_tok").alias("tok"))
-    )
-    a = s.agg(
-        F.sort_array(F.collect_list(F.struct("source", "tok"))).alias("arr")
-    ).select(
-        F.expr(
-            "aggregate(arr, CAST(0 AS DOUBLE), "
-            "(acc, x) -> acc + sqrt(CAST(x.tok AS DOUBLE)))"
-        ).alias("tot")
-    )
-    return (
-        s.crossJoin(F.broadcast(a))
-        .select(
-            "source",
-            "tok",
-            F.expr(
-                "CASE WHEN tot > 0 THEN "
-                "CAST(floor(1000000.0 * (sqrt(CAST(tok AS DOUBLE)) / tot)) AS BIGINT) "
-                "ELSE CAST(NULL AS BIGINT) END"
-            ).alias("weight_micros"),
-            F.expr(
-                f"CASE WHEN tot > 0 AND tok > 0 THEN "
-                f"CAST(floor(1000000.0 * ((sqrt(CAST(tok AS DOUBLE)) / tot)"
-                f" * (CAST({_MIX_BUDGET} AS DOUBLE) / CAST(tok AS DOUBLE))))"
-                f" AS BIGINT) "
-                f"ELSE CAST(NULL AS BIGINT) END"
-            ).alias("epochs_micros"),
-        )
-        .orderBy("source")
-    )
+    return TextCorpus(t(spark, sf, "documents")).mixture_weights(budget=_MIX_BUDGET).orderBy("source")
 
 
 # --------------------------------------------------------------------------

@@ -51,7 +51,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..eventlog import EventLog
+from ..operators.ann import dot_sql, norm_sql
 from ..operators.dedup import h31
+from ..vectors import EmbeddingSet, _jl_y_sql
 from .base import query, t
 from .llm import duck_h31
 
@@ -72,16 +75,6 @@ from .llm import duck_h31
 
 _AUDIT_N = 100
 _AUDIT_K = 5
-
-_DOT = (
-    "aggregate(zip_with(qe, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-_NORM = (
-    "sqrt(aggregate(transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-)
-
 
 @query(
     "q166_knn_label_audit",
@@ -133,57 +126,8 @@ _NORM = (
     category="prep",
 )
 def q166(spark: SparkSession, sf: str) -> DataFrame:
-    emb = t(spark, sf, "embeddings")
-    # fixed-COUNT anchor pick: orderBy+limit plans as TakeOrderedAndProject
-    # (per-partition partial top-N, no global sort, N rows to the driver
-    # side of the broadcast) — the linear-scale form; see header note
-    anchors = (
-        emb.orderBy(
-            F.expr(h31("concat('a166-', CAST(vec_id AS STRING))")),
-            "vec_id",
-        )
-        .limit(_AUDIT_N)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qe"),
-            F.col("label").alias("own_label"),
-        )
-    )
-    scored = (
-        F.broadcast(anchors)
-        .crossJoin(emb)
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("qn", F.expr(_NORM.format(col="qe")))
-        .withColumn("en", F.expr(_NORM.format(col="embedding")))
-        .select(
-            "q_id",
-            "own_label",
-            "vec_id",
-            F.col("label").alias("n_label"),
-            (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    knn = scored.withColumn("rk", F.row_number().over(wk)).filter(
-        F.col("rk") <= _AUDIT_K
-    )
-    votes = knn.groupBy("q_id", "own_label", "n_label").agg(
-        F.count("*").alias("votes")
-    )
-    wv = Window.partitionBy("q_id").orderBy(F.col("votes").desc(), F.col("n_label"))
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "q_id",
-            "own_label",
-            F.col("n_label").alias("maj_label"),
-            F.col("votes").alias("maj_votes"),
-            (F.col("n_label") != F.col("own_label")).alias("mislabeled"),
-        )
-        .orderBy("q_id")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"), label_col="label")
+    return emb.label_audit(anchors=_AUDIT_N, k=_AUDIT_K)
 
 
 # --------------------------------------------------------------------------
@@ -461,24 +405,8 @@ _PROTO_SCALE = 1_000_000
     category="prep",
 )
 def q172(spark: SparkSession, sf: str) -> DataFrame:
-    v = (
-        t(spark, sf, "embeddings")
-        .select("label", F.posexplode("embedding").alias("dim", "xf"))
-        .select("label", "dim", F.col("xf").cast("double").alias("x"))
-    )
-    s = F.sum(F.floor(F.col("x") * _PROTO_SCALE))
-    return (
-        v.groupBy("label", "dim")
-        .agg(
-            s.cast("bigint").alias("sum_scaled"),
-            F.count("*").alias("n_vals"),
-            (
-                s.cast("double")
-                / (F.count("*").cast("double") * F.lit(float(_PROTO_SCALE)))
-            ).alias("mean_dim"),
-        )
-        .orderBy("label", "dim")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"), label_col="label")
+    return emb.prototypes()
 
 
 # --------------------------------------------------------------------------
@@ -493,12 +421,6 @@ def q172(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _OUTLIER_K = 3
-
-_CDOT = (
-    "aggregate(zip_with(ce, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-
 
 @query(
     "q173_class_outliers",
@@ -543,41 +465,8 @@ _CDOT = (
     category="prep",
 )
 def q173(spark: SparkSession, sf: str) -> DataFrame:
-    emb = t(spark, sf, "embeddings")
-    v = emb.select(
-        "label", F.posexplode("embedding").alias("dim", "xf")
-    ).select("label", "dim", F.col("xf").cast("double").alias("x"))
-    s = F.sum(F.floor(F.col("x") * _PROTO_SCALE))
-    proto = v.groupBy("label", "dim").agg(
-        (
-            s.cast("double")
-            / (F.count("*").cast("double") * F.lit(float(_PROTO_SCALE)))
-        ).alias("mean_dim")
-    )
-    cent = proto.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "mean_dim"))),
-            lambda x: x["mean_dim"],
-        ).alias("ce")
-    )
-    scored = (
-        emb.join(F.broadcast(cent), "label")
-        .withColumn("dot", F.expr(_CDOT))
-        .withColumn("cn", F.expr(_NORM.format(col="ce")))
-        .withColumn("en", F.expr(_NORM.format(col="embedding")))
-        .select(
-            "label",
-            "vec_id",
-            (F.col("dot") / (F.col("cn") * F.col("en"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("label").orderBy("cosine", "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _OUTLIER_K)
-        .select("label", "rk", "vec_id", "cosine")
-        .orderBy("label", "rk")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"), label_col="label")
+    return emb.outliers(k=_OUTLIER_K)
 
 
 # --------------------------------------------------------------------------
@@ -594,7 +483,8 @@ def q173(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _CV_FOLDS = 3
-_CV_EMBARGO_US = 6 * 3600 * 1_000_000
+_CV_EMBARGO_H = 6
+_CV_EMBARGO_US = _CV_EMBARGO_H * 3600 * 1_000_000
 
 
 @query(
@@ -622,45 +512,7 @@ _CV_EMBARGO_US = 6 * 3600 * 1_000_000
     category="prep",
 )
 def q174(spark: SparkSession, sf: str) -> DataFrame:
-    ev = t(spark, sf, "events").select(F.unix_micros("ts").alias("us"))
-    mm = ev.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    spec = (
-        mm.withColumn("fold", F.explode(F.sequence(F.lit(1), F.lit(_CV_FOLDS))))
-        .withColumn(
-            "train_end",
-            F.expr(f"mn + ((mx - mn) * fold) div {_CV_FOLDS + 1}"),
-        )
-        .withColumn("test_start", F.col("train_end") + F.lit(_CV_EMBARGO_US))
-        .withColumn(
-            "test_end",
-            F.expr(f"mn + ((mx - mn) * (fold + 1)) div {_CV_FOLDS + 1}"),
-        )
-        .select("fold", "train_end", "test_start", "test_end")
-    )
-    return (
-        ev.crossJoin(F.broadcast(spec))
-        .groupBy("fold")
-        .agg(
-            F.count(F.when(F.col("us") <= F.col("train_end"), 1)).alias(
-                "train_rows"
-            ),
-            F.count(
-                F.when(
-                    (F.col("us") > F.col("test_start"))
-                    & (F.col("us") <= F.col("test_end")),
-                    1,
-                )
-            ).alias("test_rows"),
-            F.count(
-                F.when(
-                    (F.col("us") > F.col("train_end"))
-                    & (F.col("us") <= F.col("test_start")),
-                    1,
-                )
-            ).alias("embargoed_rows"),
-        )
-        .orderBy("fold")
-    )
+    return EventLog(t(spark, sf, "events")).cv_folds(folds=_CV_FOLDS, embargo_hours=_CV_EMBARGO_H)
 
 
 # --------------------------------------------------------------------------
@@ -744,9 +596,9 @@ def q175(spark: SparkSession, sf: str) -> DataFrame:
     scored = (
         emb.select("vec_id", F.col("label").alias("true_label"), "embedding")
         .crossJoin(F.broadcast(cent))
-        .withColumn("dot", F.expr(_CDOT))
-        .withColumn("cn", F.expr(_NORM.format(col="ce")))
-        .withColumn("en", F.expr(_NORM.format(col="embedding")))
+        .withColumn("dot", F.expr(dot_sql("ce", "embedding")))
+        .withColumn("cn", F.expr(norm_sql("ce")))
+        .withColumn("en", F.expr(norm_sql("embedding")))
         .select(
             "vec_id",
             "true_label",
@@ -1181,34 +1033,13 @@ def q287(spark: SparkSession, sf: str) -> DataFrame:
 # delegates analytics to Athena (src/app.py:97-189).
 # --------------------------------------------------------------------------
 
-import hashlib as _hashlib
-
 _JL_DIN, _JL_DOUT, _JL_SAMPLE = 64, 16, 128
-
-
-def _jl_sign(i: int, j: int) -> int:
-    """±1 from md5('jl-i-j') — evaluated in Python once; the engines
-    only ever see the resulting sign literals."""
-    h = int(_hashlib.md5(f"jl-{i}-{j}".encode()).hexdigest()[:8], 16)
-    return 1 if h % 2 == 0 else -1
-
-
-def _jl_y_sql(i: int, arr: str, bracket: bool, d_in: int = _JL_DIN) -> str:
-    # index syntax is per-engine: DuckDB brackets are 1-based, Spark
-    # brackets are 0-based, so the Spark side spells element_at (1-based)
-    acc = (lambda j: f"{arr}[{j + 1}]") if bracket else (
-        lambda j: f"element_at({arr}, {j + 1})"
-    )
-    terms = "".join(
-        f" {'+' if _jl_sign(i, j) > 0 else '-'} {acc(j)}" for j in range(d_in)
-    )
-    return f"CAST(0{terms} AS BIGINT)"
 
 
 def _q288_oracle() -> str:
     h = duck_h31("'jls-' || CAST(vec_id AS VARCHAR)")
     ys = ",\n             ".join(
-        f"{_jl_y_sql(i, 'q', True)} AS y{i}" for i in range(_JL_DOUT)
+        f"{_jl_y_sql(i, 'q', True, d_in=_JL_DIN)} AS y{i}" for i in range(_JL_DOUT)
     )
     d2p = " + ".join(
         f"(a.y{i} - b.y{i}) * (a.y{i} - b.y{i})" for i in range(_JL_DOUT)
@@ -1247,59 +1078,8 @@ def _q288_oracle() -> str:
     doc="JL ±1-projection distortion audit on a hash-selected vector sample: integer-grid exact distances, per-pair ratio in micros",
 )
 def q288(spark: SparkSession, sf: str) -> DataFrame:
-    h = h31("concat('jls-', CAST(vec_id AS STRING))")
-    s = (
-        t(spark, sf, "embeddings")
-        .select("vec_id", "embedding", F.expr(f"({h})").alias("_h"))
-        .orderBy("_h", "vec_id")
-        .limit(_JL_SAMPLE)  # TakeOrdered: fixed-size sample, no global sort
-        .select(
-            "vec_id",
-            F.expr(
-                "transform(embedding,"
-                " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-            ).alias("q"),
-        )
-    )
-    p = s.select(
-        "vec_id",
-        "q",
-        *[F.expr(_jl_y_sql(i, "q", False)).alias(f"y{i}") for i in range(_JL_DOUT)],
-        F.lit(1).alias("k"),
-    )
-    a = p.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("q").alias("qa"),
-        *[F.col(f"y{i}").alias(f"ya{i}") for i in range(_JL_DOUT)],
-        "k",
-    )
-    b = p.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("q").alias("qb"),
-        *[F.col(f"y{i}").alias(f"yb{i}") for i in range(_JL_DOUT)],
-        "k",
-    )
-    d2o = (
-        "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    d2p = " + ".join(f"(ya{i} - yb{i}) * (ya{i} - yb{i})" for i in range(_JL_DOUT))
-    return (
-        a.join(b, "k")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"CAST({d2o} AS BIGINT)").alias("d2_orig"),
-            F.expr(f"CAST({d2p} AS BIGINT)").alias("d2_proj"),
-            F.expr(
-                f"CAST(CASE WHEN {d2o} = 0 THEN NULL"
-                f" ELSE floor(1000000.0 * (CAST({d2p} AS DOUBLE) / {_JL_DOUT}.0)"
-                f" / CAST({d2o} AS DOUBLE)) END AS BIGINT)"
-            ).alias("ratio_micros"),
-        )
-        .orderBy("id_a", "id_b")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"))
+    return emb.projection_audit(d_in=_JL_DIN, d_out=_JL_DOUT, sample=_JL_SAMPLE)
 
 
 # --------------------------------------------------------------------------

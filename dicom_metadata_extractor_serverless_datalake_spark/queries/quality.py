@@ -52,10 +52,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..eventlog import EventLog
+from ..operators.ann import _dlit
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
+from ..pipeline import (
+    _BOOT_R,
+    TextCorpus,
+    _boot_k_sql,
+    bootstrap_ci_tail,
+    bootstrap_rep_frame,
+    chao1_frame,
+)
 from .base import query, t
-from .llm import MERSENNE_P, _dlit, duck_h31
+from .llm import MERSENNE_P, duck_h31
 
 # --------------------------------------------------------------------------
 # q187 — winnowing fingerprint selection (MOSS): hash every word
@@ -416,46 +426,7 @@ _ACF_EXPR = (
     doc="exact lag-1..3 autocorrelation of daily value totals",
 )
 def q189(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    daily = (
-        t(spark, sf, "events")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) div 100"
-            ).alias("x")
-        )
-    )
-    w = Window.orderBy("day")
-    ord_df = daily.select(
-        "x",
-        F.lead("x", 1).over(w).alias("x1"),
-        F.lead("x", 2).over(w).alias("x2"),
-        F.lead("x", 3).over(w).alias("x3"),
-    )
-    stats = daily.agg(
-        F.count("*").alias("n"),
-        F.sum("x").cast("long").alias("s1"),
-        F.sum(F.expr("x * x")).cast("long").alias("s2"),
-        F.expr("CAST(SUM(x) AS DOUBLE) / CAST(count(*) AS DOUBLE)").alias("mu"),
-    )
-    parts = []
-    for k in (1, 2, 3):
-        parts.append(
-            ord_df.agg(
-                F.lit(k).alias("lag"),
-                F.sum(F.expr(f"x * x{k}")).cast("long").alias("sxy"),
-                F.sum(F.expr(f"CASE WHEN x{k} IS NOT NULL THEN x END")).cast("long").alias("sh"),
-                F.sum(f"x{k}").cast("long").alias("st"),
-            )
-        )
-    lagk = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return (
-        lagk.crossJoin(F.broadcast(stats))
-        .select("lag", F.col("n").cast("long").alias("n_days"), F.expr(_ACF_EXPR).alias("acf_micros"))
-        .orderBy("lag")
-    )
+    return EventLog(t(spark, sf, "events")).autocorrelation(lags=(1, 2, 3))
 
 
 # --------------------------------------------------------------------------
@@ -767,61 +738,7 @@ def _dupspan_oracle() -> str:
     doc="per-doc token coverage by cross-document duplicated 5-grams",
 )
 def q194(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    h = h31(f"array_join(slice(ws, i, {_SPAN_K}), ' ')")
-    ghs = (
-        f"CASE WHEN size(ws) >= {_SPAN_K} "
-        f"THEN transform(sequence(1, size(ws) - {_SPAN_K - 1}), i -> {h}) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
-    )
-    tok = (
-        t(spark, sf, "documents")
-        .select("doc_id", F.expr("filter(split(text, ' '), w -> w <> '')").alias("ws"))
-        .select("doc_id", F.size("ws").alias("n_tokens"), F.expr(ghs).alias("ghs"))
-    )
-    # posexplode_OUTER + null filter on the OUTPUT column, not a plain
-    # posexplode: InferFiltersFromGenerate would insert `size(ghs) > 0`
-    # below the Generate and pushdown inlines the whole gram-hash
-    # transform into it — every row then hashes its grams twice
-    g = (
-        tok.select("doc_id", F.posexplode_outer("ghs").alias("pos", "gh"))
-        .filter(F.col("gh").isNotNull())
-        .select("doc_id", (F.col("pos") + 1).alias("i"), "gh")
-    )
-    dup = g.groupBy("gh").agg(F.countDistinct("doc_id").alias("nd")).filter("nd >= 2")
-    occ = g.join(dup.select("gh"), "gh").select(
-        "doc_id", F.col("i").alias("s"), (F.col("i") + _SPAN_K - 1).alias("e")
-    )
-    w = Window.partitionBy("doc_id").orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    cov = (
-        occ.withColumn("pe", F.max("e").over(w))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.expr(
-                    "CASE WHEN pe IS NULL OR pe < s THEN e - s + 1"
-                    " WHEN e > pe THEN e - pe ELSE 0 END"
-                )
-            )
-            .cast("long")
-            .alias("covered")
-        )
-    )
-    return (
-        tok.select("doc_id", "n_tokens")
-        .join(cov, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.coalesce("covered", F.lit(0).cast("long")).alias("covered_tokens"),
-            F.expr(
-                "CAST(floor(1000000.0 * CAST(COALESCE(covered, 0) AS DOUBLE)"
-                " / CAST(n_tokens AS DOUBLE)) AS BIGINT)"
-            ).alias("dup_frac_micros"),
-        )
-        .orderBy("doc_id")
-    )
+    return TextCorpus(t(spark, sf, "documents")).dup_span_coverage(k=_SPAN_K).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1560,105 +1477,6 @@ def q278(spark: SparkSession, sf: str) -> DataFrame:
 # Reference delegates analytics to Athena (src/app.py:97-189).
 # --------------------------------------------------------------------------
 
-_BOOT_R = 64
-# floor(CDF_Poisson(1)(k) * (2^31 - 1)) for k = 0..7; h < _BOOT_T[k]
-# counts thresholds, h >= all eight -> k = 8 (the cap)
-_BOOT_T = [
-    790015083,
-    1580030167,
-    1975037709,
-    2106706890,
-    2139624185,
-    2146207644,
-    2147304887,
-    2147461637,
-]
-
-
-def _boot_k_sql(h_expr: str) -> str:
-    """Poisson(1) weight from a 31-bit hash: engine-shared CASE text."""
-    arms = " ".join(
-        f"WHEN {h_expr} < {t} THEN {k}" for k, t in enumerate(_BOOT_T)
-    )
-    return f"CASE {arms} ELSE 8 END"
-
-
-def bootstrap_rep_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    value_expr: str = "n_chars",
-    hash_fn: str = "portable",
-) -> DataFrame:
-    """(group, r, sk, s1) per group and replicate: sk = sum of Poisson
-    weights, s1 = weighted value sum. r = -1 is the raw pass (k = 1).
-    Shared by q281 (batch), q290 (streaming groupBy state — both sums
-    are monotone under row arrival, so drained maxima ARE the final
-    cells) and the ``TextCorpus.bootstrap_ci`` facade. ``hash_fn``:
-    "portable" draws weights from the md5-derived h31 (the oracle
-    contract); "fast" from xxhash64 — the production hash (the
-    portable md5 is the measured wall at 5M docs, BASELINE.md)."""
-    h = h31(f"concat('boot', CAST(r AS STRING), '-', CAST({id_col} AS STRING))", hash_fn)
-    k = f"CASE WHEN r = -1 THEN 1 ELSE {_boot_k_sql(f'({h})')} END"
-
-    # 65 digests per doc are pure map-side CPU; a scan-starved batch
-    # input would run them on 1-3 cores (no-op for q290's streaming
-    # frame and for any already-spread scan)
-    docs = spread_input(docs, key=id_col)
-    return (
-        docs.select(
-            F.col(id_col),
-            F.col(group_col).alias("source"),
-            F.expr(f"CAST({value_expr} AS BIGINT)").alias("_v"),
-        )
-        .withColumn("r", F.explode(F.expr(f"sequence(-1, {_BOOT_R - 1})")))
-        .select("source", "r", F.expr(f"CAST({k} AS BIGINT)").alias("k"), "_v")
-        .groupBy("source", "r")
-        .agg(
-            F.sum("k").alias("sk"),
-            F.sum(F.col("k") * F.col("_v")).alias("s1"),
-        )
-    )
-
-
-def bootstrap_ci_tail(per_rep: DataFrame) -> DataFrame:
-    """Assemble (source, n_docs, point_micros, n_reps, ci_lo_micros,
-    ci_hi_micros) from the per-replicate sums — q281's tail, reused
-    verbatim by q290 so the streaming twin rides q281's oracle."""
-    means = per_rep.filter("r >= 0 AND sk > 0").select(
-        "source",
-        F.expr("CAST(floor(1000000.0 * CAST(s1 AS DOUBLE) / CAST(sk AS DOUBLE)) AS BIGINT)").alias(
-            "mean_micros"
-        ),
-    )
-    ci = means.groupBy("source").agg(
-        F.expr("array_sort(collect_list(mean_micros))").alias("ms")
-    )
-    raw = per_rep.filter("r = -1").select(
-        "source",
-        F.col("sk").alias("n_docs"),
-        F.expr("CAST(floor(1000000.0 * CAST(s1 AS DOUBLE) / CAST(sk AS DOUBLE)) AS BIGINT)").alias(
-            "point_micros"
-        ),
-    )
-    return (
-        raw.join(ci, "source")
-        .select(
-            "source",
-            "n_docs",
-            "point_micros",
-            F.expr("CAST(size(ms) AS BIGINT)").alias("n_reps"),
-            F.expr(
-                "element_at(ms, greatest(1, CAST(floor(0.025 * size(ms)) AS INT) + 1))"
-            ).alias("ci_lo_micros"),
-            F.expr(
-                "element_at(ms, least(size(ms), CAST(ceil(0.975 * size(ms)) AS INT)))"
-            ).alias("ci_hi_micros"),
-        )
-        .orderBy("source")
-    )
-
-
 def _q281_oracle() -> str:
     h = duck_h31("'boot' || CAST(r AS VARCHAR) || '-' || CAST(doc_id AS VARCHAR)")
     k = f"CASE WHEN r = -1 THEN 1 ELSE {_boot_k_sql(f'({h})')} END"
@@ -2363,54 +2181,6 @@ def q296(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q286(spark: SparkSession, sf: str) -> DataFrame:
     return chao1_frame(t(spark, sf, "documents"), "lang", "text")
-
-
-def chao1_frame(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
-    """q286's construction over any (group, text) columns — shared by
-    the registered query and ``TextCorpus.vocab_richness`` (VERDICT
-    r10 #8) so the facade cannot desynchronize from its oracle. The
-    word-keyed shuffle's MAP side (explode + partial counts) is the
-    expensive half, so a scan-starved input is re-spread first."""
-
-    # Spread key: a row-unique SPLIT-STABLE surrogate, not text_col —
-    # chao1's contract has no id column, and hashing the text would
-    # send every copy of a duplicated text (common pre-dedup) plus all
-    # nulls to ONE partition, partially re-creating the starvation the
-    # spread exists to fix (ADVICE r11).
-    df = spread_input(df, key=F.monotonically_increasing_id())
-    tok = df.select(
-        group_col,
-        F.explode(F.expr(f"filter(split({text_col}, ' '), x -> x <> '')")).alias(
-            "w"
-        ),
-    )
-    wc = tok.groupBy(group_col, "w").agg(F.count("*").cast("long").alias("c"))
-    return (
-        wc.groupBy(group_col)
-        .agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.count("*").cast("long").alias("vocab"),
-            F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long").alias("f1"),
-            F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long").alias("f2"),
-        )
-        .select(
-            group_col,
-            "n_tokens",
-            "vocab",
-            "f1",
-            "f2",
-            F.expr(
-                "CAST(1000000 * vocab"
-                " + CAST(1000000 AS DECIMAL(38,0)) * f1 * (f1 - 1)"
-                "   div (2 * (f2 + 1)) AS BIGINT)"
-            ).alias("chao1_micros"),
-            F.expr(
-                "CAST(1000000 - CAST(1000000 AS DECIMAL(38,0)) * f1 div n_tokens"
-                " AS BIGINT)"
-            ).alias("coverage_micros"),
-        )
-        .orderBy(group_col)
-    )
 
 
 # --------------------------------------------------------------------------

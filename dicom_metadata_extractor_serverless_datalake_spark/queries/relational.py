@@ -565,8 +565,8 @@ _STDDEV_ORACLE = """
 @query("q12_agg_stats", oracle=_STDDEV_ORACLE, category="agg")
 def q12(spark: SparkSession, sf: str) -> DataFrame:
     c = F.col("c_acctbal")
-    s = dsum_expr(c, 2)
-    ss = dsum_expr(c * c, 4)
+    s = dsum_expr("c_acctbal", 2)
+    ss = dsum_expr("c_acctbal * c_acctbal", 4)
     n = F.count(c).cast("double")
     return (
         t(spark, sf, "customer")
@@ -1162,8 +1162,8 @@ def stats_join(spark: SparkSession, sf: str, table: str = STATS_TABLE) -> DataFr
 
 # q115 plans with CBO on a scoped session (shared catalog, own SQLConf),
 # so the caller's session keeps planning without it. One scoped session
-# per caller session: load_table caches frames per session, so a fresh
-# session per build would pin one more session (and its frames) each time.
+# per caller session: load_table memoizes frames per session, so a fresh
+# session per build would re-load its tables on every build.
 _CBO_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 

@@ -55,11 +55,12 @@ distinct + one anti-join; q229 is map-side + a |buckets|-row rollup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
+from ..vectors import EmbeddingSet
 from .base import query, t
 from .curation import _duck_grams
 from .llm import duck_h31
@@ -70,14 +71,6 @@ from .llm import duck_h31
 
 _HN_N = 20  # anchors
 
-_DOT = (
-    "aggregate(zip_with(qe, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-_NORM = (
-    "sqrt(aggregate(transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-)
 
 _DUCK_COS = """
              list_reduce(
@@ -133,73 +126,8 @@ _DUCK_COS = """
     doc="Triplet mining: hardest negative + nearest positive per anchor",
 )
 def q223(spark: SparkSession, sf: str) -> DataFrame:
-    emb = t(spark, sf, "embeddings")
-    anchors = (
-        emb.orderBy(
-            F.expr(h31("'hn-' || CAST(vec_id AS STRING)")), "vec_id"
-        )
-        .limit(_HN_N)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qe"),
-            F.col("label").alias("own_label"),
-        )
-    )
-    scored = (
-        F.broadcast(anchors)
-        .crossJoin(emb)
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "own_label",
-            "vec_id",
-            F.col("label").alias("n_label"),
-            (
-                F.expr(_DOT)
-                / (
-                    F.expr(_NORM.format(col="qe"))
-                    * F.expr(_NORM.format(col="embedding"))
-                )
-            ).alias("cosine"),
-        )
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "vec_id")
-    neg = (
-        scored.filter(F.col("n_label") != F.col("own_label"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") == 1)
-        .select(
-            "q_id",
-            "own_label",
-            F.col("vec_id").alias("neg_id"),
-            F.col("n_label").alias("neg_label"),
-            F.col("cosine").alias("neg_cosine"),
-        )
-    )
-    pos = (
-        scored.filter(F.col("n_label") == F.col("own_label"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") == 1)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("pos_id"),
-            F.col("cosine").alias("pos_cosine"),
-        )
-    )
-    return (
-        neg.join(pos, "q_id")
-        .select(
-            "q_id",
-            "own_label",
-            "neg_id",
-            "neg_label",
-            "neg_cosine",
-            "pos_id",
-            "pos_cosine",
-            (F.col("pos_cosine") - F.col("neg_cosine")).alias("margin"),
-        )
-        .orderBy("q_id")
-    )
+    emb = EmbeddingSet(t(spark, sf, "embeddings"), label_col="label")
+    return emb.hard_negatives(anchors=_HN_N)
 
 
 # --------------------------------------------------------------------------

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
 from ..operators.skew import spread_input
-from .base import _exact_scaled_sum, query, t
+from .base import _scaled_sum_sql, query, t
 
 # --------------------------------------------------------------------------
 # q148 — BM25 top-k retrieval (Robertson-Spärck Jones weighting,
@@ -468,7 +468,7 @@ def q151(spark: SparkSession, sf: str) -> DataFrame:
         t(spark, sf, "events")
         .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(
-            _exact_scaled_sum(F.col("value"), 2, max_abs=500.0)
+            F.expr(_scaled_sum_sql("value", 2, 500.0))
             .cast("bigint")
             .alias("x")
         )

@@ -2321,7 +2321,7 @@ _set_q266_oracle()
 )
 def q280(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.tables import load_stream
-    from .mining import _AMS_D
+    from ..pipeline import _AMS_D
 
     src = _docs_stream_src(sf, splits=3)
     try:
@@ -2350,7 +2350,8 @@ def q280(spark: SparkSession, sf: str) -> DataFrame:
     sk = sk.select(*[F.col(str(j)).alias(f"x{j}") for j in range(_AMS_D)])
     # exact-F2 audit tail: the SAME function q272 runs, so the
     # "q272 oracle verbatim" contract cannot desynchronize
-    from .mining import ams_audit_tail, ams_token_frame
+    from ..pipeline import ams_audit_tail
+    from .mining import ams_token_frame
 
     return ams_audit_tail(sk, ams_token_frame(spark, sf))
 
@@ -2394,7 +2395,7 @@ _set_q280_oracle()
 )
 def q290(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.tables import load_stream
-    from .quality import bootstrap_ci_tail, bootstrap_rep_frame
+    from ..pipeline import bootstrap_ci_tail, bootstrap_rep_frame
 
     src = _docs_stream_src(sf, splits=3)
     try:

@@ -40,14 +40,21 @@ def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-# (appId, session, sf_dir, name) -> DataFrame. A DataFrame is just a plan —
-# caching it avoids re-reading parquet footers and re-running the nanos
-# fixup on every query construction (the corpus builds hundreds of frames
-# per run). Keyed by the SESSION, not just the application: sibling
-# sessions (spark.newSession()) share an appId but plan under their own
-# SQLConf, and a DataFrame is bound to the session that built it — a
-# cross-session cache hit would silently plan under the wrong conf.
-_TABLE_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
+def _memo(spark: SparkSession) -> dict:
+    """The session's own loader memo: ``frames`` maps (sf_dir, name) to
+    the loaded DataFrame, ``views`` is the sf_dir the session's temp
+    views point at. A DataFrame is just a plan — memoizing it avoids
+    re-reading parquet footers and re-running the nanos fixup on every
+    query construction (the corpus builds hundreds of frames per run).
+    The memo hangs off the session object, so it is per SESSION, not
+    per application: a sibling session (spark.newSession()) has its
+    own SQLConf and temp views, and a DataFrame is bound to the session
+    that built it. It also dies with its session — a module-level memo
+    would pin every session that ever loaded a table."""
+    memo = getattr(spark, "_graft_tables", None)
+    if memo is None:
+        memo = spark._graft_tables = {"frames": {}, "views": None}
+    return memo
 
 
 def _load_bucketed(spark: SparkSession, marker_path: str) -> DataFrame:
@@ -87,8 +94,8 @@ def _load_bucketed(spark: SparkSession, marker_path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
+    frames = _memo(spark)["frames"]
+    cached = frames.get((sf_dir, name))
     if cached is not None:
         return cached
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -100,7 +107,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     df = _normalize_timestamps(df, name)
-    _TABLE_CACHE[key] = df
+    frames[(sf_dir, name)] = df
     return df
 
 
@@ -141,19 +148,15 @@ def load_stream(
     return _normalize_timestamps(df, name)
 
 
-# appId -> sf_dir currently backing the session's views; re-register only
-# when the target dir changes (views are global per session, so a set-based
-# memo would leave stale views behind when switching dirs back and forth)
-_REGISTERED_DIR: dict[str, str] = {}
-
-
 def register_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (idempotent and
-    memoized per session while the dir is unchanged); returns the frames."""
-    app_id = spark.sparkContext.applicationId
+    """Register every testdata table as a temp view of this session
+    (idempotent, and memoized per session while the dir is unchanged:
+    switching dirs re-registers, so no stale view survives); returns
+    the frames."""
     frames = {name: load_table(spark, sf_dir, name) for name in STAR_TABLES}
-    if _REGISTERED_DIR.get(app_id) != sf_dir:
+    memo = _memo(spark)
+    if memo["views"] != sf_dir:
         for name, df in frames.items():
             df.createOrReplaceTempView(name)
-        _REGISTERED_DIR[app_id] = sf_dir
+        memo["views"] = sf_dir
     return frames

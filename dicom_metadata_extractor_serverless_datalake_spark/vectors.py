@@ -1,10 +1,12 @@
 """Embedding-curation facade: the vector-side counterpart of
 ``TextCorpus``.
 
-``EmbeddingSet`` packages the corpus's embedding operators (class
-prototypes q172, intra-class outliers q173, kNN label audit q166,
-exact cosine top-k q54) into one chainable API over any DataFrame with
-an id column and an ``array<float|double>`` vector column:
+``EmbeddingSet`` is the one implementation of the corpus's embedding
+kernels (class prototypes q172, intra-class outliers q173, kNN label
+audit q166, hard negatives q223, nDCG q184, truncation audit q216, JL
+distortion q288, and q54's exact cosine top-k shape) as one chainable
+API over any DataFrame with an id column and an
+``array<float|double>`` vector column:
 
     vs = EmbeddingSet(df, id_col="vec_id", vec_col="embedding",
                       label_col="label")
@@ -12,6 +14,10 @@ an id column and an ``array<float|double>`` vector column:
     vs.outliers(k=3)           # least prototype-like vectors per label
     vs.label_audit(k=5)        # neighbor-majority mislabel flags
     vs.topk_similar(queries)   # exact cosine top-k vs a query frame
+
+Those corpus queries call these methods; this module imports nothing
+from ``queries/`` (its kernels come from ``operators/``: ``dot_sql``,
+``norm_sql`` and ``_dlit`` from ann.py, the hashes from dedup.py).
 
 Everything is deterministic and exact where the corpus queries are:
 prototype sums ride the 1e-6 fixed-point grid (order-free integer
@@ -24,27 +30,46 @@ per-group top-k — no all-pairs joins anywhere.
 
 from __future__ import annotations
 
+import hashlib
+import math
+from itertools import accumulate
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .operators.ann import _dlit, dot_sql, norm_sql
 from .operators.dedup import h31, salted_h31
 
 _SCALE = 1_000_000
 
+# nDCG discount table 1/log2(rank + 1) for ranks 1..10 and its prefix
+# sums (the ideal DCG at n relevant), computed once in Python and
+# embedded as exact literals (_dlit) in both engines' SQL, so no
+# engine ever evaluates log()
+_NDCG_W = [1.0 / math.log2(r + 1) for r in range(1, 11)]
+_NDCG_P = list(accumulate(_NDCG_W, initial=0.0))
 
-def _dot(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+
+def _jl_sign(i: int, j: int) -> int:
+    """±1 from md5('jl-i-j') — evaluated in Python once; the engines
+    only ever see the resulting sign literals."""
+    h = int(hashlib.md5(f"jl-{i}-{j}".encode()).hexdigest()[:8], 16)
+    return 1 if h % 2 == 0 else -1
+
+
+def _jl_y_sql(i: int, arr: str, bracket: bool, d_in: int = 64) -> str:
+    """Projected coordinate ``i`` of the integer array ``arr`` as SQL
+    text: the signed sum of its first ``d_in`` components. Index syntax
+    is per-engine: DuckDB brackets are 1-based (``bracket=True``),
+    Spark brackets are 0-based, so the Spark side spells element_at."""
+    acc = (lambda j: f"{arr}[{j + 1}]") if bracket else (
+        lambda j: f"element_at({arr}, {j + 1})"
     )
-
-
-def _norm(col: str) -> str:
-    return (
-        f"sqrt(aggregate(transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
+    terms = "".join(
+        f" {'+' if _jl_sign(i, j) > 0 else '-'} {acc(j)}" for j in range(d_in)
     )
+    return f"CAST(0{terms} AS BIGINT)"
 
 
 class EmbeddingSet:
@@ -71,9 +96,9 @@ class EmbeddingSet:
 
     # ---- class-conditional curation ----
 
-    def prototypes(self) -> DataFrame:
-        """Exact per-label centroid components (q172): order-free
-        fixed-point sums per (label, dim) cell, mean via one IEEE
+    def _cells(self) -> DataFrame:
+        """Unordered (label, dim, sum_scaled, n_vals, mean_dim) cells:
+        order-free fixed-point sums per (label, dim), mean via one IEEE
         division. Key domain is |labels| x dim whatever the row count."""
         lab = self._require_label("prototypes")
         v = self.df.select(
@@ -81,23 +106,26 @@ class EmbeddingSet:
             F.posexplode(self.vec_col).alias("dim", "xf"),
         ).select("label", "dim", F.col("xf").cast("double").alias("x"))
         s = F.sum(F.floor(F.col("x") * _SCALE))
-        return (
-            v.groupBy("label", "dim")
-            .agg(
-                s.cast("bigint").alias("sum_scaled"),
-                F.count("*").alias("n_vals"),
-                (
-                    s.cast("double")
-                    / (F.count("*").cast("double") * F.lit(float(_SCALE)))
-                ).alias("mean_dim"),
-            )
-            .orderBy("label", "dim")
+        return v.groupBy("label", "dim").agg(
+            s.cast("bigint").alias("sum_scaled"),
+            F.count("*").alias("n_vals"),
+            (
+                s.cast("double")
+                / (F.count("*").cast("double") * F.lit(float(_SCALE)))
+            ).alias("mean_dim"),
         )
+
+    def prototypes(self) -> DataFrame:
+        """Exact per-label centroid components (q172), ordered by
+        (label, dim)."""
+        return self._cells().orderBy("label", "dim")
 
     def centroids(self) -> DataFrame:
         """Per-label centroid as a dim-ordered array — |labels| rows,
-        the broadcast side of every scoring pass."""
-        return self.prototypes().groupBy("label").agg(
+        the broadcast side of every scoring pass. Built from the
+        unordered cells: a global sort under the collect would cost a
+        range exchange for nothing."""
+        return self._cells().groupBy("label").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "mean_dim"))),
                 lambda x: x["mean_dim"],
@@ -112,9 +140,9 @@ class EmbeddingSet:
         scored = (
             self.df.withColumnRenamed(lab, "label")
             .join(F.broadcast(self.centroids()), "label")
-            .withColumn("dot", F.expr(_dot("ce", self.vec_col)))
-            .withColumn("cn", F.expr(_norm("ce")))
-            .withColumn("en", F.expr(_norm(self.vec_col)))
+            .withColumn("dot", F.expr(dot_sql("ce", self.vec_col)))
+            .withColumn("cn", F.expr(norm_sql("ce")))
+            .withColumn("en", F.expr(norm_sql(self.vec_col)))
             .select(
                 "label",
                 F.col(self.id_col),
@@ -129,45 +157,55 @@ class EmbeddingSet:
             .orderBy("label", "rk")
         )
 
-    def label_audit(
-        self, anchors: int = 100, k: int = 5, salt: str = "a166-"
-    ) -> DataFrame:
-        """kNN label-noise audit (q166): for a deterministic FIXED-COUNT
-        anchor set (the ``anchors`` rows with the smallest portable hash
-        — a TakeOrderedAndProject, no global sort), exact cosine k-NN
-        majority vote vs own label.
-        Returns (q_id, own_label, maj_label, maj_votes, mislabeled).
-        The anchor side broadcasts; the table is scanned once; per-
-        anchor top-k is WindowGroupLimit-capped. A fixed COUNT (not a
-        fraction) keeps the audit linear in table size: work is
-        |anchors| x |rows| with |anchors| constant."""
-        lab = self._require_label("label_audit")
+    def _scores(self, q: DataFrame, *extra) -> DataFrame:
+        """Cosine of every (q_id, qe, ...) row of the small frame ``q``
+        against every other vector of this set: (q_id, *extra, id,
+        cosine). ``q`` broadcasts; the set streams once."""
         did, vec = self.id_col, self.vec_col
-        h = salted_h31(did, salt)
-        anchor_df = (
-            self.df.orderBy(h, F.col(did))
-            .limit(anchors)
-            .select(
-                F.col(did).alias("q_id"),
-                F.col(vec).alias("qe"),
-                F.col(lab).alias("own_label"),
-            )
-        )
-        scored = (
-            F.broadcast(anchor_df)
+        return (
+            F.broadcast(q)
             .crossJoin(self.df)
             .filter(F.col(did) != F.col("q_id"))
-            .withColumn("dot", F.expr(_dot("qe", vec)))
-            .withColumn("qn", F.expr(_norm("qe")))
-            .withColumn("en", F.expr(_norm(vec)))
+            .withColumn("dot", F.expr(dot_sql("qe", vec)))
+            .withColumn("qn", F.expr(norm_sql("qe")))
+            .withColumn("en", F.expr(norm_sql(vec)))
             .select(
                 "q_id",
-                "own_label",
+                *extra,
                 F.col(did),
-                F.col(lab).alias("n_label"),
                 (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"),
             )
         )
+
+    def _anchor_scores(self, op: str, anchors: int, salt: str) -> DataFrame:
+        """:meth:`_scores` of a deterministic FIXED-COUNT anchor set —
+        the ``anchors`` rows with the smallest salted portable hash, a
+        TakeOrderedAndProject, no global sort: (q_id, own_label, id,
+        n_label, cosine). A fixed COUNT (not a fraction) keeps the
+        audits linear in table size: work is |anchors| x |rows|."""
+        lab = self._require_label(op)
+        did = self.id_col
+        anchor_df = (
+            self.df.orderBy(salted_h31(did, salt), F.col(did))
+            .limit(anchors)
+            .select(
+                F.col(did).alias("q_id"),
+                F.col(self.vec_col).alias("qe"),
+                F.col(lab).alias("own_label"),
+            )
+        )
+        return self._scores(anchor_df, "own_label", F.col(lab).alias("n_label"))
+
+    def label_audit(
+        self, anchors: int = 100, k: int = 5, salt: str = "a166-"
+    ) -> DataFrame:
+        """kNN label-noise audit (q166): for a fixed-count anchor set
+        (see :meth:`_anchor_scores`), exact cosine k-NN majority vote
+        vs own label.
+        Returns (q_id, own_label, maj_label, maj_votes, mislabeled).
+        Per-anchor top-k is WindowGroupLimit-capped."""
+        did = self.id_col
+        scored = self._anchor_scores("label_audit", anchors, salt)
         wk = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col(did))
         votes = (
             scored.withColumn("rk", F.row_number().over(wk))
@@ -190,41 +228,16 @@ class EmbeddingSet:
         )
 
     def hard_negatives(self, anchors: int = 20, salt: str = "hn-") -> DataFrame:
-        """Triplet mining (q223): for each of a deterministic FIXED-COUNT
-        anchor set, the most-similar vector with a DIFFERENT label (the
-        hardest negative) next to the most-similar SAME-label vector
-        (the nearest positive) and the contrastive margin between them.
+        """Triplet mining (q223): for each of a fixed-count anchor set
+        (see :meth:`_anchor_scores`), the most-similar vector with a
+        DIFFERENT label (the hardest negative) next to the most-similar
+        SAME-label vector (the nearest positive) and the contrastive
+        margin between them.
         Returns (q_id, own_label, neg_id, neg_label, neg_cosine, pos_id,
-        pos_cosine, margin). Same scale shape as :meth:`label_audit`:
-        broadcast anchors, one streamed pass, per-anchor top-1 capped
-        map-side by the partial WindowGroupLimit."""
-        lab = self._require_label("hard_negatives")
-        did, vec = self.id_col, self.vec_col
-        h = salted_h31(did, salt)
-        anchor_df = (
-            self.df.orderBy(h, F.col(did))
-            .limit(anchors)
-            .select(
-                F.col(did).alias("q_id"),
-                F.col(vec).alias("qe"),
-                F.col(lab).alias("own_label"),
-            )
-        )
-        scored = (
-            F.broadcast(anchor_df)
-            .crossJoin(self.df)
-            .filter(F.col(did) != F.col("q_id"))
-            .withColumn("dot", F.expr(_dot("qe", vec)))
-            .withColumn("qn", F.expr(_norm("qe")))
-            .withColumn("en", F.expr(_norm(vec)))
-            .select(
-                "q_id",
-                "own_label",
-                F.col(did),
-                F.col(lab).alias("n_label"),
-                (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"),
-            )
-        )
+        pos_cosine, margin). Per-anchor top-1 is capped map-side by the
+        partial WindowGroupLimit."""
+        did = self.id_col
+        scored = self._anchor_scores("hard_negatives", anchors, salt)
         wk = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col(did))
         neg = (
             scored.filter(F.col("n_label") != F.col("own_label"))
@@ -270,58 +283,45 @@ class EmbeddingSet:
         (q54's shape): query side broadcasts, candidates stream, ranks
         are WindowGroupLimit-capped. ``queries`` needs the same id/vec
         column names. Returns (q_id, id, cosine, rank)."""
-        did, vec = self.id_col, self.vec_col
+        did = self.id_col
         q = queries.select(
-            F.col(did).alias("q_id"), F.col(vec).alias("qe")
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(self.df)
-            .filter(F.col(did) != F.col("q_id"))
-            .withColumn("dot", F.expr(_dot("qe", vec)))
-            .withColumn("qn", F.expr(_norm("qe")))
-            .withColumn("en", F.expr(_norm(vec)))
-            .select(
-                "q_id",
-                F.col(did),
-                (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"),
-            )
+            F.col(did).alias("q_id"), F.col(self.vec_col).alias("qe")
         )
         w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col(did))
         return (
-            scored.withColumn("rank", F.row_number().over(w))
+            self._scores(q)
+            .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .orderBy("q_id", "rank")
         )
 
     def retrieval_quality(self, queries: DataFrame, k: int = 10) -> DataFrame:
         """Exact nDCG@k of cosine retrieval against label relevance
-        (q184's readout, generalized): rank this set against each query
-        vector, score a neighbor as relevant when it shares the query's
-        label, fold the exact log2-discount DCG in rank order, and
-        normalize by the literal prefix-sum IDCG. Requires
-        ``label_col`` on both frames. Returns (q_id, n_rel, ndcg)."""
-        from .queries.llm import _NDCG_P, _NDCG_W, _dlit
-
+        (q184): rank this set against each query vector, score a
+        neighbor as relevant when it shares the query's label, fold the
+        exact log2-discount DCG in rank order, and normalize by the
+        literal prefix-sum IDCG. Requires ``label_col`` on both frames.
+        Returns (q_id, n_rel, ndcg)."""
         label = self._require_label("retrieval_quality")
         if k > len(_NDCG_W):
             raise ValueError(f"k={k} exceeds the precomputed discount table ({len(_NDCG_W)})")
         w_lit = "array(" + ", ".join(_dlit(w, "power") for w in _NDCG_W[:k]) + ")"
         p_lit = "array(" + ", ".join(_dlit(p, "power") for p in _NDCG_P[: k + 1]) + ")"
-        # topk is |queries| x k rows — THAT is the broadcast side; the
-        # set's (id, label) projection streams (broadcasting self.df
-        # would ship the whole vector table's labels to every executor)
-        topk = self.topk_similar(queries, k).join(
-            F.broadcast(
-                queries.select(
-                    F.col(self.id_col).alias("q_id"), F.col(label).alias("ql")
-                )
-            ),
-            "q_id",
-        )
+        # the |queries| x k top-k rows stream and both label lookups
+        # broadcast, so the q_id grouping below reuses the rank
+        # window's partitioning instead of adding an exchange; the
+        # set-side lookup ships two scalar columns per vector
         rel = (
-            self.df.select(self.id_col, label)
-            .join(F.broadcast(topk), self.id_col)
+            self.topk_similar(queries, k)
+            .join(
+                F.broadcast(
+                    queries.select(
+                        F.col(self.id_col).alias("q_id"), F.col(label).alias("ql")
+                    )
+                ),
+                "q_id",
+            )
+            .join(F.broadcast(self.df.select(self.id_col, label)), self.id_col)
             .select(
                 "q_id",
                 "rank",
@@ -391,84 +391,67 @@ class EmbeddingSet:
     def projection_audit(
         self, d_in: int = 64, d_out: int = 16, sample: int = 128
     ) -> DataFrame:
-        """JL ±1-projection distortion audit over this set (q288's
-        shape, generic over column names/dimensions; the pair set is a
-        fixed top-``sample``-by-hash grid). See :func:`jl_distortion`."""
-        return jl_distortion(
-            self.df, self.id_col, self.vec_col, d_in=d_in, d_out=d_out, sample=sample
+        """Johnson-Lindenstrauss ±1-projection distortion audit (q288),
+        generic over column names and dimensions. Components quantize
+        to the integer-micros grid once, the sign matrix is drawn from
+        md5 in Python and injected as ±element_at literal terms, and
+        the pair set is a FIXED top-``sample``-by-hash TakeOrdered —
+        sample*(sample-1)/2 pairs regardless of set size (the q288
+        scale contract). Returns (id_a, id_b, d2_orig, d2_proj,
+        ratio_micros)."""
+        df, id_col, vec_col = self.df, self.id_col, self.vec_col
+        h = h31(f"concat('jls-', CAST({id_col} AS STRING))")
+        s = (
+            df.select(id_col, vec_col, F.expr(f"({h})").alias("_h"))
+            .orderBy("_h", id_col)
+            .limit(sample)
+            .select(
+                F.col(id_col),
+                F.expr(
+                    f"transform({vec_col},"
+                    " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
+                ).alias("q"),
+            )
         )
-
-
-def jl_distortion(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    d_in: int = 64,
-    d_out: int = 16,
-    sample: int = 128,
-) -> DataFrame:
-    """Johnson-Lindenstrauss ±1-projection distortion audit, generic
-    over column names and dimensions — q288 generalized the way
-    retrieval_quality generalizes q184. Components quantize to the
-    integer-micros grid once, the sign matrix is drawn from md5 in
-    Python and injected as ±element_at literal terms, and the pair set
-    is a FIXED top-``sample``-by-hash TakeOrdered — sample*(sample-1)/2
-    pairs regardless of corpus size (the q288 scale contract). Returns
-    (id_a, id_b, d2_orig, d2_proj, ratio_micros)."""
-    from .queries.prep import _jl_y_sql
-
-    h = h31(f"concat('jls-', CAST({id_col} AS STRING))")
-    s = (
-        df.select(id_col, vec_col, F.expr(f"({h})").alias("_h"))
-        .orderBy("_h", id_col)
-        .limit(sample)
-        .select(
-            F.col(id_col),
-            F.expr(
-                f"transform({vec_col},"
-                " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-            ).alias("q"),
+        p = s.select(
+            id_col,
+            "q",
+            *[
+                F.expr(_jl_y_sql(i, "q", False, d_in=d_in)).alias(f"y{i}")
+                for i in range(d_out)
+            ],
+            F.lit(1).alias("k"),
         )
-    )
-    p = s.select(
-        id_col,
-        "q",
-        *[
-            F.expr(_jl_y_sql(i, "q", False, d_in=d_in)).alias(f"y{i}")
-            for i in range(d_out)
-        ],
-        F.lit(1).alias("k"),
-    )
-    a = p.select(
-        F.col(id_col).alias("id_a"),
-        F.col("q").alias("qa"),
-        *[F.col(f"y{i}").alias(f"ya{i}") for i in range(d_out)],
-        "k",
-    )
-    b = p.select(
-        F.col(id_col).alias("id_b"),
-        F.col("q").alias("qb"),
-        *[F.col(f"y{i}").alias(f"yb{i}") for i in range(d_out)],
-        "k",
-    )
-    d2o = (
-        "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    d2p = " + ".join(f"(ya{i} - yb{i}) * (ya{i} - yb{i})" for i in range(d_out))
-    return (
-        a.join(b, "k")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"CAST({d2o} AS BIGINT)").alias("d2_orig"),
-            F.expr(f"CAST({d2p} AS BIGINT)").alias("d2_proj"),
-            F.expr(
-                f"CAST(CASE WHEN {d2o} = 0 THEN NULL"
-                f" ELSE floor(1000000.0 * (CAST({d2p} AS DOUBLE) / {d_out}.0)"
-                f" / CAST({d2o} AS DOUBLE)) END AS BIGINT)"
-            ).alias("ratio_micros"),
+        a = p.select(
+            F.col(id_col).alias("id_a"),
+            F.col("q").alias("qa"),
+            *[F.col(f"y{i}").alias(f"ya{i}") for i in range(d_out)],
+            "k",
         )
-        .orderBy("id_a", "id_b")
-    )
+        b = p.select(
+            F.col(id_col).alias("id_b"),
+            F.col("q").alias("qb"),
+            *[F.col(f"y{i}").alias(f"yb{i}") for i in range(d_out)],
+            "k",
+        )
+        d2o = (
+            "aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)),"
+            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+        )
+        d2p = " + ".join(f"(ya{i} - yb{i}) * (ya{i} - yb{i})" for i in range(d_out))
+        return (
+            a.join(b, "k")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                F.expr(f"CAST({d2o} AS BIGINT)").alias("d2_orig"),
+                F.expr(f"CAST({d2p} AS BIGINT)").alias("d2_proj"),
+                F.expr(
+                    f"CAST(CASE WHEN {d2o} = 0 THEN NULL"
+                    f" ELSE floor(1000000.0 * (CAST({d2p} AS DOUBLE) / {d_out}.0)"
+                    f" / CAST({d2o} AS DOUBLE)) END AS BIGINT)"
+                ).alias("ratio_micros"),
+            )
+            .orderBy("id_a", "id_b")
+        )

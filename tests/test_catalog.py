@@ -338,3 +338,34 @@ def test_bucketed_marker_layout_roundtrip(spark, tmp_path):
         assert a == b
     finally:
         spark.sql("DROP TABLE IF EXISTS bucketed_probe")
+
+
+def test_star_schema_memo_is_per_session(spark, sf_dir):
+    """The table loader's memo belongs to one session: a sibling
+    session gets its own temp views (the views of the first session do
+    not exist there), repeat loads in one session are cache hits, and
+    a session that loaded a table is collectable once dropped."""
+    import gc
+    import weakref
+
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import (
+        register_star_schema,
+    )
+
+    other = spark.newSession()
+    load_table(other, sf_dir, "region")
+    dropped = weakref.ref(other)
+    del other
+
+    register_star_schema(spark, sf_dir)
+    # creating sib also moves pyspark's own RDD.toDF closure, which
+    # holds the most recently created session, off `other`
+    sib = spark.newSession()
+    register_star_schema(sib, sf_dir)
+    want = spark.sql("SELECT count(*) FROM lineitem").collect()[0][0]
+    assert sib.sql("SELECT count(*) FROM lineitem").collect()[0][0] == want
+
+    assert load_table(spark, sf_dir, "nation") is load_table(spark, sf_dir, "nation")
+
+    gc.collect()
+    assert dropped() is None

@@ -8,7 +8,7 @@ rests on.
 
 from __future__ import annotations
 
-from decimal import Decimal
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -19,6 +19,7 @@ from dicom_metadata_extractor_serverless_datalake_spark.queries.base import (
     _n_limbs,
     davg,
     dsum,
+    dsum_expr,
     dsum_limbs,
     dsum_merge,
 )
@@ -68,51 +69,61 @@ def test_single_level_matches_decimal(spark, max_abs, rows):
 
 
 @pytest.mark.parametrize("max_abs", [None, 4e3, 1e7])
-def test_sql_string_path_equals_column_path(spark, max_abs):
-    """The SQL-string fast path (one F.expr parse per aggregate — the
-    round-12 construction-cost optimization) must produce bit-identical
-    results to the Column-operator path at every limb width, for
-    dsum/davg and for composite expressions, signs and boundary values
-    included."""
+def test_sql_path_boundary_rows_match_decimal(spark, max_abs):
+    """Hand-picked boundary rows at every limb width — signs, half-unit
+    values, a composite expression, and a value whose scaled form
+    straddles the 2^20 limb boundary — must sum bit-exactly to the
+    Decimal reference through dsum/davg and through dsum_limbs +
+    dsum_merge."""
     rows = [
-        (0, 1234.56, 0.1, 0.08),
-        (0, -999999.99, 0.0, 0.0),
-        (1, 0.005, 0.9, 0.99),
-        (1, 1048575.99, 0.5, 0.5),  # straddles the 2^20 limb boundary scaled
-        (2, -0.005, 1.0, 0.0),
-        (2, 3999.99, 0.25, 0.125),
+        (0, "1234.56", "0.1"),
+        (0, "-999999.99", "0.0"),
+        (1, "0.005", "0.9"),
+        (1, "1048575.99", "0.5"),  # straddles the 2^20 limb boundary scaled
+        (2, "-0.005", "1.0"),
+        (2, "3999.99", "0.25"),
     ]
-    df = spark.createDataFrame(rows, "g int, v double, d double, t double")
-    comp_sql = "v * (1 - d)"
-    comp_col = F.col("v") * (1 - F.col("d"))
-    got_s = (
+    df = spark.createDataFrame(
+        [(g, float(v), float(d)) for g, v, d in rows], "g int, v double, d double"
+    )
+    want_s, want_cs, n = {}, {}, {}
+    for g, v, d in rows:
+        # scale 2 rounds the half-unit rows half away from zero
+        cents = Decimal(v).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
+        want_s[g] = want_s.get(g, Decimal(0)) + cents
+        # every product has <= 4 true decimals, so scale 4 is exact
+        want_cs[g] = want_cs.get(g, Decimal(0)) + Decimal(v) * (1 - Decimal(d))
+        n[g] = n.get(g, 0) + 1
+    got = (
         df.groupBy("g")
         .agg(
             dsum("v", "s", max_abs=max_abs),
-            dsum(comp_sql, "cs", 4, max_abs=max_abs),
+            dsum("v * (1 - d)", "cs", 4, max_abs=max_abs),
             davg("v", "a", max_abs=max_abs),
         )
-        .orderBy("g")
         .collect()
     )
-    got_c = (
-        df.groupBy("g")
-        .agg(
-            dsum(F.col("v"), "s", max_abs=max_abs),
-            dsum(comp_col, "cs", 4, max_abs=max_abs),
-            davg(F.col("v"), "a", max_abs=max_abs),
-        )
-        .orderBy("g")
-        .collect()
-    )
-    assert [tuple(r) for r in got_s] == [tuple(r) for r in got_c]
-    # two-level: string-input limbs + merge == Column-input limbs + merge
-    lv1_s = df.groupBy("g").agg(*dsum_limbs("v", "x", 2, max_abs=max_abs))
-    lv1_c = df.groupBy("g").agg(*dsum_limbs(F.col("v"), "x", 2, max_abs=max_abs))
-    assert lv1_s.columns == lv1_c.columns
-    ms = lv1_s.groupBy().agg(dsum_merge("x", "s", 2, max_abs=max_abs)).collect()
-    mc = lv1_c.groupBy().agg(dsum_merge("x", "s", 2, max_abs=max_abs)).collect()
-    assert [tuple(r) for r in ms] == [tuple(r) for r in mc]
+    assert {r.g: (r.s, r.cs, r.a) for r in got} == {
+        g: (float(want_s[g]), float(want_cs[g]), float(want_s[g]) / n[g]) for g in want_s
+    }
+    lv1 = df.groupBy("g").agg(*dsum_limbs("v", "x", 2, max_abs=max_abs))
+    (merged,) = lv1.groupBy().agg(dsum_merge("x", "s", 2, max_abs=max_abs)).collect()
+    assert merged.s == float(sum(want_s.values()))
+
+
+def test_non_string_input_raises_type_error(spark):
+    """The exact-sum family takes trusted SQL text only: a Column (or
+    any other non-str) raises TypeError instead of taking a second
+    code path."""
+    for call in (
+        lambda: dsum(F.col("v"), "s"),
+        lambda: davg(F.col("v"), "a"),
+        lambda: dsum_expr(F.col("v")),
+        lambda: dsum_limbs(F.col("v"), "x"),
+        lambda: dsum_merge(F.col("x"), "s"),
+    ):
+        with pytest.raises(TypeError, match="SQL expression string"):
+            call()
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])

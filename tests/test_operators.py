@@ -1333,3 +1333,34 @@ def test_ams_sketch_only_entry_point(spark):
     assert fast["f2_est"] > 0.0
     again = corpus.f2_moment(hash_fn="fast").collect()[0]
     assert fast == again
+
+
+def test_no_module_outside_queries_imports_queries():
+    """Layering: the facades, operators, sources and every other package
+    module outside ``queries/`` import nothing from ``queries/`` — the
+    corpus calls into them, never the reverse. Imports inside function
+    bodies count too."""
+    import ast
+    import pathlib
+
+    import dicom_metadata_extractor_serverless_datalake_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "queries":
+            continue
+        here = (pkg.__name__, *rel.parts[:-1])
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = here[: len(here) - node.level + 1] if node.level else ()
+                mod = ".".join((*base, node.module) if node.module else base)
+                targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(t.split(".")[:2] == [pkg.__name__, "queries"] for t in targets):
+                bad.append(f"{rel}:{node.lineno}")
+    assert not bad, f"modules outside queries/ import queries/: {bad}"

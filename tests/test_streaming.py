@@ -772,7 +772,7 @@ def test_bootstrap_stream_recovery_from_checkpoint(spark, sf_dir, tmp_path_facto
     from pyspark.sql import functions as F
 
     from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import QUERIES
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.quality import (
+    from dicom_metadata_extractor_serverless_datalake_spark.pipeline import (
         bootstrap_ci_tail,
         bootstrap_rep_frame,
     )

@@ -1,6 +1,12 @@
 """EmbeddingSet facade: each method must agree with the corpus query
-it packages (q172/q173/q166/q54) on the same data, and stay generic
-over column names."""
+it packages on the same data, and stay generic over column names.
+
+q172/q173/q166/q223/q184/q216/q288 are registered as calls to these
+methods (the facade is the one body), so their equality tests pin that
+a raw parquet read, the facade defaults and the query's registered
+parameters give the query's rows; their oracle tests in test_corpus.py
+pin the body itself. q54 keeps its own body (a headline query), so
+test_topk_matches_q54 cross-checks two independent builds."""
 
 import pytest
 from pyspark.sql import functions as F

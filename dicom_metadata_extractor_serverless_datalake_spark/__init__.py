@@ -12,9 +12,19 @@ This package re-expresses that dataflow Spark-first:
                   search, text analysis, multimodal column plumbing
 - ``queries``   : the t2 correctness corpus (Spark callable + DuckDB oracle SQL)
 - ``streaming`` : Structured Streaming ingest (format("dicom")) + windowed aggregations
+- ``pyworker``  : Python-worker set-up: skip re-reading unchanged zip archives per task
 """
 
 __version__ = "0.1.0"
+
+from pyspark import SparkFiles as _SparkFiles  # noqa: E402
+
+if _SparkFiles._is_running_on_worker:
+    # set by pyspark's setup_spark_files before any UDF is unpickled, so
+    # this runs once per Python worker process and never in the driver
+    from .pyworker import install_zip_guard
+
+    install_zip_guard()
 
 from .api import DicomLake  # noqa: F401,E402
 from .cloud import cloud_conf, cloud_session  # noqa: F401,E402

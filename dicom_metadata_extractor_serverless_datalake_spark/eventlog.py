@@ -17,8 +17,10 @@ an event-time column, and an event-type column:
     log.cv_folds(folds=3, embargo_hours=6)      # purged walk-forward CV
 
 Those corpus queries call these methods; this module imports nothing
-from ``queries/`` (``_dlit`` comes from operators/ann.py, and the Holt
-update ``_hw_update`` lives here, where q212's oracle imports it).
+from ``queries/`` (``_dlit`` comes from operators/ann.py). The SQL text
+the oracles share lives here and they import it: the Holt update
+``_hw_update`` (q212), the cents sum ``_cents_sum`` (q212/q213) and the
+autocorrelation ``_ACF_EXPR`` (q189).
 
 Every method keeps the corpus queries' exactness and scale shapes:
 windows partition by the user key (never global), duration/boundary
@@ -35,6 +37,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .operators.ann import _dlit
+
+# The lag-k autocorrelation over the (sxy, sh, st, s1, s2, n, mu, lag)
+# moments, floored to micros: one shared-tree IEEE division, the same
+# SQL text in Spark and in q189's DuckDB oracle.
+_ACF_EXPR = (
+    "CAST(floor(1000000.0 * ("
+    "(CAST(sxy AS DOUBLE) - mu * (CAST(sh AS DOUBLE) + CAST(st AS DOUBLE))"
+    " + CAST(n - lag AS DOUBLE) * mu * mu)"
+    " / (CAST(s2 AS DOUBLE) - 2.0 * mu * CAST(s1 AS DOUBLE)"
+    " + CAST(n AS DOUBLE) * mu * mu))) AS BIGINT)"
+)
+
+
+def _cents_sum(value_col: str) -> str:
+    """The exact sum of ``value_col`` in integer cents as one SQL
+    aggregate, the same text in Spark and in the q212/q213 oracles."""
+    return (
+        f"CAST(SUM(CAST(CAST({value_col} AS DECIMAL(28,2)) * 100 AS BIGINT))"
+        " AS BIGINT)"
+    )
 
 
 def _hw_update(alpha_lit: str, beta_lit: str, x: str, l: str, b: str, e: str):
@@ -277,21 +299,9 @@ class EventLog:
         calendar-sized, so the lead() window and moment sums are
         dimension-scale; the only data-sized work is the per-day
         aggregate (map-side partial, one shuffle on day)."""
-        acf = (
-            "CAST(floor(1000000.0 * ("
-            "(CAST(sxy AS DOUBLE) - mu * (CAST(sh AS DOUBLE) + CAST(st AS DOUBLE))"
-            " + CAST(n - lag AS DOUBLE) * mu * mu)"
-            " / (CAST(s2 AS DOUBLE) - 2.0 * mu * CAST(s1 AS DOUBLE)"
-            " + CAST(n AS DOUBLE) * mu * mu))) AS BIGINT)"
-        )
         daily = self.df.groupBy(
             F.to_date(F.col(self.ts_col).cast("timestamp")).alias("day")
-        ).agg(
-            F.expr(
-                f"CAST(SUM(CAST(CAST({value_col} AS DECIMAL(28,2)) * 100 AS BIGINT))"
-                " AS BIGINT) div 100"
-            ).alias("x")
-        )
+        ).agg(F.expr(f"{_cents_sum(value_col)} div 100").alias("x"))
         w = Window.orderBy("day")
         ord_df = daily.select(
             "x", *[F.lead("x", k).over(w).alias(f"x{k}") for k in lags]
@@ -321,7 +331,7 @@ class EventLog:
             .select(
                 "lag",
                 F.col("n").cast("long").alias("n_days"),
-                F.expr(acf).alias("acf_micros"),
+                F.expr(_ACF_EXPR).alias("acf_micros"),
             )
             .orderBy("lag")
         )
@@ -438,12 +448,7 @@ class EventLog:
         """Exact daily value totals per event type (integer cents)."""
         return self.df.groupBy(
             self.type_col, F.expr(f"CAST({self.ts_col} AS DATE)").alias("day")
-        ).agg(
-            F.expr(
-                f"CAST(SUM(CAST(CAST({value_col} AS DECIMAL(28,2)) * 100"
-                f" AS BIGINT)) AS BIGINT)"
-            ).alias("c")
-        )
+        ).agg(F.expr(_cents_sum(value_col)).alias("c"))
 
     def holt_trend(
         self, alpha: float = 0.2, beta: float = 0.1, horizon: int = 7

@@ -100,18 +100,6 @@ def bpe_merges(
     ).orderBy("merge_round")
 
 
-def _cascade_sql(var: str, merges: list[tuple[str, str]]) -> str:
-    """The trained merge cascade as ONE nested scalar expression over a
-    delimited-symbol word: character split, then each merge in training
-    order as an engine-native L->R non-overlapping replace — exactly
-    the rewrite :func:`bpe_merges` applied to the vocab, so encoding is
-    greedy-BPE-consistent with training by construction."""
-    expr = f"regexp_replace({var}, '(.)', '<$1>')"
-    for a, b in merges:
-        expr = f"replace({expr}, '<{a}><{b}>', '<{a}{b}>')"
-    return expr
-
-
 def bpe_encode(
     docs: DataFrame,
     merges,

@@ -34,7 +34,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..eventlog import EventLog, _hw_update
+from ..eventlog import EventLog, _cents_sum, _hw_update
 from ..operators.ann import _dlit
 from ..operators.cachetrack import tracked_persist
 from .base import query, t
@@ -309,7 +309,7 @@ def q210(spark: SparkSession, sf: str) -> DataFrame:
 # to ~1e18; past that, rescale the series before folding.
 # --------------------------------------------------------------------------
 
-_HW_CENTS = "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT)"
+_HW_CENTS = _cents_sum("value")
 
 
 def _q212_oracle() -> str:

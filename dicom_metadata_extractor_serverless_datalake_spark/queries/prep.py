@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 from ..eventlog import EventLog
 from ..operators.ann import dot_sql, norm_sql
 from ..operators.dedup import h31
-from ..vectors import EmbeddingSet, _jl_y_sql
+from ..vectors import _SCALE, EmbeddingSet, _jl_y_sql
 from .base import query, t
 from .llm import duck_h31
 
@@ -382,9 +382,6 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
 # inside whole-stage codegen.
 # --------------------------------------------------------------------------
 
-_PROTO_SCALE = 1_000_000
-
-
 @query(
     "q172_class_prototypes",
     oracle=f"""
@@ -394,11 +391,11 @@ _PROTO_SCALE = 1_000_000
       FROM embeddings
     )
     SELECT label, dim,
-           CAST(SUM(CAST(floor(x * {_PROTO_SCALE}.0) AS BIGINT)) AS BIGINT)
+           CAST(SUM(CAST(floor(x * {_SCALE}.0) AS BIGINT)) AS BIGINT)
              AS sum_scaled,
            COUNT(*) AS n_vals,
-           CAST(SUM(CAST(floor(x * {_PROTO_SCALE}.0) AS BIGINT)) AS DOUBLE)
-             / (CAST(COUNT(*) AS DOUBLE) * {_PROTO_SCALE}.0) AS mean_dim
+           CAST(SUM(CAST(floor(x * {_SCALE}.0) AS BIGINT)) AS DOUBLE)
+             / (CAST(COUNT(*) AS DOUBLE) * {_SCALE}.0) AS mean_dim
     FROM v GROUP BY label, dim
     ORDER BY label, dim
     """,
@@ -432,8 +429,8 @@ _OUTLIER_K = 3
     ),
     proto AS (
       SELECT label, dim,
-             CAST(SUM(CAST(floor(x * {_PROTO_SCALE}.0) AS BIGINT)) AS DOUBLE)
-               / (CAST(COUNT(*) AS DOUBLE) * {_PROTO_SCALE}.0) AS mean_dim
+             CAST(SUM(CAST(floor(x * {_SCALE}.0) AS BIGINT)) AS DOUBLE)
+               / (CAST(COUNT(*) AS DOUBLE) * {_SCALE}.0) AS mean_dim
       FROM v GROUP BY label, dim
     ),
     cent AS (
@@ -538,8 +535,8 @@ def q174(spark: SparkSession, sf: str) -> DataFrame:
     ),
     proto AS (
       SELECT label, dim,
-             CAST(SUM(CAST(floor(x * {_PROTO_SCALE}.0) AS BIGINT)) AS DOUBLE)
-               / (CAST(COUNT(*) AS DOUBLE) * {_PROTO_SCALE}.0) AS mean_dim
+             CAST(SUM(CAST(floor(x * {_SCALE}.0) AS BIGINT)) AS DOUBLE)
+               / (CAST(COUNT(*) AS DOUBLE) * {_SCALE}.0) AS mean_dim
       FROM v GROUP BY label, dim
     ),
     cent AS (
@@ -577,22 +574,11 @@ def q174(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q175(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
-    v = emb.select(
-        "label", F.posexplode("embedding").alias("dim", "xf")
-    ).select("label", "dim", F.col("xf").cast("double").alias("x"))
-    s = F.sum(F.floor(F.col("x") * _PROTO_SCALE))
-    proto = v.groupBy("label", "dim").agg(
-        (
-            s.cast("double")
-            / (F.count("*").cast("double") * F.lit(float(_PROTO_SCALE)))
-        ).alias("mean_dim")
+    cent = (
+        EmbeddingSet(emb, label_col="label")
+        .centroids()
+        .withColumnRenamed("label", "c_label")
     )
-    cent = proto.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "mean_dim"))),
-            lambda x: x["mean_dim"],
-        ).alias("ce")
-    ).select(F.col("label").alias("c_label"), "ce")
     scored = (
         emb.select("vec_id", F.col("label").alias("true_label"), "embedding")
         .crossJoin(F.broadcast(cent))

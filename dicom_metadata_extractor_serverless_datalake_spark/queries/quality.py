@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..eventlog import EventLog
+from ..eventlog import _ACF_EXPR, EventLog
 from ..operators.ann import _dlit
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
@@ -375,15 +375,6 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
 # for a century of days (3e9^2 * 4e4 < 2^63 fails — concretely,
 # |x_day| <= 4.8e8 dollars holds sum(x*x) < 9.2e18 over 40k days).
 # --------------------------------------------------------------------------
-
-_ACF_EXPR = (
-    "CAST(floor(1000000.0 * ("
-    "(CAST(sxy AS DOUBLE) - mu * (CAST(sh AS DOUBLE) + CAST(st AS DOUBLE))"
-    " + CAST(n - lag AS DOUBLE) * mu * mu)"
-    " / (CAST(s2 AS DOUBLE) - 2.0 * mu * CAST(s1 AS DOUBLE)"
-    " + CAST(n AS DOUBLE) * mu * mu))) AS BIGINT)"
-)
-
 
 @query(
     "q189_autocorrelation",

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import dsum, query, sql_query, t
+from .base import query, sql_query, t
 
 # --------------------------------------------------------------------------
 # q40 — string functions (shared dialect subset runs verbatim on both).

@@ -1122,8 +1122,8 @@ def test_q172_prototypes_partitioning_invariant(spark):
     yields bit-identical sums and means. Pin it by comparing the query
     over adversarial repartitionings of the same rows."""
     from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import QUERIES
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.prep import _PROTO_SCALE
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_table
+    from dicom_metadata_extractor_serverless_datalake_spark.vectors import _SCALE
 
     sf = "/root/testdata/sf0.01"
     base = QUERIES["q172_class_prototypes"].spark_fn(spark, sf).collect()
@@ -1134,7 +1134,7 @@ def test_q172_prototypes_partitioning_invariant(spark):
         v = df.select(
             "label", F.posexplode("embedding").alias("dim", "xf")
         ).select("label", "dim", F.col("xf").cast("double").alias("x"))
-        s = F.sum(F.floor(F.col("x") * _PROTO_SCALE))
+        s = F.sum(F.floor(F.col("x") * _SCALE))
         return (
             v.groupBy("label", "dim")
             .agg(
@@ -1142,7 +1142,7 @@ def test_q172_prototypes_partitioning_invariant(spark):
                 F.count("*").alias("n_vals"),
                 (
                     s.cast("double")
-                    / (F.count("*").cast("double") * F.lit(float(_PROTO_SCALE)))
+                    / (F.count("*").cast("double") * F.lit(float(_SCALE)))
                 ).alias("mean_dim"),
             )
             .orderBy("label", "dim")

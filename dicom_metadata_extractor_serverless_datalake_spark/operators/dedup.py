@@ -121,6 +121,15 @@ def shingle_tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return word_grams(spread_input(docs, key=id_col), id_col, text_col, 3, out="s")
 
 
+def shingle_digests(
+    tok: DataFrame, id_col: str = "doc_id", hash_fn: str = "portable"
+) -> DataFrame:
+    """Distinct (id, hs): the :func:`h31` digests of each doc's shingle
+    set, over the (id, s) frame of :func:`shingle_tokens` — the
+    exact-Jaccard side of the MinHash audits (q220/q240/q242/q251/q253)."""
+    return tok.select(id_col, F.expr(h31("s", hash_fn)).alias("hs")).distinct()
+
+
 def minhash_signatures(
     tok: DataFrame, id_col: str = "doc_id", hash_fn: str = "portable"
 ) -> DataFrame:

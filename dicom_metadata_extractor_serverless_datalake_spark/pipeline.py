@@ -45,6 +45,7 @@ from .operators.dedup import (
     minhash_signatures,
     neardup_pairs,
     salted_h31,
+    shingle_digests,
     shingle_tokens,
     snm_candidates,
     word_grams,
@@ -1161,7 +1162,7 @@ class TextCorpus:
         (no persist)."""
         did = self.id_col
         tok = shingle_tokens(self.df, did, self.text_col)
-        h = tok.select(did, F.expr(h31("s", hash_fn)).alias("hs")).distinct()
+        h = shingle_digests(tok, did, hash_fn)
         mh = minhash_signatures(tok, did, hash_fn)
         pairs = lsh_candidate_pairs(mh, did)
         sizes = h.groupBy(did).agg(F.countDistinct("hs").alias("n"))

@@ -39,16 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
-from ..operators.dedup import NUM_PERM, h31, shingle_tokens
+from ..operators.dedup import NUM_PERM, h31, shingle_digests, shingle_tokens
 from ..pipeline import TextCorpus
 from .base import query, t
 from .llm import _minhash_band_pairs, _minhash_pairs_cte, duck_h31
-
-
-def _shingle_hashes(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, hs): the portable digests of each doc's
-    3-gram shingle set — the exact-Jaccard side of the q52 audits."""
-    return shingle_tokens(docs).select("doc_id", F.expr(h31("s")).alias("hs")).distinct()
 
 
 # --------------------------------------------------------------------------
@@ -331,7 +325,7 @@ def _q240_oracle() -> str:
     doc="LSH band recall vs the exact-complete Jaccard>=0.8 pair set + reduction ratio",
 )
 def q240(spark: SparkSession, sf: str) -> DataFrame:
-    hd = _shingle_hashes(t(spark, sf, "documents"))
+    hd = shingle_digests(shingle_tokens(t(spark, sf, "documents")))
     sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
     hd2 = hd.join(sizes, "doc_id")
     a, b = hd2.alias("a"), hd2.alias("b")
@@ -472,7 +466,7 @@ def q242(spark: SparkSession, sf: str) -> DataFrame:
         F.expr(h31("concat('s242-', CAST(doc_id AS STRING))")) % 100
         < _Q242_SAMPLE_PCT
     )
-    hd = _shingle_hashes(docs)
+    hd = shingle_digests(shingle_tokens(docs))
     sizes = hd.groupBy("doc_id").agg(F.count("*").alias("n"))
     hd2 = hd.join(sizes, "doc_id")
     a, b = hd2.alias("a"), hd2.alias("b")
@@ -618,7 +612,7 @@ def _s_curve_frame(
 
     if docs is None:
         docs = t(spark, sf, "documents")
-    h = _shingle_hashes(docs)
+    h = shingle_digests(shingle_tokens(docs))
     pairs = _minhash_band_pairs(spark, sf, docs=docs)
     sizes = h.groupBy("doc_id").agg(F.countDistinct("hs").alias("n"))
     shared = (

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..eventlog import _ACF_EXPR, EventLog
+from ..eventlog import _ACF_EXPR, EventLog, _cents_sum
 from ..operators.ann import _dlit
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
@@ -381,7 +381,7 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS x
+             {_cents_sum("value")} // 100 AS x
       FROM events GROUP BY 1
     ),
     ord AS (
@@ -857,10 +857,10 @@ def q195(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q196_cusum_changepoint",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS (
       SELECT CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS x
+             {_cents_sum("value")} // 100 AS x
       FROM events GROUP BY 1
     ),
     ord AS (SELECT day, x, row_number() OVER (ORDER BY day) AS rn FROM daily),
@@ -888,9 +888,7 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
         t(spark, sf, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) div 100"
-            ).alias("x")
+            F.expr(f"{_cents_sum('value')} div 100").alias("x")
         )
     )
     p = daily.agg(
@@ -949,7 +947,7 @@ _TS_SLOPE = "CAST(xj - xi AS DOUBLE) / CAST(j - i AS DOUBLE)"
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS x
+             {_cents_sum("value")} // 100 AS x
       FROM events GROUP BY 1
     ),
     ord AS (SELECT x, row_number() OVER (ORDER BY day) AS i FROM daily),
@@ -980,9 +978,7 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
         t(spark, sf, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) div 100"
-            ).alias("x")
+            F.expr(f"{_cents_sum('value')} div 100").alias("x")
         )
     )
     ord_df = daily.select("x", F.row_number().over(Window.orderBy("day")).alias("i"))
@@ -1546,9 +1542,7 @@ def q281(spark: SparkSession, sf: str) -> DataFrame:
 # Reference delegates analytics to Athena (src/app.py:97-189).
 # --------------------------------------------------------------------------
 
-_MK_DAILY = (
-    "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT)"
-)
+_MK_DAILY = _cents_sum("value")
 
 
 def _q283_oracle() -> str:

@@ -10,12 +10,13 @@ is re-run MSCK + DLQ (README.md:139). Structured Streaming replaces
 that with watermarked incremental state; these queries pin that
 replacement's *results* to the same SQL the batch engine answers.
 
-Determinism: each run streams the events table through availableNow,
-lands in a uniquely-named in-memory sink, and the returned DataFrame
-aggregates that sink. The stateful queries (q84 dedup, q99 custom
-state, q100 session windows, q109 stream-stream interval join) split
-the source into event-time-ordered files and cap ``maxFilesPerTrigger``
-so the drain takes MULTIPLE micro-batches — watermark advance,
+Determinism: each query stages its table with ``_stage`` (contiguous
+ranges of one column in mtime-ordered files) and drains it with
+``_drain`` through availableNow into a uniquely-named in-memory sink on
+a scoped session; the returned DataFrame aggregates that sink. The
+stateful queries (q84 dedup, q99 custom state, q100 session windows,
+q109 stream-stream interval join, ...) read one file per trigger, so
+the drain takes MULTIPLE micro-batches — watermark advance,
 cross-batch state carry-over (session merge across batch boundaries,
 buffered join state matching later batches), and state eviction are on
 the certified path, not just single-batch semantics. Output still
@@ -29,142 +30,215 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..eventlog import _cents_sum
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
 from .base import query
 
 # --------------------------------------------------------------------------
-# shared plumbing
+# shared plumbing: one stager, one drain
 # --------------------------------------------------------------------------
 
 
-def _events_stream_src(
-    sf: str, copies: int = 1, time_splits: int = 1
-) -> tuple[str, float]:
-    """Materialize a stream-source dir; returns ``(dir, span_seconds)``
-    where span is the table's event-time extent (0.0 when not computed).
+@dataclass(frozen=True)
+class _Source:
+    """A staged stream-source dir of ``table`` rows. ``rows`` counts every
+    staged row (repeats and re-deliveries included); ``lo``/``hi`` are the
+    cut column's extent (None when the table is staged uncut)."""
 
-    ``copies`` > 1 plants genuine duplicates (every event arrives that
-    many times). ``time_splits`` > 1 slices the table into contiguous
-    event-time ranges, one file per (range, copy), so a
-    ``maxFilesPerTrigger=1`` reader replays the stream in event-time
-    order across multiple micro-batches with genuinely advancing
-    watermarks. File order is pinned with strictly increasing mtimes
-    (the file source orders pending files by modification time).
-    Handles both a single ``events.parquet`` file and a directory of
-    part files (the scale generator writes Spark output directories)."""
+    dir: str
+    table: str
+    rows: int
+    lo: Any = None
+    hi: Any = None
+
+
+def _stage(
+    sf: str,
+    table: str,
+    col: str | None = None,
+    k: int = 1,
+    deliver: Sequence[int] | None = None,
+    columns: list[str] | None = None,
+    where: Any = None,
+) -> _Source:
+    """Stage ``{sf}/{table}.parquet`` (a file or a dir of part files) as a
+    stream-source dir. The rows passing the pyarrow expression ``where``
+    are cut into ``k`` contiguous ranges of ``col``, the last range
+    inclusive of the max (integer columns cut with floor division,
+    timestamps with timedelta arithmetic), and written one file per entry
+    of ``deliver`` — slice indices, default ``range(k)``; a repeated index
+    plants duplicates or a late re-delivery. Empty slices are skipped.
+    Files get strictly increasing mtimes in delivery order (the file
+    source orders pending files by modification time), so a
+    ``maxFilesPerTrigger=1`` reader replays them in that order across
+    micro-batches with genuinely advancing watermarks. ``columns``
+    projects the written files. A table staged whole (no cut, filter,
+    projection or re-delivery) is copied part file by part file, so the
+    driver never decodes it."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf, f"{table}.parquet")
     src = tempfile.mkdtemp(prefix="spark_stream_src_")
-    path = os.path.join(sf, "events.parquet")
-    mtime = 1_000_000_000.0
-
-    def _stamp(dst: str) -> None:
-        nonlocal mtime
-        os.utime(dst, (mtime, mtime))
-        mtime += 2.0
-
-    if time_splits <= 1:
+    rows, mtime = 0, 1_000_000_000.0
+    if k == 1 and deliver is None and columns is None and where is None:
         parts = (
             sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
+                os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
             )
             if os.path.isdir(path)
             else [path]
         )
-        for i in range(copies):
-            for j, part in enumerate(parts):
-                dst = os.path.join(src, f"events_{i}_{j}.parquet")
-                shutil.copy(part, dst)
-                _stamp(dst)
-        return src, 0.0
+        for n, part in enumerate(parts):
+            dst = os.path.join(src, f"{table}_{n:03d}.parquet")
+            shutil.copy(part, dst)
+            os.utime(dst, (mtime, mtime))
+            mtime += 2.0
+            rows += pq.read_metadata(dst).num_rows
+        return _Source(src, table, rows)
 
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
 
-    table = pads.dataset(path, format="parquet").to_table()
-    ts = table.column("ts")
-    lo, hi = pc.min(ts).as_py(), pc.max(ts).as_py()
-    delta = hi - lo
-    span = delta.total_seconds() if hasattr(delta, "total_seconds") else float(delta)
-    for s in range(time_splits):
-        # slice s covers [lo + s/k * span, lo + (s+1)/k * span)
-        lo_b = lo + delta * s / time_splits
-        hi_b = lo + delta * (s + 1) / time_splits
-        mask = pc.and_(
-            pc.greater_equal(ts, lo_b),
-            pc.less(ts, hi_b) if s < time_splits - 1 else pc.less_equal(ts, hi_b),
-        )
-        chunk = table.filter(mask)
-        if chunk.num_rows == 0:
+    data = pads.dataset(path, format="parquet").to_table(
+        columns=None if columns is None else [*columns, col], filter=where
+    )
+    lo = hi = None
+    slices = [data]
+    if k > 1:
+        vals = data.column(col)
+        lo, hi = pc.min(vals).as_py(), pc.max(vals).as_py()
+        cut = [
+            lo + (hi - lo) * s // k if isinstance(lo, int) else lo + (hi - lo) * s / k
+            for s in range(k + 1)
+        ]
+        slices = [
+            data.filter(
+                pc.and_(
+                    pc.greater_equal(vals, cut[s]),
+                    pc.less(vals, cut[s + 1]) if s < k - 1 else pc.less_equal(vals, hi),
+                )
+            )
+            for s in range(k)
+        ]
+    if columns is not None:
+        slices = [chunk.select(columns) for chunk in slices]
+    for n, s in enumerate(range(k) if deliver is None else deliver):
+        if slices[s].num_rows == 0:
             continue
-        for i in range(copies):
-            dst = os.path.join(src, f"events_r{s}_{i}.parquet")
-            pq.write_table(chunk, dst)
-            _stamp(dst)
-    return src, span
+        dst = os.path.join(src, f"{table}_{n:03d}.parquet")
+        pq.write_table(slices[s], dst)
+        os.utime(dst, (mtime, mtime))
+        mtime += 2.0
+        rows += slices[s].num_rows
+    return _Source(src, table, rows, lo, hi)
 
 
 _ROWS_PER_STATE_PARTITION = 250_000
 
 
-def _state_partitions(spark) -> int | None:
-    """Scale-adaptive STATE partition count for a streaming drain
-    (guide §2: derive partitioning from input size, never a constant;
-    AQE cannot coalesce streaming plans). Sized from the staged
-    source's row count (the ``load_stream`` breadcrumb): one state
-    partition per ``_ROWS_PER_STATE_PARTITION`` source rows, floor 4 so tiny
-    test sources still exercise multi-partition state, capped at the
-    session's parallelism only from BELOW — large sources keep the
-    session's own shuffle parallelism (at 100 TB the cap never binds;
-    production jobs size this per stream and Spark pins it in the
-    checkpoint). Measured: 32 state partitions cost 1.3-1.5 s per
-    micro-batch on a 3.3k-row batch (state-store commit + task
-    scheduling per partition); 4-8 cost 0.8-0.9 s — the per-query
-    constant the r11 verdict flagged (#8)."""
-    rows = getattr(spark, "_graft_stream_src_rows", None)
-    if not rows:
-        return None
-    par = spark.sparkContext.defaultParallelism
-    return min(par, max(4, rows // _ROWS_PER_STATE_PARTITION + 1))
+def _drain(
+    spark: SparkSession,
+    src: _Source,
+    build: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+    mode: str = "append",
+    min_batches: int = 1,
+    start: Callable[[DataFrame, str], Any] | None = None,
+) -> DataFrame | None:
+    """Stream the staged ``src`` through ``build`` with an availableNow
+    trigger and return the drained memory sink (``mode`` output),
+    a frame of the scoped session below. ``start(stream, checkpoint)``
+    brings its own sink instead, and the return is None.
 
+    The stream runs on a scoped ``spark.newSession()`` (shared catalog,
+    cache and static frames, own SQLConf), so the caller's conf is never
+    touched. The scoped conf starts as a copy of the caller's runtime
+    conf, with one change for the drain: its shuffle partitions — the
+    stream's STATE partition count, pinned in the checkpoint when the
+    stream starts — are sized from the staged row count, since AQE
+    cannot coalesce streaming plans: one per
+    ``_ROWS_PER_STATE_PARTITION`` rows, floor 4 so tiny sources still
+    exercise multi-partition state, at most the default parallelism.
+    Measured: 32 state partitions cost 1.3-1.5 s per micro-batch on a
+    3.3k-row batch (state-store commit + task scheduling per partition);
+    4-8 cost 0.8-0.9 s.
 
-def _run_to_memory(stream_df: DataFrame, output_mode: str) -> tuple[str, int]:
-    """Drain a streaming frame into a fresh memory sink; returns the
-    sink table name and the number of micro-batches executed
-    (availableNow => the call is synchronous). Shuffle/state
-    partitions are sized to the staged source for the duration of the
-    drain (see _state_partitions) and restored after — the stream
-    captures the conf at start, so the temporary set cannot leak into
-    later batch plans."""
+    ``min_batches`` > 1 reads one file per trigger, and the drain must
+    take at least ``min_batches`` micro-batches. After the drain the
+    scoped shuffle partitions go back to the caller's, so the returned
+    frame plans as a frame of the caller would. The source and
+    checkpoint dirs are removed whether the drain succeeds or fails."""
+    from ..sources.tables import load_stream
+
     name = "stream_sink_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="spark_stream_ckpt_")
-    spark = stream_df.sparkSession
-    n_state = _state_partitions(spark)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        if n_state is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        scoped = spark.newSession()
+        mine, theirs = scoped.conf.getAll, spark.conf.getAll
+        for key in mine.keys() - theirs.keys():
+            scoped.conf.unset(key)
+        for key, value in theirs.items():
+            if mine.get(key) != value:
+                scoped.conf.set(key, value)
+        n_state = max(4, src.rows // _ROWS_PER_STATE_PARTITION + 1)
+        scoped.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(min(spark.sparkContext.defaultParallelism, n_state)),
         )
+        stream = build(
+            load_stream(
+                scoped,
+                src.dir,
+                src.table,
+                max_files_per_trigger=1 if min_batches > 1 else None,
+            )
+        )
+        if start is None:
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        else:
+            q = start(stream, ckpt)
         q.awaitTermination(600)
+        last = q.lastProgress
+        n_batches = int(last["batchId"]) + 1 if last else 0
+        assert n_batches >= min_batches, (
+            f"expected >= {min_batches} micro-batches, got {n_batches}"
+        )
+        scoped.conf.set(
+            "spark.sql.shuffle.partitions",
+            spark.conf.get("spark.sql.shuffle.partitions"),
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    last = q.lastProgress
-    n_batches = int(last["batchId"]) + 1 if last else 0
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return name, n_batches
+        shutil.rmtree(src.dir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return scoped.table(name) if start is None else None
+
+
+def _stateful(grouped, fn, out: str, state: str) -> DataFrame:
+    """``applyInPandasWithState`` in update mode without timeouts, the
+    shape of every custom-state drain below."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -184,17 +258,10 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> tuple[str, int]:
     category="streaming",
 )
 def q83(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.windows import tumbling_counts
 
-    src, _ = _events_stream_src(sf)
-    try:
-        name, _ = _run_to_memory(
-            tumbling_counts(load_stream(spark, src, "events")), "complete"
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("window_start", "event_type")
+    sink = _drain(spark, _stage(sf, "events"), tumbling_counts, "complete")
+    return sink.orderBy("window_start", "event_type")
 
 
 # --------------------------------------------------------------------------
@@ -220,25 +287,19 @@ def q83(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q84(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.windows import streaming_dedup
 
-    src, span = _events_stream_src(sf, copies=2, time_splits=3)
+    src = _stage(sf, "events", "ts", 3, deliver=(0, 0, 1, 1, 2, 2))
+    span = (src.hi - src.lo).total_seconds()
     delay = max(int(span / 3 + span * 0.1), 60)
-    try:
-        name, n_batches = _run_to_memory(
-            streaming_dedup(
-                load_stream(spark, src, "events", max_files_per_trigger=1),
-                watermark=f"{delay} seconds",
-            ),
-            "append",
-        )
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sink = _drain(
+        spark,
+        src,
+        lambda stream: streaming_dedup(stream, watermark=f"{delay} seconds"),
+        min_batches=3,
+    )
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        sink.groupBy("event_type")
         .agg(F.count("*").alias("n_unique_events"))
         .orderBy("event_type")
     )
@@ -266,47 +327,34 @@ def q84(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q85(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.upsert import read_snapshot, start_upsert_sink
 
-    src, _ = _events_stream_src(sf)
     snap = tempfile.mkdtemp(prefix="spark_stream_snap_")
-    ckpt = tempfile.mkdtemp(prefix="spark_stream_ckpt_")
-    try:
-        stream = load_stream(spark, src, "events")
-        # same source-sized state partitioning as _run_to_memory (the
-        # upsert's per-batch row_number window shuffles on user_id)
-        n_state = _state_partitions(spark)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            if n_state is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-            q = start_upsert_sink(
-                stream,
-                snapshot_path=snap,
-                key_cols=["user_id"],
-                order_col="ts",
-                checkpoint_path=ckpt,
-                available_now=True,
-            )
-            q.awaitTermination(600)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        snapshot = read_snapshot(spark, snap)
-        assert snapshot is not None
-        # materialize before the temp snapshot dir is removed
-        rows = snapshot.select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
-        out = tracked_persist(rows)
-        out.count()
-        return out.orderBy("user_id")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # the drain's scoped session sizes the upsert's per-batch row_number
+    # window shuffle on user_id like every other drain's state
+    _drain(
+        spark,
+        _stage(sf, "events"),
+        start=lambda stream, ckpt: start_upsert_sink(
+            stream,
+            snapshot_path=snap,
+            key_cols=["user_id"],
+            order_col="ts",
+            checkpoint_path=ckpt,
+            available_now=True,
+        ),
+    )
+    snapshot = read_snapshot(spark, snap)
+    assert snapshot is not None
+    rows = snapshot.select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_event_type"),
+        F.col("value").alias("last_value"),
+    )
+    out = tracked_persist(rows)
+    out.count()
+    return out.orderBy("user_id")
 
 
 # --------------------------------------------------------------------------
@@ -357,32 +405,22 @@ def _exact_totals_update(key, batches, state):
     category="streaming",
 )
 def q99(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _exact_totals_update,
-                outputStructType=_STATEFUL_OUT,
-                stateStructType=_STATEFUL_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.groupBy("user_id"),
+            _exact_totals_update,
+            _STATEFUL_OUT,
+            _STATEFUL_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     # each user's FINAL accumulator: n_events strictly increases per
     # emission, so max-per-user selects the last micro-batch's row
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.max_by("total_value", "n_events").alias("total_value"),
@@ -428,7 +466,6 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q100(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.windows import sessionized_counts
 
     # event-time-ordered slices, one file per micro-batch: sessions that
@@ -436,19 +473,14 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
     # state machine across batches (complete mode re-emits the full,
     # merged result at the final batch), not just computed within one
     # drain — the oracle equality certifies cross-batch session merge
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        name, n_batches = _run_to_memory(
-            sessionized_counts(
-                load_stream(spark, src, "events", max_files_per_trigger=1),
-                gap="10 minutes",
-            ),
-            "complete",
-        )
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("user_id", "session_start")
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: sessionized_counts(stream, gap="10 minutes"),
+        "complete",
+        min_batches=3,
+    )
+    return sink.orderBy("user_id", "session_start")
 
 
 # --------------------------------------------------------------------------
@@ -478,7 +510,6 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q109(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.joins import interval_join
 
     # 3 event-time-ordered micro-batches: click state buffered in batch
@@ -486,9 +517,7 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
     # watermark exceeds the 5-minute join upper bound, so no candidate
     # click is evicted before its match window closes — eviction of
     # older state across batches is exactly what this exercises)
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        ev = load_stream(spark, src, "events", max_files_per_trigger=1)
+    def joined(ev: DataFrame) -> DataFrame:
         clicks = ev.filter(F.col("event_type") == "click").select(
             F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("l_ts")
         )
@@ -497,7 +526,7 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
             "user_id",
             F.col("ts").alias("r_ts"),
         )
-        joined = interval_join(
+        return interval_join(
             clicks,
             purchases,
             key="user_id",
@@ -510,11 +539,9 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
             "user_id",
             (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("gap_us"),
         )
-        name, n_batches = _run_to_memory(joined, "append")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("click_id", "purchase_id")
+
+    sink = _drain(spark, _stage(sf, "events", "ts", 3), joined, min_batches=3)
+    return sink.orderBy("click_id", "purchase_id")
 
 
 # --------------------------------------------------------------------------
@@ -536,22 +563,19 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q110(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream, load_table
+    from ..sources.tables import load_table
     from ..streaming.joins import enrich_with_dim
 
-    src, _ = _events_stream_src(sf)
-    try:
-        ev = load_stream(spark, src, "events")
-        dim = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
-        enriched = enrich_with_dim(ev, dim, "user_id", "c_custkey", how="inner")
-        name, _ = _run_to_memory(
-            enriched.select(F.col("c_mktsegment").alias("segment")), "append"
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    dim = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
+    sink = _drain(
+        spark,
+        _stage(sf, "events"),
+        lambda ev: enrich_with_dim(ev, dim, "user_id", "c_custkey", how="inner").select(
+            F.col("c_mktsegment").alias("segment")
+        ),
+    )
     return (
-        spark.table(name)
-        .groupBy("segment")
+        sink.groupBy("segment")
         .agg(F.count("*").alias("n_events"))
         .orderBy("segment")
     )
@@ -649,33 +673,21 @@ _DUCK_H31_UID = duck_h31("CAST(user_id AS VARCHAR)")
     category="streaming",
 )
 def q129(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream, load_table
+    from ..sources.tables import load_table
 
     spark_grp = f"({_SPARK_H31_UID}) % {_HH_GROUPS}"
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .withColumn("grp", F.expr(spark_grp))
-            .groupBy("grp")
-            .applyInPandasWithState(
-                _mg_stream_update,
-                outputStructType=_HH_OUT,
-                stateStructType=_HH_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-
-    rows = spark.table(name)
-    from pyspark.sql import Window
-
+    rows = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.withColumn("grp", F.expr(spark_grp)).groupBy("grp"),
+            _mg_stream_update,
+            _HH_OUT,
+            _HH_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     latest = rows.withColumn(
         "_maxn", F.max("n_rows").over(Window.partitionBy("grp"))
     ).filter(F.col("n_rows") == F.col("_maxn"))
@@ -758,20 +770,18 @@ def q129(spark: SparkSession, sf: str) -> DataFrame:
     category="streaming",
 )
 def q143(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from .mining import tv_from_daily_counts
 
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stream = load_stream(spark, src, "events", max_files_per_trigger=1)
-        agg = stream.groupBy(
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: stream.groupBy(
             F.window("ts", "1 day").alias("w"), "event_type"
-        ).agg(F.count("*").alias("c"))
-        name, n_batches = _run_to_memory(agg, "complete")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    cnt = spark.table(name).select(
+        ).agg(F.count("*").alias("c")),
+        "complete",
+        min_batches=3,
+    )
+    cnt = sink.select(
         F.col("w.start").cast("date").alias("d"), "event_type", "c"
     )
     return tv_from_daily_counts(cnt)
@@ -885,30 +895,20 @@ def _ewma_update(key, batches, state):
     category="streaming",
 )
 def q163(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("event_type", "ts", "value")
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _ewma_update,
-                outputStructType=_EWMA_OUT,
-                stateStructType=_EWMA_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("event_type", "ts", "value").groupBy("event_type"),
+            _ewma_update,
+            _EWMA_OUT,
+            _EWMA_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     # each completed (type, day) is emitted exactly once
-    return spark.table(name).orderBy("event_type", "day")
+    return sink.orderBy("event_type", "day")
 
 
 # --------------------------------------------------------------------------
@@ -937,42 +937,6 @@ def q163(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _late_replay_src(sf: str) -> tuple[str, int]:
-    """Three event-time thirds in mtime order, then slice 0 re-delivered
-    last. Returns (dir, delay_seconds) with delay = (span_s) div 6."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
-    src = tempfile.mkdtemp(prefix="spark_stream_src_")
-    path = os.path.join(sf, "events.parquet")
-    table = pads.dataset(path, format="parquet").to_table()
-    ts = table.column("ts")
-    lo, hi = pc.min(ts).as_py(), pc.max(ts).as_py()
-    span_us = (hi - lo) // __import__("datetime").timedelta(microseconds=1)
-    delay_s = int(span_us // 1_000_000 // 6)
-    delta = hi - lo
-    mtime = 1_000_000_000.0
-    chunks = []
-    for s in range(3):
-        lo_b = lo + delta * s / 3
-        hi_b = lo + delta * (s + 1) / 3
-        mask = pc.and_(
-            pc.greater_equal(ts, lo_b),
-            pc.less(ts, hi_b) if s < 2 else pc.less_equal(ts, hi_b),
-        )
-        chunks.append(table.filter(mask))
-    chunks.append(chunks[0])  # the late redelivery
-    for i, chunk in enumerate(chunks):
-        if chunk.num_rows == 0:
-            continue
-        dst = os.path.join(src, f"events_{i}.parquet")
-        pq.write_table(chunk, dst)
-        os.utime(dst, (mtime, mtime))
-        mtime += 2.0
-    return src, delay_s
-
-
 @query(
     "q164_stream_late_drop",
     oracle="""
@@ -993,22 +957,22 @@ def _late_replay_src(sf: str) -> tuple[str, int]:
     category="streaming",
 )
 def q164(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
+    import datetime
 
-    src, delay_s = _late_replay_src(sf)
-    try:
-        counts = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .withWatermark("ts", f"{delay_s} seconds")
-            .groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-        )
-        name, n_batches = _run_to_memory(counts, "append")
-        assert n_batches >= 4, f"expected >= 4 micro-batches, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("window_start")
+    # three event-time thirds in mtime order, then slice 0 re-delivered last
+    src = _stage(sf, "events", "ts", 3, deliver=(0, 1, 2, 0))
+    span_us = (src.hi - src.lo) // datetime.timedelta(microseconds=1)
+    delay_s = int(span_us // 1_000_000 // 6)
+    sink = _drain(
+        spark,
+        src,
+        lambda stream: stream.withWatermark("ts", f"{delay_s} seconds")
+        .groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("window_start"), "n"),
+        min_batches=4,
+    )
+    return sink.orderBy("window_start")
 
 
 # --------------------------------------------------------------------------
@@ -1074,30 +1038,21 @@ def _seq_update(key, batches, state):
     category="streaming",
 )
 def q171(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .filter(F.col("user_id") % 10 == 0)
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.filter(F.col("user_id") % 10 == 0)
             .select("user_id", "ts", "event_id", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _seq_update,
-                outputStructType=_SEQ_OUT,
-                stateStructType=_SEQ_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("user_id", "pos")
+            .groupBy("user_id"),
+            _seq_update,
+            _SEQ_OUT,
+            _SEQ_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
+    return sink.orderBy("user_id", "pos")
 
 
 # --------------------------------------------------------------------------
@@ -1165,30 +1120,19 @@ def _funnel_update(key, batches, state):
     category="streaming",
 )
 def q177(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("user_id", "ts", "event_id", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _funnel_update,
-                outputStructType=_FUNNEL_OUT,
-                stateStructType=_FUNNEL_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("user_id", "ts", "event_id", "event_type").groupBy("user_id"),
+            _funnel_update,
+            _FUNNEL_OUT,
+            _FUNNEL_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     # each (user, stage) advance is emitted exactly once -> stage counts
-    sink = spark.table(name)
     return sink.agg(
         F.count(F.when(F.col("stage") == 1, 1)).alias("viewed"),
         F.count(F.when(F.col("stage") == 2, 1)).alias("clicked_after_view"),
@@ -1227,37 +1171,6 @@ def q177(spark: SparkSession, sf: str) -> DataFrame:
 # emits only the new arrivals' verdicts, the re-scan a batch pipeline
 # would pay per refresh never happens.
 # --------------------------------------------------------------------------
-
-def _docs_stream_src(sf: str, splits: int = 3) -> str:
-    """Range-split documents.parquet into ``splits`` files by doc_id,
-    mtime-stamped so the file source replays them in id order."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
-    src = tempfile.mkdtemp(prefix="spark_stream_src_")
-    path = os.path.join(sf, "documents.parquet")
-    table = pads.dataset(path, format="parquet").to_table()
-    ids = table.column("doc_id")
-    lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
-    mtime = 1_000_000_000.0
-    for s in range(splits):
-        lo_b = lo + (hi - lo) * s // splits
-        hi_b = lo + (hi - lo) * (s + 1) // splits
-        mask = (
-            pc.and_(pc.greater_equal(ids, lo_b), pc.less(ids, hi_b))
-            if s < splits - 1
-            else pc.and_(pc.greater_equal(ids, lo_b), pc.less_equal(ids, hi_b))
-        )
-        chunk = table.filter(mask)
-        if chunk.num_rows == 0:
-            continue
-        dst = os.path.join(src, f"docs_{s}.parquet")
-        pq.write_table(chunk, dst)
-        os.utime(dst, (mtime, mtime))
-        mtime += 2.0
-    return src
-
 
 def _stream_lsh_oracle() -> str:
     from .llm import (
@@ -1304,20 +1217,17 @@ def _stream_lsh_oracle() -> str:
 
 @query("q178_stream_lsh_dedup", oracle=_stream_lsh_oracle(), category="streaming")
 def q178(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..streaming.neardup import lsh_dedup_stream
 
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
-        stateful = lsh_dedup_stream(docs)
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    sink = _drain(
+        spark,
+        _stage(sf, "documents", "doc_id", 3),
+        lsh_dedup_stream,
+        "update",
+        min_batches=3,
+    )
     return (
-        spark.table(name)
-        .groupBy("doc_id")
+        sink.groupBy("doc_id")
         .agg(F.min("dup_of").alias("dup_of"))
         .orderBy("doc_id")
     )
@@ -1397,34 +1307,25 @@ def _reservoir_update(key, batches, state):
     category="streaming",
 )
 def q185(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
-        keyed = docs.select(
-            "lang",
-            "doc_id",
-            F.expr(h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
-        )
-        stateful = keyed.groupBy("lang").applyInPandasWithState(
+    sink = _drain(
+        spark,
+        _stage(sf, "documents", "doc_id", 3),
+        lambda docs: _stateful(
+            docs.select(
+                "lang",
+                "doc_id",
+                F.expr(h31("concat('r169-', CAST(doc_id AS STRING))")).alias("h"),
+            ).groupBy("lang"),
             _reservoir_update,
-            outputStructType=_RES_OUT_SCHEMA,
-            stateStructType=_RES_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+            _RES_OUT_SCHEMA,
+            _RES_STATE_SCHEMA,
+        ),
+        "update",
+        min_batches=3,
+    )
     w = Window.partitionBy("lang")
     return (
-        spark.table(name)
-        .withColumn("_vmax", F.max("ver").over(w))
+        sink.withColumn("_vmax", F.max("ver").over(w))
         .filter(F.col("ver") == F.col("_vmax"))
         .select("lang", "doc_id", "rk")
         .orderBy("lang", "rk")
@@ -1508,10 +1409,10 @@ def _make_cusum_update(params: dict[str, tuple[int, int, int]]):
 
 @query(
     "q200_stream_cusum",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS (
       SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS x
+             {_cents_sum("value")} // 100 AS x
       FROM events GROUP BY 1, 2
     ),
     p AS (
@@ -1549,9 +1450,7 @@ def _make_cusum_update(params: dict[str, tuple[int, int, int]]):
     category="streaming",
 )
 def q200(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream, load_table
+    from ..sources.tables import load_table
 
     # deterministic batch pre-scan: the reference mean per type (the
     # "fit" the live stream is monitored against)
@@ -1559,9 +1458,7 @@ def q200(spark: SparkSession, sf: str) -> DataFrame:
         load_table(spark, sf, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(CAST(value AS DECIMAL(28,2)) * 100 AS BIGINT)) AS BIGINT) div 100"
-            ).alias("x")
+            F.expr(f"{_cents_sum('value')} div 100").alias("x")
         )
     )
     prows = (
@@ -1575,25 +1472,19 @@ def q200(spark: SparkSession, sf: str) -> DataFrame:
         r["event_type"]: (r["target"], r["target"] // 20, r["target"] // 2)
         for r in prows
     }
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("event_type", "ts", "value")
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _make_cusum_update(params),
-                outputStructType=_CUSUM_OUT,
-                stateStructType=_CUSUM_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).orderBy("event_type", "day")
+    sink = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("event_type", "ts", "value").groupBy("event_type"),
+            _make_cusum_update(params),
+            _CUSUM_OUT,
+            _CUSUM_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
+    return sink.orderBy("event_type", "day")
 
 
 # --------------------------------------------------------------------------
@@ -1668,29 +1559,18 @@ def _attr_update(key, batches, state):
     doc="incremental last/first-touch attribution, per-user stateful",
 )
 def q211(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("user_id", "ts", "event_id", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _attr_update,
-                outputStructType=_ATTR_OUT,
-                stateStructType=_ATTR_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    p = spark.table(name)
+    p = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("user_id", "ts", "event_id", "event_type").groupBy("user_id"),
+            _attr_update,
+            _ATTR_OUT,
+            _ATTR_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     l = p.groupBy(F.col("lc").alias("channel")).agg(
         F.count("*").alias("last_touch")
     )
@@ -1735,47 +1615,25 @@ _COMP_OUT = (
 )
 
 
-def _lineitem_stream_src(sf: str, time_splits: int = 3) -> str:
-    """Stream-source dir for the completeness monitor: lineitem rows
-    inside the audit window (l_shipdate < 1997-01-01), projected to
-    (l_orderkey, l_linenumber) and sliced into ``time_splits``
-    contiguous shipdate ranges — one file per range with strictly
-    increasing mtimes, so maxFilesPerTrigger=1 replays the series'
-    lines across micro-batches in ship order (an order's lines ship
-    months apart, so per-order state genuinely crosses batches)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
-    src = tempfile.mkdtemp(prefix="spark_stream_src_")
-    path = os.path.join(sf, "lineitem.parquet")
-    table = pads.dataset(path, format="parquet").to_table(
-        columns=["l_orderkey", "l_linenumber", "l_shipdate"]
-    )
+def _lineitem_src(sf: str) -> _Source:
+    """q230's stream source: lineitem rows inside the audit window
+    (l_shipdate < 1997-01-01), projected to (l_orderkey, l_linenumber)
+    and cut into 3 contiguous shipdate ranges, so a one-file-per-trigger
+    reader replays the series' lines across micro-batches in ship order
+    (an order's lines ship months apart, so per-order state genuinely
+    crosses batches)."""
     import datetime
 
-    cutoff = datetime.datetime(1997, 1, 1)
-    ts = table.column("l_shipdate")
-    table = table.filter(pc.less(ts, cutoff))
-    ts = table.column("l_shipdate")
-    lo, hi = pc.min(ts).as_py(), pc.max(ts).as_py()
-    delta = hi - lo
-    mtime = 1_000_000_000.0
-    for s in range(time_splits):
-        lo_b = lo + delta * s / time_splits
-        hi_b = lo + delta * (s + 1) / time_splits
-        mask = pc.and_(
-            pc.greater_equal(ts, lo_b),
-            pc.less(ts, hi_b) if s < time_splits - 1 else pc.less_equal(ts, hi_b),
-        )
-        chunk = table.filter(mask).select(["l_orderkey", "l_linenumber"])
-        if chunk.num_rows == 0:
-            continue
-        dst = os.path.join(src, f"lineitem_r{s}.parquet")
-        pq.write_table(chunk, dst)
-        os.utime(dst, (mtime, mtime))
-        mtime += 2.0
-    return src
+    import pyarrow.dataset as pads
+
+    return _stage(
+        sf,
+        "lineitem",
+        "l_shipdate",
+        3,
+        columns=["l_orderkey", "l_linenumber"],
+        where=pads.field("l_shipdate") < datetime.datetime(1997, 1, 1),
+    )
 
 
 def _completeness_update(key, batches, state):
@@ -1853,28 +1711,15 @@ def _completeness_update(key, batches, state):
     doc="q222's completeness audit as live per-series bitmask state",
 )
 def q230(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src = _lineitem_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "lineitem", max_files_per_trigger=1)
-            .groupBy("l_orderkey")
-            .applyInPandasWithState(
-                _completeness_update,
-                outputStructType=_COMP_OUT,
-                stateStructType=_COMP_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    p = spark.table(name)
+    p = _drain(
+        spark,
+        _lineitem_src(sf),
+        lambda stream: _stateful(
+            stream.groupBy("l_orderkey"), _completeness_update, _COMP_OUT, _COMP_STATE
+        ),
+        "update",
+        min_batches=3,
+    )
     w = Window.partitionBy("l_orderkey").orderBy(F.col("version").desc())
     latest = p.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
     return (
@@ -1972,29 +1817,18 @@ def _ab_monitor_update(key, batches, state):
     doc="q158's A/B z readout as a live per-user conversion ledger",
 )
 def q231(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("user_id", "event_type", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _ab_monitor_update,
-                outputStructType=_AB_OUT,
-                stateStructType=_AB_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    p = spark.table(name)
+    p = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("user_id", "event_type", "value").groupBy("user_id"),
+            _ab_monitor_update,
+            _AB_OUT,
+            _AB_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     w = Window.partitionBy("user_id").orderBy(F.col("version").desc())
     conv = (
         p.withColumn("rk", F.row_number().over(w))
@@ -2137,29 +1971,18 @@ def _burst_update(key, batches, state):
     doc="q239's burstiness as live per-type exact-moment state",
 )
 def q241(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..sources.tables import load_stream
-
-    src, _ = _events_stream_src(sf, time_splits=3)
-    try:
-        stateful = (
-            load_stream(spark, src, "events", max_files_per_trigger=1)
-            .select("event_type", "ts", "event_id")
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _burst_update,
-                outputStructType=_BURST_OUT,
-                stateStructType=_BURST_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        name, n_batches = _run_to_memory(stateful, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    p = spark.table(name)
+    p = _drain(
+        spark,
+        _stage(sf, "events", "ts", 3),
+        lambda stream: _stateful(
+            stream.select("event_type", "ts", "event_id").groupBy("event_type"),
+            _burst_update,
+            _BURST_OUT,
+            _BURST_STATE,
+        ),
+        "update",
+        min_batches=3,
+    )
     w = Window.partitionBy("event_type").orderBy(F.col("version").desc())
     latest = (
         p.withColumn("rk", F.row_number().over(w))
@@ -2226,13 +2049,9 @@ def q241(spark: SparkSession, sf: str) -> DataFrame:
     doc="q262's Count-Min sketch as a live streaming aggregate; drained cells == batch sketch, q262 oracle verbatim",
 )
 def q266(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from .mining import _CM_D, _CM_W
 
-
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
+    def counters(docs: DataFrame) -> DataFrame:
         tok = docs.select(
             F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("w")
         )
@@ -2241,15 +2060,13 @@ def q266(spark: SparkSession, sf: str) -> DataFrame:
             salted = "concat('cm" + str(i) + "-', w)"
             bucket_exprs.append(F.expr(f"{h31(salted)} % {_CM_W}"))
         hashed = tok.select(F.posexplode(F.array(*bucket_exprs)).alias("i", "bucket"))
-        counters = hashed.groupBy("i", "bucket").agg(F.count("*").alias("c"))
-        name, n_batches = _run_to_memory(counters, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    # counters are monotone: the latest emission per cell is its max
-    sketch = (
-        spark.table(name).groupBy("i", "bucket").agg(F.max("c").alias("c"))
+        return hashed.groupBy("i", "bucket").agg(F.count("*").alias("c"))
+
+    sink = _drain(
+        spark, _stage(sf, "documents", "doc_id", 3), counters, "update", min_batches=3
     )
+    # counters are monotone: the latest emission per cell is its max
+    sketch = sink.groupBy("i", "bucket").agg(F.max("c").alias("c"))
     # batch-exact top-20 audit (q262's tail, verbatim arithmetic)
     from .base import t
 
@@ -2320,12 +2137,9 @@ _set_q266_oracle()
     doc="q272's AMS F2 sketch as a live streaming aggregate via monotone (+/-) cell halves; q272 oracle verbatim",
 )
 def q280(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..pipeline import _AMS_D
 
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
+    def counters(docs: DataFrame) -> DataFrame:
         tok = docs.select(
             F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("w")
         )
@@ -2334,13 +2148,13 @@ def q280(spark: SparkSession, sf: str) -> DataFrame:
             for j in range(_AMS_D)
         ]
         cells = tok.select(F.posexplode(F.array(*sign_exprs)).alias("j", "neg"))
-        counters = cells.groupBy("j", "neg").agg(F.count("*").alias("c"))
-        name, n_batches = _run_to_memory(counters, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return cells.groupBy("j", "neg").agg(F.count("*").alias("c"))
+
+    sink = _drain(
+        spark, _stage(sf, "documents", "doc_id", 3), counters, "update", min_batches=3
+    )
     # each (j, neg) cell is a monotone count: latest emission == max
-    drained = spark.table(name).groupBy("j", "neg").agg(F.max("c").alias("c"))
+    drained = sink.groupBy("j", "neg").agg(F.max("c").alias("c"))
     xs = drained.groupBy("j").agg(
         F.sum(F.when(F.col("neg") == 0, F.col("c")).otherwise(-F.col("c")))
         .cast("long")
@@ -2394,32 +2208,30 @@ _set_q280_oracle()
     doc="q281's hash-Poisson bootstrap CIs as a live streaming aggregate; bounded (source, replicate) state, q281 oracle verbatim",
 )
 def q290(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.tables import load_stream
     from ..pipeline import bootstrap_ci_tail, bootstrap_rep_frame
 
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
-        # re-spread the one-file micro-batch before the 65-digest map
-        # (the streaming analogue of operators/skew.spread_input)
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-        # THE shared construction (weights, sentinel, per-cell sums) —
-        # every stage is a deferred transformation, so the identical
-        # code path q281 runs in batch becomes the streaming aggregate
-        # here, and the "q281 oracle verbatim" contract cannot
-        # desynchronize from a drifted inline copy.
-        cells = bootstrap_rep_frame(docs)
-        name, n_batches = _run_to_memory(cells, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    # re-spread the one-file micro-batch before the 65-digest map (the
+    # streaming analogue of operators/skew.spread_input), then THE
+    # shared construction (weights, sentinel, per-cell sums) — every
+    # stage is a deferred transformation, so the identical code path
+    # q281 runs in batch becomes the streaming aggregate here, and the
+    # "q281 oracle verbatim" contract cannot desynchronize from a
+    # drifted inline copy.
+    sink = _drain(
+        spark,
+        _stage(sf, "documents", "doc_id", 3),
+        lambda docs: bootstrap_rep_frame(
+            docs.repartition(spark.sparkContext.defaultParallelism)
+        ),
+        "update",
+        min_batches=3,
+    )
     # each (source, r) cell's sums are monotone: latest emission == max.
     # localCheckpoint pins the |sources| x 65 cell frame: the CI tail
     # reads it on BOTH sides of a join, and two branches of one
     # memory-sink view trip Catalyst's conflicting-reference check.
     drained = (
-        spark.table(name)
-        .groupBy("source", "r")
+        sink.groupBy("source", "r")
         .agg(F.max("sk").alias("sk"), F.max("s1").alias("s1"))
         .localCheckpoint(eager=True)
     )
@@ -2468,7 +2280,6 @@ _set_q290_oracle()
 )
 def q300(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.bpe import bpe_encode, bpe_merges
-    from ..sources.tables import load_stream
     from .base import t
     from .training import _BPE_ROUNDS
 
@@ -2483,28 +2294,28 @@ def q300(spark: SparkSession, sf: str) -> DataFrame:
     )
     merges = bpe_merges(vocab, rounds=_BPE_ROUNDS)
 
-    src = _docs_stream_src(sf, splits=3)
-    try:
-        docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
+    def cells(docs: DataFrame) -> DataFrame:
         # one compressed file per trigger = one scan split: re-spread
         # the micro-batch before the CPU-heavy cascade (the streaming
         # analogue of operators/skew.spread_input, which by design leaves
         # streaming frames alone)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-        enc = bpe_encode(docs, merges, id_col="source")
-        cells = enc.groupBy("source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("token_checksum").alias("token_checksum"),
+        return (
+            bpe_encode(docs, merges, id_col="source")
+            .groupBy("source")
+            .agg(
+                F.count("*").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum("token_checksum").alias("token_checksum"),
+            )
         )
-        name, n_batches = _run_to_memory(cells, "update")
-        assert n_batches >= 3, f"expected a multi-micro-batch drain, got {n_batches}"
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+
+    sink = _drain(
+        spark, _stage(sf, "documents", "doc_id", 3), cells, "update", min_batches=3
+    )
     # every cell is monotone: the latest emission per source == max
     return (
-        spark.table(name)
-        .groupBy("source")
+        sink.groupBy("source")
         .agg(
             F.max("n_docs").alias("n_docs"),
             F.max("n_tokens").alias("n_tokens"),

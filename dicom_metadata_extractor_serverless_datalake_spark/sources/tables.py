@@ -123,24 +123,12 @@ def load_stream(
     batch read of the same directory). ``max_files_per_trigger`` caps
     files per micro-batch — with an availableNow trigger the source then
     drains in MULTIPLE batches (files in modification-time order), which
-    is how the streaming corpus queries exercise cross-batch state."""
+    is how the streaming corpus queries exercise cross-batch state. The
+    only session state it touches is the nanos read conf; a drain sizes
+    its state partitions from the row count its stager returns
+    (queries/streams.py ``_drain``), not from anything left here."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(src_dir).schema
-    # Record the staged source's row count (parquet footer metadata —
-    # no data read) as a session breadcrumb: the stream drain helpers
-    # size their STATE partition count from it (queries/streams.py
-    # _state_partitions), the streaming analogue of AQE partition
-    # coalescing, which streaming plans cannot use. Construction and
-    # drain share one thread (the CacheScope contract), so the
-    # breadcrumb cannot race.
-    try:
-        import pyarrow.dataset as _pads
-
-        spark._graft_stream_src_rows = _pads.dataset(
-            src_dir, format="parquet"
-        ).count_rows()
-    except Exception:  # noqa: BLE001 — sizing hint only, never fatal
-        spark._graft_stream_src_rows = None
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -19,32 +19,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# q83-q85/q99/q100 EXECUTE a streaming job inside the query function and
-# return the drained sink; their batch plan is just the sink read, so
-# plan metrics would audit the wrong thing.
-STREAMING_EXECUTED = {
-    "q83_stream_tumbling",
-    "q84_stream_dedup",
-    "q85_stream_upsert_snapshot",
-    "q99_stream_stateful_totals",
-    "q100_stream_session_window",
-    "q109_stream_interval_join",
-    "q110_stream_static_enrich",
-    "q129_stream_heavy_hitters",
-    "q143_stream_tv_drift",
-    "q163_stream_ewma",
-    "q164_stream_late_drop",
-    "q171_stream_sequences",
-    "q177_stream_funnel",
-    "q178_stream_lsh_dedup",
-    "q200_stream_cusum",
-    "q211_stream_attribution",
-    "q230_stream_completeness",
-    "q231_stream_ab_monitor",
-    "q241_stream_burstiness",
-    "q266_stream_countmin",
-    "q280_stream_ams",
-}
+def streaming_executed(queries: dict) -> set[str]:
+    """The queries that EXECUTE a streaming job inside the query function
+    and return the drained sink: every query whose function is defined in
+    queries/streams.py. Their batch plan is just the sink read, so plan
+    metrics would audit the wrong thing. (Not ``category="streaming"``:
+    queries/windows.py registers batch twins under that category.)"""
+    from dicom_metadata_extractor_serverless_datalake_spark.queries import streams
+
+    return {
+        name for name, q in queries.items() if q.spark_fn.__module__ == streams.__name__
+    }
 
 
 def _nodes(plan: str, name: str) -> int:
@@ -114,8 +99,9 @@ def main() -> int:
     spark = get_spark(app_name="plan_audit")
 
     rows, flags = [], []
+    executed = streaming_executed(QUERIES)
     for name, q in QUERIES.items():
-        if name in STREAMING_EXECUTED:
+        if name in executed:
             rows.append((name, None))
             continue
         # audit each query STANDALONE: constructions that persist()

@@ -939,3 +939,23 @@ def test_degenerate_allowlist_flags_unrecognized_plan():
     # what a future explain-layout change should trip, loudly
     m = audit_one(_AUDIT_EMPTY)
     assert all_zero(m) and is_degenerate(m, _AUDIT_EMPTY)
+
+
+def test_streaming_executed_set_is_every_streams_query():
+    """PLANS.md marks a query streaming-executed from the registry (its
+    function lives in queries/streams.py), so a new streamed query cannot
+    be audited by its sink-read plan; the category cannot decide it,
+    since queries/windows.py registers batch twins as "streaming"."""
+    from scripts.plan_audit import streaming_executed
+
+    assert streaming_executed(QUERIES) == {
+        "q83_stream_tumbling", "q84_stream_dedup", "q85_stream_upsert_snapshot",
+        "q99_stream_stateful_totals", "q100_stream_session_window",
+        "q109_stream_interval_join", "q110_stream_static_enrich",
+        "q129_stream_heavy_hitters", "q143_stream_tv_drift", "q163_stream_ewma",
+        "q164_stream_late_drop", "q171_stream_sequences", "q177_stream_funnel",
+        "q178_stream_lsh_dedup", "q185_stream_reservoir", "q200_stream_cusum",
+        "q211_stream_attribution", "q230_stream_completeness",
+        "q231_stream_ab_monitor", "q241_stream_burstiness", "q266_stream_countmin",
+        "q280_stream_ams", "q290_stream_bootstrap", "q300_stream_tokenize",
+    }

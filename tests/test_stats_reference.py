@@ -1073,17 +1073,31 @@ def test_q241_matches_q239_across_batches(spark, tmp_path):
     assert len(got) == 2
 
 
-def test_q241_multi_chunk_batches(spark, tmp_path):
+def test_q241_multi_chunk_batches(spark, tmp_path, monkeypatch):
     """A group whose micro-batch exceeds arrow maxRecordsPerBatch is
     delivered to applyInPandasWithState as MULTIPLE pandas chunks in
     arbitrary (file) order. The gap fold must sort the COMBINED batch,
     not each chunk — per-chunk sorting computes seam gaps against the
     wrong predecessor. Chunk size is forced tiny (7) and the source
     rows are written in shuffled ts order so every chunk seam is a
-    genuine out-of-order boundary."""
+    genuine out-of-order boundary. The drain runs on its own session,
+    so an accumulator counts the calls that really got more than one
+    chunk: the caller's chunk size must reach the stream."""
     import datetime as dt
     import random
 
+    from dicom_metadata_extractor_serverless_datalake_spark.queries import streams
+
+    multi = spark.sparkContext.accumulator(0)
+    fold = streams._burst_update
+
+    def counting(key, batches, state):
+        chunks = list(batches)
+        if len(chunks) > 1:
+            multi.add(1)
+        yield from fold(key, iter(chunks), state)
+
+    monkeypatch.setattr(streams, "_burst_update", counting)
     base = dt.datetime(2024, 3, 1)
     # 90 type-A events with irregular (quadratic-ish) gaps across 30
     # days -> each of the 3 time slices holds ~30 rows = ~5 chunks.
@@ -1109,6 +1123,7 @@ def test_q241_multi_chunk_batches(spark, tmp_path):
     )
     assert got == want
     assert len(got) == 1
+    assert multi.value >= 1
 
 
 # ---- q242 sampled-truth blocking recall vs brute-force truth ----

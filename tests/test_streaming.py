@@ -513,37 +513,126 @@ def test_lsh_dedup_stream_sharded_matches_per_bucket(spark):
     from pyspark.sql import functions as F
 
     from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import (
-        _docs_stream_src,
-        _run_to_memory,
+        _drain,
+        _stage,
     )
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
     from dicom_metadata_extractor_serverless_datalake_spark.streaming.neardup import (
         lsh_dedup_stream,
     )
-    import shutil
 
     sf = "/root/testdata/sf0.001"
     out = {}
     for label, shards in (("bucket", None), ("sharded", 64)):
-        src = _docs_stream_src(sf, splits=3)
-        try:
-            docs = load_stream(spark, src, "documents", max_files_per_trigger=1)
-            name, n_batches = _run_to_memory(
-                lsh_dedup_stream(docs, shards=shards), "update"
-            )
-            assert n_batches >= 3, (label, n_batches)
-            rows = (
-                spark.table(name)
-                .groupBy("doc_id")
-                .agg(F.min("dup_of").alias("dup_of"))
-                .orderBy("doc_id")
-                .collect()
-            )
-            out[label] = [tuple(r) for r in rows]
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
+        # min_batches=3: the drain asserts a >= 3 micro-batch drain
+        sink = _drain(
+            spark,
+            _stage(sf, "documents", "doc_id", 3),
+            lambda docs: lsh_dedup_stream(docs, shards=shards),
+            "update",
+            min_batches=3,
+        )
+        rows = (
+            sink.groupBy("doc_id")
+            .agg(F.min("dup_of").alias("dup_of"))
+            .orderBy("doc_id")
+            .collect()
+        )
+        out[label] = [tuple(r) for r in rows]
     assert out["bucket"] == out["sharded"]
     assert len(out["bucket"]) > 0
+
+
+def test_stream_drain_leaves_caller_session_alone(spark, sf_dir, monkeypatch):
+    """A corpus drain runs on a scoped session: while q99 drains across
+    micro-batches the caller's shuffle partitions keep reading 7, the
+    stream's state operators get the source-sized count instead, and
+    the caller carries no staging breadcrumb afterwards. The scoped
+    session starts from the caller's runtime conf (a conf the caller set
+    reaches the stream), and the frame it returns plans with the
+    caller's shuffle partitions again."""
+    import threading
+
+    import pyarrow.dataset as pads
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import QUERIES
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    arrow = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    caller.conf.set(arrow, "7")
+    started, stream_arrow = [], []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        stream_arrow.append(self._spark.conf.get(arrow))
+        q = real_start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    seen, done = [], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.append(caller.conf.get("spark.sql.shuffle.partitions"))
+            done.wait(0.005)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        out = QUERIES["q99_stream_stateful_totals"].spark_fn(caller, sf_dir)
+        rows = out.collect()
+    finally:
+        done.set()
+        poller.join(10)
+    assert not poller.is_alive()
+    assert rows
+    assert seen and set(seen) == {"7"}
+
+    (q,) = started
+    progress = q.recentProgress
+    assert len(progress) >= 3
+    n_rows = pads.dataset(f"{sf_dir}/events.parquet", format="parquet").count_rows()
+    want = min(spark.sparkContext.defaultParallelism, max(4, n_rows // 250_000 + 1))
+    assert want != 7
+    parts = [op["numShufflePartitions"] for p in progress for op in p["stateOperators"]]
+    assert parts and set(parts) == {want}
+    assert not hasattr(caller, "_graft_stream_src_rows")
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert stream_arrow == ["7"]
+    assert out.sparkSession is not caller
+    assert out.sparkSession.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert out.sparkSession.conf.get(arrow) == "7"
+
+
+def test_failed_drain_removes_source_and_checkpoint(spark, sf_dir, monkeypatch):
+    """A drain whose stream fails mid-run still removes its staged source
+    and the checkpoint the failed query had written."""
+    import os
+    import tempfile
+
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import (
+        _drain,
+        _stage,
+    )
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    with pytest.raises(Exception, match="drain failed"):
+        _drain(
+            spark,
+            _stage(sf_dir, "events"),
+            lambda stream: stream.selectExpr("raise_error('drain failed') AS x"),
+        )
+    assert len(made) == 2
+    assert not any(os.path.exists(d) for d in made)
 
 
 def test_stateful_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory):
@@ -562,7 +651,7 @@ def test_stateful_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory
         _COMP_OUT,
         _COMP_STATE,
         _completeness_update,
-        _lineitem_stream_src,
+        _lineitem_src,
     )
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
 
@@ -570,7 +659,7 @@ def test_stateful_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory
     src, ckpt, out = base / "src", base / "ckpt", base / "out"
     os.makedirs(src)
 
-    staged = _lineitem_stream_src(sf_dir, time_splits=3)
+    staged = _lineitem_src(sf_dir).dir
     files = sorted(os.listdir(staged))
     assert len(files) == 3
 
@@ -663,13 +752,13 @@ def test_streaming_agg_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory)
 
     from dicom_metadata_extractor_serverless_datalake_spark.operators.dedup import h31
     from dicom_metadata_extractor_serverless_datalake_spark.queries.mining import _CM_D, _CM_W
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import _docs_stream_src
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import _stage
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
 
     base = tmp_path_factory.mktemp("agg_recovery")
     src, ckpt, out = base / "src", base / "ckpt", base / "out"
     os.makedirs(src)
-    staged = _docs_stream_src(sf_dir, splits=3)
+    staged = _stage(sf_dir, "documents", "doc_id", 3).dir
     files = sorted(os.listdir(staged))
 
     def bucket_exprs():
@@ -776,13 +865,13 @@ def test_bootstrap_stream_recovery_from_checkpoint(spark, sf_dir, tmp_path_facto
         bootstrap_ci_tail,
         bootstrap_rep_frame,
     )
-    from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import _docs_stream_src
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import _stage
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
 
     base = tmp_path_factory.mktemp("boot_recovery")
     src, ckpt, out = base / "src", base / "ckpt", base / "out"
     os.makedirs(src)
-    staged = _docs_stream_src(sf_dir, splits=3)
+    staged = _stage(sf_dir, "documents", "doc_id", 3).dir
     files = sorted(os.listdir(staged))
 
     def run_from_checkpoint():
@@ -858,8 +947,8 @@ def test_reservoir_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factor
     from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import (
         _RES_OUT_SCHEMA,
         _RES_STATE_SCHEMA,
-        _docs_stream_src,
         _reservoir_update,
+        _stage,
     )
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_stream
 
@@ -867,7 +956,7 @@ def test_reservoir_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factor
     src, ckpt, out = base / "src", base / "ckpt", base / "out"
     os.makedirs(src)
 
-    staged = _docs_stream_src(sf_dir, splits=3)
+    staged = _stage(sf_dir, "documents", "doc_id", 3).dir
     files = sorted(os.listdir(staged))
     assert len(files) == 3
 

@@ -60,12 +60,6 @@ def _decompress_single(ext: str, content: bytes) -> bytes:
     raise tarfile.ReadError(f"not a tar and not bare-compressed: {ext}")
 
 
-def _member_ok(name: str, data: bytes) -> bool:
-    if "DICOMDIR" in name.upper():
-        return False
-    return is_dicom(data)
-
-
 def explode(key: str, content: bytes) -> Iterator[tuple[str, bytes]]:
     """Yield (member_path, member_bytes) candidate DICOM payloads from one
     object. Non-archive objects yield themselves once with member_path ==

@@ -78,24 +78,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def sql_max_multiplicity(arr: str) -> str:
-    """Max element multiplicity of a STRING-array expression, computed
-    as the longest equal-run of its sorted copy in ONE map-side fold —
-    the shuffle-free form of explode -> groupBy(key, x).count() ->
-    max. ``x <=> acc.prev`` is the null-safe first-element guard (the
-    accumulator seeds prev with NULL); empty arrays yield 0."""
-    return (
-        f"aggregate(array_sort({arr}), "
-        "named_struct('prev', CAST(NULL AS STRING), "
-        "'run', CAST(0 AS BIGINT), 'mx', CAST(0 AS BIGINT)), "
-        "(acc, x) -> named_struct('prev', x, "
-        "'run', IF(x <=> acc.prev, acc.run + 1, CAST(1 AS BIGINT)), "
-        "'mx', GREATEST(acc.mx, "
-        "IF(x <=> acc.prev, acc.run + 1, CAST(1 AS BIGINT)))), "
-        "acc -> acc.mx)"
-    )
-
-
 # ---- determinism helpers (Spark side) ----
 #
 # Exact sums run on primitive longs, not Spark's decimal Sum. A decimal

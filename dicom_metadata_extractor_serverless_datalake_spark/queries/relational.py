@@ -15,6 +15,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import scoped_session
 from .base import (
     davg,
     dsum,
@@ -1160,10 +1161,11 @@ def stats_join(spark: SparkSession, sf: str, table: str = STATS_TABLE) -> DataFr
     )
 
 
-# q115 plans with CBO on a scoped session (shared catalog, own SQLConf),
-# so the caller's session keeps planning without it. One scoped session
-# per caller session: load_table memoizes frames per session, so a fresh
-# session per build would re-load its tables on every build.
+# q115 plans with CBO on a scoped session (shared catalog, a copy of the
+# caller's runtime conf), so the caller's session keeps planning without
+# it. One scoped session per caller session, re-synced on each build:
+# load_table memoizes frames per session, so a fresh session per build
+# would re-load its tables on every build.
 _CBO_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -1179,10 +1181,9 @@ _CBO_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
     category="catalog",
 )
 def q115(spark: SparkSession, sf: str) -> DataFrame:
-    cbo = _CBO_SESSIONS.get(spark)
-    if cbo is None:
-        cbo = _CBO_SESSIONS[spark] = spark.newSession()
-        cbo.conf.set("spark.sql.cbo.enabled", "true")
+    cbo = _CBO_SESSIONS[spark] = scoped_session(
+        spark, {"spark.sql.cbo.enabled": "true"}, _CBO_SESSIONS.get(spark)
+    )
     table = prepare_stats_table(cbo, sf, analyze=True)
     return stats_join(cbo, sf, table)
 

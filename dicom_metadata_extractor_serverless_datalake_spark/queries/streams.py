@@ -38,8 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..eventlog import _cents_sum
-from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
+from ..session import scoped_session
 from .base import query
 
 # --------------------------------------------------------------------------
@@ -180,18 +180,11 @@ def _drain(
     name = "stream_sink_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="spark_stream_ckpt_")
     try:
-        scoped = spark.newSession()
-        mine, theirs = scoped.conf.getAll, spark.conf.getAll
-        for key in mine.keys() - theirs.keys():
-            scoped.conf.unset(key)
-        for key, value in theirs.items():
-            if mine.get(key) != value:
-                scoped.conf.set(key, value)
-        n_state = max(4, src.rows // _ROWS_PER_STATE_PARTITION + 1)
-        scoped.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(spark.sparkContext.defaultParallelism, n_state)),
+        n_state = min(
+            spark.sparkContext.defaultParallelism,
+            max(4, src.rows // _ROWS_PER_STATE_PARTITION + 1),
         )
+        scoped = scoped_session(spark, {"spark.sql.shuffle.partitions": str(n_state)})
         stream = build(
             load_stream(
                 scoped,
@@ -330,30 +323,32 @@ def q85(spark: SparkSession, sf: str) -> DataFrame:
     from ..streaming.upsert import read_snapshot, start_upsert_sink
 
     snap = tempfile.mkdtemp(prefix="spark_stream_snap_")
-    # the drain's scoped session sizes the upsert's per-batch row_number
-    # window shuffle on user_id like every other drain's state
-    _drain(
-        spark,
-        _stage(sf, "events"),
-        start=lambda stream, ckpt: start_upsert_sink(
-            stream,
-            snapshot_path=snap,
-            key_cols=["user_id"],
-            order_col="ts",
-            checkpoint_path=ckpt,
-            available_now=True,
-        ),
-    )
-    snapshot = read_snapshot(spark, snap)
-    assert snapshot is not None
-    rows = snapshot.select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-    )
-    out = tracked_persist(rows)
-    out.count()
+    try:
+        # the drain's scoped session sizes the upsert's per-batch row_number
+        # window shuffle on user_id like every other drain's state
+        _drain(
+            spark,
+            _stage(sf, "events"),
+            start=lambda stream, ckpt: start_upsert_sink(
+                stream,
+                snapshot_path=snap,
+                key_cols=["user_id"],
+                order_col="ts",
+                checkpoint_path=ckpt,
+                available_now=True,
+            ),
+        )
+        snapshot = read_snapshot(spark, snap)
+        assert snapshot is not None
+        # checkpointed eagerly, so the result no longer reads the snapshot
+        out = snapshot.select(
+            "user_id",
+            F.col("ts").alias("last_ts"),
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(snap, ignore_errors=True)
     return out.orderBy("user_id")
 
 

@@ -13,7 +13,13 @@ import os
 import shutil
 import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# file:// writes set permissions with one chmod(2) instead of a forked
+# `chmod` per file, .crc and directory (jvm/NioLocalFileSystem.java)
+_NIO_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio_local_fs.jar")
+_NIO_FS_CLASS = "dicom_metadata_extractor_serverless_datalake_spark.jvm.NioLocalFileSystem"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -109,10 +115,35 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    # The driver classpath is read only when the JVM starts, and on a
+    # cluster the executors would lack the jar: a session in a running
+    # JVM, or on a non-local master, keeps Hadoop's own file:// class.
+    if master.startswith("local") and SparkContext._gateway is None:
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = f"{cp}{os.pathsep}{_NIO_FS_JAR}" if cp else _NIO_FS_JAR
+        conf.setdefault("spark.hadoop.fs.file.impl", _NIO_FS_CLASS)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def scoped_session(spark: SparkSession, overrides: dict[str, str] | None = None,
+                   scoped: SparkSession | None = None) -> SparkSession:
+    """A session that shares ``spark``'s context, catalog and cache, whose
+    runtime conf is a copy of ``spark``'s with ``overrides`` on top, so a
+    query can change its own conf without touching the caller's. A bare
+    ``newSession()`` starts from the builder's conf instead and drops what
+    the caller set at runtime. ``scoped`` re-syncs an earlier scoped
+    session (one that memoizes frames) rather than making a new one."""
+    scoped = scoped or spark.newSession()
+    mine, want = scoped.conf.getAll, {**spark.conf.getAll, **(overrides or {})}
+    for key in mine.keys() - want.keys():
+        scoped.conf.unset(key)
+    for key, value in want.items():
+        if mine.get(key) != value:
+            scoped.conf.set(key, value)
+    return scoped

@@ -311,6 +311,24 @@ def test_q115_leaves_caller_cbo_setting_alone(spark, sf_dir):
         spark.conf.set(key, prev)
 
 
+def test_q115_session_copies_the_callers_runtime_conf(spark, sf_dir):
+    """q115's scoped session starts from the caller's runtime conf, with
+    only CBO switched on, and follows a later change on the caller."""
+    caller = spark.newSession()
+    parts = "spark.sql.shuffle.partitions"
+    caller.conf.set(parts, "7")
+    first = _q("q115_stats_broadcast_join", caller, sf_dir)
+    assert first.sparkSession is not caller
+    assert first.sparkSession.conf.get(parts) == "7"
+    assert first.sparkSession.conf.get("spark.sql.cbo.enabled") == "true"
+    rows = first.collect()  # each build rewrites the stats table
+    caller.conf.set(parts, "5")
+    second = _q("q115_stats_broadcast_join", caller, sf_dir)
+    assert second.sparkSession.conf.get(parts) == "5"
+    assert second.collect() == rows
+    assert caller.conf.get("spark.sql.cbo.enabled") == spark.conf.get("spark.sql.cbo.enabled")
+
+
 def test_cc_edge_partitioning_reused_across_rounds(spark):
     """connected_components' per-round join must NOT re-shuffle the edge
     set: the persisted repartition('b') edge cache carries its

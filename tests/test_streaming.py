@@ -635,6 +635,25 @@ def test_failed_drain_removes_source_and_checkpoint(spark, sf_dir, monkeypatch):
     assert not any(os.path.exists(d) for d in made)
 
 
+def test_q85_leaves_no_stream_dir_behind(spark, sf_dir):
+    """q85 removes its upsert snapshot dir (and the drain its source and
+    checkpoint dirs): the returned frame no longer reads from them, and
+    it still returns one row per user."""
+    import os
+    import tempfile
+
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import QUERIES
+
+    def stream_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("spark_stream_")}
+
+    before = stream_dirs()
+    rows = QUERIES["q85_stream_upsert_snapshot"].spark_fn(spark, sf_dir).collect()
+    assert stream_dirs() - before == set()
+    users = [r["user_id"] for r in rows]
+    assert users and users == sorted(set(users))
+
+
 def test_stateful_crash_recovery_from_checkpoint(spark, sf_dir, tmp_path_factory):
     """Kill the q230 completeness drain between micro-batches and restart
     a NEW query from the same checkpoint: per-order bitmask state must

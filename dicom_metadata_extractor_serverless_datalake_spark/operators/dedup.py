@@ -179,15 +179,23 @@ def lsh_candidate_pairs(
     OrderedDistribution (guide §2.4 — two operations keyed the same
     way share one exchange), so the result set crosses ONE wide shuffle
     instead of two (hash-distinct + range-sort). Measured 13.9 -> 10.5 s
-    for the full q52 at 500k docs; rows identical. The range bounds
-    sampler executes its child, so this path runs the band join one
-    extra time: a trade-off measured at 500k docs, where the join
-    (~1.2 s) is cheap next to the shuffle saved — re-measure, or
-    checkpoint before the range exchange, where the join dominates.
-    Unsorted callers keep the plain hash distinct — for them range
-    partitioning buys nothing and costs the sampling job."""
+    for the full q52 at 500k docs; rows identical. Unsorted callers keep
+    the plain hash distinct — for them range partitioning buys nothing
+    and costs the sampling job.
+
+    The band self-join is hinted to a shuffled hash join: both sides
+    then need the same (band, sig) exchange over the same subtree, AQE
+    reuses it, and every signature is computed once, in that exchange's
+    map stage. Left to itself, the planner broadcast one side of a
+    small corpus, so the shingle -> md5 -> 16-min subtree ran once for
+    the broadcast, once on the probe side and, for q52, once more under
+    the range bounds sampler (which executes its child). Measured on
+    q52 at sf0.1 (5 000 docs, 4 vCPU): 3 signature stages -> 1, exec
+    1.15 s -> 0.35 s, still 5 jobs; the sampler now reads the band
+    shuffle. At 500k docs (27.9M pairs, same host) warm walls went
+    33-36 s -> 31-32 s, same pairs, 5 jobs."""
     bands = lsh_band_rows(signatures, id_col)
-    a, b_ = bands.alias("a"), bands.alias("b")
+    a, b_ = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
     raw = a.join(
         b_,
         (F.col("a.band") == F.col("b.band"))

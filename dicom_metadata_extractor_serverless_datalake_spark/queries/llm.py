@@ -516,16 +516,17 @@ _N_QUERIES = 5
 )
 def q54(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
+    # each norm is folded once per vector, on its own side of the join
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("qe"),
+        F.expr(norm_sql("embedding")).alias("qn"),
     )
     scored = (
         F.broadcast(q)
-        .crossJoin(emb)
+        .crossJoin(emb.withColumn("en", F.expr(norm_sql("embedding"))))
         .filter(F.col("vec_id") != F.col("q_id"))
         .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
-        .withColumn("qn", F.expr(norm_sql("qe")))
-        .withColumn("en", F.expr(norm_sql("embedding")))
         .select(
             "q_id", "vec_id", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine")
         )
@@ -652,17 +653,16 @@ def _lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("qe"),
+            F.expr(norm_sql("embedding")).alias("qn"),
             F.explode(F.expr(probes)).alias("bucket"),
         )
     )
-    cand = emb.select("vec_id", "embedding", "bucket")
+    cand = emb.select("vec_id", "embedding", "bucket", F.expr(norm_sql("embedding")).alias("en"))
     scored = (
         F.broadcast(q)
         .join(cand, "bucket")
         .filter(F.col("vec_id") != F.col("q_id"))
         .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
-        .withColumn("qn", F.expr(norm_sql("qe")))
-        .withColumn("en", F.expr(norm_sql("embedding")))
         .select("q_id", "vec_id", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
@@ -820,14 +820,13 @@ def q60(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("vec_id").alias("v1"), "v2")
         .distinct()
     )
-    ea = e.select(F.col("vec_id").alias("v1"), F.col("embedding").alias("qe"))
-    eb = e.select(F.col("vec_id").alias("v2"), F.col("embedding").alias("embedding"))
+    norm = F.expr(norm_sql("embedding"))
+    ea = e.select(F.col("vec_id").alias("v1"), F.col("embedding").alias("qe"), norm.alias("qn"))
+    eb = e.select(F.col("vec_id").alias("v2"), "embedding", norm.alias("en"))
     return (
         cand.join(F.broadcast(ea), "v1")
         .join(F.broadcast(eb), "v2")
         .withColumn("dot", F.expr(dot_sql("qe", "embedding")))
-        .withColumn("qn", F.expr(norm_sql("qe")))
-        .withColumn("en", F.expr(norm_sql("embedding")))
         .select("v1", "v2", (F.col("dot") / (F.col("qn") * F.col("en"))).alias("cosine"))
         .filter(F.col("cosine") >= _NEARDUP_COS)
         .orderBy("v1", "v2")

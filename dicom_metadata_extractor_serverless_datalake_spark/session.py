@@ -17,9 +17,12 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # file:// writes set permissions with one chmod(2) instead of a forked
-# `chmod` per file, .crc and directory (jvm/NioLocalFileSystem.java)
+# `chmod` per file, .crc and directory (jvm/NioLocalFileSystem.java):
+# _NIO_FS_CLASS for FileSystem users (lake writes), _NIO_AFS_CLASS for
+# FileContext users (streaming checkpoints and state)
 _NIO_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio_local_fs.jar")
 _NIO_FS_CLASS = "dicom_metadata_extractor_serverless_datalake_spark.jvm.NioLocalFileSystem"
+_NIO_AFS_CLASS = _NIO_FS_CLASS + "$Fs"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -114,6 +117,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
+        # Generated-class cache (static: read once per JVM, driver and
+        # local executors share it). One pass of the 7 headline queries
+        # makes ~104 distinct classes; at the default 100 entries every
+        # warm pass re-ran Janino on 38-45 of them (CodegenMetrics
+        # compilation count, perfbench conf, 4 vCPU); at 1000 it
+        # compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     conf = dict(extra_conf or {})
     # The driver classpath is read only when the JVM starts, and on a
@@ -123,6 +133,7 @@ def get_spark(
         cp = conf.get("spark.driver.extraClassPath")
         conf["spark.driver.extraClassPath"] = f"{cp}{os.pathsep}{_NIO_FS_JAR}" if cp else _NIO_FS_JAR
         conf.setdefault("spark.hadoop.fs.file.impl", _NIO_FS_CLASS)
+        conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", _NIO_AFS_CLASS)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

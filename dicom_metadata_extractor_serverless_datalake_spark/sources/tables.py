@@ -16,24 +16,14 @@ STAR_TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Timestamp columns have shipped in multiple parquet encodings across
-# testdata generations: INT64 TIMESTAMP(NANOS) (which Spark's
-# vectorized reader rejects outright — read nanos as long via the
-# legacy conf and floor-divide to micros, the same truncation DuckDB
-# applies) and INT64 TIMESTAMP_MICROS with isAdjustedToUTC=0 (which
-# Spark 4 infers as TIMESTAMP_NTZ). Every timestamp-ish column in every
-# table is normalized to TimestampType: NTZ wall-clock values are
-# reinterpreted in the UTC session zone, so values are identical either
-# way, and event-time operators (withWatermark) that reject NTZ work
-# uniformly. The nanos-as-long case is matched per known column name
-# (a bare LongType is otherwise indistinguishable from a real long).
-_NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
-
-
-def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
-    for col in _NANOS_TS_COLS.get(name, ()):
-        if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
-            df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
+def _normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Every testdata timestamp is INT64 TIMESTAMP(MICROS) with
+    isAdjustedToUTC=0, which Spark 4 infers as TIMESTAMP_NTZ. Each such
+    column is cast to TimestampType: the wall-clock values are read in
+    the UTC session zone, so values are unchanged, and event-time
+    operators (withWatermark) that reject NTZ work uniformly. No
+    session conf is touched, so loading a table leaves the caller's
+    session as it was."""
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast(T.TimestampType()))
@@ -44,7 +34,7 @@ def _memo(spark: SparkSession) -> dict:
     """The session's own loader memo: ``frames`` maps (sf_dir, name) to
     the loaded DataFrame, ``views`` is the sf_dir the session's temp
     views point at. A DataFrame is just a plan — memoizing it avoids
-    re-reading parquet footers and re-running the nanos fixup on every
+    re-reading parquet footers and re-running the timestamp fixup on every
     query construction (the corpus builds hundreds of frames per run).
     The memo hangs off the session object, so it is per SESSION, not
     per application: a sibling session (spark.newSession()) has its
@@ -98,7 +88,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = frames.get((sf_dir, name))
     if cached is not None:
         return cached
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import os
 
     marker = f"{sf_dir}/{name}.bucketed.json"
@@ -106,7 +95,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = _load_bucketed(spark, marker)
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    df = _normalize_timestamps(df, name)
+    df = _normalize_timestamps(df)
     frames[(sf_dir, name)] = df
     return df
 
@@ -118,22 +107,20 @@ def load_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of ``load_table``: a file-source stream over a
-    directory of parquet files with the same nanos->micros normalization
+    directory of parquet files with the same timestamp normalization
     (streaming sources require an explicit schema, so we take it from a
     batch read of the same directory). ``max_files_per_trigger`` caps
     files per micro-batch — with an availableNow trigger the source then
     drains in MULTIPLE batches (files in modification-time order), which
-    is how the streaming corpus queries exercise cross-batch state. The
-    only session state it touches is the nanos read conf; a drain sizes
-    its state partitions from the row count its stager returns
-    (queries/streams.py ``_drain``), not from anything left here."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    is how the streaming corpus queries exercise cross-batch state. It
+    touches no session state; a drain sizes its state partitions from
+    the row count its stager returns (queries/streams.py ``_drain``)."""
     schema = spark.read.parquet(src_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     df = reader.parquet(src_dir)
-    return _normalize_timestamps(df, name)
+    return _normalize_timestamps(df)
 
 
 def register_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

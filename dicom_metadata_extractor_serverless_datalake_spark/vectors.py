@@ -139,9 +139,8 @@ class EmbeddingSet:
         lab = self._require_label("outliers")
         scored = (
             self.df.withColumnRenamed(lab, "label")
-            .join(F.broadcast(self.centroids()), "label")
+            .join(F.broadcast(self.centroids().withColumn("cn", F.expr(norm_sql("ce")))), "label")
             .withColumn("dot", F.expr(dot_sql("ce", self.vec_col)))
-            .withColumn("cn", F.expr(norm_sql("ce")))
             .withColumn("en", F.expr(norm_sql(self.vec_col)))
             .select(
                 "label",
@@ -160,15 +159,14 @@ class EmbeddingSet:
     def _scores(self, q: DataFrame, *extra) -> DataFrame:
         """Cosine of every (q_id, qe, ...) row of the small frame ``q``
         against every other vector of this set: (q_id, *extra, id,
-        cosine). ``q`` broadcasts; the set streams once."""
+        cosine). ``q`` broadcasts; the set streams once. Each norm is
+        folded once per vector, on its own side of the join."""
         did, vec = self.id_col, self.vec_col
         return (
-            F.broadcast(q)
-            .crossJoin(self.df)
+            F.broadcast(q.withColumn("qn", F.expr(norm_sql("qe"))))
+            .crossJoin(self.df.withColumn("en", F.expr(norm_sql(vec))))
             .filter(F.col(did) != F.col("q_id"))
             .withColumn("dot", F.expr(dot_sql("qe", vec)))
-            .withColumn("qn", F.expr(norm_sql("qe")))
-            .withColumn("en", F.expr(norm_sql(vec)))
             .select(
                 "q_id",
                 *extra,

@@ -369,3 +369,23 @@ def test_star_schema_memo_is_per_session(spark, sf_dir):
 
     gc.collect()
     assert dropped() is None
+
+
+def test_table_loaders_leave_session_conf_alone(spark, sf_dir, tmp_path):
+    """Loading every star table and a stream over the events file on a
+    fresh sibling session changes none of that session's conf: the
+    loaders set no read flag on the caller's behalf."""
+    import shutil
+
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import (
+        STAR_TABLES,
+        load_stream,
+    )
+
+    fresh = spark.newSession()
+    before = fresh.conf.getAll
+    for name in STAR_TABLES:
+        load_table(fresh, sf_dir, name)
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    assert load_stream(fresh, str(tmp_path), "events").isStreaming
+    assert fresh.conf.getAll == before

@@ -1,7 +1,8 @@
 """The file:// FileSystem that sets permissions through java.nio
-(``jvm/NioLocalFileSystem.java``): a lake write forks no ``chmod``, keeps
-Hadoop's modes and ``.crc`` checksums, and the committed jar was built
-from the committed source."""
+(``jvm/NioLocalFileSystem.java``): a lake write and a streaming drain
+(whose checkpoints go through FileContext) fork no ``chmod``, a lake write
+keeps Hadoop's modes and ``.crc`` checksums, and the committed jar was
+built from the committed source."""
 
 import hashlib
 import json
@@ -33,7 +34,7 @@ def test_jar_manifest_pins_the_committed_source():
     )
     assert fields["Source-SHA256"] == want
     cls = session._NIO_FS_CLASS.replace(".", "/")
-    assert {f"{cls}.class", f"{cls}$Raw.class"} <= names
+    assert {f"{cls}{inner}.class" for inner in ("", "$Raw", "$Fs", "$RawFs")} <= names
 
 
 _WRITE_PROBE = r"""
@@ -43,6 +44,8 @@ sys.path.insert(0, os.path.join({repo!r}, "tests"))
 from fixtures import write_fixture_tree
 from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import (
     extract_objects, write_split)
+from dicom_metadata_extractor_serverless_datalake_spark.api import DicomLake
+from dicom_metadata_extractor_serverless_datalake_spark.queries.streams import q99
 from dicom_metadata_extractor_serverless_datalake_spark.session import get_spark
 
 os.umask(0o077)  # Hadoop's own umask (022) sets the modes, not this one
@@ -51,6 +54,8 @@ spark = get_spark(app_name="nio-fs", master="local[2]", shuffle_partitions=2,
 jvm = spark._jvm
 conf = spark._jsc.hadoopConfiguration()
 fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create("file:///"), conf)
+afs = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+    jvm.java.net.URI.create("file:///"), conf).getDefaultFileSystem()
 
 src, lake, quar = (os.path.abspath(d) for d in ("src", "lake", "quarantine"))
 write_fixture_tree(pathlib.Path(src))
@@ -85,9 +90,21 @@ out = jvm.java.io.ByteArrayOutputStream()
 jvm.org.apache.hadoop.io.IOUtils.copyBytes(
     fs.open(jvm.org.apache.hadoop.fs.Path(part)), out, 4096, True)
 
+# streaming drains write offsets, commits and state through FileContext
+before = chmods()
+q99_rows = q99(spark, {sf_dir!r}).count()
+q99_forks = chmods() - before
+before = chmods()
+watch = DicomLake(spark, os.path.abspath("wlake"), quarantine_path=os.path.abspath("wquar"))
+watch.watch(src, os.path.abspath("ckpt"), available_now=True).awaitTermination(300)
+watch_forks = chmods() - before
+
 print(json.dumps({{
     "fs_class": fs.getClass().getName(),
     "raw_class": fs.getRawFileSystem().getClass().getName(),
+    "afs_class": afs.getClass().getName(),
+    "q99_rows": q99_rows, "q99_forks": q99_forks,
+    "watch_rows": spark.read.parquet("wlake").count(), "watch_forks": watch_forks,
     "classpath": spark.sparkContext.getConf().get("spark.driver.extraClassPath"),
     "forks": forks, "lake_rows": lake_rows, "bad": bad, "dates": [str(d) for d in dates],
     "modes": modes, "missing_crc": missing_crc,
@@ -97,13 +114,16 @@ spark.stop()
 """
 
 
-def test_lake_write_forks_no_chmod(tmp_path):
+def test_lake_write_forks_no_chmod(tmp_path, sf_dir):
     """A session started with a logging ``chmod`` shim first on PATH
     writes a fixture drop through ``write_split``: no ``chmod`` process
     runs, dirs are 0755 and files 0644 (Hadoop's modes, under a process
     umask of 077), every file has its ``.crc`` sibling and a part file
     reads back through the checksummed FileSystem. Hadoop's own file:// class
-    forks one ``chmod`` per file, ``.crc`` file and directory."""
+    forks one ``chmod`` per file, ``.crc`` file and directory. Then q99's
+    streaming drain and a ``DicomLake.watch(available_now=True)`` drain of
+    the same tree fork no ``chmod`` either: their checkpoints go through
+    FileContext, whose Hadoop default (``LocalFs``) forked 58 and 9."""
     shim_dir = tmp_path / "bin"
     shim_dir.mkdir()
     log = tmp_path / "chmod.log"
@@ -114,10 +134,12 @@ def test_lake_write_forks_no_chmod(tmp_path):
         os.environ,
         PATH=f"{shim_dir}{os.pathsep}{os.environ.get('PATH', '')}",
         CHMOD_LOG=str(log),
+        # the streaming source's planner worker imports the package
+        PYTHONPATH=os.pathsep.join(filter(None, (REPO, os.environ.get("PYTHONPATH")))),
         SPARK_DRIVER_MEM="1g",
     )
     out = subprocess.run(
-        [sys.executable, "-c", _WRITE_PROBE.format(repo=REPO)],
+        [sys.executable, "-c", _WRITE_PROBE.format(repo=REPO, sf_dir=sf_dir)],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -128,6 +150,7 @@ def test_lake_write_forks_no_chmod(tmp_path):
     res = json.loads(out.stdout.strip().splitlines()[-1])
     assert res["fs_class"] == session._NIO_FS_CLASS
     assert res["raw_class"] == session._NIO_FS_CLASS + "$Raw"
+    assert res["afs_class"] == session._NIO_AFS_CLASS
     assert res["classpath"] == f"/nonexistent-cp{os.pathsep}{session._NIO_FS_JAR}"
     assert (res["lake_rows"], res["bad"]) == (10, 1)
     assert res["forks"] == 0
@@ -138,3 +161,5 @@ def test_lake_write_forks_no_chmod(tmp_path):
     assert set(files.values()) == {"0o644"}, files
     assert res["missing_crc"] == []
     assert res["read_back"]
+    assert res["q99_rows"] > 0 and res["q99_forks"] == 0
+    assert (res["watch_rows"], res["watch_forks"]) == (10, 0)

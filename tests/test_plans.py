@@ -737,6 +737,27 @@ def test_q180_split_leakage_costs_what_q52_costs(spark, sf_dir):
     assert plan.count("Join") == q52_plan.count("Join")
 
 
+def test_q52_signs_each_document_once(spark, sf_dir, count_jobs):
+    """The band self-join reads ONE (band, sig) exchange on both sides
+    (the second is a ReusedExchange), so q52's executed plan computes the
+    md5 -> 16-min signature aggregate once. A broadcast band join ran
+    that subtree for the build side, for the probe side and again under
+    the range bounds sampler; the reuse adds no job. Built through the
+    harness wrapper, which drops caches earlier queries left (a cached
+    signature frame would otherwise stand in for the subtree)."""
+    from dicom_metadata_extractor_serverless_datalake_spark.queries.corpus import get_queries
+
+    df = get_queries()["q52_minhash_lsh"](spark, sf_dir)
+    _, jobs = count_jobs(df.collect)
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    plan = adaptive.executedPlan().toString()  # the final tree alone
+    assert plan.count("md5(") == 1
+    assert plan.count("partial_min(") == 16
+    assert "ReusedExchange" in plan and "BroadcastExchange" not in plan
+    assert jobs == 5
+
+
 # ---- _normalize_formatted: canned AQE explain layouts (ADVICE r07) ----
 # A Spark-version change in explain() layout must fail loudly here, not
 # silently zero PLANS.md rows again (the round-7 truncation bug).

@@ -2253,9 +2253,9 @@ def q186(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q222_sequence_completeness",
-    oracle="""
+    """
     WITH g AS (
       SELECT l_orderkey,
              COUNT(*) AS n,
@@ -2287,40 +2287,6 @@ def q186(spark: SparkSession, sf: str) -> DataFrame:
     category="analytics",
     doc="Series-completeness audit: is each group's sequence exactly 1..n post-filter",
 )
-def q222(spark: SparkSession, sf: str) -> DataFrame:
-    g = (
-        t(spark, sf, "lineitem")
-        .filter(F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.count("*").alias("n"),
-            F.count_distinct("l_linenumber").alias("d"),
-            F.min("l_linenumber").alias("mn"),
-            F.max("l_linenumber").alias("mx"),
-        )
-    )
-    v = g.select(
-        "l_orderkey",
-        "n",
-        (F.col("mx") - F.col("mn") + 1 - F.col("d")).alias("missing_in_span"),
-        (F.col("n") - F.col("d")).alias("dup_rows"),
-        F.when(F.col("d") < F.col("n"), "duplicated")
-        .when(F.col("mn") > 1, "offset_start")
-        .when(F.col("mx") > F.col("n"), "gapped")
-        .otherwise("complete")
-        .alias("verdict"),
-    )
-    return (
-        v.groupBy("verdict")
-        .agg(
-            F.count("*").alias("n_groups"),
-            F.sum("n").alias("total_rows"),
-            F.sum("missing_in_span").alias("total_missing_in_span"),
-            F.sum("dup_rows").alias("total_dup_rows"),
-            F.sum("l_orderkey").alias("key_checksum"),
-        )
-        .orderBy("verdict")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2343,9 +2309,9 @@ def q222(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q235_assortativity",
-    oracle="""
+    """
     WITH du AS (
       SELECT DISTINCT event_type, date_trunc('hour', ts) AS grp, user_id FROM events
     ),
@@ -2379,53 +2345,6 @@ def q222(spark: SparkSession, sf: str) -> DataFrame:
     category="analytics",
     doc="Newman degree assortativity of the co-engagement graph, 4 exact sums",
 )
-def q235(spark: SparkSession, sf: str) -> DataFrame:
-    du = (
-        t(spark, sf, "events")
-        .select("event_type", F.date_trunc("hour", "ts").alias("grp"), "user_id")
-        .distinct()
-    )
-    a, b = du.alias("a"), du.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.grp") == F.col("b.grp"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    da = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    db = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    s = (
-        e.join(da, "u")
-        .join(db, "v")
-        .agg(
-            F.count("*").alias("m"),
-            F.sum(F.col("du") * F.col("dv")).alias("s_jk"),
-            F.sum(F.col("du") + F.col("dv")).alias("s_j"),
-            F.sum(F.col("du") * F.col("du") + F.col("dv") * F.col("dv")).alias(
-                "s_j2"
-            ),
-        )
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    den = F.lit(2.0) * d("m") * d("s_j2") - d("s_j") * d("s_j")
-    num = F.lit(4.0) * d("m") * d("s_jk") - d("s_j") * d("s_j")
-    return s.select(
-        F.col("m").alias("n_edges"),
-        F.col("s_jk").alias("sum_jk"),
-        F.col("s_j").alias("sum_j"),
-        F.col("s_j2").alias("sum_j2"),
-        F.when(den > 0, num / den).alias("assortativity"),
-    )
 
 
 # --------------------------------------------------------------------------

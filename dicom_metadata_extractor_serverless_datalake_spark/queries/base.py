@@ -61,7 +61,20 @@ def sql_query(
 ) -> None:
     """Register a query whose Spark side is ``spark.sql`` over the star
     views; by default the oracle is the *same* SQL text (the dialect
-    subset shared by Spark SQL and DuckDB)."""
+    subset shared by Spark SQL and DuckDB).
+
+    This is the default for any query whose oracle runs on Spark with
+    the same rows. A hand-written ``@query`` body is kept only when:
+
+    - it calls a package operator, facade or helper that its oracle
+      certifies (e.g. q119's ``dsum_limbs``/``dsum_merge`` merge);
+    - the oracle hard-codes what the body computes (an approximate
+      sketch's ``within_bound`` is a literal ``TRUE`` in the text);
+    - the text lacks the Spark feature the query is named for
+      (``session_window``, ``pivot``, a pandas UDF, catalog-stats CBO);
+    - the body plans fewer exchanges, or runs faster, than the text:
+      e.g. a ``sql_dsum`` ``DECIMAL(28,s)`` sum, which Spark runs
+      BigDecimal-backed, where the body's ``dsum`` sums long limbs."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..sources.tables import register_star_schema

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from ..eventlog import EventLog, _cents_sum, _hw_update
 from ..operators.ann import _dlit
 from ..operators.cachetrack import tracked_persist
-from .base import query, t
+from .base import query, sql_query, t
 
 # --------------------------------------------------------------------------
 # q207 — first-order Markov transition matrix between event types.
@@ -233,9 +233,9 @@ _GINI = (
 )
 
 
-@query(
+sql_query(
     "q210_gini_concentration",
-    oracle=f"""
+    f"""
     WITH vd AS (
       SELECT source, n_chars AS v, count(*) AS c
       FROM documents GROUP BY 1, 2
@@ -259,34 +259,6 @@ _GINI = (
     category="stats",
     doc="exact per-source Gini of document char mass via tie-run identity",
 )
-def q210(spark: SparkSession, sf: str) -> DataFrame:
-    vd = (
-        t(spark, sf, "documents")
-        .groupBy("source", F.col("n_chars").alias("v"))
-        .agg(F.count("*").alias("c"))
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cw = vd.select(
-        "source",
-        "v",
-        "c",
-        F.coalesce(F.sum("c").over(w), F.lit(0)).alias("p"),
-    )
-    g = cw.groupBy("source").agg(
-        F.sum("c").alias("n"),
-        F.sum(F.expr("v * c")).alias("s"),
-        F.sum(F.expr("v * (2 * p * c + c * (c + 1))")).alias("a"),
-    )
-    return g.select(
-        "source",
-        F.col("n").alias("n_docs"),
-        F.col("s").alias("total_chars"),
-        F.expr(_GINI).alias("gini_micros"),
-    ).orderBy("source")
 
 
 # --------------------------------------------------------------------------

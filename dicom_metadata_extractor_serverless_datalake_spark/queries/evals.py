@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
 from ..vectors import EmbeddingSet
-from .base import query, t
+from .base import query, sql_query, t
 
 # --------------------------------------------------------------------------
 # q216 — Matryoshka truncation audit. head-energy share per vector =
@@ -194,9 +194,9 @@ _SPEND = (
 )
 
 
-@query(
+sql_query(
     "q218_cumulative_gains",
-    oracle=f"""
+    f"""
     WITH u AS (
       SELECT user_id, {_SPEND} AS spend,
              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -229,50 +229,6 @@ _SPEND = (
     category="evals",
     doc="decile cumulative-gains table over exact integer spend ranks",
 )
-def q218(spark: SparkSession, sf: str) -> DataFrame:
-    u = (
-        t(spark, sf, "events")
-        .groupBy("user_id")
-        .agg(
-            F.expr(_SPEND).alias("spend"),
-            F.expr(
-                "CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)"
-                " AS BIGINT)"
-            ).alias("converter"),
-        )
-    )
-    d = u.select(
-        "spend",
-        "converter",
-        F.ntile(10)
-        .over(Window.orderBy(F.col("spend").desc(), "user_id"))
-        .alias("decile"),
-    )
-    g = d.groupBy("decile").agg(
-        F.count("*").alias("n_users"),
-        F.sum("converter").alias("converters"),
-        F.sum("spend").alias("spend_cents"),
-    )
-    tot = g.agg(F.sum("converters").alias("ct"))
-    w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n_users",
-            "converters",
-            "spend_cents",
-            F.sum("converters").over(w).alias("cum_converters"),
-            F.expr(
-                "CASE WHEN ct > 0 THEN "
-                "CAST(floor(1000000.0 * (CAST(SUM(converters) OVER ("
-                "ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND"
-                " CURRENT ROW) AS DOUBLE) / CAST(ct AS DOUBLE))) AS BIGINT) "
-                "ELSE CAST(NULL AS BIGINT) END"
-            ).alias("cum_gain_micros"),
-        )
-        .orderBy("decile")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
-from .base import _scaled_sum_sql, query, t
+from .base import _scaled_sum_sql, query, sql_query, t
 
 # --------------------------------------------------------------------------
 # q226 — Welch two-sample t-test: high-priority orders (priority 1-2)
@@ -552,9 +552,9 @@ def q232(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q233_wilson_ci",
-    oracle="""
+    """
     WITH c AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -587,31 +587,6 @@ def q232(spark: SparkSession, sf: str) -> DataFrame:
     category="inference",
     doc="Wilson score 95% interval per event-type conversion proportion",
 )
-def q233(spark: SparkSession, sf: str) -> DataFrame:
-    c = (
-        t(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.when(F.col("value") > 250.0, 1).otherwise(0)).alias("n_hits"),
-        )
-    )
-    nd = F.col("n_events").cast("double")
-    p = F.col("n_hits").cast("double") / nd
-    z2 = F.lit(1.96) * F.lit(1.96)
-    center = p + z2 / (F.lit(2.0) * nd)
-    half = F.lit(1.96) * F.sqrt(
-        p * (F.lit(1.0) - p) / nd + z2 / (F.lit(4.0) * nd * nd)
-    )
-    denom = F.lit(1.0) + z2 / nd
-    return c.select(
-        "event_type",
-        "n_events",
-        "n_hits",
-        p.alias("p_hat"),
-        ((center - half) / denom).alias("wilson_lo"),
-        ((center + half) / denom).alias("wilson_hi"),
-    ).orderBy("event_type")
 
 
 # --------------------------------------------------------------------------

@@ -41,7 +41,7 @@ from ..operators.dedup import (
 )
 from ..operators.skew import spread_input
 from ..vectors import _NDCG_P, _NDCG_W, EmbeddingSet
-from .base import query, t
+from .base import query, sql_query, t
 
 
 def duck_h31(expr: str) -> str:
@@ -55,21 +55,14 @@ def duck_h31(expr: str) -> str:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q50_dedup_exact",
-    oracle="""
+    """
     SELECT md5(text) AS digest, MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies
     FROM documents GROUP BY md5(text) ORDER BY keeper_id
     """,
     category="dedup",
 )
-def q50(spark: SparkSession, sf: str) -> DataFrame:
-    return (
-        t(spark, sf, "documents")
-        .groupBy(F.md5("text").alias("digest"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies"))
-        .orderBy("keeper_id")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1399,9 +1392,9 @@ def q125(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q127_survivorship",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT md5(substr(text, 1, 40)) AS digest, doc_id, lang, source, n_chars,
              count(*) OVER (PARTITION BY md5(substr(text, 1, 40))) AS n_members,
@@ -1419,37 +1412,6 @@ def q125(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="dedup",
 )
-def q127(spark: SparkSession, sf: str) -> DataFrame:
-    w = Window.partitionBy("digest")
-    ranked = (
-        t(spark, sf, "documents")
-        .select(
-            F.md5(F.substring("text", 1, 40)).alias("digest"),
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-        )
-        .withColumn("n_members", F.count("*").over(w))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                w.orderBy(F.desc(F.col("lang") == "en"), F.desc("n_chars"), "doc_id")
-            ),
-        )
-    )
-    return (
-        ranked.filter((F.col("rn") == 1) & (F.col("n_members") > 1))
-        .select(
-            "digest",
-            F.col("doc_id").alias("survivor_id"),
-            F.col("lang").alias("survivor_lang"),
-            F.col("source").alias("survivor_source"),
-            F.col("n_chars").alias("survivor_chars"),
-            F.col("n_members").cast("long").alias("n_members"),
-        )
-        .orderBy("digest")
-    )
 
 
 # --------------------------------------------------------------------------

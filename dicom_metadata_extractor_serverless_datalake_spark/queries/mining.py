@@ -22,7 +22,7 @@ from ..operators.cachetrack import tracked_persist
 from ..operators.dedup import h31
 from ..operators.skew import spread_input
 from ..pipeline import _AMS_D, ams_audit_tail, ams_sign_counters
-from .base import dsum, dsum_expr, query, sql_dsum, t
+from .base import dsum, dsum_expr, query, sql_dsum, sql_query, t
 
 # --------------------------------------------------------------------------
 # q132 — Count-Min sketch frequency estimates (operators/countmin.py),
@@ -754,9 +754,9 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q140_seasonal_anomaly",
-    oracle="""
+    """
     WITH daily AS (
       SELECT CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS n
       FROM events GROUP BY 1
@@ -781,37 +781,6 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="analytics",
 )
-def q140(spark: SparkSession, sf: str) -> DataFrame:
-    daily = (
-        t(spark, sf, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.orderBy("day").rowsBetween(-3, 3)
-    trendw = daily.select(
-        "day",
-        "n",
-        F.sum("n").over(w).alias("wsum"),
-        F.count("n").over(w).alias("wcnt"),
-        F.dayofweek("day").alias("dow"),
-    )
-    dows = trendw.groupBy("dow").agg(
-        F.sum("n").alias("dsum"), F.count("*").alias("dcnt")
-    )
-    return (
-        trendw.join(F.broadcast(dows), "dow")
-        .select(
-            "day",
-            "n",
-            (F.col("wsum").cast("double") / F.col("wcnt")).alias("trend"),
-            (F.col("dsum").cast("double") / F.col("dcnt")).alias("dow_mean"),
-            (
-                F.lit(10) * F.abs(F.col("n") * F.col("wcnt") - F.col("wsum"))
-                > F.col("wsum")
-            ).alias("anomaly"),
-        )
-        .orderBy("day")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1797,9 +1766,9 @@ _Q258_Z_SQL = """CASE WHEN n1 = 0 OR n2 = 0 OR n_groups <= 1 THEN NULL
     )) END"""
 
 
-@query(
+sql_query(
     "q258_mann_whitney",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT value AS v,
              CAST(count(*) AS BIGINT) AS m,
@@ -1832,32 +1801,6 @@ _Q258_Z_SQL = """CASE WHEN n1 = 0 OR n2 = 0 OR n_groups <= 1 THEN NULL
     category="mining",
     doc="tie-corrected Mann-Whitney U: purchase vs click values, exact 2x-rank integers + one-sqrt z",
 )
-def q258(spark: SparkSession, sf: str) -> DataFrame:
-    ev = t(spark, sf, "events").filter(
-        F.col("event_type").isin("purchase", "click")
-    )
-    g = ev.groupBy(F.col("value").alias("v")).agg(
-        F.count("*").alias("m"),
-        F.sum((F.col("event_type") == "purchase").cast("bigint")).alias("p"),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    c = g.select(
-        "v", "m", "p", F.coalesce(F.sum("m").over(w), F.lit(0)).alias("cum")
-    )
-    tot = c.agg(
-        F.sum("p").alias("n1"),
-        F.sum(F.col("m") - F.col("p")).alias("n2"),
-        F.sum(F.col("p") * (F.lit(2) * F.col("cum") + F.col("m") + 1)).alias("r2a"),
-        F.sum(F.col("m") * F.col("m") * F.col("m") - F.col("m")).alias("tie_term"),
-        F.count("*").alias("n_groups"),
-    )
-    return tot.select(
-        "n1",
-        "n2",
-        (F.col("r2a") - F.col("n1") * (F.col("n1") + 1)).cast("long").alias("u2"),
-        "tie_term",
-        F.expr(_Q258_Z_SQL).cast("long").alias("z_micros"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1895,9 +1838,9 @@ _Q293_MAG_SQL = """CASE WHEN d IS NULL THEN NULL
     ELSE 'large' END"""
 
 
-@query(
+sql_query(
     "q293_cliff_delta",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT value AS v,
              CAST(count(*) AS BIGINT) AS m,
@@ -1933,43 +1876,6 @@ _Q293_MAG_SQL = """CASE WHEN d IS NULL THEN NULL
     category="mining",
     doc="Cliff's delta dominance effect size for purchase vs click values (q258's companion), exact value-domain integers + Romano magnitude labels",
 )
-def q293(spark: SparkSession, sf: str) -> DataFrame:
-    ev = t(spark, sf, "events").filter(
-        F.col("event_type").isin("purchase", "click")
-    )
-    g = ev.groupBy(F.col("value").alias("v")).agg(
-        F.count("*").alias("m"),
-        F.sum((F.col("event_type") == "purchase").cast("bigint")).alias("p"),
-    )
-    w_below = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    w_above = Window.orderBy("v").rowsBetween(1, Window.unboundedFollowing)
-    c = g.select(
-        "p",
-        F.coalesce(F.sum(F.col("m") - F.col("p")).over(w_below), F.lit(0)).alias(
-            "below_q"
-        ),
-        F.coalesce(F.sum(F.col("m") - F.col("p")).over(w_above), F.lit(0)).alias(
-            "above_q"
-        ),
-        (F.col("m") - F.col("p")).alias("q_at"),
-    )
-    tot = c.agg(
-        F.sum("p").cast("long").alias("n1"),
-        F.sum("q_at").cast("long").alias("n2"),
-        F.sum(F.col("p") * F.col("below_q")).cast("long").alias("gt"),
-        F.sum(F.col("p") * F.col("above_q")).cast("long").alias("lt"),
-    )
-    d = tot.select(
-        "n1", "n2", "gt", "lt", F.expr(_Q293_DELTA_SQL).cast("long").alias("d")
-    )
-    return d.select(
-        "n1",
-        "n2",
-        "gt",
-        "lt",
-        F.col("d").alias("delta_micros"),
-        F.expr(_Q293_MAG_SQL).alias("magnitude"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2346,52 +2252,12 @@ def _q268_oracle() -> str:
     """
 
 
-@query(
+sql_query(
     "q268_kruskal_wallis",
-    oracle=_q268_oracle(),
+    _q268_oracle(),
     category="mining",
     doc="tie-corrected Kruskal-Wallis H across the five event types; fixed-order 5-term double tree",
 )
-def q268(spark: SparkSession, sf: str) -> DataFrame:
-    g = (
-        t(spark, sf, "events")
-        .groupBy(F.col("value").alias("v"))
-        .agg(
-            F.count("*").alias("m"),
-            *[
-                F.sum((F.col("event_type") == ty).cast("bigint")).alias(f"m_{ty}")
-                for ty in _KW_TYPES
-            ],
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    c = g.select(
-        "*", F.coalesce(F.sum("m").over(w), F.lit(0)).alias("cum")
-    )
-    tot = c.agg(
-        F.sum("m").alias("n"),
-        F.sum(F.col("m") * F.col("m") * F.col("m") - F.col("m")).alias("tie_term"),
-        F.count("*").alias("n_groups"),
-        *[
-            a
-            for ty in _KW_TYPES
-            for a in (
-                F.sum(F.col(f"m_{ty}")).alias(f"n_{ty}"),
-                F.sum(
-                    F.col(f"m_{ty}")
-                    * (F.lit(2) * F.col("cum") + F.col("m") + 1)
-                ).alias(f"r2_{ty}"),
-            )
-        ],
-    )
-    h = F.expr(_kw_h_sql()).cast("long")
-    return tot.select(
-        "n",
-        "tie_term",
-        *[F.col(f"n_{ty}") for ty in _KW_TYPES],
-        h.alias("h_micros"),
-        (h >= F.lit(_KW_CRIT_MICROS)).alias("reject_at_05"),
-    )
 
 
 # --------------------------------------------------------------------------

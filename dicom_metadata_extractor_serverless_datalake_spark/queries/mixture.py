@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import h31
 from ..pipeline import TextCorpus
-from .base import query, t
+from .base import query, sql_query, t
 from .llm import duck_h31
 
 # --------------------------------------------------------------------------
@@ -474,9 +474,9 @@ _MW_Z = (
 )
 
 
-@query(
+sql_query(
     "q206_mann_whitney",
-    oracle=f"""
+    f"""
     WITH f AS (
       SELECT n_chars AS v, CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS g1
       FROM documents WHERE source IN ('src0', 'src1')
@@ -508,45 +508,6 @@ _MW_Z = (
     category="stats",
     doc="exact tie-corrected Mann-Whitney U over value-domain counts",
 )
-def q206(spark: SparkSession, sf: str) -> DataFrame:
-    f = (
-        t(spark, sf, "documents")
-        .filter(F.col("source").isin("src0", "src1"))
-        .select(
-            F.col("n_chars").alias("v"),
-            F.expr("CASE WHEN source = 'src0' THEN 1 ELSE 0 END").alias("g1"),
-        )
-    )
-    vd = f.groupBy("v").agg(
-        F.sum("g1").alias("c1"), F.sum(F.expr("1 - g1")).alias("c2")
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    cw = vd.select(
-        "v",
-        "c1",
-        "c2",
-        (F.col("c1") + F.col("c2")).alias("cnt"),
-        F.coalesce(F.sum(F.col("c1") + F.col("c2")).over(w), F.lit(0)).alias("prior"),
-    )
-    s = cw.agg(
-        F.sum("c1").alias("n1"),
-        F.sum("c2").alias("n2"),
-        F.sum(F.expr("c1 * (2 * prior + cnt + 1)")).alias("r1_x2"),
-        F.sum(F.expr("cnt * cnt * cnt - cnt")).alias("tie_term"),
-    )
-    return s.select(
-        "n1",
-        "n2",
-        F.expr("r1_x2 - n1 * (n1 + 1)").alias("u1_x2"),
-        "tie_term",
-    ).select(
-        "n1",
-        "n2",
-        "u1_x2",
-        "tie_term",
-        F.expr(_MW_VAR_M).alias("var_micros"),
-        F.expr(_MW_Z).alias("z_micros"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -64,7 +64,7 @@ from ..pipeline import (
     bootstrap_rep_frame,
     chao1_frame,
 )
-from .base import query, t
+from .base import query, sql_query, t
 from .llm import MERSENNE_P, duck_h31
 
 # --------------------------------------------------------------------------
@@ -313,9 +313,9 @@ _CHI_TERM = (
 _CHI_E = "CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE)"
 
 
-@query(
+sql_query(
     "q188_chisq_independence",
-    oracle=f"""
+    f"""
     WITH o AS (SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
     rm AS (SELECT lang, count(*) AS r FROM documents GROUP BY 1),
     cm AS (SELECT source, count(*) AS c FROM documents GROUP BY 1),
@@ -333,27 +333,6 @@ _CHI_E = "CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE)"
     category="analytics",
     doc="chi-squared independence of lang x source with zero cells",
 )
-def q188(spark: SparkSession, sf: str) -> DataFrame:
-    docs = t(spark, sf, "documents")
-    o = docs.groupBy("lang", "source").agg(F.count("*").alias("o"))
-    rm = docs.groupBy("lang").agg(F.count("*").alias("r"))
-    cm = docs.groupBy("source").agg(F.count("*").alias("c"))
-    nn = docs.agg(F.count("*").alias("n"))
-    cell = (
-        rm.crossJoin(F.broadcast(cm))
-        .crossJoin(F.broadcast(nn))
-        .join(F.broadcast(o), ["lang", "source"], "left")
-        .select("lang", "r", "c", "n", F.coalesce("o", F.lit(0)).alias("o"))
-        .withColumn("e", F.expr(_CHI_E))
-    )
-    return (
-        cell.groupBy("lang")
-        .agg(
-            F.max("r").cast("long").alias("n_lang"),
-            F.sum(F.expr(_CHI_TERM)).cast("long").alias("chi2_micros"),
-        )
-        .orderBy("lang")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -438,9 +417,9 @@ def q189(spark: SparkSession, sf: str) -> DataFrame:
 _RA_TERM = "CAST(floor(1000000.0 / CAST(deg AS DOUBLE)) AS BIGINT)"
 
 
-@query(
+sql_query(
     "q190_link_prediction",
-    oracle=f"""
+    f"""
     WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
     deg AS (SELECT user_id, count(*) AS deg FROM ut GROUP BY 1),
     pairs AS (
@@ -455,21 +434,6 @@ _RA_TERM = "CAST(floor(1000000.0 / CAST(deg AS DOUBLE)) AS BIGINT)"
     category="mining",
     doc="resource-allocation index between event types via common users",
 )
-def q190(spark: SparkSession, sf: str) -> DataFrame:
-    ut = t(spark, sf, "events").select("user_id", "event_type").distinct()
-    deg = ut.groupBy("user_id").agg(F.count("*").alias("deg"))
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    pairs = a.join(b, "user_id").filter(F.col("type_a") < F.col("type_b"))
-    return (
-        pairs.join(deg, "user_id")
-        .groupBy("type_a", "type_b")
-        .agg(
-            F.count("*").cast("long").alias("common_users"),
-            F.sum(F.expr(_RA_TERM)).cast("long").alias("ra_micros"),
-        )
-        .orderBy("type_a", "type_b")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -572,9 +536,9 @@ def spark_range_digits(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q192_quantile_norm",
-    oracle="""
+    """
     WITH r AS (
       SELECT source, n_chars,
              row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rk
@@ -589,25 +553,6 @@ def spark_range_digits(spark: SparkSession) -> DataFrame:
     category="prep",
     doc="quantile-normalization map of n_chars across sources",
 )
-def q192(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    r = t(spark, sf, "documents").select(
-        "source", "n_chars", F.row_number().over(w).alias("rk")
-    )
-    return (
-        r.groupBy("rk")
-        .agg(
-            F.count("*").cast("long").alias("n_sources"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.expr(
-                "CAST(floor(1000000.0 * CAST(SUM(n_chars) AS DOUBLE)"
-                " / CAST(count(*) AS DOUBLE)) AS BIGINT)"
-            ).alias("mean_chars_micros"),
-        )
-        .orderBy("rk")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -632,9 +577,9 @@ _HELL_TERM = (
 )
 
 
-@query(
+sql_query(
     "q193_hellinger_drift",
-    oracle=f"""
+    f"""
     WITH c AS (
       SELECT event_type,
              CAST(SUM(CASE WHEN EXTRACT(DAY FROM ts) <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
@@ -648,25 +593,6 @@ _HELL_TERM = (
     category="analytics",
     doc="Hellinger distance terms between month halves per event type",
 )
-def q193(spark: SparkSession, sf: str) -> DataFrame:
-    c = (
-        t(spark, sf, "events")
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.expr("CASE WHEN EXTRACT(DAY FROM ts) <= 15 THEN 1 ELSE 0 END"))
-            .cast("long")
-            .alias("c1"),
-            F.sum(F.expr("CASE WHEN EXTRACT(DAY FROM ts) > 15 THEN 1 ELSE 0 END"))
-            .cast("long")
-            .alias("c2"),
-        )
-    )
-    nn = c.agg(F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2"))
-    return (
-        c.crossJoin(F.broadcast(nn))
-        .select("event_type", "c1", "c2", F.expr(_HELL_TERM).alias("hellinger_term_micros"))
-        .orderBy("event_type")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1035,9 +961,9 @@ _F_EXPR = (
 )
 
 
-@query(
+sql_query(
     "q198_anova_f",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT source, CAST(count(*) AS BIGINT) AS ng,
              CAST(SUM(n_chars) AS BIGINT) AS s1g,
@@ -1063,33 +989,6 @@ _F_EXPR = (
     category="analytics",
     doc="one-way ANOVA F of n_chars across sources, integer-exact moments",
 )
-def q198(spark: SparkSession, sf: str) -> DataFrame:
-    g = (
-        t(spark, sf, "documents")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("ng"),
-            F.sum("n_chars").cast("long").alias("s1g"),
-            F.sum(F.expr("n_chars * n_chars")).cast("long").alias("s2g"),
-        )
-    )
-    tot = g.agg(
-        F.count("*").cast("long").alias("k"),
-        F.sum("ng").cast("long").alias("n"),
-        F.sum("s1g").cast("long").alias("s1"),
-        F.sum(F.expr(_SSB_TERM)).cast("long").alias("ssb_raw"),
-        F.sum(F.expr(_SSW_TERM)).cast("long").alias("ssw_micros"),
-    )
-    fin = tot.select(
-        "k",
-        "n",
-        F.expr(
-            "ssb_raw - CAST(floor(1000000.0 * (CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)"
-            " / CAST(n AS DOUBLE))) AS BIGINT)"
-        ).alias("ssb_micros"),
-        "ssw_micros",
-    )
-    return fin.select("k", "n", "ssb_micros", "ssw_micros", F.expr(_F_EXPR).alias("f_micros"))
 
 
 # --------------------------------------------------------------------------
@@ -1109,9 +1008,9 @@ def q198(spark: SparkSession, sf: str) -> DataFrame:
 _KS_L1, _KS_L2 = "en", "de"
 
 
-@query(
+sql_query(
     "q199_ks_test",
-    oracle=f"""
+    f"""
     WITH v AS (
       SELECT n_chars AS x, CASE WHEN lang = '{_KS_L1}' THEN 1 ELSE 0 END AS g
       FROM documents WHERE lang IN ('{_KS_L1}', '{_KS_L2}')
@@ -1136,47 +1035,6 @@ _KS_L1, _KS_L2 = "en", "de"
     category="analytics",
     doc="exact two-sample KS distance between language length distributions",
 )
-def q199(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    v = (
-        t(spark, sf, "documents")
-        .filter(F.col("lang").isin(_KS_L1, _KS_L2))
-        .select(
-            F.col("n_chars").alias("x"),
-            F.when(F.col("lang") == _KS_L1, 1).otherwise(0).alias("g"),
-        )
-    )
-    n = v.agg(
-        F.sum("g").cast("long").alias("n1"),
-        F.sum(F.expr("1 - g")).cast("long").alias("n2"),
-    )
-    d = v.groupBy("x").agg(
-        F.sum("g").cast("long").alias("c1"),
-        F.sum(F.expr("1 - g")).cast("long").alias("c2"),
-    )
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    c = d.select("x", F.sum("c1").over(w).alias("a1"), F.sum("c2").over(w).alias("a2"))
-    s = c.crossJoin(F.broadcast(n)).select(
-        "x", "n1", "n2", F.abs(F.expr("a1 * n2 - a2 * n1")).alias("num")
-    )
-    mx = s.agg(F.max("num").alias("ks_num"))
-    return (
-        s.crossJoin(F.broadcast(mx))
-        .filter(F.col("num") == F.col("ks_num"))
-        .groupBy("n1", "n2", "ks_num")
-        .agg(F.min("x").cast("long").alias("at_x"))
-        .select(
-            "n1",
-            "n2",
-            F.col("ks_num").cast("long").alias("ks_num"),
-            "at_x",
-            F.expr(
-                "CAST(floor(1000000.0 * CAST(ks_num AS DOUBLE)"
-                " / CAST(n1 * n2 AS DOUBLE)) AS BIGINT)"
-            ).alias("d_micros"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------

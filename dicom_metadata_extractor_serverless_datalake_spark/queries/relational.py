@@ -89,9 +89,9 @@ def q01(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q02_filter_project",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber, l_extendedprice,
            CAST(l_shipdate AS DATE) AS ship_date
     FROM lineitem
@@ -100,21 +100,6 @@ def q01(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="scan",
 )
-def q02(spark: SparkSession, sf: str) -> DataFrame:
-    return (
-        t(spark, sf, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.expr("TIMESTAMP '2001-01-01 00:00:00'"))
-            & (F.col("l_quantity") < 5)
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_extendedprice",
-            F.col("l_shipdate").cast("date").alias("ship_date"),
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -333,9 +318,9 @@ def q04(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q05_left_join",
-    oracle="""
+    """
     SELECT has_recent, COUNT(*) AS n_customers
     FROM (
       SELECT c.c_custkey,
@@ -349,48 +334,22 @@ def q04(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q05(spark: SparkSession, sf: str) -> DataFrame:
-    customer = t(spark, sf, "customer")
-    recent = t(spark, sf, "orders").filter(
-        F.col("o_orderdate") >= F.expr("TIMESTAMP '2001-06-01 00:00:00'")
-    )
-    per_cust = (
-        customer.join(recent, customer.c_custkey == recent.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.when(F.max("o_orderkey").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("has_recent")
-        )
-    )
-    return (
-        per_cust.groupBy("has_recent")
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("has_recent")
-    )
 
 
-@query(
+sql_query(
     "q06_right_join",
-    oracle="""
+    """
     SELECT n_name, COUNT(s_suppkey) AS n_suppliers
     FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
     GROUP BY n_name ORDER BY n_name
     """,
     category="join",
 )
-def q06(spark: SparkSession, sf: str) -> DataFrame:
-    supplier = t(spark, sf, "supplier")
-    nation = t(spark, sf, "nation")
-    return (
-        supplier.join(nation, supplier.s_nationkey == nation.n_nationkey, "right")
-        .groupBy("n_name")
-        .agg(F.count("s_suppkey").alias("n_suppliers"))
-        .orderBy("n_name")
-    )
 
 
-@query(
+sql_query(
     "q07_full_outer_join",
-    oracle=f"""
+    f"""
     WITH c AS (SELECT c_nationkey AS nk, COUNT(*) AS n_cust,
                       {sql_dsum('c_acctbal', 'cust_bal')}
                FROM customer WHERE c_acctbal > 9000 GROUP BY c_nationkey),
@@ -405,29 +364,6 @@ def q06(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q07(spark: SparkSession, sf: str) -> DataFrame:
-    c = (
-        t(spark, sf, "customer")
-        .filter(F.col("c_acctbal") > 9000)
-        .groupBy(F.col("c_nationkey").alias("c_nk"))
-        .agg(F.count("*").alias("n_cust"), dsum("c_acctbal", "cust_bal"))
-    )
-    s = (
-        t(spark, sf, "supplier")
-        .filter(F.col("s_acctbal") > 9000)
-        .groupBy(F.col("s_nationkey").alias("s_nk"))
-        .agg(F.count("*").alias("n_supp"))
-    )
-    return (
-        c.join(s, c.c_nk == s.s_nk, "full_outer")
-        .select(
-            F.coalesce(c.c_nk, s.s_nk).alias("nationkey"),
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("cust_bal", F.lit(0.0)).alias("cust_bal"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        )
-        .orderBy("nationkey")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -436,9 +372,9 @@ def q07(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q08_semi_join",
-    oracle="""
+    """
     SELECT c_mktsegment, COUNT(*) AS n_customers
     FROM customer WHERE EXISTS (
       SELECT 1 FROM orders
@@ -448,20 +384,11 @@ def q07(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q08(spark: SparkSession, sf: str) -> DataFrame:
-    customer = t(spark, sf, "customer")
-    urgent = t(spark, sf, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        customer.join(urgent, customer.c_custkey == urgent.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("c_mktsegment")
-    )
 
 
-@query(
+sql_query(
     "q09_anti_join",
-    oracle="""
+    """
     SELECT c_custkey, c_name FROM customer
     WHERE NOT EXISTS (
       SELECT 1 FROM orders
@@ -471,14 +398,6 @@ def q08(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q09(spark: SparkSession, sf: str) -> DataFrame:
-    customer = t(spark, sf, "customer")
-    urgent = t(spark, sf, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        customer.join(urgent, customer.c_custkey == urgent.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -486,9 +405,9 @@ def q09(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q10_cross_join",
-    oracle="""
+    """
     SELECT a.r_name AS from_region, b.r_name AS to_region
     FROM region a CROSS JOIN region b
     WHERE a.r_regionkey <> b.r_regionkey
@@ -496,16 +415,6 @@ def q09(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q10(spark: SparkSession, sf: str) -> DataFrame:
-    r = t(spark, sf, "region")
-    a = r.select(F.col("r_regionkey").alias("ak"), F.col("r_name").alias("from_region"))
-    b = r.select(F.col("r_regionkey").alias("bk"), F.col("r_name").alias("to_region"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("ak") != F.col("bk"))
-        .select("from_region", "to_region")
-        .orderBy("from_region", "to_region")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -514,9 +423,9 @@ def q10(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q11_range_join",
-    oracle="""
+    """
     SELECT o_orderpriority, COUNT(*) AS n_fast_lines
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     WHERE l_shipdate >= o_orderdate
@@ -525,20 +434,6 @@ def q10(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="join",
 )
-def q11(spark: SparkSession, sf: str) -> DataFrame:
-    lineitem = t(spark, sf, "lineitem")
-    orders = t(spark, sf, "orders")
-    cond = (
-        (lineitem.l_orderkey == orders.o_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate < orders.o_orderdate + F.expr("INTERVAL 30 DAY"))
-    )
-    return (
-        lineitem.join(orders, cond)
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_fast_lines"))
-        .orderBy("o_orderpriority")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -546,7 +441,9 @@ def q11(spark: SparkSession, sf: str) -> DataFrame:
 # result is reduction-order independent (a raw double stddev is not).
 # --------------------------------------------------------------------------
 
-_STDDEV_ORACLE = """
+sql_query(
+    "q12_agg_stats",
+    """
     SELECT c_nationkey,
            COUNT(*) AS n,
            MIN(c_acctbal) AS min_bal,
@@ -560,27 +457,9 @@ _STDDEV_ORACLE = """
              / (CAST(COUNT(c_acctbal) AS DOUBLE) - 1.0)
            ) AS stddev_bal
     FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
-"""
-
-
-@query("q12_agg_stats", oracle=_STDDEV_ORACLE, category="agg")
-def q12(spark: SparkSession, sf: str) -> DataFrame:
-    c = F.col("c_acctbal")
-    s = dsum_expr("c_acctbal", 2)
-    ss = dsum_expr("c_acctbal * c_acctbal", 4)
-    n = F.count(c).cast("double")
-    return (
-        t(spark, sf, "customer")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count("*").alias("n"),
-            F.min(c).alias("min_bal"),
-            F.max(c).alias("max_bal"),
-            (s / F.count(c)).alias("avg_bal"),
-            F.sqrt((ss - s * s / n) / (n - F.lit(1.0))).alias("stddev_bal"),
-        )
-        .orderBy("c_nationkey")
-    )
+    """,
+    category="agg",
+)
 
 
 # --------------------------------------------------------------------------
@@ -588,9 +467,9 @@ def q12(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q13_count_distinct",
-    oracle="""
+    """
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
            COUNT(DISTINCT o_custkey) AS n_customers
@@ -598,16 +477,6 @@ def q12(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="agg",
 )
-def q13(spark: SparkSession, sf: str) -> DataFrame:
-    return (
-        t(spark, sf, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-        .orderBy("o_orderpriority")
-    )
 
 
 # q14 — approx_count_distinct: HLL sketch (the 100 TB scale path; q13 is
@@ -736,9 +605,9 @@ def q18(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q19_union_all",
-    oracle="""
+    """
     SELECT nationkey, COUNT(*) AS n FROM (
       SELECT c_nationkey AS nationkey FROM customer
       UNION ALL
@@ -747,15 +616,11 @@ def q18(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="setop",
 )
-def q19(spark: SparkSession, sf: str) -> DataFrame:
-    c = t(spark, sf, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = t(spark, sf, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.unionByName(s).groupBy("nationkey").agg(F.count("*").alias("n")).orderBy("nationkey")
 
 
-@query(
+sql_query(
     "q20_intersect",
-    oracle="""
+    """
     SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 9990
     INTERSECT
     SELECT s_nationkey FROM supplier
@@ -763,19 +628,11 @@ def q19(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="setop",
 )
-def q20(spark: SparkSession, sf: str) -> DataFrame:
-    c = (
-        t(spark, sf, "customer")
-        .filter(F.col("c_acctbal") > 9990)
-        .select(F.col("c_nationkey").alias("nationkey"))
-    )
-    s = t(spark, sf, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s).orderBy("nationkey")
 
 
-@query(
+sql_query(
     "q21_except",
-    oracle="""
+    """
     SELECT n_nationkey FROM nation
     EXCEPT
     SELECT s_nationkey FROM supplier
@@ -783,10 +640,6 @@ def q20(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="setop",
 )
-def q21(spark: SparkSession, sf: str) -> DataFrame:
-    n = t(spark, sf, "nation").select("n_nationkey")
-    s = t(spark, sf, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
-    return n.exceptAll(s).distinct().orderBy("n_nationkey")
 
 
 # --------------------------------------------------------------------------
@@ -795,21 +648,14 @@ def q21(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q22_top_k",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
     """,
     category="sort",
 )
-def q22(spark: SparkSession, sf: str) -> DataFrame:
-    return (
-        t(spark, sf, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(100)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -985,9 +831,9 @@ sql_query(
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q29_latest_per_key",
-    oracle="""
+    """
     SELECT user_id, event_id, event_type
     FROM (
       SELECT user_id, event_id, event_type,
@@ -999,19 +845,6 @@ sql_query(
     """,
     category="dedup",
 )
-def q29(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        t(spark, sf, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type")
-        .orderBy("user_id")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1117,17 +950,30 @@ def q69(spark: SparkSession, sf: str) -> DataFrame:
 
 STATS_TABLE = "q115_orders"
 STATS_PRICE_FLOOR = 499_000.0
+# table property: digest of the (sf, analyze) a stats table was written from
+_STATS_SOURCE_PROP = "stats_source"
 
 
 def prepare_stats_table(
     spark: SparkSession, sf: str, analyze: bool = True, table: str = STATS_TABLE
 ) -> str:
     """Materialize orders as a managed catalog table; with ``analyze``,
-    collect the table + column statistics the CBO plans from."""
+    collect the table + column statistics the CBO plans from. A table
+    this function already wrote from the same ``sf`` with the same
+    ``analyze`` is reused, so a frame an earlier build returned keeps
+    reading its files; any other table of that name is rewritten."""
+    import hashlib
     import shutil
 
     from ..sources.catalog import analyze_table
 
+    # the provenance property is set last: a run that crashed before it
+    # leaves a table that does not match, so it is rewritten
+    source = hashlib.sha1(f"{sf}\0{analyze}".encode()).hexdigest()
+    if spark.catalog.tableExists(table):
+        props = dict(spark.sql(f"SHOW TBLPROPERTIES {table}").collect())
+        if props.get(_STATS_SOURCE_PROP) == source:
+            return table
     # a crashed prior run can leave the managed location on disk without
     # a catalog entry — clear both before writing
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -1138,6 +984,7 @@ def prepare_stats_table(
     t(spark, sf, "orders").write.mode("overwrite").saveAsTable(table)
     if analyze:
         analyze_table(spark, table, ["o_totalprice", "o_orderkey", "o_orderpriority"])
+    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ('{_STATS_SOURCE_PROP}' = '{source}')")
     return table
 
 

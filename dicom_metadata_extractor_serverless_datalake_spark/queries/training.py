@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import h31
-from .base import query, t
+from .base import query, sql_query, t
 from .llm import duck_h31
 
 # --------------------------------------------------------------------------
@@ -411,9 +411,9 @@ def q80(spark: SparkSession, sf: str) -> DataFrame:
 _SKEW_TOP = 20
 
 
-@query(
+sql_query(
     "q81_skew_report",
-    oracle=f"""
+    f"""
     WITH freq AS (
       SELECT o_custkey AS key, COUNT(*) AS n FROM orders GROUP BY o_custkey
     ),
@@ -425,28 +425,6 @@ _SKEW_TOP = 20
     """,
     category="training",
 )
-def q81(spark: SparkSession, sf: str) -> DataFrame:
-    freq = (
-        t(spark, sf, "orders")
-        .groupBy(F.col("o_custkey").alias("key"))
-        .agg(F.count("*").alias("n"))
-    )
-    tot = freq.agg(
-        F.sum("n").cast("long").alias("total"), F.count("*").alias("n_keys")
-    )
-    return (
-        freq.crossJoin(F.broadcast(tot))
-        .select(
-            "key",
-            "n",
-            (F.col("n").cast("double") / F.col("total")).alias("share"),
-            (F.col("n").cast("double") * F.col("n_keys") / F.col("total")).alias(
-                "skew_factor"
-            ),
-        )
-        .orderBy(F.desc("n"), "key")
-        .limit(_SKEW_TOP)
-    )
 
 
 # --------------------------------------------------------------------------

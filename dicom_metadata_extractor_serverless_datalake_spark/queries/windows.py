@@ -183,9 +183,9 @@ def q33(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q34_running_sum",
-    oracle="""
+    """
     SELECT user_id, event_id,
            CAST(SUM(CAST(value AS DECIMAL(28,6))) OVER (
              PARTITION BY user_id ORDER BY ts, event_id
@@ -200,21 +200,6 @@ def q33(spark: SparkSession, sf: str) -> DataFrame:
     """,
     category="window",
 )
-def q34(spark: SparkSession, sf: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    last3 = w.rowsBetween(-2, Window.currentRow)
-    return (
-        t(spark, sf, "events")
-        .filter(F.col("user_id") < 10)
-        .select(
-            "user_id",
-            "event_id",
-            F.sum(F.col("value").cast("decimal(18,6)")).over(run).cast("double").alias("running_value"),
-            F.count("*").over(last3).alias("n_last3"),
-        )
-        .orderBy("user_id", "event_id")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -52,6 +52,17 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
         pass  # already registered in this context
+    # Spark's Python stream-source planner (PythonStreamingSourceRunner,
+    # the format("dicom") readStream behind DicomLake.watch) hands its
+    # worker the pyfiles under SparkFiles/streaming_job, a fixed job-
+    # artifact dir that addPyFile never fills: put the zip there too.
+    # The planner runs on the driver, so a driver-side link is enough.
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    shipped = os.path.join(root, os.path.basename(zip_path))
+    link = os.path.join(root, "streaming_job", os.path.basename(zip_path))
+    if os.path.exists(shipped) and not os.path.lexists(link):
+        os.makedirs(os.path.dirname(link), exist_ok=True)
+        os.symlink(shipped, link)
 
 
 def _default_driver_mem() -> str:

@@ -123,15 +123,28 @@ def load_stream(
     return _normalize_timestamps(df)
 
 
+def _present(sf_dir: str, name: str) -> bool:
+    import os
+
+    return any(
+        os.path.exists(f"{sf_dir}/{name}{ext}") for ext in (".parquet", ".bucketed.json")
+    )
+
+
 def register_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view of this session
-    (idempotent, and memoized per session while the dir is unchanged:
-    switching dirs re-registers, so no stale view survives); returns
-    the frames."""
-    frames = {name: load_table(spark, sf_dir, name) for name in STAR_TABLES}
+    """Register each testdata table present in ``sf_dir`` as a temp view
+    of this session (idempotent, and memoized per session while the dir
+    is unchanged); returns the frames. Switching dirs re-registers and
+    drops the view of every star table the new dir lacks, so no view
+    from an earlier dir survives."""
+    names = [name for name in STAR_TABLES if _present(sf_dir, name)]
+    frames = {name: load_table(spark, sf_dir, name) for name in names}
     memo = _memo(spark)
     if memo["views"] != sf_dir:
-        for name, df in frames.items():
-            df.createOrReplaceTempView(name)
+        for name in STAR_TABLES:
+            if name in frames:
+                frames[name].createOrReplaceTempView(name)
+            else:
+                spark.catalog.dropTempView(name)
         memo["views"] = sf_dir
     return frames

@@ -4,6 +4,7 @@ ingest but they remain valid query inputs)."""
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from dicom_metadata_extractor_serverless_datalake_spark.plans import physical_plan
@@ -389,3 +390,27 @@ def test_table_loaders_leave_session_conf_alone(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
     assert load_stream(fresh, str(tmp_path), "events").isStreaming
     assert fresh.conf.getAll == before
+
+
+def test_star_schema_views_follow_the_tables_present(spark, sf_dir, tmp_path):
+    """Re-registering on a dir that holds only ``events.parquet`` points
+    the ``events`` view at the new file and drops every other star view
+    an earlier dir registered: a query over the partial dir must not
+    read a table of the earlier one, nor fail on a missing file."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import (
+        register_star_schema,
+    )
+
+    sib = spark.newSession()
+    register_star_schema(sib, sf_dir)
+    assert sib.table("orders").count() > 0
+    pq.write_table(pq.read_table(f"{sf_dir}/events.parquet").slice(0, 7), tmp_path / "events.parquet")
+
+    frames = register_star_schema(sib, str(tmp_path))
+    assert set(frames) == {"events"}
+    assert sib.table("events").count() == 7
+    with pytest.raises(AnalysisException):
+        sib.table("orders")

@@ -134,8 +134,6 @@ def test_lake_write_forks_no_chmod(tmp_path, sf_dir):
         os.environ,
         PATH=f"{shim_dir}{os.pathsep}{os.environ.get('PATH', '')}",
         CHMOD_LOG=str(log),
-        # the streaming source's planner worker imports the package
-        PYTHONPATH=os.pathsep.join(filter(None, (REPO, os.environ.get("PYTHONPATH")))),
         SPARK_DRIVER_MEM="1g",
     )
     out = subprocess.run(

@@ -321,12 +321,21 @@ def test_q115_session_copies_the_callers_runtime_conf(spark, sf_dir):
     assert first.sparkSession is not caller
     assert first.sparkSession.conf.get(parts) == "7"
     assert first.sparkSession.conf.get("spark.sql.cbo.enabled") == "true"
-    rows = first.collect()  # each build rewrites the stats table
+    rows = first.collect()
     caller.conf.set(parts, "5")
     second = _q("q115_stats_broadcast_join", caller, sf_dir)
     assert second.sparkSession.conf.get(parts) == "5"
     assert second.collect() == rows
     assert caller.conf.get("spark.sql.cbo.enabled") == spark.conf.get("spark.sql.cbo.enabled")
+
+
+def test_q115_rebuild_keeps_an_earlier_frame_readable(spark, sf_dir):
+    """A second q115 build from the same dir reuses the stats table the
+    first one wrote, so the frame the first build returned still reads
+    its files and gives the same rows."""
+    first = _q("q115_stats_broadcast_join", spark, sf_dir)
+    second = _q("q115_stats_broadcast_join", spark, sf_dir)
+    assert first.collect() == second.collect()
 
 
 def test_cc_edge_partitioning_reused_across_rounds(spark):

@@ -5,7 +5,8 @@ The reference is a serverless ingest-ETL (S3 event -> Lambda/Batch ->
 pydicom metadata flatten -> partitioned Parquet -> Glue/Athena SQL).
 This package re-expresses that dataflow Spark-first:
 
-- ``sources``   : object walker + ranged read, format("dicom"), parquet / csv / json readers
+- ``sources``   : object walker + ranged read, format("dicom"), parquet / csv / json readers,
+                  and the one stage-and-commit of every lake rewrite and streaming sink
 - ``dicom``     : pure-Python DICOM codec + VR type system (public PS3.5/3.6/3.10)
 - ``ingest``    : ranged read -> archive explode -> typed flatten -> Parquet lake
 - ``operators`` : as-of join, top-k, dedup (exact/MinHash/SimHash), similarity

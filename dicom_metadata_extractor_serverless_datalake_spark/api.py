@@ -8,12 +8,13 @@ failures. ``DicomLake`` is that surface on Spark:
 
     lake = DicomLake(spark, "/data/lake", quarantine_path="/data/quar")
     lake.ingest("/incoming/batch1")          # batch replay of events
-    q = lake.watch("/incoming", "/ckpt")     # or: continuous ingestion
+    q = lake.watch("/incoming", "/ckpt")     # or: continuous, exactly-once
     lake.sql("SELECT modality, COUNT(*) FROM dicom_metadata "
              "WHERE study_date = DATE'2021-11-03' GROUP BY modality")
     lake.refresh()                           # the MSCK/crawler step
     lake.quarantine()                        # the DLQ
     lake.compact()                           # small-files maintenance
+    lake.purge(predicate)                    # right-to-erasure DELETE
 
 Mapping to the reference: ingest == src/app.py:97-189 (Lambda handler)
 replayed over every object; watch == the S3-event wiring
@@ -23,6 +24,13 @@ replayed over every object; watch == the S3-event wiring
 123-147). compact has no reference analogue — it undoes the
 small-files layout the reference's one-object-per-Lambda writes
 produce.
+
+Where each writes: ingest appends through Spark's own job commit
+(ingest/pipeline.py); watch, compact, purge and purge_quarantine make
+their files visible through the one stage-and-commit of
+sources/commit.py, one commit at a time per root, whose ``_staging/``
+and ``_commits/`` dirs under the lake and quarantine roots no reader
+lists.
 """
 
 from __future__ import annotations
@@ -74,8 +82,14 @@ class DicomLake:
     def watch(self, input_path: str, checkpoint_path: str, available_now: bool = False):
         """Continuous ingestion of newly arriving objects (the S3-event
         pattern as a Structured Streaming query), through the same ranged
-        read and lake/quarantine writer as :meth:`ingest`. Returns the
-        handle."""
+        read and lake/quarantine writer as :meth:`ingest`. Each
+        micro-batch is staged and committed to the quarantine and to the
+        lake under its batch token (sources/commit.py), so a batch
+        replayed on restart from ``checkpoint_path`` lands once. Several
+        watches (own checkpoints) may feed one lake, and a watch may run
+        while :meth:`compact` or :meth:`purge` does (its commit waits for
+        theirs); do not run :meth:`ingest` alongside those two. Returns
+        the handle."""
         from .streaming import start_ingest_stream
 
         return start_ingest_stream(
@@ -134,7 +148,12 @@ class DicomLake:
             return None  # nothing quarantined yet: the path does not exist
 
     def compact(self, target_file_bytes: int = 128 << 20, min_files: int = 8) -> dict[str, int]:
-        """Rewrite small-file partitions (operators/compact.py)."""
+        """Rewrite every partition holding at least ``min_files`` files
+        into at most ceil(bytes / ``target_file_bytes``) files, in one
+        Spark job, swapped in by the one lake commit (operators/
+        compact.py) under the lake's commit lock, so a running
+        :meth:`watch` waits for it; batch :meth:`ingest` does not, so do
+        not run the two at once. Returns partition -> new file count."""
         from .operators import compact_lake
 
         return compact_lake(
@@ -145,9 +164,13 @@ class DicomLake:
         """Right-to-erasure DELETE (operators/purge.py): rewrite only
         the partitions containing rows that match ``predicate`` (a
         deterministic Column), dropping those rows; partitions whose
-        rows all matched are removed. The compliance complement to
-        :meth:`deidentified` — erase the subject from the lake itself.
-        Refresh any registered catalog table afterwards."""
+        rows all matched are removed. The rewrite is staged and swapped
+        in by the one lake commit (sources/commit.py) under the lake's
+        commit lock, so a crash mid-swap rolls forward on the next
+        commit and a running :meth:`watch` waits for it; batch
+        :meth:`ingest` does not, so do not run the two at once. The
+        compliance complement to :meth:`deidentified` — erase the
+        subject from the lake itself. Refresh any registered catalog table afterwards."""
         from .operators.purge import purge_rows
         from .schema import DICOM_METADATA_SCHEMA
 
@@ -159,8 +182,9 @@ class DicomLake:
         """Erasure for the quarantine channel (operators/purge.py):
         failed-object records carry source keys and parse-error text
         that can embed subject identifiers, so a complete erasure
-        request must reach the DLQ too. Full rewrite-and-swap — the
-        quarantine holds failures only, so it stays small."""
+        request must reach the DLQ too. Full rewrite, swapped in by the
+        one lake commit — the quarantine holds failures only, so it
+        stays small."""
         from .operators.purge import purge_unpartitioned
         from .schema import INGEST_SCHEMA
 

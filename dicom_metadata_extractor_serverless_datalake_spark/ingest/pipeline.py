@@ -59,12 +59,9 @@ def extract_objects(spark: SparkSession, input_path: str) -> DataFrame:
     back to the JVM. Per-object I/O (and the 10 MB ranged .dcm cap) lives
     worker-side, exactly where it belongs on a real cluster doing ranged
     object-store GETs."""
-    from ..sources.binary import TARGET_PARTITION_BYTES, pack_objects, walk_objects
+    from ..sources.binary import plan_packs, walk_objects
 
-    entries = walk_objects(input_path)
-    total = sum(e[1] for e in entries)
-    n = max(spark.sparkContext.defaultParallelism, total // TARGET_PARTITION_BYTES)
-    packs = pack_objects(entries, n)
+    packs = plan_packs(walk_objects(input_path), spark.sparkContext.defaultParallelism)
     cols = [f.name for f in INGEST_SCHEMA.fields]
 
     def _read_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

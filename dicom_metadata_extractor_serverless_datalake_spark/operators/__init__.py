@@ -24,6 +24,6 @@ from .dedup import (  # noqa: F401
 )
 from .skew import salted_agg_count, salted_join  # noqa: F401
 from .cluster import connected_components, dedup_clusters  # noqa: F401
-from .compact import compact_lake, compact_partition, partition_file_stats  # noqa: F401
+from .compact import compact_lake, partition_file_stats  # noqa: F401
 from .purge import purge_rows, purge_unpartitioned  # noqa: F401
 from .rank import global_positions  # noqa: F401

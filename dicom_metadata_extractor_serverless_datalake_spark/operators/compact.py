@@ -6,31 +6,33 @@ thousands of KB-sized files and scan task-scheduling overhead dominates
 (the classic small-files problem — the reference had it too: one Lambda
 invocation wrote one Parquet object per input file, README.md:103).
 
-``compact_partition`` rewrites one partition's files into
-ceil(bytes / target_file_bytes) files, atomically: write to a temp dir
-beside the partition, then swap. ``compact_lake`` sweeps every
-partition that exceeds a file-count threshold.
-
-Scale notes: compaction is per-partition independent — on a real
-cluster you run many partitions' rewrites in one job (each partition is
-a task group), and only partitions past the threshold are touched, so
-steady-state cost tracks ingest rate, not lake size. The replacement
-dir is fully materialized first, then swapped in with a single pair of
-renames: a reader sees the old file set or the complete new one — the
-only exposure is the two-syscall gap between the renames, during which
-a lister may transiently miss the partition (POSIX has no two-dir
-atomic exchange; with object-store semantics a manifest/catalog pointer
-swap replaces the renames — the code isolates the swap in one place for
-that reason).
+``compact_lake`` rewrites every partition that holds at least
+``min_files`` files into at most ceil(bytes / target_file_bytes) files,
+in one Spark job: each partition is scanned on its own and coalesced to
+its file budget, and the union of those scans is written partitioned
+like the lake, so every write task holds rows of one partition and
+writes one file. No shuffle runs, and only partitions past the threshold
+are read, so steady-state cost tracks ingest rate, not lake size. The
+rewrite is staged and swapped in by the one lake commit
+(sources/commit.py), under the lake's commit lock from the scan to the
+swap: a reader sees each partition's old file set or its new one, a
+``lake.watch`` batch waits instead of landing between scan and swap,
+and a crash mid-swap rolls forward on the next commit. Batch ingest
+does not take that lock, so do not compact while it writes.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
-import shutil
-import uuid
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources import commit
 
 
 def partition_file_stats(lake_path: str) -> dict[str, tuple[int, int]]:
@@ -50,37 +52,15 @@ def partition_file_stats(lake_path: str) -> dict[str, tuple[int, int]]:
     return out
 
 
-def compact_partition(
-    spark: SparkSession,
-    lake_path: str,
-    partition: str,
-    target_file_bytes: int = 128 << 20,
-) -> int:
-    """Rewrite one partition (``"study_date=2021-11-03"``) into
-    ~target-sized files. Returns the new file count."""
-    pdir = os.path.join(lake_path, partition)
-    _files, total = partition_file_stats(lake_path)[partition]
-    n_out = max(1, -(-total // target_file_bytes))  # ceil
-    df = spark.read.parquet(pdir)
-    tmp = os.path.join(lake_path, f"_compact_{uuid.uuid4().hex}")
-    df.coalesce(n_out).write.parquet(tmp)
-    # strip sink markers so the replacement dir holds exactly the data
-    # files BEFORE it goes live — the swap below is then two renames
-    # back-to-back, so a concurrent reader sees either the old file set
-    # or the complete new one, never a partially-populated partition
-    for f in os.listdir(tmp):
-        if not f.endswith(".parquet"):
-            os.remove(os.path.join(tmp, f))
-    swap = os.path.join(lake_path, f"_old_{uuid.uuid4().hex}")
-    os.rename(pdir, swap)
-    try:
-        os.rename(tmp, pdir)
-    except Exception:
-        os.rename(swap, pdir)  # roll back
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(swap, ignore_errors=True)
-    return sum(1 for f in os.listdir(pdir) if f.endswith(".parquet"))
+def _file_schema(pdir: str) -> T.StructType:
+    """The Spark schema a data file of ``pdir`` was written with, from
+    its footer. Spark's own inference also reads one footer, but in a
+    Spark job of its own; reading it here keeps compaction one job."""
+    import pyarrow.parquet as pq
+
+    path = sorted(glob.glob(os.path.join(pdir, "[!._]*.parquet")))[0]
+    meta = pq.read_schema(path).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    return T.StructType.fromJson(json.loads(meta))
 
 
 def compact_lake(
@@ -91,10 +71,32 @@ def compact_lake(
 ) -> dict[str, int]:
     """Compact every partition holding at least ``min_files`` files.
     Returns partition -> new file count for the partitions touched."""
-    done: dict[str, int] = {}
-    for partition, (n_files, _total) in partition_file_stats(lake_path).items():
-        if n_files >= min_files:
-            done[partition] = compact_partition(
-                spark, lake_path, partition, target_file_bytes
+    with commit.rewrite(lake_path) as staged:  # first: recovery may swap partitions in
+        budget = {
+            part: max(1, -(-total // target_file_bytes))  # ceil
+            for part, (n_files, total) in partition_file_stats(lake_path).items()
+            if n_files >= min_files
+        }
+        if not budget:
+            return {}
+        col = next(iter(budget)).split("=", 1)[0]
+        schema = _file_schema(os.path.join(lake_path, next(iter(budget))))
+        # the partition value rides as the dir's own (unescaped) text, so the
+        # writer recreates each dir name exactly, whatever type Spark would infer
+        escaping = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        scans = []
+        for part, n_out in budget.items():
+            leaf = part.split("=", 1)[1]
+            value = (
+                None if leaf == "__HIVE_DEFAULT_PARTITION__" else escaping.unescapePathName(leaf)
             )
-    return done
+            scans.append(
+                spark.read.schema(schema)
+                .parquet(os.path.join(lake_path, part))
+                .coalesce(n_out)
+                .withColumn(col, F.lit(value).cast("string"))
+            )
+        reduce(DataFrame.unionByName, scans).write.partitionBy(col).parquet(staged)
+        commit.publish(staged, replace=budget)
+    stats = partition_file_stats(lake_path)
+    return {part: stats.get(part, (0, 0))[0] for part in budget}

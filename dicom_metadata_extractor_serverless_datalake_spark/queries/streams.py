@@ -300,7 +300,7 @@ def q84(spark: SparkSession, sf: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q85 — streamed latest-per-key upsert sink (streaming/upsert.py): the
-# foreachBatch CDC-compaction path writes a versioned keyed snapshot;
+# foreachBatch CDC-compaction path commits a keyed snapshot per batch;
 # the query returns the snapshot = one current row per user. The oracle
 # replays the same (ts DESC, event_id DESC) merge rule in SQL.
 # --------------------------------------------------------------------------

@@ -3,7 +3,7 @@ ranged read.
 
 Batch ingest (ingest/pipeline.py), ``format("dicom")`` and its stream
 reader (sources/dicom_source.py) all list objects with
-:func:`walk_objects`, split them into read tasks with :func:`pack_objects`
+:func:`walk_objects`, split them into read tasks with :func:`plan_packs`
 and read them with :func:`read_object`.
 
 Why not just ``spark.read.format("binaryFile")``:
@@ -97,6 +97,15 @@ def pack_objects(entries: list[tuple], n: int) -> list[list[str]]:
         packs[i].append(path)
         heapq.heapreplace(heap, (total + size, count + 1, i))
     return packs
+
+
+def plan_packs(entries: list[tuple], parallelism: int) -> list[list[str]]:
+    """The packing rule of every planner (batch ingest, ``format("dicom")``
+    and its stream reader): at least one pack per core of the cluster
+    (``parallelism``, the driver's default parallelism) and one per
+    ``TARGET_PARTITION_BYTES`` of input."""
+    n = max(parallelism, sum(e[1] for e in entries) // TARGET_PARTITION_BYTES)
+    return pack_objects(entries, n)
 
 
 def read_object(path: str) -> bytes | None:

@@ -10,9 +10,10 @@ planning, instead of a hand-rolled listing + mapInPandas:
     df.filter("error IS NULL").groupBy("modality").count()
 
 Planning: the driver lists (path, size) with ``sources.binary.walk_objects``
-and packs files with ``sources.binary.pack_objects`` into one byte-balanced
-input partition per ``TARGET_PARTITION_BYTES`` (128 MB) — the small-object
-answer at 100 TB scale: task count tracks bytes, not object count.
+and packs files with ``sources.binary.plan_packs`` into byte-balanced input
+partitions, at least one per core and one per ``TARGET_PARTITION_BYTES``
+(128 MB) — the small-object answer at 100 TB scale: past the core count,
+task count tracks bytes, not object count.
 Reading happens executor-side per partition through
 ``ingest.extract.read_extract``, so the ranged .dcm cap applies at open
 time and pixel bytes beyond the first 10 MB are never read (the
@@ -33,7 +34,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..schema import INGEST_SCHEMA
-from .binary import TARGET_PARTITION_BYTES, pack_objects, walk_objects
+from .binary import plan_packs, walk_objects
 
 
 class _FilePack(InputPartition):
@@ -57,7 +58,13 @@ def _path(options) -> str:
 
 
 class DicomDataSource(DataSource):
-    """Batch and stream reader for DICOM objects (bare or inside archives)."""
+    """Batch and stream reader for DICOM objects (bare or inside archives).
+
+    ``parallelism`` is the driver's default parallelism; the planners run
+    in a Python worker without a SparkContext, so
+    :func:`register_dicom_source` bakes it into the class it registers."""
+
+    parallelism = 1
 
     @classmethod
     def name(cls) -> str:
@@ -67,28 +74,32 @@ class DicomDataSource(DataSource):
         return INGEST_SCHEMA
 
     def reader(self, schema) -> "DicomReader":
-        return DicomReader(_path(self.options))
+        return DicomReader(_path(self.options), self.parallelism)
 
     def streamReader(self, schema) -> "DicomStreamReader":
-        return DicomStreamReader(_path(self.options))
+        return DicomStreamReader(_path(self.options), self.parallelism)
 
 
 class DicomReader(DataSourceReader):
-    def __init__(self, path: str):
+    def __init__(self, path: str, parallelism: int):
         self.path = path
+        self.parallelism = parallelism
 
     def partitions(self) -> list[_FilePack]:
-        entries = walk_objects(self.path)
-        n = sum(e[1] for e in entries) // TARGET_PARTITION_BYTES
-        return [_FilePack(p) for p in pack_objects(entries, n)]
+        return [_FilePack(p) for p in plan_packs(walk_objects(self.path), self.parallelism)]
 
     def read(self, partition: _FilePack):
         return _read_pack(partition)
 
 
 def register_dicom_source(spark) -> None:
-    """Idempotently register ``format("dicom")`` on this session."""
-    spark.dataSource.register(DicomDataSource)
+    """Idempotently register ``format("dicom")`` on this session. The
+    class registered is a subclass made here, so it is pickled by value
+    and its ``parallelism`` reaches the planner workers."""
+    parallelism = spark.sparkContext.defaultParallelism
+    spark.dataSource.register(
+        type("DicomDataSource", (DicomDataSource,), {"parallelism": parallelism})
+    )
 
 
 # --------------------------------------------------------------------------
@@ -110,8 +121,9 @@ def register_dicom_source(spark) -> None:
 
 
 class DicomStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str):
+    def __init__(self, path: str, parallelism: int):
         self.path = path
+        self.parallelism = parallelism
 
     def initialOffset(self) -> dict:
         return {"mtime": -1, "tail": ""}
@@ -138,8 +150,7 @@ class DicomStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[_FilePack]:
         entries = self._new_files(start, end)
-        n = sum(e[1] for e in entries) // TARGET_PARTITION_BYTES
-        return [_FilePack(p) for p in pack_objects(entries, n)]
+        return [_FilePack(p) for p in plan_packs(entries, self.parallelism)]
 
     def read(self, partition: _FilePack):
         return _read_pack(partition)

@@ -8,9 +8,11 @@ directory as a Structured Streaming file source, digests each text
 map-side (sha2-256 — shuffles carry the 64-char digest, never the
 text, the q50 convention), drops exact duplicates ACROSS micro-batches
 with streaming dedup state, and appends survivors to a parquet lake
-via ``foreachBatch``. A catch-up run is ``Trigger.AvailableNow``;
-``maxFilesPerTrigger`` bounds batch size so the drain exercises
-cross-batch state, exactly like the event-stream corpus queries.
+via ``foreachBatch``, each batch staged and committed under its token
+(sources/commit.py) so a batch replayed after a crash lands once. A
+catch-up run is ``Trigger.AvailableNow``; ``maxFilesPerTrigger``
+bounds batch size so the drain exercises cross-batch state, exactly
+like the event-stream corpus queries.
 
 State posture: exact-dedup state is one digest per UNIQUE document —
 the same cardinality the batch dedup's digest aggregate shuffles, held
@@ -29,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sources import commit
+
 
 def start_corpus_stream(
     spark: SparkSession,
@@ -44,9 +48,9 @@ def start_corpus_stream(
 ) -> StreamingQuery:
     """Start the ingest stream; returns the StreamingQuery.
 
-    The lake receives the source columns plus ``_digest``; re-runs are
-    idempotent at the batch level via the checkpoint and at the record
-    level via the dedup state."""
+    The lake receives the source columns plus ``_digest``; the dedup
+    state drops a document seen in an earlier batch, and the batch's
+    commit token drops a replayed batch."""
     schema = spark.read.parquet(input_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -59,8 +63,12 @@ def start_corpus_stream(
     else:
         deduped = digested.dropDuplicates(["_digest"])
 
-    def _append(batch: DataFrame, _batch_id: int) -> None:
-        batch.write.mode("append").parquet(lake_path)
+    def _append(batch: DataFrame, batch_id: int) -> None:
+        # a replay still runs: Spark fails a stateful batch whose sink
+        # leaves its dedup state uncommitted; publish drops its files
+        staged = commit.stage(lake_path, commit.batch_token(batch, batch_id))
+        batch.write.parquet(staged)
+        commit.publish(staged)
 
     writer = (
         deduped.writeStream.outputMode("append")

@@ -9,8 +9,12 @@ hands each micro-batch to the batch writer (ingest.pipeline.write_split)
 lake/quarantine writer, zero-byte objects included.
 
 At-least-once S3 events (the reference punts redelivery to Lambda
-retries + DLQ) become idempotent here via dropDuplicates on the lineage
-key before the sink.
+retries + DLQ) become exactly-once here: dropDuplicates on the lineage
+key drops an object delivered twice within a batch, and the sink
+stages each batch and commits it to the quarantine, then to the lake,
+under the batch's token (sources/commit.py), so a batch Spark replays
+after a crash lands once: a replay the lake recorded is skipped
+unread, and a root that recorded it drops its second copy.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ingest.pipeline import write_split
+from ..sources import commit
 from ..sources.dicom_source import register_dicom_source
 
 
@@ -41,8 +46,18 @@ def start_ingest_stream(
     reader = spark.readStream.format("dicom").load(input_path)
 
     def sink(batch_df, batch_id: int) -> None:
+        token = commit.batch_token(batch_df, batch_id)
+        # the source keeps no state to commit, so a replay of a batch that
+        # landed whole (the lake commits last) may go unread
+        if commit.published(lake_path, token):
+            return
+        lake = commit.stage(lake_path, token)
+        quarantine = quarantine_path and commit.stage(quarantine_path, token)
         deduped = batch_df.dropDuplicates(["source_s3_key", "source_s3_archive_path"])
-        write_split(deduped, lake_path, quarantine_path)
+        write_split(deduped, lake, quarantine)
+        if quarantine:
+            commit.publish(quarantine)
+        commit.publish(lake)
 
     writer = reader.writeStream.foreachBatch(sink)
     if checkpoint_path:

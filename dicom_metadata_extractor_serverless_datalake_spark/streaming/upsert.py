@@ -8,11 +8,12 @@ each micro-batch merges into a keyed snapshot via ``foreachBatch``, so
 readers see one current row per key.
 
 Mechanics: plain Parquet has no transactional MERGE, so the snapshot is
-copy-on-write and versioned — batch N writes ``v{N}/`` next to the
-previous version and the reader resolves the highest complete version
-(``_SUCCESS`` present). Versioned dirs make the swap atomic on any
-filesystem/object store without rename semantics, and stale versions
-are pruned after write.
+copy-on-write: batch N merges into the current snapshot, stages the
+result and swaps ``<path>/current`` for it with the one lake commit
+(sources/commit.py), whose token is the batch: a reader sees the old
+snapshot or the new one. A batch Spark replays after a crash finds its
+token recorded, so it is not applied twice, and a crash mid-swap rolls
+forward before the next batch reads the snapshot.
 
 Scale notes: copy-on-write rewrites the full snapshot per batch, which
 is right when the keyed state is much smaller than the stream (device
@@ -26,10 +27,13 @@ is unchanged, which is why it lives in its own function here.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..sources import commit
+
+CURRENT = "current"  # the snapshot dir under the sink's path, swapped whole
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -58,30 +62,11 @@ def latest_per_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFr
     )
 
 
-def current_snapshot_version(path: str, below: int | None = None) -> int | None:
-    """Highest complete version, optionally restricted to versions
-    strictly below ``below`` (replay recovery: a replayed batch N must
-    re-derive from v{N-1}, never read its own half-committed v{N})."""
-    best = None
-    if not os.path.isdir(path):
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame | None:
+    """The snapshot at ``path``, or None before its first batch."""
+    if not os.path.isdir(os.path.join(path, CURRENT)):
         return None
-    for name in os.listdir(path):
-        if name.startswith("v") and name[1:].isdigit():
-            if os.path.exists(os.path.join(path, name, "_SUCCESS")):
-                v = int(name[1:])
-                if below is not None and v >= below:
-                    continue
-                best = v if best is None or v > best else best
-    return best
-
-
-def read_snapshot(
-    spark: SparkSession, path: str, below: int | None = None
-) -> DataFrame | None:
-    v = current_snapshot_version(path, below=below)
-    if v is None:
-        return None
-    return spark.read.parquet(os.path.join(path, f"v{v}"))
+    return spark.read.parquet(os.path.join(path, CURRENT))
 
 
 def start_upsert_sink(
@@ -91,32 +76,24 @@ def start_upsert_sink(
     order_col: str,
     checkpoint_path: str,
     available_now: bool = True,
-    keep_versions: int = 2,
 ):
     """Run the stream into a latest-per-key snapshot at snapshot_path.
 
-    Exactly-once per batch: the version number is the batch id, so a
-    replayed batch (restart after failure between write and checkpoint
-    commit) overwrites its own version rather than double-applying."""
+    Exactly-once per batch: each batch commits under its own token, so a
+    replayed batch (restart after failure between the snapshot commit
+    and the checkpoint commit) is dropped rather than applied twice."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        # a replay still runs (the stream may be stateful, and Spark fails
+        # a stateful batch its sink skips); publish drops its snapshot
+        staged = commit.stage(snapshot_path, commit.batch_token(batch_df, batch_id))
         delta = latest_per_key(batch_df, key_cols, order_col)
-        # previous = highest version strictly below this batch id: on a
-        # replay of batch N (crash between v{N} write and checkpoint
-        # commit) the merge must re-derive from v{N-1} — reading v{N}
-        # itself would both double-apply and overwrite a path being read
-        prev = read_snapshot(spark, snapshot_path, below=batch_id)
-        merged = latest_per_key(prev.unionByName(delta), key_cols, order_col) if prev is not None else delta
-        out = os.path.join(snapshot_path, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        # prune old versions (keep a read-stable window)
-        versions = sorted(
-            int(n[1:]) for n in os.listdir(snapshot_path)
-            if n.startswith("v") and n[1:].isdigit()
+        prev = read_snapshot(batch_df.sparkSession, snapshot_path)
+        merged = delta if prev is None else latest_per_key(
+            prev.unionByName(delta), key_cols, order_col
         )
-        for v in versions[:-keep_versions]:
-            shutil.rmtree(os.path.join(snapshot_path, f"v{v}"), ignore_errors=True)
+        merged.write.parquet(os.path.join(staged, CURRENT))
+        commit.publish(staged, replace=[CURRENT])
 
     writer = stream.writeStream.foreachBatch(merge).option(
         "checkpointLocation", checkpoint_path

@@ -49,7 +49,7 @@ def _canon(df) -> tuple[int, list[str], str]:
     pdf = df if isinstance(df, pd.DataFrame) else df.toPandas()
     cols = sorted(pdf.columns)
     pdf = pdf[cols]
-    body = pdf.applymap(norm)
+    body = pdf.map(norm)
     rows = sorted(map(tuple, body.itertuples(index=False, name=None)))
     h = hashlib.md5(repr(rows).encode()).hexdigest()
     return len(pdf), cols, h

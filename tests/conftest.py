@@ -36,6 +36,31 @@ def sf_dir():
 
 
 @pytest.fixture
+def fail_after_sink(monkeypatch):
+    """``fail_after_sink(n)`` makes every ``foreachBatch`` sink started
+    from then on raise right after it has finished batch ``n``: the sink
+    has committed the batch, the stream's checkpoint has not, so a
+    restart on the same checkpoint replays it. ``monkeypatch.undo()``
+    lifts it."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    real = DataStreamWriter.foreachBatch
+
+    def arm(batch_id: int) -> None:
+        def foreach_batch(self, fn):
+            def sink(df, bid):
+                fn(df, bid)
+                if bid == batch_id:
+                    raise RuntimeError("injected crash after the sink")
+
+            return real(self, sink)
+
+        monkeypatch.setattr(DataStreamWriter, "foreachBatch", foreach_batch)
+
+    return arm
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` runs ``fn()`` under a Spark job group of its own
     and returns ``(fn(), number of Spark jobs it ran)``."""

@@ -170,6 +170,34 @@ def test_dicom_python_datasource(spark, tmp_path_factory):
     assert via_source.filter(F.col("error").isNotNull()).count() >= 1
 
 
+def test_dicom_source_reads_a_small_drop_in_parallel(spark, tmp_path):
+    """format("dicom"), batch and stream, packs a drop under 128 MB like
+    batch ingest does: at least min(defaultParallelism, objects) read
+    tasks, not one."""
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import walk_objects
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
+
+    from fixtures import write_fixture_tree
+
+    root = tmp_path / "in"
+    write_fixture_tree(root)
+    register_dicom_source(spark)
+    want = min(spark.sparkContext.defaultParallelism, len(walk_objects(str(root))))
+    assert want > 1
+    assert spark.read.format("dicom").load(str(root)).rdd.getNumPartitions() >= want
+
+    seen = []
+    q = (
+        spark.readStream.format("dicom").load(str(root))
+        .writeStream.foreachBatch(lambda df, _bid: seen.append(df.rdd.getNumPartitions()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert seen and seen[0] >= want
+
+
 @pytest.mark.parametrize("external", [False, True])
 def test_all_quarantined_ingest_yields_empty_lake(spark, tmp_path_factory, external):
     """A first ingest where every input is corrupt writes nothing to the

@@ -1364,3 +1364,32 @@ def test_no_module_outside_queries_imports_queries():
             if any(t.split(".")[:2] == [pkg.__name__, "queries"] for t in targets):
                 bad.append(f"{rel}:{node.lineno}")
     assert not bad, f"modules outside queries/ import queries/: {bad}"
+
+
+def test_only_the_commit_module_renames():
+    """One commit: no package module but ``sources/commit.py`` calls
+    ``os.rename``, ``os.replace`` or ``shutil.move`` (or imports them by
+    name), so every file a lake rewrite or streaming sink makes visible
+    goes through the one stage-and-commit."""
+    import ast
+    import pathlib
+
+    import dicom_metadata_extractor_serverless_datalake_spark as pkg
+
+    banned = {("os", "rename"), ("os", "replace"), ("shutil", "move")}
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.as_posix() == "sources/commit.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                hit = (node.value.id, node.attr) in banned
+            elif isinstance(node, ast.ImportFrom):
+                hit = any((node.module, a.name) in banned for a in node.names)
+            else:
+                continue
+            if hit:
+                bad.append(f"{rel}:{node.lineno}")
+    assert not bad, f"renames outside sources/commit.py: {bad}"

@@ -297,8 +297,7 @@ def test_stateful_running_totals(spark, sf_dir, tmp_path_factory):
 
 def test_streaming_upsert_latest_per_key(spark, sf_dir, tmp_path_factory):
     """foreachBatch upsert sink: two micro-batches of events merge into a
-    one-row-per-user snapshot equal to the batch latest-per-key, with
-    old versions pruned."""
+    one-row-per-user snapshot equal to the batch latest-per-key."""
     from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_table
     from dicom_metadata_extractor_serverless_datalake_spark.streaming import read_snapshot, start_upsert_sink
     from dicom_metadata_extractor_serverless_datalake_spark.streaming.upsert import latest_per_key
@@ -338,43 +337,47 @@ def test_streaming_upsert_latest_per_key(spark, sf_dir, tmp_path_factory):
     assert snap.groupBy("user_id").count().filter("count > 1").count() == 0
 
 
-def test_upsert_replay_rederives_from_previous_version(spark, tmp_path_factory):
-    """Replay recovery: a replayed batch N must resolve its previous
-    snapshot among versions strictly below N (v{N-1}) — resolving v{N}
-    itself would read the path it is about to overwrite (Spark refuses)
-    and double-apply the batch."""
+def test_upsert_replay_is_not_applied_twice(spark, tmp_path, monkeypatch, fail_after_sink):
+    """The upsert sink commits batch 1, then the query dies before its
+    checkpoint does; the restart replays batch 1, finds its token in the
+    snapshot's commit log and drops the replay, so the snapshot keeps the
+    files batch 1 committed, holding the latest row per key."""
+    import glob
     import os
 
-    from dicom_metadata_extractor_serverless_datalake_spark.streaming.upsert import (
-        current_snapshot_version,
-        latest_per_key,
+    from pyspark.errors import StreamingQueryException
+
+    from dicom_metadata_extractor_serverless_datalake_spark.sources import commit
+    from dicom_metadata_extractor_serverless_datalake_spark.streaming import (
         read_snapshot,
+        start_upsert_sink,
     )
 
-    snap = str(tmp_path_factory.mktemp("replay_snap"))
-    base = spark.createDataFrame(
-        [(1, 10, "a"), (2, 10, "b")], "k int, ord int, payload string"
-    )
-    batch1 = spark.createDataFrame(
-        [(1, 20, "a2"), (3, 5, "c")], "k int, ord int, payload string"
-    )
-    base.write.parquet(os.path.join(snap, "v0"))
-    # batch 1 completed its write but crashed before checkpoint commit
-    latest_per_key(base.unionByName(batch1), ["k"], "ord").write.parquet(
-        os.path.join(snap, "v1")
-    )
-    assert current_snapshot_version(snap) == 1
-    assert current_snapshot_version(snap, below=1) == 0
+    schema = "k int, ord int, payload string"
+    src = tmp_path / "src"
+    src.mkdir()
+    batches = [[(1, 10, "a"), (2, 10, "b")], [(1, 20, "a2"), (3, 5, "c"), (2, 1, "stale")]]
+    for n, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp_path / f"b{n}"))
+        dst = str(src / f"b{n}.parquet")
+        os.rename(glob.glob(str(tmp_path / f"b{n}" / "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_000_000_000 + 60 * n,) * 2)
+    snap, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
 
-    # the replay of batch 1: prev must be v0, and overwriting v1 while
-    # reading v0 must succeed (the old bug read v1 and failed here)
-    prev = read_snapshot(spark, snap, below=1)
-    merged = latest_per_key(prev.unionByName(batch1), ["k"], "ord")
-    merged.write.mode("overwrite").parquet(os.path.join(snap, "v1"))
-    got = {
-        (r["k"], r["ord"], r["payload"])
-        for r in read_snapshot(spark, snap).collect()
-    }
+    def run():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+        start_upsert_sink(stream, snap, ["k"], "ord", ckpt).awaitTermination(300)
+
+    fail_after_sink(1)
+    with pytest.raises(StreamingQueryException):
+        run()
+    monkeypatch.undo()
+    committed = os.listdir(os.path.join(snap, "current"))
+    run()
+
+    assert os.listdir(os.path.join(snap, "current")) == committed
+    assert len(os.listdir(os.path.join(snap, commit.COMMITS))) == 1  # the latest batch
+    got = {tuple(r) for r in read_snapshot(spark, snap).collect()}
     assert got == {(1, 20, "a2"), (2, 10, "b"), (3, 5, "c")}
 
 

@@ -292,13 +292,19 @@ def davg(col: str, alias: str, scale: int = 2, max_abs: float | None = None) -> 
     ).alias(alias)
 
 
+def _sql_exact_sum(expr: str, scale: int) -> str:
+    # the exact sum goes to DOUBLE through its decimal string: DuckDB's
+    # DECIMAL -> DOUBLE cast rounds twice (integer, then / 10^scale) and
+    # is an ulp off once the scaled sum passes 2^53 (q01's sum_charge at
+    # 60M lineitem rows: 282529058707.17957, not the 282529058707.1796
+    # dsum gives); a decimal string parses correctly rounded in both
+    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(28,{scale}))) AS STRING) AS DOUBLE)"
+
+
 def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
     """Oracle-side twin of dsum."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE) AS {alias}"
+    return f"{_sql_exact_sum(expr, scale)} AS {alias}"
 
 
 def sql_davg(expr: str, alias: str, scale: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )
+    return f"{_sql_exact_sum(expr, scale)} / COUNT({expr}) AS {alias}"

@@ -44,8 +44,9 @@ def _cache_local(fn: Callable[[SparkSession, str], DataFrame]):
     scripts/plan_audit.py works around the same way). Dropping the
     accumulated cache at query CONSTRUCTION keeps caching query-local
     for every harness that goes through ``queries()`` — the driver's
-    correctness gate and oracle_sweep — without touching bench.py's
-    warm-timing path (which calls ``Query.spark_fn`` directly)."""
+    correctness gate and oracle_sweep — without touching the warm-timing
+    paths of perfbench and scripts/scale_bench.py (which call
+    ``Query.spark_fn`` directly)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.catalog.clearCache()

@@ -280,7 +280,9 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
     # is truncated, so executor loss after materialization cannot be
     # recovered by recompute (operators/cluster.py contract), and the
     # formatted plan shows the checkpoint scan, not the MapInArrow
-    # subtree — plans/r12/q187_after.txt carries BOTH dumps.
+    # subtree: at sf0.01 it reads Scan ExistingRDD -> Exchange
+    # rangepartitioning(doc_id) -> Sort, while the checkpointed subtree
+    # is Scan parquet -> Exchange hashpartitioning(doc_id) -> MapInArrow.
     # NOTE (measured r11, superseded): a repartition("doc_id") barrier
     # measured SLOWER (68.9 s vs 53.2 s @5M) — it adds a 5M-row exchange
     # and the sampler then re-executes the exchange read, not nothing.

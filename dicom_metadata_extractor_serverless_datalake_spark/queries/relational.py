@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import scoped_session
+from ..sources.bucketing import bucketed_layout
 from .base import (
     davg,
     dsum,
@@ -226,19 +227,10 @@ def q03(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _both_bucketed_on_orderkey(sf: str) -> bool:
-    import json
-    import os
-
-    for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        marker = f"{sf}/{name}.bucketed.json"
-        if not os.path.exists(marker):
-            return False
-        try:
-            if json.load(open(marker)).get("bucket_col") != key:
-                return False
-        except (OSError, ValueError):
-            return False
-    return True
+    return all(
+        (bucketed_layout(sf, name) or {}).get("bucket_col") == key
+        for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
+    )
 
 
 @query(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.bucketing import bucketed_layout, write_bucketed_layout
 from .base import query, sql_query, t
 
 # --------------------------------------------------------------------------
@@ -47,21 +48,32 @@ sql_query(
 # ascending-only). The bucketed scan then satisfies the window's
 # distribution AND ordering, so the plan is scan → WindowGroupLimit →
 # Window → filter with no exchange and no sort — it streams pre-sorted
-# buckets. Declared by an ``orders_by_custkey.bucketed.json`` marker
-# next to the data (bench.py maintains it for the 60M/600M layouts).
+# buckets. Declared by an ``orders_by_custkey`` bucketed layout next to
+# the data (``write_custkey_layout`` writes it; scripts/scale_bench.py
+# keeps one for the 60M/600M rows).
 
 
 def _has_custkey_layout(sf: str) -> bool:
-    import json
-    import os
+    return (bucketed_layout(sf, "orders_by_custkey") or {}).get("bucket_col") == "o_custkey"
 
-    marker = f"{sf}/orders_by_custkey.bucketed.json"
-    if not os.path.exists(marker):
-        return False
-    try:
-        return json.load(open(marker)).get("bucket_col") == "o_custkey"
-    except (OSError, ValueError):
-        return False
+
+def write_custkey_layout(orders: DataFrame, data_dir: str, n_buckets: int = 32) -> None:
+    """Write q31's clustered copy of ``orders`` (above) into ``data_dir``."""
+    df = orders.select("o_orderkey", "o_custkey", "o_totalprice")
+    # the clustered path orders by o_totalprice_neg ASC, which is NULLS
+    # FIRST while the plain/oracle path's o_totalprice DESC is NULLS
+    # LAST — certify NOT NULL at write time so the two layouts can never
+    # silently diverge on null prices
+    n_null = df.filter(F.col("o_totalprice").isNull()).count()
+    if n_null:
+        raise ValueError(
+            f"orders_by_custkey layout requires NOT NULL o_totalprice; found {n_null} null rows"
+        )
+    df = df.withColumn("o_totalprice_neg", -F.col("o_totalprice"))
+    write_bucketed_layout(
+        df.repartition(n_buckets, "o_custkey"), data_dir, "orders_by_custkey", "o_custkey",
+        n_buckets, sort_cols=("o_custkey", "o_totalprice_neg", "o_orderkey"),
+    )
 
 
 @query(
@@ -89,7 +101,7 @@ def q31(spark: SparkSession, sf: str) -> DataFrame:
         # o_totalprice_neg ASC == o_totalprice DESC only for non-null
         # prices (ASC is NULLS FIRST, DESC is NULLS LAST); the layout
         # writer certifies NOT NULL o_totalprice at write time
-        # (bench.py _write_custkey_layout), so the paths cannot diverge
+        # (write_custkey_layout), so the paths cannot diverge
         w = Window.partitionBy("o_custkey").orderBy(
             F.asc("o_totalprice_neg"), F.asc("o_orderkey")
         )

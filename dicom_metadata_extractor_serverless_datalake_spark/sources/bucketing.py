@@ -8,7 +8,11 @@ into the same number of buckets on the join key at load time, after
 which every equi-join/groupBy on that key is exchange-free — Spark
 reads bucket i of both sides into the same task.
 
-Costs: a one-time shuffle at write; bucket count is fixed at write time
+A dataset dir declares table ``name`` bucketed with a
+``{name}.bucketed.json`` marker next to the data (the lakehouse pattern
+of Hive/Iceberg bucket specs); this module alone writes and reads it.
+
+Costs: a one-time sort at write; bucket count is fixed at write time
 (choose for target-cluster parallelism — at 100 TB with ~1000 executors,
 4096 buckets keeps ~25 GB/bucket); small-file pressure when many
 writers append (mitigate by writing with repartition(bucket_count, key)
@@ -17,27 +21,60 @@ first so each task owns whole buckets).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+
+from pyspark.sql import DataFrame
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-    sort_col: str | None = None,
+def _marker(data_dir: str, name: str) -> str:
+    return os.path.join(data_dir, f"{name}.bucketed.json")
+
+
+def bucketed_layout(data_dir: str, name: str) -> dict | None:
+    """The bucket spec ``data_dir`` declares for table ``name``, or
+    None when the dir declares none."""
+    try:
+        with open(_marker(data_dir, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def write_bucketed_layout(
+    df: DataFrame, data_dir: str, name: str, bucket_col: str, n_buckets: int = 32,
+    sort_cols: tuple[str, ...] | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-within-bucket)
-    managed table. Sorting by the join key additionally enables
-    merge-join without a per-task sort."""
-    writer = (
-        df.repartition(n_buckets, bucket_col)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-    )
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
+    """Write ``df`` as table ``name``'s layout in ``data_dir``: parquet
+    files under ``{name}.bucketed/``, bucketed on ``bucket_col`` and
+    sorted on ``sort_cols``, then the marker, which is removed first so
+    it never points at half-written files. A scan reports the sort order
+    only with one file per bucket: pass ``df.repartition(n_buckets,
+    bucket_col)`` when a query relies on it."""
+    import hashlib
+
+    sort_cols = tuple(sort_cols or (bucket_col,))
+    loc = os.path.abspath(os.path.join(data_dir, f"{name}.bucketed"))
+    marker = _marker(data_dir, name)
+    os.makedirs(data_dir, exist_ok=True)
+    if os.path.exists(marker):
+        os.remove(marker)
+    # Spark writes bucket files only through a catalog table; the one
+    # used here is external (its own path), so dropping it keeps them
+    spark = df.sparkSession
+    tmp = "bucketed_write_" + hashlib.md5(loc.encode()).hexdigest()[:12]
+    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+    try:
+        df.write.bucketBy(n_buckets, bucket_col).sortBy(*sort_cols).option("path", loc).mode(
+            "overwrite"
+        ).format("parquet").saveAsTable(tmp)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+    with open(marker, "w") as fh:
+        json.dump({
+            "location": loc, "bucket_col": bucket_col, "sort_col": ", ".join(sort_cols),
+            "num_buckets": n_buckets, "schema_ddl": df.schema.toDDL(),
+        }, fh)
 
 
 def write_range_sorted(
@@ -56,15 +93,3 @@ def write_range_sorted(
         *( [n_partitions, sort_col] if n_partitions else [sort_col] )
     ).sortWithinPartitions(sort_col)
     out.write.mode("overwrite").parquet(path)
-
-
-def cobucket_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two co-bucketed tables — exchange-free when both were
-    written with the same bucket count on the join key."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)

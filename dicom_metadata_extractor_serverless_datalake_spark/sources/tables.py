@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .bucketing import bucketed_layout
+
 STAR_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -47,20 +49,16 @@ def _memo(spark: SparkSession) -> dict:
     return memo
 
 
-def _load_bucketed(spark: SparkSession, marker_path: str) -> DataFrame:
-    """Register (idempotently) an external BUCKETED table over existing
-    bucket-named parquet files and return it. A dataset directory
-    declares a bucketed layout for a table by shipping a
-    ``{name}.bucketed.json`` marker — layout metadata traveling with
-    the data, the lakehouse pattern (Hive/Iceberg bucket specs). The
-    files are plain parquet any engine can read; Spark additionally
-    exploits the bucket spec to eliminate the exchange under
-    groupBy/join on the bucket column — at 100 TB this is the
-    difference between re-shuffling the fact table per query and
-    none at all (measured: q04 at 600M rows, 23.7 s plain vs 11.3 s
-    bucketed, same bytes)."""
+def _load_bucketed(spark: SparkSession, spec: dict) -> DataFrame:
+    """Register (idempotently) an external BUCKETED table over the
+    bucket-named parquet files a layout spec points at
+    (sources/bucketing.py) and return it. The files are plain parquet
+    any engine can read; Spark additionally exploits the bucket spec to
+    eliminate the exchange under groupBy/join on the bucket column — at
+    100 TB this is the difference between re-shuffling the fact table
+    per query and none at all (measured: q04 at 600M rows, 23.7 s plain
+    vs 11.3 s bucketed, same bytes)."""
     import hashlib
-    import json as _json
 
     # report bucket sort order from the scan (claimed only when each
     # bucket is a single file — a planning-cost conf, not a correctness
@@ -70,15 +68,13 @@ def _load_bucketed(spark: SparkSession, marker_path: str) -> DataFrame:
     _ORDERING_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
     if spark.conf.get(_ORDERING_CONF, "false") != "true":
         spark.conf.set(_ORDERING_CONF, "true")
-    with open(marker_path) as fh:
-        meta = _json.load(fh)
-    loc = meta["location"]
+    loc = spec["location"]
     tbl = "bext_" + hashlib.md5(loc.encode()).hexdigest()[:12]
-    sort = f"SORTED BY ({meta['sort_col']})" if meta.get("sort_col") else ""
+    sort = f"SORTED BY ({spec['sort_col']})" if spec.get("sort_col") else ""
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {tbl} ({meta['schema_ddl']}) "
-        f"USING parquet CLUSTERED BY ({meta['bucket_col']}) {sort} "
-        f"INTO {meta['num_buckets']} BUCKETS LOCATION '{loc}'"
+        f"CREATE TABLE IF NOT EXISTS {tbl} ({spec['schema_ddl']}) "
+        f"USING parquet CLUSTERED BY ({spec['bucket_col']}) {sort} "
+        f"INTO {spec['num_buckets']} BUCKETS LOCATION '{loc}'"
     )
     return spark.table(tbl)
 
@@ -88,11 +84,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = frames.get((sf_dir, name))
     if cached is not None:
         return cached
-    import os
-
-    marker = f"{sf_dir}/{name}.bucketed.json"
-    if os.path.exists(marker):
-        df = _load_bucketed(spark, marker)
+    spec = bucketed_layout(sf_dir, name)
+    if spec is not None:
+        df = _load_bucketed(spark, spec)
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     df = _normalize_timestamps(df)
@@ -126,9 +120,7 @@ def load_stream(
 def _present(sf_dir: str, name: str) -> bool:
     import os
 
-    return any(
-        os.path.exists(f"{sf_dir}/{name}{ext}") for ext in (".parquet", ".bucketed.json")
-    )
+    return os.path.exists(f"{sf_dir}/{name}.parquet") or bucketed_layout(sf_dir, name) is not None
 
 
 def register_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Deterministic scale-up of the driver testdata for data-dominated
-benchmarking (BASELINE.md "scale" section; bench.py auto-invokes this
-when a scale dir is missing).
+benchmarking (scripts/scale_bench.py generates its rows' data through
+this module on first use).
 
 - ``make_rel_scale(out, factor)``: replicate sf0.1 lineitem/orders
   ``factor`` times with per-copy orderkey offsets (join keys stay
@@ -12,79 +12,92 @@ when a scale dir is missing).
   doc_id/vec_id offsets; replica text carries an " r{i}" suffix so
   replicas are NEAR-dups (shingle sets overlap but differ), preserving
   realistic dedup/LSH candidate structure instead of exact clones.
+- ``make_events_scale(out, factor)``: replicate events along the
+  timeline (see its docstring).
 
-Everything derives from the driver's sf0.1 parquet with fixed offsets —
-no RNG — so any two generations are byte-identical in content.
+Every replicator is ONE scan + explode of a ``factor``-element sequence
+per table (a factor-way union blows up Catalyst analysis time at
+factor 1000). Everything derives from the driver's sf0.1 parquet with
+fixed offsets — no RNG — so any two generations are byte-identical in
+content.
+
+Usage: python scripts/make_scale_data.py {rel|doc|events} OUT FACTOR
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
-COPY_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "events",
-    "documents", "embeddings",
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
 )
 
 
 def _spark():
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from dicom_metadata_extractor_serverless_datalake_spark.session import get_spark
 
     return get_spark(app_name="make_scale_data")
 
 
-def make_rel_scale(out: str, factor: int, src: str = SRC, spark=None) -> None:
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    spark = spark or _spark()
+def copy_tables(out: str, skip: tuple[str, ...], src: str = SRC) -> None:
+    """Copy every testdata table but ``skip`` from ``src`` into ``out``."""
     os.makedirs(out, exist_ok=True)
-    for t in COPY_TABLES:
+    for t in TABLES:
         dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
+        if t not in skip and not os.path.exists(dst):
             shutil.copy(os.path.join(src, f"{t}.parquet"), dst)
 
+
+def _replicas(df, factor: int, key: str):
+    """``df`` with a ``__rep`` column 0..factor-1, one row per replica,
+    hash-spread on ``key`` first so the replication does not run in the
+    one task a single-file scan gives."""
+    from dicom_metadata_extractor_serverless_datalake_spark.operators.skew import spread_input
+
+    rep = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("__rep")
+    return spread_input(df, key=key).select("*", rep)
+
+
+def rel_scale_frames(spark, factor: int, src: str = SRC) -> dict:
+    """sf0.1 orders and lineitem replicated ``factor`` times: copy i
+    shifts both orderkeys by i * (max o_orderkey + 1)."""
     orders = spark.read.parquet(f"{src}/orders.parquet")
     li = spark.read.parquet(f"{src}/lineitem.parquet")
     base = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    for name, df, key in (("orders", orders, "o_orderkey"), ("lineitem", li, "l_orderkey")):
-        parts = [
-            df.withColumn(key, F.col(key) + F.lit(i * base)) for i in range(factor)
-        ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-        union.write.mode("overwrite").parquet(os.path.join(out, f"{name}.parquet"))
+    return {
+        name: _replicas(df, factor, key)
+        .withColumn(key, F.col(key) + F.col("__rep").cast("long") * F.lit(base))
+        .drop("__rep")
+        for name, df, key in (("orders", orders, "o_orderkey"), ("lineitem", li, "l_orderkey"))
+    }
+
+
+def make_rel_scale(out: str, factor: int, src: str = SRC, spark=None) -> None:
+    spark = spark or _spark()
+    copy_tables(out, ("orders", "lineitem"), src)
+    for name, df in rel_scale_frames(spark, factor, src).items():
+        df.write.mode("overwrite").parquet(os.path.join(out, f"{name}.parquet"))
 
 
 def make_doc_scale(out: str, factor: int, src: str = SRC, spark=None) -> None:
-    import shutil
-
-    from pyspark.sql import functions as F
-
     spark = spark or _spark()
-    os.makedirs(out, exist_ok=True)
-    for t in ("region", "nation", "customer", "supplier", "part", "events",
-              "orders", "lineitem"):
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            shutil.copy(os.path.join(src, f"{t}.parquet"), dst)
-
+    copy_tables(out, ("documents", "embeddings"), src)
     docs = spark.read.parquet(f"{src}/documents.parquet")
     emb = spark.read.parquet(f"{src}/embeddings.parquet")
     doc_base = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     vec_base = emb.agg(F.max("vec_id")).collect()[0][0] + 1
-    # ONE scan + explode of a factor-element range per table (a
-    # factor-way union blows up Catalyst analysis time at factor=1000);
-    # identical content to the per-copy union: copy i shifts the id by
-    # i*base and suffixes replica text with " r{i}" (i >= 1 only).
-    rep = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("__rep")
+    # copy i shifts the id by i*base and suffixes replica text with
+    # " r{i}" (i >= 1 only)
     du = (
-        docs.select("*", rep)
+        _replicas(docs, factor, "doc_id")
         .withColumn("doc_id", F.col("doc_id") + F.col("__rep").cast("long") * F.lit(doc_base))
         .withColumn(
             "text",
@@ -95,12 +108,13 @@ def make_doc_scale(out: str, factor: int, src: str = SRC, spark=None) -> None:
         .drop("__rep")
     )
     eu = (
-        emb.select("*", rep)
+        _replicas(emb, factor, "vec_id")
         .withColumn("vec_id", F.col("vec_id") + F.col("__rep").cast("long") * F.lit(vec_base))
         .drop("__rep")
     )
-    du.write.mode("overwrite").parquet(os.path.join(out, "documents.parquet"))
+    # documents last: it is ensure()'s probe
     eu.write.mode("overwrite").parquet(os.path.join(out, "embeddings.parquet"))
+    du.write.mode("overwrite").parquet(os.path.join(out, "documents.parquet"))
 
 
 def make_events_scale(out: str, factor: int, src: str = SRC, spark=None) -> None:
@@ -109,18 +123,8 @@ def make_events_scale(out: str, factor: int, src: str = SRC, spark=None) -> None
     longitudinally — sessionization/cohort/proximity state stays
     realistic (per-user density per month is unchanged; the timeline
     grows), instead of stacking 100 identical copies into one month."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     spark = spark or _spark()
-    os.makedirs(out, exist_ok=True)
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "documents", "embeddings"):
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            shutil.copy(os.path.join(src, f"{t}.parquet"), dst)
-
+    copy_tables(out, ("events",), src)
     ev = spark.read.parquet(f"{src}/events.parquet")
     # keep the driver testdata's TIMESTAMP_NTZ/micros encoding: a plain
     # "timestamp" cast writes INT96 (Spark's default outputTimestampType),
@@ -128,14 +132,11 @@ def make_events_scale(out: str, factor: int, src: str = SRC, spark=None) -> None
     # chunk writer and the streaming reader's schema then mismatches
     ev = ev.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     base = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    # ONE scan + explode (the doc-scale pattern): a factor-way union
-    # blows up Catalyst analysis time at factor=1000. timestampadd
-    # preserves TIMESTAMP_NTZ (an interval literal can't take a column
-    # multiplier); content is identical to the historical per-copy
-    # union — verified row-for-row against a union-generated dir.
-    rep = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("__rep")
+    # timestampadd preserves TIMESTAMP_NTZ (an interval literal can't
+    # take a column multiplier); content is identical to the historical
+    # per-copy union — verified row-for-row against a union-generated dir
     union = (
-        ev.select("*", rep)
+        _replicas(ev, factor, "event_id")
         .withColumn(
             "event_id", F.col("event_id") + F.col("__rep").cast("long") * F.lit(base)
         )
@@ -150,9 +151,11 @@ _PROBES = {"rel": "lineitem.parquet", "doc": "documents.parquet", "events": "eve
 
 
 def ensure(path: str, kind: str, factor: int) -> str:
-    """Generate ``path`` if missing; returns path. kind: 'rel' | 'doc' | 'events'."""
-    probe = os.path.join(path, _PROBES[kind])
-    if not os.path.exists(probe):
+    """Generate ``path`` unless it holds finished data; returns path.
+    kind: 'rel' | 'doc' | 'events'. Finished means the probe table's
+    ``_SUCCESS``: Spark's committer creates the table dir at job set-up,
+    so a generation killed mid-write leaves the dir without it."""
+    if not os.path.exists(os.path.join(path, _PROBES[kind], "_SUCCESS")):
         _MAKERS[kind](path, factor)
     return path
 

@@ -197,36 +197,34 @@ def test_external_ingest_repoints_table(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS repointed")
 
 
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path_factory):
+def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
     """Co-bucketed fact tables join without a shuffle: the scan feeds the
     join directly (the write amortized the exchange)."""
     from pyspark.sql import functions as F
 
     from dicom_metadata_extractor_serverless_datalake_spark.plans import exchange_count
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.bucketing import cobucket_join, write_bucketed
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.bucketing import write_bucketed_layout
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "b_lineitem", "l_orderkey", n_buckets=4)
-    write_bucketed(
+    write_bucketed_layout(li, str(tmp_path), "lineitem", "l_orderkey", n_buckets=4)
+    write_bucketed_layout(
         orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "b_orders", "l_orderkey", n_buckets=4,
+        str(tmp_path), "orders", "l_orderkey", n_buckets=4,
     )
-    try:
-        joined = cobucket_join(spark, "b_lineitem", "b_orders", "l_orderkey")
-        agg = joined.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-        # no shuffle for the join AND none for the groupBy (same key)
-        assert exchange_count(agg) == 0
-        # results equal the plain-join formulation
-        plain = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("q"))
-        )
-        assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, plain.collect()))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
+    joined = load_table(spark, str(tmp_path), "lineitem").join(
+        load_table(spark, str(tmp_path), "orders"), "l_orderkey"
+    )
+    agg = joined.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
+    # no shuffle for the join AND none for the groupBy (same key)
+    assert exchange_count(agg) == 0
+    # results equal the plain-join formulation
+    plain = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("q"))
+    )
+    assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_range_sorted_write_clusters_keys(spark, sf_dir, tmp_path_factory):
@@ -297,26 +295,24 @@ def test_analyze_table_records_stats(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS stats_probe")
 
 
-def test_bucketed_marker_layout_roundtrip(spark, tmp_path):
-    """A dataset dir shipping a {name}.bucketed.json marker makes
-    load_table register an external bucketed table over the SAME
-    parquet files: rows identical to a plain read, and groupBy on the
-    bucket column plans with NO exchange (the point of the layout)."""
+def _hand_written_marker(spark, src, data_dir):
+    """The on-disk format pinned by hand: bucket files written through a
+    catalog table at ``{name}.bucketed``, then the JSON marker."""
     import json
 
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_table
-
-    src = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    loc = str(tmp_path / "lineitem.bucketed")
+    loc = str(data_dir / "lineitem.bucketed")
     spark.sql("DROP TABLE IF EXISTS bucketed_probe")
-    (
-        src.write.bucketBy(4, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", loc)
-        .format("parquet")
-        .saveAsTable("bucketed_probe")
-    )
-    (tmp_path / "lineitem.bucketed.json").write_text(
+    try:
+        (
+            src.write.bucketBy(4, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", loc)
+            .format("parquet")
+            .saveAsTable("bucketed_probe")
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bucketed_probe")
+    (data_dir / "lineitem.bucketed.json").write_text(
         json.dumps(
             {
                 "location": loc,
@@ -327,18 +323,33 @@ def test_bucketed_marker_layout_roundtrip(spark, tmp_path):
             }
         )
     )
-    try:
-        df = load_table(spark, str(tmp_path), "lineitem")
-        assert df.count() == src.count()
-        agg = df.groupBy("l_orderkey").count()
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # plain-read parity on an aggregate
-        a = sorted(map(tuple, agg.collect()))
-        b = sorted(map(tuple, src.groupBy("l_orderkey").count().collect()))
-        assert a == b
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bucketed_probe")
+
+
+def _layout_writer(spark, src, data_dir):
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.bucketing import write_bucketed_layout
+
+    write_bucketed_layout(src, str(data_dir), "lineitem", "l_orderkey", n_buckets=4)
+
+
+@pytest.mark.parametrize("write", [_hand_written_marker, _layout_writer], ids=["hand_written", "writer"])
+def test_bucketed_marker_layout_roundtrip(spark, tmp_path, write):
+    """A dataset dir shipping a {name}.bucketed.json marker makes
+    load_table register an external bucketed table over the SAME
+    parquet files: rows identical to a plain read, and groupBy on the
+    bucket column plans with NO exchange (the point of the layout)."""
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.tables import load_table
+
+    src = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    write(spark, src, tmp_path)
+    df = load_table(spark, str(tmp_path), "lineitem")
+    assert df.count() == src.count()
+    agg = df.groupBy("l_orderkey").count()
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    # plain-read parity on an aggregate
+    a = sorted(map(tuple, agg.collect()))
+    b = sorted(map(tuple, src.groupBy("l_orderkey").count().collect()))
+    assert a == b
 
 
 def test_star_schema_memo_is_per_session(spark, sf_dir):
